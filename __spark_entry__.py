@@ -46,53 +46,36 @@ _EDITED_THIS_ROUND = [
     # green rows predate the change, so they outrank everything the history
     # says is current.  Update per round alongside the round's edits.
     #
-    # Round-19 OPTIMIZATION forcing. Window math: the 33-row r15 cohort
-    # must head the r19 window (ceil(168/50)=4-round currency bound), so
-    # forcing may consume at most 17 slots; the list below stays inside
-    # that budget. Every entry's output proven oracle-identical at all
-    # three SFs before forcing; forced per the rotation contract
-    # (tests/test_entry_rotation.py: "anything that changes a DataFrame
-    # plan must be forced").
+    # Streamed index lifecycle, one commit protocol and one stream
+    # runner (streaming/parity.py). The ten STORE parities below now
+    # build through the shared seed functions, `_run_stream` and the
+    # append/overwrite commits, so their construction path changed;
+    # each was proven oracle-identical at all three SFs before forcing,
+    # per the rotation contract (tests/test_entry_rotation.py). Their
+    # oracle SQL is byte-identical to the parent commit's.
     #
-    # connected-components loop: convergence signature rides the
-    # checkpoint materialization via observe() (one action per round),
-    # and keep_representative joins the converged star edges directly
-    # (nodes union/distinct/join elided) — llm_ops/clusters.py, A/B in
-    # tools/ab_cc_r19.py (33 -> 18 jobs).
-    "dedup_minhash_keep_representative",
-    "dedup_components",
-    "dedup_clusters",
-    "dedup_image_clusters",
-    # ADVICE r18 (medium): similarity_rrf_fusion consumes ann_topk_ivf,
-    # whose plan changed in r18 (map-only centroid assignment + probe
-    # routing), but it was missing from the r18 forcing list — its r16
-    # green row predates that plan change, so it is re-verified here.
-    "similarity_rrf_fusion",
-    # dedup-index lifecycle join elisions (llm_ops/dedup.py, A/B in
-    # tools/ab_idx_r19.py): artifacts anti-join the dropped set
-    # directly (b_band ⋉ (batch ∖ dropped) == b_band ⋉̸ dropped), the
-    # dropped/removed build sides lose their .distinct() (anti/semi
-    # joins are duplicate-insensitive), and the delete verb pins
-    # F.broadcast on the removed/partner sets (ADVICE r18 low).
-    "dedup_index_update",
-    "dedup_index_delete",
-    "dedup_index_compact",
+    # Carve-out (NO forcing): the seven memory-sink parities
+    # (stream_batch_parity, stream_dedup_parity,
+    # stream_incremental_dedup, stream_stateful_profile_parity,
+    # stream_late_data_parity, stream_late_sliding_parity,
+    # stream_dedup_expiry_parity) stream the same DataFrame plan as
+    # before — same source options, same operators — now started by
+    # ingest.run_available_now instead of an inline writeStream; only
+    # the failure cleanup moved. Window math: the 39-row r16 cohort
+    # must head the next window (ceil(168/50)=4-round currency bound),
+    # so forcing may consume at most 11 slots; forcing all seventeen
+    # would push six r16 rows past the bound. (The round-19 entries
+    # certified green in CORRECTNESS_r19 and are dropped.)
     "stream_index_update_parity",
-    "stream_index_multi_tick_parity",
+    "stream_ann_index_parity",
+    "stream_ann_index_delete_parity",
+    "dedup_index_compact",
     "stream_index_delete_parity",
-    # both-sides-of-a-self-join materialization (llm_ops/dedup.py):
-    # the ngram prefix frame and the LSH banded frame each fed both
-    # sides of their candidate self-join, recomputing the window chain
-    # / signature aggregate once per side — now _materialize'd (A/Bs
-    # in tools/ab_ngram_r19.py and tools/ab_lsh_r19.py; the components
-    # / clusters / keep_representative consumers are forced above).
-    "dedup_ngram_jaccard",
-    "dedup_minhash_lsh",
-    # dedup_minhash_calibration consumes minhash_lsh_pairs too (its
-    # verified-pair input inherits the materialized banded frame), so
-    # its plan changed with the same edit; latest green r17 sits
-    # outside the natural r19 window -> forced (14 of the 17 slots).
-    "dedup_minhash_calibration",
+    "stream_index_multi_tick_parity",
+    "stream_lsh_index_delete_parity",
+    "stream_dq_gate_parity",
+    "stream_bloom_bits_parity",
+    "stream_embed_hash_parity",
     #
     # Round-18 forcing (historical): 24 plan-changed queries from the
     # r18 optimization session (CC window-min form, one-aggregate

@@ -89,11 +89,21 @@ def run_available_now(df: DataFrame, sink_name: str,
                       output_mode: str = "append") -> StreamingQuery:
     """Process-everything-then-stop trigger: batch-equivalent execution
     of a streaming plan (deterministic tests; scheduled incremental
-    runs — the engine's version of O21's cron)."""
+    runs — the engine's version of O21's cron).
+
+    The sink's temp view is registered at start(), so a failed stream
+    (BaseException too: a KeyboardInterrupt mid-await) stops the query
+    and drops the view — callers that memoize on the view's existence
+    must never be served a partial table."""
     q = (df.writeStream.outputMode(output_mode)
          .format("memory").queryName(sink_name)
          .trigger(availableNow=True).start())
-    q.awaitTermination()
+    try:
+        q.awaitTermination()
+    except BaseException:
+        q.stop()
+        df.sparkSession.catalog.dropTempView(sink_name)
+        raise
     return q
 
 

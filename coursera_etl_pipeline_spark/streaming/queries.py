@@ -579,171 +579,3 @@ def r19_events_anomaly_mad_oracle() -> str:
       JOIN med m USING (event_type)
       JOIN mad a USING (event_type)
     """
-
-
-# --- behavioral analytics III: user path transition matrix (r20 pre-build) ----
-#
-# Round-20 pre-build (r18 extended session): the sequence-mining query
-# that turns an event log into training-ready path statistics — the
-# per-user event-type transition matrix (first-order Markov counts +
-# conditional probabilities). Registration deferred to round 20 (the
-# r19 window is consumed exactly by the 7-deep queue; any r20
-# registration crosses the 175 band edge and executes the revision —
-# COVERAGE.md round-18-extended note); pinned registry name
-# `events_path_transitions`.
-
-PATH_START = "_START"
-
-
-def path_transitions(events: DataFrame) -> DataFrame:
-    """(src, dst, n, n_src, p): per-user event-type transition counts
-    — each user's events ordered by (ts, event_id), every consecutive
-    pair contributing one (prev -> next) transition, with the
-    sentinel '_START' as src for each user's first event — plus the
-    conditional probability p = n / n_src.
-
-    Scale shape: ONE window over events partitioned by user_id (the
-    certified sessionization/funnel partitioning, reused), then a
-    bounded |types|^2 hash-aggregate and a |types|-row totals
-    hash-join back — never a second corpus shuffle, never a broadcast
-    cross. Rows with NULL ts are excluded on both engines (a NULL
-    position has no place in a path; keeps the window frame free of
-    engine-specific NULL ordering). p divides the two BIGINTs in one
-    double division — identical operands, identical IEEE result."""
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    steps = (events.filter(F.col("ts").isNotNull())
-             .select("user_id", "event_type",
-                     F.lag("event_type").over(w).alias("prev_type")))
-    trans = (steps.select(
-                F.coalesce("prev_type", F.lit(PATH_START)).alias("src"),
-                F.col("event_type").alias("dst"))
-             .groupBy("src", "dst").agg(F.count(F.lit(1)).alias("n")))
-    tot = trans.groupBy("src").agg(F.sum("n").alias("n_src"))
-    return (trans.join(tot, "src")
-            .select("src", "dst", "n", "n_src",
-                    (F.col("n").cast("double")
-                     / F.col("n_src").cast("double")).alias("p")))
-
-
-def events_path_transitions_core(spark: SparkSession,
-                                 sf_dir: str) -> DataFrame:
-    """The future `events_path_transitions` registry callable
-    (deferred to r20): the transition matrix over the events table."""
-    return path_transitions(load_table(spark, sf_dir, "events"))
-
-
-def r20_events_path_transitions_oracle() -> str:
-    """DuckDB oracle: identical (ts, event_id)-ordered lag per user,
-    '_START' coalesce, exact BIGINT counts and totals, and the same
-    one double division."""
-    return f"""
-    WITH steps AS (
-      SELECT user_id, event_type,
-             lag(event_type) OVER
-               (PARTITION BY user_id ORDER BY ts, event_id) AS prev_type
-      FROM events WHERE ts IS NOT NULL
-    ),
-    trans AS (
-      SELECT COALESCE(prev_type, '{PATH_START}') AS src,
-             event_type AS dst, CAST(COUNT(*) AS BIGINT) AS n
-      FROM steps GROUP BY 1, 2
-    ),
-    tot AS (
-      SELECT src, CAST(SUM(n) AS BIGINT) AS n_src FROM trans GROUP BY src
-    )
-    SELECT t.src, t.dst, t.n, o.n_src,
-           CAST(t.n AS DOUBLE) / CAST(o.n_src AS DOUBLE) AS p
-    FROM trans t JOIN tot o USING (src)
-    """
-
-
-def markov_power_step(events: DataFrame) -> DataFrame:
-    """(dst, prob_pico, prob): one exact power-iteration step of the
-    user-journey Markov chain — the uniform distribution over event
-    types pushed once through the path-transition matrix (the
-    PageRank-class computation every journey-analytics stack runs;
-    the stationary distribution is this step iterated, the
-    kmeans_refine / dedup_components precedent for iterative
-    algorithms).
-
-    Exactness end to end: the transition probabilities round to
-    integer micros (floor(p * 1e6 + 0.5) of the identical double
-    division both engines compute), the uniform start vector is
-    floor(1e6 / n_types + 0.5) micros, and the step is
-    v1_pico(dst) = SUM_src v0_mic * p_mic(src, dst) — BIGINT products
-    and an order-free BIGINT sum, so the driver hash certifies the
-    iteration with no float fold; prob divides back to double once.
-    '_START' pseudo-transitions are excluded (the chain runs over
-    real event types).
-
-    Scale shape: the corpus contact is exactly path_transitions' (one
-    user_id window + bounded aggregates); everything after lives on
-    the |types|^2 matrix — a frame small enough to broadcast at any
-    corpus size, which is the point: the heavy lifting is the
-    distributed transition count, the algebra is bounded."""
-    trans = (path_transitions(events)
-             .filter(F.col("src") != PATH_START)
-             .select("src", "dst",
-                     F.floor(F.col("p") * 1e6 + F.lit(0.5))
-                     .cast("bigint").alias("p_mic")))
-    n_types = (events.filter(F.col("ts").isNotNull())
-               .filter(F.col("event_type").isNotNull())
-               .agg(F.countDistinct("event_type").alias("n")))
-    v0 = n_types.select(
-        F.floor(F.lit(1e6) / F.col("n") + F.lit(0.5))
-        .cast("bigint").alias("v0_mic"))
-    return (trans.crossJoin(F.broadcast(v0))
-            .groupBy("dst")
-            .agg(F.sum(F.col("v0_mic") * F.col("p_mic"))
-                 .alias("prob_pico"))
-            .select("dst", "prob_pico",
-                    (F.col("prob_pico").cast("double") / F.lit(1e12))
-                    .alias("prob")))
-
-
-def events_markov_stationary_core(spark: SparkSession,
-                                  sf_dir: str) -> DataFrame:
-    """The future `events_markov_stationary` registry callable
-    (deferred to r20): one exact power-iteration step over events."""
-    return markov_power_step(load_table(spark, sf_dir, "events"))
-
-
-def r20_events_markov_stationary_oracle() -> str:
-    """DuckDB oracle: the path-transition CTE chain (identical to the
-    r20 batch twin's oracle), micros rounding, the same uniform start
-    vector, and the exact BIGINT product-sum."""
-    return f"""
-    WITH steps AS (
-      SELECT user_id, event_type,
-             lag(event_type) OVER
-               (PARTITION BY user_id ORDER BY ts, event_id) AS prev_type
-      FROM events WHERE ts IS NOT NULL
-    ),
-    trans AS (
-      SELECT COALESCE(prev_type, '{PATH_START}') AS src,
-             event_type AS dst, CAST(COUNT(*) AS BIGINT) AS n
-      FROM steps GROUP BY 1, 2
-    ),
-    tot AS (
-      SELECT src, CAST(SUM(n) AS BIGINT) AS n_src FROM trans GROUP BY src
-    ),
-    pm AS (
-      SELECT t.src, t.dst,
-             CAST(floor((CAST(t.n AS DOUBLE) / CAST(o.n_src AS DOUBLE))
-                        * 1e6 + 0.5) AS BIGINT) AS p_mic
-      FROM trans t JOIN tot o USING (src)
-      WHERE t.src <> '{PATH_START}'
-    ),
-    v0 AS (
-      SELECT CAST(floor(1e6 / COUNT(DISTINCT event_type) + 0.5) AS BIGINT)
-               AS v0_mic
-      FROM events WHERE ts IS NOT NULL AND event_type IS NOT NULL
-    )
-    SELECT pm.dst,
-           CAST(SUM(v0.v0_mic * pm.p_mic) AS BIGINT) AS prob_pico,
-           CAST(SUM(v0.v0_mic * pm.p_mic) AS DOUBLE) / 1e12 AS prob
-    FROM pm CROSS JOIN v0
-    GROUP BY pm.dst
-    """

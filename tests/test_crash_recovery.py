@@ -1,27 +1,51 @@
-"""Crash-window tests for the index-lifecycle storage verbs
-(VERDICT r11 item 1): kill the verb between its commit and
-`_seal_epoch`, replay the epoch the way foreachBatch's at-least-once
-contract re-delivers it, and require the store to converge to the
-from-scratch rebuild — exactly once, no wedge.
+"""Crash matrix for the index-lifecycle storage verbs.
 
-Two mechanisms are under test:
-  - APPEND verbs (index/ANN/LSH increments, DQ gate): the
-    purge+epoch-prefix move commit makes replay self-healing — no
-    operator action needed at any crash point.
-  - OVERWRITE verbs (delete): the preserved staging dir + _markers
-    snapshot, rolled forward by `recover_index_stage`, after which
-    the replayed epoch no-ops via its re-sealed marker.
+Every verb is killed at each step of its commit — before the first
+move or overwrite, between the first and second (multi-destination
+verbs), and after the last commit but before `_seal_epoch` — and the
+epoch is then re-delivered the way foreachBatch's at-least-once
+contract does. The store must converge to the from-scratch rebuild,
+exactly once, with no wedge:
+
+  - APPEND verbs (the increments, the blind appends, the DQ gate):
+    replay alone converges — the purge + epoch-prefix move commit
+    drops whatever the crashed attempt committed.
+  - OVERWRITE verbs (the deletes, compaction): `recover_index_stage`
+    rolls the preserved stage forward, markers included, after which
+    the replay does nothing.
+
+The protocol-level guarantees (move-commit debris sweep, basename
+contract, per-epoch log event, single commit and run points) are
+pinned by the tests after the matrix.
 """
 
 from __future__ import annotations
 
+import ast
+import logging
 import os
+import re
+import shutil
+from dataclasses import dataclass
+from typing import Callable
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.readwriter import DataFrameWriter
 
 from coursera_etl_pipeline_spark.llm_ops import dedup
+from coursera_etl_pipeline_spark.llm_ops.similarity import (
+    assign_to_centroids,
+    flatten_band_index,
+    ivf_assign,
+    signatures,
+)
+from coursera_etl_pipeline_spark.llm_ops.text import embed_hash
 from coursera_etl_pipeline_spark.streaming import parity
+
+
+class Crash(RuntimeError):
+    pass
 
 
 def _doc(i: int) -> str:
@@ -32,246 +56,337 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-@pytest.fixture()
-def crash_seal(monkeypatch):
-    """Patch `_seal_epoch` with a one-shot bomb (crashes AFTER the
-    verb's commits have all landed — the exact applied-but-unsealed
-    window VERDICT r11 names). Starts DISARMED so test setup can run
-    sealed epochs; set ``state["armed"] = True`` right before the
-    call under test."""
-    real = parity._seal_epoch
-    state = {"armed": False}
-
-    def bomb(marker):
-        if state["armed"] and marker is not None:
-            state["armed"] = False
-            raise RuntimeError("simulated crash between commit and seal")
-        real(marker)
-
-    monkeypatch.setattr(parity, "_seal_epoch", bomb)
-    return state
-
-
-def _seed_docs(spark):
+def _docs(spark):
     return spark.createDataFrame(
         [(11, _doc(11)), (21, _doc(21)), (31, _doc(31)),   # corpus
          (10, _doc(11)), (40, _doc(40))],                  # batch
         "doc_id long, text string")
 
 
-def _seed_store(spark, tmp_path, docs):
-    band_dir, post_dir = str(tmp_path / "band"), str(tmp_path / "post")
-    corpus = docs.filter(F.col("doc_id") % 10 != 0)
-    c_post, c_band = dedup.minhash_index_artifacts(corpus)
-    c_post.write.parquet(post_dir)
-    c_band.write.parquet(band_dir)
-    return post_dir, band_dir
-
-
-def test_increment_crash_between_commit_and_seal_replays_exactly_once(
-        spark, tmp_path, crash_seal):
-    """Crash AFTER both appends landed but BEFORE the epoch sealed:
-    re-delivery must purge the unmarked debris and converge to the
-    single-increment rebuild — the window that used to double-append."""
-    docs = _seed_docs(spark)
-    post_dir, band_dir = _seed_store(spark, tmp_path, docs)
-    batch = docs.filter(F.col("doc_id") % 10 == 0)
-
-    crash_seal["armed"] = True
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        parity.apply_index_increment(batch, post_dir, band_dir,
-                                     epoch_id=0, run_token="tok")
-    # the data landed (applied) but the epoch is unmarked — the replay
-    # MUST NOT trust the store's contents
-    marker = parity._epoch_marker(band_dir, "inc", 0, "tok")
-    assert not os.path.exists(marker)
-
-    # foreachBatch re-delivery after restart: same epoch, same token
-    parity.apply_index_increment(batch, post_dir, band_dir,
-                                 epoch_id=0, run_token="tok")
-    assert os.path.exists(marker)
-
-    # survivors: 10 drops (dup of corpus 11), 40 survives
-    rb_post, rb_band = dedup.minhash_index_artifacts(
-        docs.filter(F.col("doc_id").isin([11, 21, 31, 40])))
-    assert _rows(spark.read.parquet(band_dir)) == _rows(rb_band)
-    assert _rows(spark.read.parquet(post_dir)) == _rows(rb_post)
-
-    # and a THIRD delivery no-ops via the sealed marker (fast path)
-    parity.apply_index_increment(batch, post_dir, band_dir,
-                                 epoch_id=0, run_token="tok")
-    assert _rows(spark.read.parquet(band_dir)) == _rows(rb_band)
-
-
-def test_increment_purges_mid_commit_debris(spark, tmp_path):
-    """Crash MID-commit: some of the epoch's prefixed files landed,
-    the rest didn't. Replay must purge the partial files and converge
-    — planted here as a foreign prefixed parquet in each dest dir."""
-    docs = _seed_docs(spark)
-    post_dir, band_dir = _seed_store(spark, tmp_path, docs)
-    batch = docs.filter(F.col("doc_id") % 10 == 0)
-
-    prefix = parity._epoch_prefix("inc", 0, "tok")
-    junk = docs.limit(1)
-    for d in (post_dir, band_dir):
-        junk.write.parquet(str(tmp_path / "junk"))
-        os.replace(
-            next(str(p) for p in (tmp_path / "junk").iterdir()
-                 if p.name.endswith(".parquet")),
-            os.path.join(d, prefix + "part-junk.parquet"))
-        import shutil
-        shutil.rmtree(tmp_path / "junk")
-
-    parity.apply_index_increment(batch, post_dir, band_dir,
-                                 epoch_id=0, run_token="tok")
-    rb_post, rb_band = dedup.minhash_index_artifacts(
-        docs.filter(F.col("doc_id").isin([11, 21, 31, 40])))
-    assert _rows(spark.read.parquet(band_dir)) == _rows(rb_band)
-    assert _rows(spark.read.parquet(post_dir)) == _rows(rb_post)
-
-
-def test_delete_crash_between_commit_and_seal_recovers_and_replays(
-        spark, tmp_path, crash_seal, monkeypatch, capsys):
-    """The delete wedge: crash between the overwrite-commits and the
-    seal leaves the epoch applied-but-unmarked — naive re-delivery
-    fails the indexed-ids contract check (ValueError; the stream
-    wedge). `recover_index_stage` rolls the preserved stage forward,
-    re-seals the in-flight marker, and the replay then no-ops; the
-    final store hash-equals the remainder rebuild."""
-    docs = spark.createDataFrame(
-        [(11, _doc(11)), (21, _doc(21)), (31, _doc(31)),
-         (10, _doc(11)), (40, _doc(40))],
-        "doc_id long, text string")
-    dirs = {n: str(tmp_path / n)
-            for n in ("post", "band", "ledger", "tpost", "tband")}
-    aux = (dirs["ledger"], dirs["tpost"], dirs["tband"])
-    corpus = docs.filter(F.col("doc_id") % 10 != 0)
-    c_post, c_band = dedup.minhash_index_artifacts(corpus)
-    c_post.write.parquet(dirs["post"])
-    c_band.write.parquet(dirs["band"])
-    spark.createDataFrame([], "doc_id long, partner long") \
-        .write.parquet(dirs["ledger"])
-    c_post.limit(0).write.parquet(dirs["tpost"])
-    c_band.limit(0).write.parquet(dirs["tband"])
-    # increment: 10 drops (dup of 11), 40 survives
-    parity.apply_index_increment(
-        docs.filter(F.col("doc_id").isin([10, 40])),
-        dirs["post"], dirs["band"], aux_dirs=aux,
-        epoch_id=0, run_token="inc")
-
-    stages = []
-    import tempfile as _tf
-    real_mkdtemp = _tf.mkdtemp
-
-    def spy(*a, **kw):
-        d = real_mkdtemp(*a, **kw)
-        if kw.get("prefix", "").startswith("idx_del_") \
-                or (a and str(a[0]).startswith("idx_del_")):
-            stages.append(d)
-        return d
-
-    monkeypatch.setattr(_tf, "mkdtemp", spy)
-
-    removed = spark.createDataFrame([(11,)], "doc_id long")
-    crash_seal["armed"] = True
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        parity.apply_index_delete(
-            spark, removed, dirs["post"], dirs["band"], *aux,
-            epoch_id=1, run_token="del")
-    assert len(stages) == 1 and os.path.isdir(stages[0]), \
-        "failed delete must preserve its staging dir for recovery"
-    capsys.readouterr()  # swallow the advertised stage path
-
-    # the wedge, demonstrated: naive re-delivery raises (11 is gone)
-    with pytest.raises(ValueError, match="not in the stored band index"):
-        parity.apply_index_delete(
-            spark, removed, dirs["post"], dirs["band"], *aux,
-            epoch_id=1, run_token="del")
-
-    # roll forward from the stage (idempotent: run it twice)
-    dests = {"post": dirs["post"], "band": dirs["band"],
-             "ledger": dirs["ledger"], "tpost": dirs["tpost"],
-             "tband": dirs["tband"]}
-    parity.recover_index_stage(spark, stages[0], dests)
-    parity.recover_index_stage(spark, stages[0], dests)
-
-    # markers recovered: the increment's prior epoch AND the crashed
-    # delete's in-flight epoch are both sealed again
-    assert os.path.exists(
-        parity._epoch_marker(dirs["band"], "inc", 0, "inc"))
-    assert os.path.exists(
-        parity._epoch_marker(dirs["band"], "del", 1, "del"))
-
-    # replay now no-ops instead of wedging
-    parity.apply_index_delete(
-        spark, removed, dirs["post"], dirs["band"], *aux,
-        epoch_id=1, run_token="del")
-
-    # final state: 11 gone, 10 resurrected (sole justification removed)
-    rb_post, rb_band = dedup.minhash_index_artifacts(
-        docs.filter(F.col("doc_id").isin([21, 31, 40, 10])))
-    assert _rows(spark.read.parquet(dirs["band"])) == _rows(rb_band)
-    assert _rows(spark.read.parquet(dirs["post"])) == _rows(rb_post)
-
-
-def test_lsh_increment_crash_replay_exactly_once(spark, tmp_path,
-                                                 crash_seal):
-    """Same window, LSH band-index append: crash after commit, replay,
-    no doubled band rows."""
-    from coursera_etl_pipeline_spark.llm_ops.similarity import (
-        flatten_band_index,
-        signatures,
-    )
-
-    emb = spark.createDataFrame(
+def _emb(spark):
+    return spark.createDataFrame(
         [(i, [float((i * 7 + j * 3) % 11 - 5) for j in range(64)])
          for i in range(20)],
         "vec_id long, embedding array<float>")
-    index_dir = str(tmp_path / "index")
-    corpus = emb.filter(F.col("vec_id") % 10 != 0)
-    flatten_band_index(signatures(corpus)).write.parquet(index_dir)
-    batch = emb.filter(F.col("vec_id") % 10 == 0)
-
-    crash_seal["armed"] = True
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        parity.apply_lsh_index_increment(batch, index_dir,
-                                         epoch_id=0, run_token="tok")
-    parity.apply_lsh_index_increment(batch, index_dir,
-                                     epoch_id=0, run_token="tok")
-    rebuild = flatten_band_index(signatures(emb))
-    assert _rows(spark.read.parquet(index_dir)) == _rows(rebuild)
 
 
-def test_dq_gate_crash_replay_delivers_batch_once(spark, tmp_path,
-                                                  crash_seal):
-    """DQ-gate append: crash after the batch landed in accept/, replay
-    re-routes it — rows must appear exactly once."""
+def _is_batch(col: str):
+    return F.col(col) % 10 == 0
+
+
+@pytest.fixture()
+def crash(monkeypatch):
+    """``crash(point, root)`` arms one crash for the next verb call.
+    'before' / 'between' fail the first / second commit step — a move
+    into, or an overwrite of, a destination under ``root`` — before it
+    runs; 'seal' fails `_seal_epoch` after every commit landed."""
+    state = {"point": None, "root": None, "steps": 0}
+    real_move, real_seal = parity._move_commit, parity._seal_epoch
+    real_parquet = DataFrameWriter.parquet
+
+    def step():
+        if state["point"] in ("before", "between"):
+            state["steps"] += 1
+            if state["steps"] == {"before": 1, "between": 2}[state["point"]]:
+                state["point"] = None
+                raise Crash(f"simulated crash at commit step {state['steps']}")
+
+    def move(src, dest, prefix):
+        step()
+        return real_move(src, dest, prefix)
+
+    def parquet(self, path, *a, **kw):
+        if state["root"] and str(path).startswith(state["root"]):
+            step()
+        return real_parquet(self, path, *a, **kw)
+
+    def seal(marker):
+        if state["point"] == "seal":
+            state["point"] = None
+            raise Crash("simulated crash between commit and seal")
+        real_seal(marker)
+
+    monkeypatch.setattr(parity, "_move_commit", move)
+    monkeypatch.setattr(parity, "_seal_epoch", seal)
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+
+    def arm(point: str, root: str) -> None:
+        state.update(point=point, root=root, steps=0)
+
+    return arm
+
+
+@dataclass
+class Case:
+    """One verb under the matrix. ``setup`` seeds a store (a dict of
+    frames and dirs), ``run`` delivers epoch 0 under token "tok", and
+    ``want`` maps store keys to their from-scratch rebuild (None: no
+    data files). ``anchor`` is the key of the dir holding the markers;
+    ``tag`` is None for the epoch-less compaction. Overwrite verbs name
+    their ``stage`` (stage name -> store key) for recovery and the
+    ``wedge`` error a naive re-delivery after a seal-point crash hits.
+    ``replay`` re-delivers after convergence and must do nothing
+    (default: ``run`` again)."""
+    points: tuple[str, ...]
+    setup: Callable
+    run: Callable
+    want: Callable
+    anchor: str
+    tag: str | None = "inc"
+    stage: dict[str, str] | None = None
+    wedge: str | None = None
+    replay: Callable | None = None
+
+
+@pytest.fixture(scope="module")
+def seeded(tmp_path_factory):
+    """Per-verb seeded stores and expected rebuilds, built once for the
+    module: every matrix case copies its verb's store template."""
+    return {"factory": tmp_path_factory, "store": {}, "want": {}}
+
+
+def _seeded_store(seeded, verb, case, spark, tmp):
+    if verb not in seeded["store"]:
+        tpl = seeded["factory"].mktemp(f"template_{verb}")
+        seeded["store"][verb] = (str(tpl), case.setup(spark, tpl))
+    tpl, c = seeded["store"][verb]
+    shutil.copytree(tpl, tmp, dirs_exist_ok=True)
+    return {k: v.replace(tpl, str(tmp)) if isinstance(v, str) else v
+            for k, v in c.items()}
+
+
+def _assert_rebuilt(seeded, verb, case, spark, c):
+    if verb not in seeded["want"]:
+        seeded["want"][verb] = {
+            k: None if f is None else (f.columns, _rows(f))
+            for k, f in case.want(spark, c).items()}
+    for key, want in seeded["want"][verb].items():
+        if want is None:
+            assert not parity._parquet_files(c[key])
+        else:
+            cols, rows = want
+            assert _rows(spark.read.parquet(c[key]).select(*cols)) == rows, key
+
+
+def _index_store(spark, tmp, aux=False, tok=None):
+    """Corpus {11, 21, 31} seeded; with ``tok``, the batch {10, 40}
+    already applied as epoch 0 under that token."""
+    docs = _docs(spark)
+    c = {"docs": docs, **{n: str(tmp / n) for n in
+                          ("post", "band", "ledger", "tpost", "tband")}}
+    c_post, c_band = dedup.minhash_index_artifacts(docs.filter(~_is_batch("doc_id")))
+    c_post.write.parquet(c["post"])
+    c_band.write.parquet(c["band"])
+    if aux:
+        spark.createDataFrame([], "doc_id long, partner long") \
+            .write.parquet(c["ledger"])
+        c_post.limit(0).write.parquet(c["tpost"])
+        c_band.limit(0).write.parquet(c["tband"])
+    if tok:
+        _inc(c, tok, aux)
+    return c
+
+
+def _inc(c, tok, aux=False):
+    parity.apply_index_increment(
+        c["docs"].filter(_is_batch("doc_id")), c["post"], c["band"],
+        aux_dirs=(c["ledger"], c["tpost"], c["tband"]) if aux else None,
+        epoch_id=0, run_token=tok)
+
+
+def _index_rebuild(ids):
+    def want(spark, c):
+        post, band = dedup.minhash_index_artifacts(
+            c["docs"].filter(F.col("doc_id").isin(ids)))
+        return {"post": post, "band": band}
+    return want
+
+
+# survivors of the batch {10, 40}: 10 duplicates corpus 11 and drops
+_AFTER_INC = [11, 21, 31, 40]
+
+
+def _ivf_store(spark, tmp, tok=None):
+    emb = _emb(spark)
+    assigned, centroids = ivf_assign(emb.filter(~_is_batch("vec_id")))
+    c = {"emb": emb, "cent": str(tmp / "cent"), "index": str(tmp / "index")}
+    centroids.write.parquet(c["cent"])
+    assigned.select("vec_id", "cell_id").write.parquet(c["index"])
+    if tok:
+        _ann_inc(c, tok)
+    return c
+
+
+def _ann_inc(c, tok):
+    parity.apply_ann_index_increment(c["emb"].filter(_is_batch("vec_id")),
+                                     c["cent"], c["index"],
+                                     epoch_id=0, run_token=tok)
+
+
+def _ivf_rebuild(removed=None):
+    """Every vector assigned from scratch, less the ``removed`` residue."""
+    def want(spark, c):
+        emb = c["emb"]
+        if removed is not None:
+            emb = emb.filter(F.col("vec_id") % 10 != removed)
+        return {"index": assign_to_centroids(emb, spark.read.parquet(c["cent"]))
+                .select("vec_id", "cell_id")}
+    return want
+
+
+def _lsh_store(spark, tmp):
+    emb = _emb(spark)
+    index = str(tmp / "index")
+    flatten_band_index(signatures(emb.filter(~_is_batch("vec_id")))) \
+        .write.parquet(index)
+    return {"emb": emb, "index": index}
+
+
+def _dq_store(spark, tmp):
     docs = spark.createDataFrame(
         [(i, _doc(i), "en", "s", len(_doc(i))) for i in range(8)],
         "doc_id long, text string, lang string, source string, "
         "n_chars long")
-    accept_dir = str(tmp_path / "accept")
-    reject_dir = str(tmp_path / "reject")
-    os.makedirs(accept_dir)
-    os.makedirs(reject_dir)
+    c = {"docs": docs, "accept": str(tmp / "accept"), "reject": str(tmp / "reject")}
+    os.makedirs(c["accept"])
+    os.makedirs(c["reject"])
+    return c
 
-    crash_seal["armed"] = True
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        parity.apply_dq_gate(docs, accept_dir, reject_dir,
-                             epoch_id=0, run_token="tok")
-    parity.apply_dq_gate(docs, accept_dir, reject_dir,
-                         epoch_id=0, run_token="tok")
-    assert _rows(spark.read.parquet(accept_dir)) == _rows(docs)
-    assert not [f for f in os.listdir(reject_dir)
-                if f.endswith(".parquet")]
+
+def _doc_store(key, seed):
+    """Corpus slice of `_docs` written by ``seed(frame)`` under ``key``."""
+    def setup(spark, tmp):
+        docs = _docs(spark)
+        seed(docs.filter(~_is_batch("doc_id"))).write.parquet(str(tmp / key))
+        return {"docs": docs, key: str(tmp / key)}
+    return setup
+
+
+def _features(docs):
+    return embed_hash(docs).filter(F.col("dim_id").isNotNull())
+
+
+def _batch(c, key="docs", col="doc_id"):
+    return c[key].filter(_is_batch(col))
+
+
+CASES = {
+    "apply_index_increment": Case(
+        ("before", "between", "seal"), _index_store,
+        run=lambda spark, c: _inc(c, "tok"),
+        want=_index_rebuild(_AFTER_INC), anchor="band"),
+    "apply_ann_index_increment": Case(
+        ("before", "seal"), _ivf_store,
+        run=lambda spark, c: _ann_inc(c, "tok"),
+        want=_ivf_rebuild(), anchor="index"),
+    "apply_lsh_index_increment": Case(
+        ("before", "seal"), _lsh_store,
+        run=lambda spark, c: parity.apply_lsh_index_increment(
+            _batch(c, "emb", "vec_id"), c["index"], epoch_id=0, run_token="tok"),
+        want=lambda spark, c: {"index": flatten_band_index(signatures(c["emb"]))},
+        anchor="index"),
+    "apply_dq_gate": Case(
+        ("before", "seal"), _dq_store,
+        run=lambda spark, c: parity.apply_dq_gate(
+            c["docs"], c["accept"], c["reject"], epoch_id=0, run_token="tok"),
+        want=lambda spark, c: {"accept": c["docs"], "reject": None},
+        anchor="accept", tag="dq"),
+    "apply_bloom_increment": Case(
+        ("before", "seal"),
+        _doc_store("bits", lambda d: parity._bloom_bits_slice(d, "corpus")),
+        run=lambda spark, c: parity.apply_bloom_increment(
+            _batch(c), c["bits"], epoch_id=0, run_token="tok"),
+        want=lambda spark, c: {"bits": parity._bloom_bits_slice(
+            c["docs"].filter(~_is_batch("doc_id")), "corpus")
+            .unionByName(parity._bloom_bits_slice(_batch(c), "batch"))},
+        anchor="bits"),
+    "apply_embed_hash_increment": Case(
+        ("before", "seal"), _doc_store("emb", _features),
+        run=lambda spark, c: parity.apply_embed_hash_increment(
+            _batch(c), c["emb"], epoch_id=0, run_token="tok"),
+        want=lambda spark, c: {"emb": _features(c["docs"])}, anchor="emb"),
+    "apply_index_delete": Case(
+        ("before", "between", "seal"),
+        lambda spark, tmp: _index_store(spark, tmp, aux=True, tok="inc"),
+        # take down 11: 10 resurrects (its sole justification removed)
+        run=lambda spark, c: parity.apply_index_delete(
+            spark, spark.createDataFrame([(11,)], "doc_id long"),
+            c["post"], c["band"], c["ledger"], c["tpost"], c["tband"],
+            epoch_id=0, run_token="tok"),
+        want=_index_rebuild([21, 31, 40, 10]), anchor="band", tag="del",
+        stage={n: n for n in ("post", "band", "ledger", "tpost", "tband")},
+        wedge="not in the stored band index"),
+    "apply_ann_index_delete": Case(
+        ("before", "seal"), lambda spark, tmp: _ivf_store(spark, tmp, tok="inc"),
+        run=lambda spark, c: parity.apply_ann_index_delete(
+            spark, c["emb"].filter(F.col("vec_id") % 10 == 1).select("vec_id"),
+            c["index"], epoch_id=0, run_token="tok"),
+        want=_ivf_rebuild(removed=1), anchor="index",
+        tag="del", stage={"index": "index"}, wedge="not in the stored index"),
+    "compact_index": Case(
+        ("before", "between", "seal"),
+        lambda spark, tmp: _index_store(spark, tmp, tok="inc"),
+        run=lambda spark, c: parity.compact_index(
+            spark, [c["post"], c["band"]], target_files=2),
+        want=_index_rebuild(_AFTER_INC), anchor="band", tag=None,
+        stage={"0": "post", "1": "band"},
+        # no epoch of its own: the replay that must do nothing is the
+        # increment whose marker the compaction carried
+        replay=lambda spark, c: _inc(c, "inc")),
+}
+
+MATRIX = [(verb, point) for verb, case in CASES.items() for point in case.points]
+
+
+@pytest.mark.parametrize("verb,point", MATRIX)
+def test_crash_matrix(spark, tmp_path, crash, caplog, seeded, verb, point):
+    case = CASES[verb]
+    c = _seeded_store(seeded, verb, case, spark, tmp_path)
+    anchor = c[case.anchor]
+    marker = case.tag and parity._epoch_marker(anchor, case.tag, 0, "tok")
+    sealed = set(parity._marker_names(anchor))
+    crash(point, str(tmp_path))
+    with caplog.at_level(logging.ERROR, logger=parity.__name__), \
+            pytest.raises(Crash):
+        case.run(spark, c)
+    # the crashed epoch is unsealed: nothing may trust the store's contents
+    assert not marker or not os.path.exists(marker)
+
+    if case.stage is None:
+        if point != "before":
+            # the crashed attempt's files are really there to be purged
+            prefix = parity._epoch_prefix(case.tag, 0, "tok")
+            assert any(n.startswith(prefix) for d in os.listdir(tmp_path)
+                       for n in os.listdir(tmp_path / d))
+        case.run(spark, c)  # the re-delivery converges unaided
+        assert os.path.exists(marker)
+    else:
+        stage = re.search(r"staged state preserved at (\S+) for recovery",
+                          caplog.text).group(1)
+        assert os.path.isdir(stage), "a failed overwrite keeps its stage"
+        if point == "seal" and case.wedge:
+            # the wedge recovery exists for: naive re-delivery fails
+            with pytest.raises(ValueError, match=case.wedge):
+                case.run(spark, c)
+        dests = {name: c[key] for name, key in case.stage.items()}
+        parity.recover_index_stage(spark, stage, dests)
+        parity.recover_index_stage(spark, stage, dests)  # idempotent
+        # every earlier epoch's marker is carried, and the crashed epoch
+        # is sealed by the recovery
+        assert sealed and set(parity._marker_names(anchor)) == sealed | (
+            {os.path.basename(marker)} if marker else set())
+        shutil.rmtree(stage)
+    _assert_rebuilt(seeded, verb, case, spark, c)
+
+    (case.replay or case.run)(spark, c)  # a further delivery does nothing
+    _assert_rebuilt(seeded, verb, case, spark, c)
 
 
 def test_recover_rejects_colliding_destination_basenames(spark, tmp_path):
-    """ADVICE r12: the _markers snapshot is keyed by destination
-    BASENAME, so two dests sharing one (store/band vs tomb/band) would
-    silently merge their marker re-seals and let a replayed epoch
-    double-apply post-recovery. The contract is now explicit: recovery
-    refuses the layout instead of corrupting it."""
+    """The _markers snapshot is keyed by destination BASENAME, so two
+    dests sharing one (store/band vs tomb/band) would silently merge
+    their marker re-seals and let a replayed epoch double-apply after
+    recovery. Recovery refuses the layout instead of corrupting it."""
     stage = tmp_path / "stage"
     for sub in ("a", "b"):
         spark.createDataFrame([(1,)], "x long").write.parquet(
@@ -283,12 +398,10 @@ def test_recover_rejects_colliding_destination_basenames(spark, tmp_path):
 
 
 def test_move_commit_sweeps_tmp_debris_on_crash(tmp_path, monkeypatch):
-    """ADVICE r12: the cross-device fallback could die between copy2
-    and the final rename; epoch callers purge that debris on replay,
-    but epoch-less batch callers never revisit their unique prefix —
-    the finally-sweep must leave zero ._tmp_ files behind."""
-    import shutil
-
+    """The cross-device fallback could die between copy2 and the final
+    rename; epoch callers purge that debris on replay, but epoch-less
+    batch callers never revisit their unique prefix — the finally-sweep
+    must leave zero ._tmp_ files behind."""
     stage = tmp_path / "stage"
     dest = tmp_path / "dest"
     stage.mkdir()
@@ -323,3 +436,61 @@ def test_move_commit_sweeps_tmp_debris_on_crash(tmp_path, monkeypatch):
     assert not any(n.startswith("._tmp_") for n in names), names
     # the first file's commit survived; the torn second never appeared
     assert names == ["callXYZ_part-0.parquet"]
+
+
+def test_commit_logs_one_event_per_epoch(spark, tmp_path, caplog):
+    """Each commit emits one structured event per epoch, read from the
+    filesystem: the files and bytes an append committed are exactly
+    what landed, a replay is reported as skipped, and an epoch-less
+    overwrite reports what it rewrote."""
+    c = _lsh_store(spark, tmp_path)
+    batch = _batch(c, "emb", "vec_id")
+    prefix = parity._epoch_prefix("inc", 0, "tok")
+    with caplog.at_level(logging.INFO, logger=parity.__name__):
+        parity.apply_lsh_index_increment(batch, c["index"], epoch_id=0,
+                                         run_token="tok")
+        landed = [os.path.getsize(os.path.join(c["index"], n))
+                  for n in os.listdir(c["index"]) if n.startswith(prefix)]
+        parity.apply_lsh_index_increment(batch, c["index"], epoch_id=0,
+                                         run_token="tok")
+        parity.compact_index(spark, [c["index"]], target_files=2)
+    events = [r.epoch for r in caplog.records if hasattr(r, "epoch")]
+    assert [e["verb"] for e in events] == [
+        "apply_lsh_index_increment", "apply_lsh_index_increment",
+        "compact_index"]
+    first, replay, compact = events
+    assert (first["epoch_id"], first["run_token"]) == (0, "tok")
+    assert not first["replay_skipped"]
+    assert first["files"] == len(landed) >= 1
+    assert first["bytes"] == sum(landed)
+    assert replay["replay_skipped"] and replay["files"] == 0
+    parts = [os.path.getsize(os.path.join(c["index"], n))
+             for n in parity._parquet_files(c["index"])]
+    assert compact["epoch_id"] is None and compact["files"] == len(parts)
+    assert compact["bytes"] == sum(parts)
+    assert all(e["commit_ms"] >= 0 for e in events)
+
+
+def test_commit_points_live_only_in_the_protocol():
+    """The staging, move, seal, stream-start and memo calls of
+    streaming/parity.py each have exactly one home — the two commit
+    protocols, the stream runner and the registered-query memo — so
+    a verb or parity cannot grow its own copy back."""
+    homes = {
+        "mkdtemp": {"_append_commit", "_overwrite_commit"},
+        "_move_commit": {"_append_commit"},
+        "_seal_epoch": {"_append_commit", "_overwrite_commit"},
+        "foreachBatch": {"_run_stream"},
+        "_needs_run": {"_memo"},
+    }
+    tree = ast.parse(open(parity.__file__).read())
+    seen = {name: set() for name in homes}
+    for fn in tree.body:
+        for node in ast.walk(fn):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+            if name in homes:
+                seen[name].add(getattr(fn, "name", "<module>"))
+    assert seen == homes

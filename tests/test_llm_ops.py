@@ -3299,12 +3299,12 @@ def test_r18_stream_bloom_bits_parity(spark, sf_dir):
         bloom_probe_audit,
     )
     from coursera_etl_pipeline_spark.streaming.parity import (
-        r18_stream_bloom_bits_oracle,
+        bloom_bits_rebuild_oracle,
         stream_bloom_bits_parity,
     )
 
     stored = stream_bloom_bits_parity(spark, sf_dir, force=True)
-    _duck_parity(stored, r18_stream_bloom_bits_oracle(), sf_dir)
+    _duck_parity(stored, bloom_bits_rebuild_oracle(), sf_dir)
 
     # membership guarantee downstream: with the stored bits standing
     # in for the filter, every exact dup in the batch still hits —
@@ -3349,12 +3349,12 @@ def test_r18_stream_embed_hash_parity(spark, sf_dir):
     from coursera_etl_pipeline_spark.catalog import load_table
     from coursera_etl_pipeline_spark.llm_ops.text import embed_hash
     from coursera_etl_pipeline_spark.streaming.parity import (
-        r18_stream_embed_hash_oracle,
+        embed_hash_rebuild_oracle,
         stream_embed_hash_parity,
     )
 
     stored = stream_embed_hash_parity(spark, sf_dir, force=True)
-    _duck_parity(stored, r18_stream_embed_hash_oracle(), sf_dir)
+    _duck_parity(stored, embed_hash_rebuild_oracle(), sf_dir)
 
     batch = (embed_hash(load_table(spark, sf_dir, "documents"))
              .filter("dim_id IS NOT NULL"))
@@ -3625,52 +3625,6 @@ def test_container_decode_malformed():
         decode_media(b"\x00\x01\x02\x03" * 8, "application/octet-stream")
 
 
-def test_r20_events_path_transitions(spark, sf_dir):
-    """Path transition matrix (round-20 pre-build): planted users pin
-    the semantics — '_START' rows for first events, (ts, event_id)
-    tie-break, NULL-ts exclusion, and the conditional-probability
-    division; fixture parity against the oracle."""
-    import datetime as dt
-
-    from coursera_etl_pipeline_spark.streaming.queries import (
-        events_path_transitions_core,
-        path_transitions,
-        r20_events_path_transitions_oracle,
-    )
-
-    t0 = dt.datetime(2024, 1, 1)
-
-    def ev(i, user, minutes, typ):
-        return (i, None if minutes is None
-                else t0 + dt.timedelta(minutes=minutes), user, typ, 1.0)
-
-    rows = [
-        ev(1, 1, 0, "view"), ev(2, 1, 1, "click"), ev(3, 1, 2, "click"),
-        ev(4, 1, 3, "purchase"),
-        ev(5, 2, 0, "view"), ev(6, 2, 1, "view"),
-        ev(7, 3, 0, "error"),
-        # user 4: same timestamp -> event_id orders view before click
-        ev(40, 4, 5, "view"), ev(41, 4, 5, "click"),
-        # user 5: NULL ts only -> contributes nothing
-        ev(50, 5, None, "view"),
-    ]
-    e = spark.createDataFrame(
-        rows, "event_id long, ts timestamp, user_id long, "
-              "event_type string, value double")
-    got = {(r.src, r.dst): r for r in path_transitions(e).collect()}
-    assert {(k, v.n) for k, v in got.items()} == {
-        (("_START", "view"), 3), (("_START", "error"), 1),
-        (("view", "click"), 2), (("view", "view"), 1),
-        (("click", "click"), 1), (("click", "purchase"), 1)}
-    assert got[("_START", "view")].n_src == 4
-    assert got[("_START", "view")].p == 0.75
-    assert got[("view", "click")].n_src == 3
-    assert got[("click", "purchase")].p == 0.5
-
-    _duck_parity(events_path_transitions_core(spark, sf_dir),
-                 r20_events_path_transitions_oracle(), sf_dir)
-
-
 def test_r20_text_bpe_merge_step(spark, sf_dir):
     """BPE merge iteration (round-20 pre-build): planted vocab pins
     the argmax ((a,b) at corpus-weighted count 3), the merge applied
@@ -3716,177 +3670,6 @@ def test_r20_text_bpe_merge_step(spark, sf_dir):
 
     _duck_parity(text_bpe_merge_step_core(spark, sf_dir),
                  r20_text_bpe_merge_step_oracle(), sf_dir)
-
-
-def test_r20_stream_path_transitions_parity(spark, sf_dir):
-    """The streamed transition matrix (real micro-batch engine over
-    the two time-ordered ticks, frontier-stitched across the boundary,
-    replay-idempotent commits + deliberate epoch-0 replay inside the
-    runner) hash-equals the batch twin's oracle — and row-equals the
-    batch operator itself."""
-    from coursera_etl_pipeline_spark.streaming.parity import (
-        r20_stream_path_transitions_oracle,
-        stream_path_transitions_parity_core,
-    )
-    from coursera_etl_pipeline_spark.streaming.queries import (
-        events_path_transitions_core,
-    )
-
-    stored = stream_path_transitions_parity_core(spark, sf_dir, force=True)
-    _duck_parity(stored, r20_stream_path_transitions_oracle(), sf_dir)
-    assert (sorted(map(tuple, stored.collect()))
-            == sorted(map(tuple,
-                          events_path_transitions_core(spark, sf_dir)
-                          .collect())))
-
-
-def test_path_increment_boundary_stitch(spark, tmp_path):
-    """The cross-micro-batch stitch, planted: a user's first event of
-    tick 1 must pair with that user's LAST event of tick 0 (never
-    '_START'), users first seen in tick 1 get '_START', the frontier
-    advances to each user's latest (ts, event_id), and a replay of
-    epoch 0 no-ops via the marker."""
-    import datetime as dt
-
-    from pyspark.sql import functions as F
-
-    from coursera_etl_pipeline_spark.streaming.parity import (
-        apply_path_increment,
-    )
-
-    trans_dir = str(tmp_path / "trans")
-    front_dir = str(tmp_path / "front")
-    t0 = dt.datetime(2024, 1, 1)
-
-    def ev(i, user, minutes, typ):
-        return (i, t0 + dt.timedelta(minutes=minutes), user, typ)
-
-    b0 = spark.createDataFrame(
-        [ev(1, 1, 0, "view"), ev(2, 1, 10, "click"), ev(3, 2, 5, "view")],
-        "event_id long, ts timestamp, user_id long, event_type string")
-    b1 = spark.createDataFrame(
-        [ev(4, 1, 20, "purchase"), ev(5, 3, 21, "error")],
-        "event_id long, ts timestamp, user_id long, event_type string")
-    apply_path_increment(b0, trans_dir, front_dir, epoch_id=0, run_token="t")
-    apply_path_increment(b1, trans_dir, front_dir, epoch_id=1, run_token="t")
-    apply_path_increment(b0, trans_dir, front_dir, epoch_id=0,
-                         run_token="t")  # replay: must no-op
-
-    stored = (spark.read.parquet(trans_dir)
-              .groupBy("src", "dst").agg(F.sum("n").alias("n")))
-    got = {(r.src, r.dst): r.n for r in stored.collect()}
-    assert got == {
-        ("_START", "view"): 2,          # users 1 and 2 enter in tick 0
-        ("view", "click"): 1,           # user 1 within tick 0
-        ("click", "purchase"): 1,       # user 1 ACROSS the boundary
-        ("_START", "error"): 1,         # user 3 first seen in tick 1
-    }
-    front = (spark.read.parquet(front_dir)
-             .groupBy("user_id")
-             .agg(F.max(F.struct("us", "event_id", "event_type")).alias("m"))
-             .select("user_id", F.col("m.event_type").alias("last_type")))
-    assert {(r.user_id, r.last_type) for r in front.collect()} == {
-        (1, "purchase"), (2, "view"), (3, "error")}
-
-
-def test_r20_events_markov_stationary(spark, sf_dir):
-    """One exact power-iteration step (round-20 pre-build): a planted
-    2-type chain pins the arithmetic end to end — transition micros,
-    the uniform start vector, and the BIGINT product-sum (dst 'a'
-    exactly 0.25, dst 'b' exactly 0.75 in pico units); '_START'
-    pseudo-transitions are excluded; fixture parity against the
-    oracle."""
-    import datetime as dt
-
-    from coursera_etl_pipeline_spark.streaming.queries import (
-        events_markov_stationary_core,
-        markov_power_step,
-        r20_events_markov_stationary_oracle,
-    )
-
-    t0 = dt.datetime(2024, 1, 1)
-
-    def ev(i, user, minutes, typ):
-        return (i, t0 + dt.timedelta(minutes=minutes), user, typ, 1.0)
-
-    rows = [
-        ev(1, 1, 0, "a"), ev(2, 1, 1, "b"), ev(3, 1, 2, "a"),
-        ev(4, 1, 3, "b"),
-        ev(5, 2, 0, "b"), ev(6, 2, 1, "b"),
-    ]
-    e = spark.createDataFrame(
-        rows, "event_id long, ts timestamp, user_id long, "
-              "event_type string, value double")
-    got = {r.dst: r for r in markov_power_step(e).collect()}
-    # P(a->b)=1.0, P(b->a)=P(b->b)=0.5; v0 = (0.5, 0.5)
-    assert got["a"].prob_pico == 500_000 * 500_000
-    assert got["b"].prob_pico == 500_000 * 1_000_000 + 500_000 * 500_000
-    assert (got["a"].prob, got["b"].prob) == (0.25, 0.75)
-
-    _duck_parity(events_markov_stationary_core(spark, sf_dir),
-                 r20_events_markov_stationary_oracle(), sf_dir)
-
-
-def test_path_increment_crash_between_commits_converges(spark, tmp_path,
-                                                        monkeypatch):
-    """The documented crash contract, exercised: a crash BETWEEN the
-    transition move and the frontier move (trans committed, frontier
-    not, epoch unsealed) must converge under replay — the replay
-    purges the partial epoch's files from both stores before the
-    frontier read and re-commits deterministically. Final state must
-    equal the clean run's exactly."""
-    import datetime as dt
-
-    from pyspark.sql import functions as F
-
-    from coursera_etl_pipeline_spark.streaming import parity
-
-    t0 = dt.datetime(2024, 1, 1)
-
-    def ev(i, user, minutes, typ):
-        return (i, t0 + dt.timedelta(minutes=minutes), user, typ)
-
-    schema = "event_id long, ts timestamp, user_id long, event_type string"
-    b0 = spark.createDataFrame(
-        [ev(1, 1, 0, "view"), ev(2, 2, 1, "view")], schema)
-    b1 = spark.createDataFrame(
-        [ev(3, 1, 10, "click"), ev(4, 2, 11, "purchase")], schema)
-
-    def run(root, crash_epoch1):
-        trans_dir, front_dir = f"{root}/trans", f"{root}/front"
-        parity.apply_path_increment(b0, trans_dir, front_dir,
-                                    epoch_id=0, run_token="t")
-        if crash_epoch1:
-            real = parity._move_commit
-            calls = {"n": 0}
-
-            def exploding(src, dest, prefix):
-                real(src, dest, prefix)
-                calls["n"] += 1
-                raise RuntimeError("simulated crash after first move")
-
-            monkeypatch.setattr(parity, "_move_commit", exploding)
-            try:
-                parity.apply_path_increment(b1, trans_dir, front_dir,
-                                            epoch_id=1, run_token="t")
-            except RuntimeError:
-                pass
-            monkeypatch.setattr(parity, "_move_commit", real)
-            assert calls["n"] == 1          # trans landed, frontier did not
-        parity.apply_path_increment(b1, trans_dir, front_dir,
-                                    epoch_id=1, run_token="t")
-        trans = (spark.read.parquet(trans_dir)
-                 .groupBy("src", "dst").agg(F.sum("n").alias("n")))
-        front = spark.read.parquet(front_dir)
-        return (sorted(map(tuple, trans.collect())),
-                sorted(map(tuple, front.collect())))
-
-    clean = run(str(tmp_path / "clean"), crash_epoch1=False)
-    crashed = run(str(tmp_path / "crashed"), crash_epoch1=True)
-    assert crashed == clean
-    assert dict({(s, d): n for s, d, n in crashed[0]}) == {
-        ("_START", "view"): 2, ("view", "click"): 1,
-        ("view", "purchase"): 1}
 
 
 def test_r20_text_cms_topk(spark, sf_dir):

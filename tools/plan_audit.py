@@ -183,15 +183,8 @@ ALLOWED = {
     # (COVERAGE.md round-18-extended note; name fixed here so
     # registration can't drift): the BPE merge argmax is a 1-row
     # aggregate broadcast over the |vocab|-row frame — the
-    # scalar-threshold idiom (sample_corpus_mix's shape). Its queue
-    # sibling events_path_transitions has a clean window +
-    # hash-aggregate + hash-join plan (verified flagless) and needs
-    # no row.
+    # scalar-threshold idiom (sample_corpus_mix's shape).
     ("text_bpe_merge_step", "BroadcastNestedLoopJoin"),
-    # pre-staged r20 (same note): the power step's uniform start
-    # vector is a 1-row aggregate broadcast onto the |types|^2
-    # transition matrix — the scalar-threshold idiom again
-    ("events_markov_stationary", "BroadcastNestedLoopJoin"),
 }
 
 NODES = (
@@ -228,12 +221,7 @@ EXECUTES_ON_BUILD = {"stream_batch_parity", "stream_dedup_parity",
                      # r18 registrations: both run a real availableNow
                      # stream + replay probe on construction
                      "stream_bloom_bits_parity",
-                     "stream_embed_hash_parity",
-                     # pre-staged for the r20 queue (COVERAGE.md
-                     # round-18-extended note): runs a real
-                     # availableNow two-tick stream + replay probe on
-                     # construction, like the two r18 rows above
-                     "stream_path_transitions_parity"}
+                     "stream_embed_hash_parity"}
 
 
 def formatted_plan(df) -> str:

@@ -90,12 +90,8 @@ def _prebuilt():
     from coursera_etl_pipeline_spark.streaming.queries import (
         attribution_last_touch,
         daily_anomaly_mad,
-        markov_power_step,
-        path_transitions,
         r19_events_anomaly_mad_oracle,
         r19_events_attribution_oracle,
-        r20_events_markov_stationary_oracle,
-        r20_events_path_transitions_oracle,
     )
 
     def over(table, core):
@@ -127,15 +123,7 @@ def _prebuilt():
         "text_bpe_pair_counts": (
             over("documents", bpe_pair_counts),
             r19_text_bpe_pair_counts_oracle()),
-        # r20 queue (COVERAGE.md round-18-extended note); the streamed
-        # member stream_path_transitions_parity rides its in-suite
-        # test, not this probe (the bloom-bits precedent)
-        "events_path_transitions": (
-            over("events", path_transitions),
-            r20_events_path_transitions_oracle()),
-        "events_markov_stationary": (
-            over("events", markov_power_step),
-            r20_events_markov_stationary_oracle()),
+        # r20 queue (COVERAGE.md round-18-extended note)
         "text_bpe_merge_step": (
             over("documents", bpe_merge_step),
             r20_text_bpe_merge_step_oracle()),
