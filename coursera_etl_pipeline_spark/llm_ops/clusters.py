@@ -272,15 +272,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- end-to-end minhash dedup verdict (round-16 opener, pre-built r15) --------
-#
-# Designed in COVERAGE.md's round-15 note; the implementation and its
-# oracle land here a round early so round 16 only flips the @query
-# registration — the r15 verify window is consumed exactly (1 forced +
-# 7 new + 42 stale = 50), and registering an 8th new query would push
-# an r12-stale row past the published 3-round currency bound. The
-# pytest below certifies oracle parity locally (sf0.001 DuckDB run)
-# until the driver takes over.
+# --- end-to-end minhash dedup verdict ----------------------------------------
 
 
 def minhash_keep_representative(docs: DataFrame) -> DataFrame:
@@ -315,12 +307,12 @@ def minhash_keep_representative(docs: DataFrame) -> DataFrame:
             .withColumn("is_kept", F.col("doc_id") == F.col("component")))
 
 
-def r16_minhash_keep_representative_oracle() -> str:
-    """DuckDB oracle for the r16 registration: the ENTIRE certified
-    minhash-LSH pair oracle nests as one CTE (its own WITH is legal
-    inside a CTE body — zero duplication, so the pair recipe cannot
-    drift), followed by the same recursive-CTE closure the components
-    oracle uses and the LEFT-join verdict."""
+def dedup_minhash_keep_representative_oracle() -> str:
+    """DuckDB oracle: the ENTIRE certified minhash-LSH pair oracle nests
+    as one CTE (its own WITH is legal inside a CTE body — zero
+    duplication, so the pair recipe cannot drift), followed by the same
+    recursive-CTE closure the components oracle uses and the LEFT-join
+    verdict."""
     from coursera_etl_pipeline_spark.llm_ops.dedup import (
         _duck_minhash_oracle,
     )
@@ -345,12 +337,9 @@ def r16_minhash_keep_representative_oracle() -> str:
 
 
 @query("dedup_minhash_keep_representative",
-       oracle=r16_minhash_keep_representative_oracle())
+       oracle=dedup_minhash_keep_representative_oracle())
 def dedup_minhash_keep_representative(spark: SparkSession,
                                       sf_dir: str) -> DataFrame:
-    """Registered round 16 (the pre-built r16 opener — COVERAGE.md
-    round-15 note): the end-to-end near-dup dedup verdict a corpus
-    user actually calls. Core, oracle, and parity pytest
-    (test_r16_minhash_keep_representative) landed in r15; this wrapper
-    only binds the fixture table."""
+    """The end-to-end near-dup dedup verdict a corpus user actually
+    calls, over the fixture documents."""
     return minhash_keep_representative(load_table(spark, sf_dir, "documents"))

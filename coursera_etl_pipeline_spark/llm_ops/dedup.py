@@ -1633,8 +1633,7 @@ def dedup_url_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup_by_canonical_url(docs)
 
 
-# --- soft dedup weighting (registration queued behind the r16 openers;
-# see COVERAGE.md round-15 band note) ------------------------------------------
+# --- soft dedup weighting ----------------------------------------------------
 #
 # Down-WEIGHT duplicates instead of dropping them (the "soft
 # deduplication" alternative in the public literature: a document
@@ -1676,9 +1675,9 @@ def soft_dedup_weights(docs: DataFrame, text_col: str = "text") -> DataFrame:
                     .cast("bigint").alias("weight_micro")))
 
 
-def r17_dedup_soft_weight_oracle() -> str:
-    """DuckDB oracle for the deferred registration: same fingerprint
-    group count and the same floor(1e6/n + 0.5) micro-weight."""
+def dedup_soft_weight_oracle() -> str:
+    """DuckDB oracle: same fingerprint group count and the same
+    floor(1e6/n + 0.5) micro-weight."""
     return f"""
     WITH keyed AS (
       SELECT doc_id, {DUCK_CONTENT_FP} AS content_fp
@@ -1695,17 +1694,14 @@ def r17_dedup_soft_weight_oracle() -> str:
     """
 
 
-@query("dedup_soft_weight", oracle=r17_dedup_soft_weight_oracle())
+@query("dedup_soft_weight", oracle=dedup_soft_weight_oracle())
 def dedup_soft_weight(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered round 16 under the pre-staged plan_audit name
-    (COVERAGE.md round-15 queue): soft dedup — 1/n_copies
-    down-weighting instead of dropping. Core, oracle, parity pytest
-    (test_r17_soft_dedup_weights), and the weight-mass conservation
-    property test landed in the r15 extended session."""
+    """Soft dedup over the fixture documents: 1/n_copies
+    down-weighting instead of dropping."""
     return soft_dedup_weights(load_table(spark, sf_dir, "documents"))
 
 
-# --- Bloom-filter membership probe (round-17 pre-build, r16) -----------------
+# --- Bloom-filter membership probe -------------------------------------------
 #
 # The O(1)-space seen-before sketch every 100 TB ingest front-door
 # runs BEFORE the exact index: a fixed m-bit Bloom filter over corpus
@@ -1715,8 +1711,7 @@ def dedup_soft_weight(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 90/10 corpus/batch split: per batch doc, the Bloom verdict, the
 # exact verdict, and the false-positive flag — certifying both the
 # no-false-negative property and the measured FP pressure at the
-# chosen m/k. Registration deferred to round 17 (COVERAGE.md round-16
-# queue note); pinned registry name `dedup_bloom_probe`.
+# chosen m/k.
 
 BLOOM_BITS = 16384   # m: fixed sketch width (2^14)
 BLOOM_HASHES = 3     # k: md5 substrings 0-7, 8-15, 16-23 mod m
@@ -1777,10 +1772,10 @@ def bloom_probe_audit(docs: DataFrame, text_col: str = "text") -> DataFrame:
                     .alias("false_positive")))
 
 
-def r17_dedup_bloom_probe_oracle() -> str:
-    """DuckDB oracle for the deferred registration: identical md5
-    windows, mod, set-bit distinct, 3-position probe, and exact
-    anti-join — COUNT FILTER vs the HUGEINT-free equality."""
+def dedup_bloom_probe_oracle() -> str:
+    """DuckDB oracle: identical md5 windows, mod, set-bit distinct,
+    3-position probe, and exact anti-join — COUNT FILTER vs the
+    HUGEINT-free equality."""
     pos_exprs = ", ".join(
         f"('0x' || substr(fp, {1 + 8 * h}, 8))::BIGINT % {BLOOM_BITS}"
         for h in range(BLOOM_HASHES))
@@ -1810,16 +1805,14 @@ def r17_dedup_bloom_probe_oracle() -> str:
     """
 
 
-# --- minhash estimator calibration audit (round-17 pre-build, r16) -----------
+# --- minhash estimator calibration audit -------------------------------------
 #
 # The estimator-vs-truth audit for the minhash family: for every
 # LSH-verified near-dup pair, the signature-agreement Jaccard estimate
 # (agreeing components / 16) next to the exact Jaccard the verify step
 # computed — certifying, under the driver's value hash, that the
 # estimator the banding THEORY relies on is calibrated on this corpus
-# (E[agreement fraction] = J). Registration deferred to round 17
-# (COVERAGE.md round-16 queue note); pinned registry name
-# `dedup_minhash_calibration`.
+# (E[agreement fraction] = J).
 
 
 def minhash_calibration(docs: DataFrame) -> DataFrame:
@@ -1870,17 +1863,17 @@ def minhash_calibration(docs: DataFrame) -> DataFrame:
                     F.abs(est - exact).alias("err_micro")))
 
 
-def r17_dedup_minhash_calibration_oracle() -> str:
-    """DuckDB oracle for the registration: the sh/xs/sig chain is
-    declared ONCE and shared by the pair recipe (spliced via
-    ``_duck_pair_ctes`` / ``_duck_pair_select``) AND both signature
-    lookups — the 16-term agreement sum + micro-unit rounding are
-    spelled identically to the engine. (ADVICE r16: the previous
-    spelling nested the entire minhash oracle — which declares its own
-    sh/xs/sig — inside mh_pairs and then redeclared the chain at the
-    outer scope, computing the shingle/signature work twice and
-    shadowing the CTE names; this mirrors the engine's r16 fix of
-    deriving signatures from the same materialized shingle index.)"""
+def dedup_minhash_calibration_oracle() -> str:
+    """DuckDB oracle: the sh/xs/sig chain is declared ONCE and shared by
+    the pair recipe (spliced via ``_duck_pair_ctes`` /
+    ``_duck_pair_select``) AND both signature lookups — the 16-term
+    agreement sum + micro-unit rounding are spelled identically to the
+    engine. (ADVICE r16: the previous spelling nested the entire minhash
+    oracle — which declares its own sh/xs/sig — inside mh_pairs and then
+    redeclared the chain at the outer scope, computing the
+    shingle/signature work twice and shadowing the CTE names; this
+    mirrors the engine's r16 fix of deriving signatures from the same
+    materialized shingle index.)"""
     agr = " + ".join(
         f"(CASE WHEN a.mh{i} = b.mh{i} THEN 1 ELSE 0 END)"
         for i in range(NUM_HASHES))
@@ -1903,21 +1896,16 @@ def r17_dedup_minhash_calibration_oracle() -> str:
     """
 
 
-@query("dedup_bloom_probe", oracle=r17_dedup_bloom_probe_oracle())
+@query("dedup_bloom_probe", oracle=dedup_bloom_probe_oracle())
 def dedup_bloom_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered round 17 under the pre-staged name (COVERAGE.md
-    round-16 queue): the Bloom seen-before sketch audit over the 90/10
-    corpus/batch split. Core, oracle, planted parity pytest
-    (test_r17_bloom_probe), and the fixture-wide no-false-negative
-    property test landed in r16."""
+    """The Bloom seen-before sketch audit over the 90/10 corpus/batch
+    split of the fixture documents."""
     return bloom_probe_audit(load_table(spark, sf_dir, "documents"))
 
 
 @query("dedup_minhash_calibration",
-       oracle=r17_dedup_minhash_calibration_oracle())
+       oracle=dedup_minhash_calibration_oracle())
 def dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered round 17 under the pre-staged name (COVERAGE.md
-    round-16 queue): the minhash estimator-vs-truth calibration audit
-    over the LSH-verified pair set. Core, oracle, and planted parity
-    pytest (test_r17_minhash_calibration) landed in r16."""
+    """The minhash estimator-vs-truth calibration audit over the
+    LSH-verified pair set of the fixture documents."""
     return minhash_calibration(load_table(spark, sf_dir, "documents"))

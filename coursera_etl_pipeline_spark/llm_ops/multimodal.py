@@ -4,9 +4,8 @@ Images/audio/video ride through the engine as `binary` columns with a
 metadata struct; decode / feature-extract / resize / frame-sample are
 Arrow-batched Pandas UDFs over mapInPandas. Header-level decode (WAV,
 netpbm, PNG/GIF/BMP dimensions, JPEG SOF dimensions, MP3 frame-header
-duration, FLAC STREAMINFO duration, MP4/ISO-BMFF container duration/
-tracks/dimensions — round 18; AVI/RIFF and MKV/WebM-EBML container
-duration/tracks/dimensions — r18 extended session) is REAL and
+duration, FLAC STREAMINFO duration, MP4/ISO-BMFF, AVI/RIFF and
+MKV/WebM-EBML container duration/tracks/dimensions) is REAL and
 stdlib-only, tested end-to-end through read_blob_files ->
 extract_features(mode='real'); only codec-level sample/pixel decode of
 compressed payloads, which genuinely needs codec libraries absent from
@@ -864,16 +863,12 @@ def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- certified audio metadata over a golden mixed-codec fixture ---------------
 #
-# Round-18 pre-build (r17): the audio-decode path (WAV via stdlib
-# `wave`, MP3 frame header, FLAC STREAMINFO — all REAL header parses)
-# promoted to a driver-certifiable query: a deterministic 24-file
-# WAV/FLAC/MP3 corpus whose every parameter is a pure function of the
-# file index, so the DuckDB oracle rebuilds the expected metadata in
-# closed form (the _image_fixture_dir / multimodal_resize golden-
-# fixture pattern applied to audio). Closes the r17 "FLAC oracle row"
-# descope. Registration deferred to round 18 behind
-# stream_bloom_bits_parity (160 band edge); pinned registry name
-# `multimodal_audio_metadata`.
+# The audio-decode path (WAV via stdlib `wave`, MP3 frame header, FLAC
+# STREAMINFO — all REAL header parses) as an oracle-certified query: a
+# deterministic 24-file WAV/FLAC/MP3 corpus whose every parameter is a
+# pure function of the file index, so the DuckDB oracle rebuilds the
+# expected metadata in closed form (the _image_fixture_dir /
+# multimodal_resize golden-fixture pattern applied to audio).
 
 N_FIXTURE_AUDIO = 24
 
@@ -962,16 +957,7 @@ def audio_metadata(blobs: DataFrame) -> DataFrame:
     return blobs.mapInPandas(batches, schema=AUDIO_META_SCHEMA)
 
 
-def multimodal_audio_metadata_core(spark: SparkSession,
-                                   sf_dir: str) -> DataFrame:
-    """The future `multimodal_audio_metadata` registry callable
-    (deferred to r18): binaryFile ingest of the golden audio corpus ->
-    mapInPandas header decode -> typed metadata. sf_dir is unused (the
-    fixture is self-generated, the multimodal_resize convention)."""
-    return audio_metadata(read_blob_files(spark, _audio_fixture_dir()))
-
-
-def r18_multimodal_audio_metadata_oracle() -> str:
+def multimodal_audio_metadata_oracle() -> str:
     """Closed-form DuckDB oracle: rebuilds every file's parameters
     from the index arithmetic and replays the decoders' duration
     expressions with the identical IEEE operation order (frames/rate
@@ -1267,267 +1253,10 @@ def dedup_image_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @query("multimodal_audio_metadata",
-       oracle=r18_multimodal_audio_metadata_oracle())
+       oracle=multimodal_audio_metadata_oracle())
 def multimodal_audio_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered round 18 under the pre-staged name (COVERAGE.md
-    round-17 queue): the audio decode path (WAV / MP3 frame header /
-    the r17 FLAC STREAMINFO parse) over the golden 24-file mixed-codec
-    fixture. Core, closed-form oracle, and planted parity pytest
-    (test_r18_multimodal_audio_metadata) landed in r17; closes the r17
-    'FLAC oracle row' descope note."""
-    return multimodal_audio_metadata_core(spark, sf_dir)
-
-
-# --- certified video container metadata over a golden MP4 fixture -------------
-#
-# Round-19 pre-build (r18): the MP4/ISO-BMFF box walk (this round's
-# decode_media addition — VERDICT r17 item 7) promoted to a
-# driver-certifiable query, the exact lifecycle the audio quartet
-# followed (decoder round N, golden-fixture oracle row round N+1): a
-# deterministic 18-file MP4 corpus whose every parameter is a pure
-# function of the file index, so the DuckDB oracle rebuilds the
-# expected metadata in closed form. Registration deferred to round 19
-# (the r18 certification window is consumed by the 8-deep queue);
-# pinned registry name `multimodal_video_metadata`.
-
-N_FIXTURE_VIDEO = 18
-
-VIDEO_META_SCHEMA = ("name string, kind string, n_tracks long, "
-                     "width long, height long, duration_micro long, "
-                     "n_bytes long")
-
-
-@functools.lru_cache(maxsize=1)
-def _video_fixture_dir() -> str:
-    """Write the deterministic MP4 corpus once per process. File i:
-    mvhd version i%2 (v1 exercises the 64-bit duration path),
-    timescale 600*(1+i%3), duration units ts*(i+1) + 37*i, a video
-    trak at (320+16*(i%5)) x (240+16*(i%3)) 16.16 fixed point, plus a
-    second zero-dim (audio) trak when i%2==1. Container boxes only —
-    no sample data, the FLAC-STREAMINFO fixture discipline."""
-    def box(btype: bytes, body: bytes) -> bytes:
-        return (8 + len(body)).to_bytes(4, "big") + btype + body
-
-    d = scratch_dir("mm_video_")
-    for i in range(N_FIXTURE_VIDEO):
-        ts = 600 * (1 + i % 3)
-        dur = ts * (i + 1) + 37 * i
-        if i % 2 == 1:
-            mvhd = (bytes([1, 0, 0, 0]) + b"\x00" * 16
-                    + ts.to_bytes(4, "big") + dur.to_bytes(8, "big"))
-        else:
-            mvhd = (bytes(4) + b"\x00" * 8
-                    + ts.to_bytes(4, "big") + dur.to_bytes(4, "big"))
-        dims = [(320 + 16 * (i % 5), 240 + 16 * (i % 3))]
-        if i % 2 == 1:
-            dims.append((0, 0))     # the audio trak carries 0x0
-        moov_body = box(b"mvhd", mvhd)
-        for w, h in dims:
-            tkhd = (bytes(4) + b"\x00" * 72
-                    + (w * 65536).to_bytes(4, "big")
-                    + (h * 65536).to_bytes(4, "big"))
-            moov_body += box(b"trak", box(b"tkhd", tkhd))
-        data = box(b"ftyp", b"isom\x00\x00\x00\x00") + box(b"moov", moov_body)
-        with open(f"{d}/vid_{i:02d}.mp4", "wb") as fh:
-            fh.write(data)
-    return d
-
-
-def video_metadata(blobs: DataFrame) -> DataFrame:
-    """(name, kind, n_tracks, width, height, duration_micro, n_bytes)
-    per blob via the REAL ISO-BMFF box walk — mapInPandas over Arrow
-    batches, payload bytes never leave the executor. Widths/heights
-    are whole presentation pixels on this corpus, emitted as exact
-    BIGINTs; duration rounds to BIGINT micros at the output boundary
-    (the audio_metadata discipline)."""
-    import math
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {k: [] for k in ("name", "kind", "n_tracks", "width",
-                                    "height", "duration_micro", "n_bytes")}
-            for path, payload, mt, nb in zip(
-                    pdf["source_path"], pdf["payload"],
-                    pdf["media_type"], pdf["n_bytes"]):
-                meta = decode_media(bytes(payload), mt)
-                rows["name"].append(path.rsplit("/", 1)[-1])
-                rows["kind"].append(meta["kind"])
-                rows["n_tracks"].append(int(meta["n_tracks"]))
-                rows["width"].append(int(meta["width"]))
-                rows["height"].append(int(meta["height"]))
-                rows["duration_micro"].append(
-                    int(math.floor(meta["duration_sec"] * 1_000_000 + 0.5)))
-                rows["n_bytes"].append(int(nb))
-            yield pd.DataFrame(rows)
-
-    return blobs.mapInPandas(batches, schema=VIDEO_META_SCHEMA)
-
-
-def multimodal_video_metadata_core(spark: SparkSession,
-                                   sf_dir: str) -> DataFrame:
-    """The future `multimodal_video_metadata` registry callable
-    (deferred to r19): binaryFile ingest of the golden MP4 corpus ->
-    mapInPandas box walk -> typed metadata. sf_dir is unused (the
-    fixture is self-generated, the multimodal_resize convention)."""
-    return video_metadata(read_blob_files(spark, _video_fixture_dir()))
-
-
-def r19_multimodal_video_metadata_oracle() -> str:
-    """Closed-form DuckDB oracle: rebuilds every file's parameters
-    from the index arithmetic and replays the box walk's duration
-    division with the identical IEEE operation order (units/timescale
-    then *1e6 then +0.5 then floor). n_bytes replays the fixture's box
-    layout: 16 (ftyp) + 8 (moov header) + mvhd box (28 v0 / 40 v1) +
-    100 per trak (8 trak header + 8 tkhd header + 84 tkhd body)."""
-    return f"""
-    WITH g AS (SELECT unnest(range({N_FIXTURE_VIDEO})) AS i),
-    p AS (
-      SELECT i, 600 * (1 + i % 3) AS ts,
-             600 * (1 + i % 3) * (i + 1) + 37 * i AS dur,
-             1 + (i % 2) AS n_tracks,
-             320 + 16 * (i % 5) AS w, 240 + 16 * (i % 3) AS h,
-             CASE WHEN i % 2 = 0 THEN 28 ELSE 40 END AS mvhd_box
-      FROM g
-    )
-    SELECT 'vid_' || lpad(CAST(i AS VARCHAR), 2, '0') || '.mp4' AS name,
-           'video' AS kind,
-           CAST(n_tracks AS BIGINT) AS n_tracks,
-           CAST(w AS BIGINT) AS width,
-           CAST(h AS BIGINT) AS height,
-           CAST(floor((CAST(dur AS DOUBLE) / ts) * 1000000.0 + 0.5)
-                AS BIGINT) AS duration_micro,
-           CAST(24 + mvhd_box + n_tracks * 100 AS BIGINT) AS n_bytes
-    FROM p
-    """
-
-
-# --- certified container metadata over a golden AVI + MKV fixture -------------
-#
-# Round-19 pre-build (r18, second multimodal member): the RIFF/AVI
-# chunk walk and the Matroska/EBML vint walk (this round's
-# decode_media additions — the non-ISO-BMFF half of VERDICT r17
-# item 7) promoted to a driver-certifiable query, the exact lifecycle
-# the MP4 row follows: a deterministic 18-file corpus (9 AVI + 9 MKV)
-# whose every parameter is a pure function of the file index, so the
-# DuckDB oracle rebuilds the expected metadata AND the byte-exact
-# container layout in closed form. Registration deferred to round 19
-# (the r18 certification window is consumed by the 8-deep queue);
-# pinned registry name `multimodal_container_metadata`.
-
-N_FIXTURE_CONTAINER = 9   # per container family
-
-
-@functools.lru_cache(maxsize=1)
-def _container_fixture_dir() -> str:
-    """Write the deterministic AVI+MKV corpus once per process.
-
-    AVI file i: usec/frame 33000+100i, total frames 24(i+1)+7i (their
-    product is the exact duration in micros), dwStreams 1+i%2, dims
-    (640+16(i%4)) x (360+16(i%3)), plus an i-byte JUNK chunk (padded
-    to even per RIFF) so the walk skips an unknown chunk in every
-    non-trivial file. Layout: 12-byte RIFF header + LIST/hdrl holding
-    one 56-byte avih + JUNK -> n_bytes = 96 + i + (i%2).
-
-    MKV file i: TimecodeScale cycles {1e6, 5e5, 2e6} ns, Duration
-    float64 1000(i+1)+17i units, one video TrackEntry at
-    (1280+16(i%5)) x (720+16(i%4)), plus an audio TrackEntry (no Video
-    element) when i%3==0. Every size vint is encoded 2-byte wide so
-    the layout is closed-form: EBML header 18 + Segment header 6 +
-    Info 26 + Tracks (22 video-only / 28 with audio) -> n_bytes =
-    72 + 6*(i%3==0)."""
-    import struct
-
-    d = scratch_dir("mm_container_")
-
-    def chunk(fourcc: bytes, body: bytes) -> bytes:
-        pad = b"\x00" if len(body) & 1 else b""
-        return fourcc + len(body).to_bytes(4, "little") + body + pad
-
-    for i in range(N_FIXTURE_CONTAINER):
-        u, f = 33000 + 100 * i, 24 * (i + 1) + 7 * i
-        avih = (u.to_bytes(4, "little") + bytes(12)
-                + f.to_bytes(4, "little") + bytes(4)
-                + (1 + i % 2).to_bytes(4, "little") + bytes(4)
-                + (640 + 16 * (i % 4)).to_bytes(4, "little")
-                + (360 + 16 * (i % 3)).to_bytes(4, "little") + bytes(16))
-        assert len(avih) == 56
-        body = (b"AVI " + chunk(b"LIST", b"hdrl" + chunk(b"avih", avih))
-                + chunk(b"JUNK", bytes(i)))
-        data = b"RIFF" + len(body).to_bytes(4, "little") + body
-        with open(f"{d}/avi_{i:02d}.avi", "wb") as fh:
-            fh.write(data)
-
-    def el(eid: bytes, body: bytes) -> bytes:
-        return eid + bytes([0x40 | (len(body) >> 8), len(body) & 0xFF]) + body
-
-    scales = (1_000_000, 500_000, 2_000_000)
-    for i in range(N_FIXTURE_CONTAINER):
-        info = el(b"\x15\x49\xa9\x66",
-                  el(b"\x2a\xd7\xb1", scales[i % 3].to_bytes(3, "big"))
-                  + el(b"\x44\x89",
-                       struct.pack(">d", 1000.0 * (i + 1) + 17.0 * i)))
-        vte = el(b"\xae", el(b"\xe0",
-                             el(b"\xb0",
-                                (1280 + 16 * (i % 5)).to_bytes(2, "big"))
-                             + el(b"\xba",
-                                  (720 + 16 * (i % 4)).to_bytes(2, "big"))))
-        ate = el(b"\xae", el(b"\xe1", b"")) if i % 3 == 0 else b""
-        tracks = el(b"\x16\x54\xae\x6b", vte + ate)
-        data = (el(b"\x1a\x45\xdf\xa3", el(b"\x42\x82", b"matroska"))
-                + el(b"\x18\x53\x80\x67", info + tracks))
-        with open(f"{d}/mkv_{i:02d}.mkv", "wb") as fh:
-            fh.write(data)
-    return d
-
-
-def multimodal_container_metadata_core(spark: SparkSession,
-                                       sf_dir: str) -> DataFrame:
-    """The future `multimodal_container_metadata` registry callable
-    (deferred to r19): binaryFile ingest of the golden AVI+MKV corpus
-    -> the shared mapInPandas decode (video_metadata dispatches
-    through decode_media, which sniffs RIFF/'AVI ' and the EBML magic)
-    -> typed metadata. sf_dir is unused (self-generated fixture, the
-    multimodal_resize convention)."""
-    return video_metadata(read_blob_files(spark, _container_fixture_dir()))
-
-
-def r19_multimodal_container_metadata_oracle() -> str:
-    """Closed-form DuckDB oracle: rebuilds every file's parameters
-    from the index arithmetic and replays each decoder's duration
-    division in the identical IEEE operation order (AVI:
-    (usec_per_frame * frames) / 1e6; MKV: (units * scale_ns) / 1e9 —
-    then *1e6 + 0.5, floor). n_bytes replays the byte-exact container
-    layouts documented on the fixture."""
-    return f"""
-    WITH g AS (SELECT unnest(range({N_FIXTURE_CONTAINER})) AS i),
-    avi AS (
-      SELECT 'avi_' || lpad(CAST(i AS VARCHAR), 2, '0') || '.avi' AS name,
-             'video' AS kind,
-             CAST(1 + i % 2 AS BIGINT) AS n_tracks,
-             CAST(640 + 16 * (i % 4) AS BIGINT) AS width,
-             CAST(360 + 16 * (i % 3) AS BIGINT) AS height,
-             CAST(floor((CAST((33000 + 100 * i) * (24 * (i + 1) + 7 * i)
-                              AS DOUBLE) / 1000000.0)
-                        * 1000000.0 + 0.5) AS BIGINT) AS duration_micro,
-             CAST(96 + i + (i % 2) AS BIGINT) AS n_bytes
-      FROM g
-    ),
-    mkv AS (
-      SELECT 'mkv_' || lpad(CAST(i AS VARCHAR), 2, '0') || '.mkv' AS name,
-             'video' AS kind,
-             CAST(CASE WHEN i % 3 = 0 THEN 2 ELSE 1 END AS BIGINT)
-               AS n_tracks,
-             CAST(1280 + 16 * (i % 5) AS BIGINT) AS width,
-             CAST(720 + 16 * (i % 4) AS BIGINT) AS height,
-             CAST(floor(((CAST(1000 * (i + 1) + 17 * i AS DOUBLE)
-                          * (CASE i % 3 WHEN 0 THEN 1000000
-                                        WHEN 1 THEN 500000
-                                        ELSE 2000000 END))
-                         / 1000000000.0)
-                        * 1000000.0 + 0.5) AS BIGINT) AS duration_micro,
-             CAST(72 + CASE WHEN i % 3 = 0 THEN 6 ELSE 0 END AS BIGINT)
-               AS n_bytes
-      FROM g
-    )
-    SELECT * FROM avi UNION ALL SELECT * FROM mkv
-    """
+    """binaryFile ingest of the golden 24-file mixed-codec audio corpus
+    -> mapInPandas header decode (WAV / MP3 frame header / FLAC
+    STREAMINFO) -> typed metadata. sf_dir is unused (the fixture is
+    self-generated, the multimodal_resize convention)."""
+    return audio_metadata(read_blob_files(spark, _audio_fixture_dir()))

@@ -591,12 +591,7 @@ def sample_domain_reweight(spark: SparkSession, sf_dir: str) -> DataFrame:
     return domain_reweight(docs)
 
 
-# --- curriculum quality-mix sampling (round-16 opener, pre-built r15) ----------
-#
-# Same pre-build rationale as clusters.minhash_keep_representative:
-# implementation + oracle land in r15, the @query registration is
-# deferred to r16 by the verify-window math (COVERAGE.md round-15
-# note). The pytest certifies oracle parity locally until then.
+# --- curriculum quality-mix sampling -----------------------------------------
 
 # keep-rate per quality quartile, descending with quality: the top
 # tier is kept whole, the bottom quarter is sampled at 25% — the
@@ -623,11 +618,10 @@ def quality_mix(binned: DataFrame) -> DataFrame:
                  F.count(F.when(kept, F.lit(1))).alias("kept_docs")))
 
 
-def r16_quality_mix_oracle() -> str:
-    """DuckDB oracle for the r16 registration: the certified
-    text_quality_binning oracle nests as one CTE (zero duplication —
-    the binning recipe cannot drift), then the same CASE rates,
-    bucket filter, and 4-row audit."""
+def sample_quality_mix_oracle() -> str:
+    """DuckDB oracle: the certified text_quality_binning oracle nests as
+    one CTE (zero duplication — the binning recipe cannot drift), then
+    the same CASE rates, bucket filter, and 4-row audit."""
     from coursera_etl_pipeline_spark.registry import ORACLE
 
     cases = " ".join(f"WHEN {b} THEN {r}"
@@ -648,12 +642,10 @@ def r16_quality_mix_oracle() -> str:
     """
 
 
-@query("sample_quality_mix", oracle=r16_quality_mix_oracle())
+@query("sample_quality_mix", oracle=sample_quality_mix_oracle())
 def sample_quality_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered round 16 (the pre-built r16 opener — COVERAGE.md
-    round-15 note): curriculum sampling over the certified quality
-    tiers. Core, oracle, and parity pytest (test_r16_quality_mix)
-    landed in r15; this wrapper only binds the certified binning."""
+    """Curriculum sampling over the certified quality tiers; this
+    wrapper only binds the certified binning."""
     from coursera_etl_pipeline_spark.llm_ops.text import text_quality_binning
 
     binned = text_quality_binning(spark, sf_dir).select(
@@ -661,9 +653,7 @@ def sample_quality_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     return quality_mix(binned)
 
 
-# --- DSIR importance weights (registered round 16 together with the
-# 100-160 band revision — COVERAGE.md round-15 queue note; cores,
-# oracles, and parity tests landed in the r15 extended session.)
+# --- DSIR importance weights -------------------------------------------------
 #
 # Data Selection via Importance Resampling (Xie et al. 2023, public):
 # score each raw document by how target-like its hashed n-gram feature
@@ -765,13 +755,12 @@ def dsir_importance(docs: DataFrame, text_col: str = "text") -> DataFrame:
                     "weight_micro", "avg_logratio"))
 
 
-def r17_dsir_importance_oracle() -> str:
-    """DuckDB oracle for the deferred registration: same hashed-bigram
-    buckets, same add-1 smoothed log-ratio rounded once per bucket,
-    same exact BIGINT per-doc sum, same LEFT-join surfacing. Every SUM
-    CASTs back to BIGINT (DuckDB HUGEINT, the r9/r14 lesson); text
-    COALESCEs to '' so NULL-text docs take the same no-features path
-    as the engine's size>=2 filter."""
+def sample_dsir_importance_oracle() -> str:
+    """DuckDB oracle: same hashed-bigram buckets, same add-1 smoothed
+    log-ratio rounded once per bucket, same exact BIGINT per-doc sum,
+    same LEFT-join surfacing. Every SUM CASTs back to BIGINT (DuckDB
+    HUGEINT, the r9/r14 lesson); text COALESCEs to '' so NULL-text docs
+    take the same no-features path as the engine's size>=2 filter."""
     from coursera_etl_pipeline_spark.llm_ops.text import (
         LOGP_MICRO,
         _decontam_ngram_sql,
@@ -825,16 +814,13 @@ def r17_dsir_importance_oracle() -> str:
     """
 
 
-@query("sample_dsir_importance", oracle=r17_dsir_importance_oracle())
+@query("sample_dsir_importance", oracle=sample_dsir_importance_oracle())
 def sample_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered round 16 under the pre-staged plan_audit name
-    (COVERAGE.md round-15 queue): DSIR importance weights over the
-    fixture corpus. Core, oracle, and parity pytest
-    (test_r17_dsir_importance) landed in the r15 extended session."""
+    """DSIR importance weights over the fixture corpus."""
     return dsir_importance(load_table(spark, sf_dir, "documents"))
 
 
-# --- token-budget epoch planning (same r16-registered queue) ---
+# --- token-budget epoch planning ---------------------------------------------
 #
 # Data-constrained scaling (Muennighoff et al. 2023, public): when the
 # token budget exceeds what a source can supply once, repeat the
@@ -899,10 +885,9 @@ def epoch_plan(docs: DataFrame,
             .withColumn("capped", F.col("epochs_milli") == cap_milli))
 
 
-def r17_sample_epoch_plan_oracle() -> str:
-    """DuckDB oracle for the deferred registration: same one
-    aggregate, same 1-row source count, same floored IEEE divisions,
-    every SUM cast to BIGINT."""
+def sample_epoch_plan_oracle() -> str:
+    """DuckDB oracle: same one aggregate, same 1-row source count, same
+    floored IEEE divisions, every SUM cast to BIGINT."""
     return f"""
     WITH avail AS (
       SELECT source,
@@ -933,25 +918,20 @@ def r17_sample_epoch_plan_oracle() -> str:
     """
 
 
-@query("sample_epoch_plan", oracle=r17_sample_epoch_plan_oracle())
+@query("sample_epoch_plan", oracle=sample_epoch_plan_oracle())
 def sample_epoch_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered round 16 under the pre-staged plan_audit name
-    (COVERAGE.md round-15 queue): data-constrained epoch planning over
-    the fixture corpus. Core, oracle, and parity pytest
-    (test_r17_sample_epoch_plan) landed in the r15 extended session."""
+    """Data-constrained epoch planning over the fixture corpus."""
     return epoch_plan(load_table(spark, sf_dir, "documents"))
 
 
-# --- purged temporal holdout (round-17 pre-build, r16) ------------------------
+# --- purged temporal holdout -------------------------------------------------
 #
 # Time-based train/test split with an embargo gap — the standard
 # leakage guard when the data has a time axis (evaluation rows must
 # postdate every training row by at least the embargo, so latent
 # processes spanning the boundary can't leak). Complements the two
 # content-keyed splits (sample_split_leakage_safe, sample_split_minhash)
-# with the TEMPORAL leakage axis, over the events table. Registration
-# deferred to round 17 (COVERAGE.md round-16 queue note); the pinned
-# registry name is `sample_temporal_holdout`.
+# with the TEMPORAL leakage axis, over the events table.
 
 TEMPORAL_TEST_PCT = 20            # last 20% of the observed time range
 TEMPORAL_EMBARGO_US = 3_600_000_000  # 1h purge gap before the test era
@@ -990,11 +970,11 @@ def temporal_holdout(events: DataFrame, ts_col: str = "ts") -> DataFrame:
                     split.alias("split")))
 
 
-def r17_sample_temporal_holdout_oracle() -> str:
-    """DuckDB oracle for the deferred registration: epoch_us bounds,
-    the identical floor((mx-mn)*80.0/100.0) cutoff arithmetic (the
-    *80.0/100.0 double product of a <=2^53 integer range is IEEE-exact
-    on both engines), and the same CASE ladder."""
+def sample_temporal_holdout_oracle() -> str:
+    """DuckDB oracle: epoch_us bounds, the identical
+    floor((mx-mn)*80.0/100.0) cutoff arithmetic (the *80.0/100.0 double
+    product of a <=2^53 integer range is IEEE-exact on both engines),
+    and the same CASE ladder."""
     return f"""
     WITH b AS (
       SELECT CAST(epoch_us(MIN(ts)) AS BIGINT) AS mn,
@@ -1018,11 +998,8 @@ def r17_sample_temporal_holdout_oracle() -> str:
 
 
 @query("sample_temporal_holdout",
-       oracle=r17_sample_temporal_holdout_oracle())
+       oracle=sample_temporal_holdout_oracle())
 def sample_temporal_holdout(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered round 17 under the pre-staged plan_audit name
-    (COVERAGE.md round-16 queue): the purged temporal train/test split
-    over events (embargo gap before the test era). Core, oracle,
-    planted parity pytest (test_r17_temporal_holdout), and the embargo
-    gap property test landed in r16."""
+    """The purged temporal train/test split over events (embargo gap
+    before the test era)."""
     return temporal_holdout(load_table(spark, sf_dir, "events"))

@@ -1359,7 +1359,7 @@ def similarity_ann_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.round(F.count("_hit") * 1.0 / TOP_K, 6).alias("recall")))
 
 
-# --- product quantization ANN (round-17 pre-build, r16) -----------------------
+# --- product quantization ANN ------------------------------------------------
 #
 # PQ (Jegou et al. 2011, "Product Quantization for Nearest Neighbor
 # Search", public): split each vector into M subvectors, quantize each
@@ -1372,8 +1372,7 @@ def similarity_ann_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
 # subvectors of the first PQ_CODEWORDS corpus vectors — the same
 # frozen deterministic "training" discipline as ivf_assign, which is
 # what makes every code and distance an exact cross-engine
-# expectation. Registration deferred to round 17 (COVERAGE.md
-# round-16 queue note); pinned registry name `similarity_ann_pq`.
+# expectation.
 
 PQ_SUBSPACES = 4    # M: 64-dim fixture vectors -> 4 x 16-dim subspaces
 PQ_SUBDIM = 16
@@ -1504,7 +1503,7 @@ def _duck_pq_ctes() -> str:
     per-subspace argmin code assignment (the oracle's independent
     row_number formulation of the engine's min(struct) aggregate), the
     query set, and the per-query ADC lookup table. Extracted from
-    ``r17_similarity_ann_pq_oracle`` (emission hash-verified
+    ``similarity_ann_pq_oracle`` (emission hash-verified
     byte-identical) so the r18 IVF-PQ composition can splice the same
     PQ recipe next to the IVF routing CTEs instead of respelling it —
     the `_duck_sig_ctes` single-definition rule applied to PQ."""
@@ -1538,7 +1537,7 @@ def _duck_pq_ctes() -> str:
     )"""
 
 
-def r17_similarity_ann_pq_oracle() -> str:
+def similarity_ann_pq_oracle() -> str:
     """DuckDB oracle for the registered query: same frozen
     codebook, same per-subspace argmin assignment, same ADC pivot-sum
     in the same fixed subspace order, same (adc, neighbor_id) ranking
@@ -1571,17 +1570,14 @@ def r17_similarity_ann_pq_oracle() -> str:
     """
 
 
-@query("similarity_ann_pq", oracle=r17_similarity_ann_pq_oracle())
+@query("similarity_ann_pq", oracle=similarity_ann_pq_oracle())
 def similarity_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered round 17 under the pre-staged plan_audit name
-    (COVERAGE.md round-16 queue): PQ/ADC top-k ANN — the 64x
-    compression tier next to SQ8 and IVF-SQ8. Core, oracle, planted
-    parity pytest (test_r17_ann_pq), the repartition-stability property
-    test, and the min(struct) argmin plan review landed in r16."""
+    """PQ/ADC top-k ANN — the 64x compression tier next to SQ8 and
+    IVF-SQ8."""
     return ann_topk_pq(load_table(spark, sf_dir, "embeddings"))
 
 
-# --- IVF-PQ composition (round-18 pre-build, r17) -----------------------------
+# --- IVF-PQ composition ------------------------------------------------------
 #
 # The production vector-store operating point (Jegou et al. 2011 §V;
 # every large-scale ANN system composes these two): IVF routing prunes
@@ -1589,10 +1585,7 @@ def similarity_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 # byte codes. Completes the quantized-search lattice — SQ8 (flat int8),
 # IVF-SQ8 (routed int8), PQ (flat codes), IVF-PQ (routed codes): at
 # 100 TB the corpus contact is n_probe/n_cells of the CODES frame,
-# i.e. pruning x 64x compression multiply. Registration deferred to
-# round 18 BEHIND stream_bloom_bits_parity (the registry sits on the
-# 160 band edge — the registering commit must execute the next
-# rotation-band revision); pinned registry name `similarity_ann_ivfpq`.
+# i.e. pruning x 64x compression multiply.
 
 
 def ann_topk_ivfpq(emb: DataFrame, k: int = TOP_K,
@@ -1658,8 +1651,7 @@ def embed_hash_topk(docs: DataFrame, k: int = TOP_K,
     """(query_id, neighbor_id, rank, sim): exact cosine top-k over the
     ENGINE-GENERATED feature-hashing embeddings — generation
     (text.embed_hash) and retrieval composed end to end, no fixture
-    vectors involved. Round-18 pre-build (r17); pinned registry name
-    `similarity_embed_hash_topk`.
+    vectors involved.
 
     Determinism: weights are exact BIGINTs, so dots and norms are
     exact integer sums (order-free — no float fold anywhere); the only
@@ -1700,7 +1692,7 @@ def embed_hash_topk(docs: DataFrame, k: int = TOP_K,
     # pair (the first probe of this plan folded qv*qv and nv*nv for
     # every one of the |queries| x |corpus| pairs: 3 full-vector folds
     # per pair instead of 1, and the pivot ran once per consumer —
-    # A/B'd at K=10, see the r18-queue BASELINE row); _materialize
+    # A/B'd at K=10, see the embed_hash_topk BASELINE row); _materialize
     # shares the pivoted frame between the query and corpus branches
     vecs = _materialize(
         docs.select("doc_id").join(dense, "doc_id", "left")
@@ -1727,7 +1719,7 @@ def embed_hash_topk(docs: DataFrame, k: int = TOP_K,
                     F.round("sim", 6).alias("sim")))
 
 
-def r18_similarity_embed_hash_topk_oracle() -> str:
+def similarity_embed_hash_topk_oracle() -> str:
     """DuckDB oracle: the shared embed-hash feature CTEs, exact
     integer dots/norms via a sparse dim_id equi-join COMPLETED to all
     pairs with a LEFT join + COALESCE 0 (a pair with no common bucket
@@ -1779,20 +1771,19 @@ def r18_similarity_embed_hash_topk_oracle() -> str:
     """
 
 
-def _duck_ivfpq_ctes() -> str:
-    """The full IVF-PQ CTE chain through `ranked` — the certified IVF
-    routing block (`_DUCK_IVF_ANN`: cent/assigned/probes), the
-    certified PQ block (`_duck_pq_ctes`: cb/assign/codes/q/lut), the
-    probed-cell ADC scoring, and the (adc, neighbor_id) ranking.
-    Extracted from ``r18_similarity_ann_ivfpq_oracle`` in round 18
-    (recomposed emission hash-verified byte-identical) so the r19
-    recall metric can splice the same chain next to its exact arm —
-    the `_duck_sig_ctes` single-definition rule applied to IVF-PQ."""
+def similarity_ann_ivfpq_oracle() -> str:
+    """DuckDB oracle: the certified IVF routing block (`_DUCK_IVF_ANN`:
+    cent/assigned/probes) and PQ block (`_duck_pq_ctes`:
+    cb/assign/codes/q/lut) splice together unchanged, ADC scoring
+    joins codes -> assigned cell -> probes so only probed-cell vectors
+    rank — the same fixed-order pivot-sum and (adc, neighbor_id)
+    ranking as the PQ oracle."""
     pivot = " + ".join(f"d{s}" for s in range(PQ_SUBSPACES))
     pivot_cols = ",\n             ".join(
         f"SUM(CASE WHEN l.sub = {s} THEN l._d END) AS d{s}"
         for s in range(PQ_SUBSPACES))
-    return f"""{_DUCK_IVF_ANN},
+    return f"""
+    {_DUCK_IVF_ANN},
     {_duck_pq_ctes()},
     scored AS (
       SELECT l.query_id, c.vec_id AS neighbor_id,
@@ -1813,171 +1804,22 @@ def _duck_ivfpq_ctes() -> str:
                AS rank,
              round({pivot}, 6) AS adc_dist
       FROM scored
-    )"""
-
-
-def r18_similarity_ann_ivfpq_oracle() -> str:
-    """DuckDB oracle for the registered query: the IVF routing and PQ
-    blocks splice together unchanged, ADC scoring joins codes ->
-    assigned cell -> probes so only probed-cell vectors rank — the
-    same fixed-order pivot-sum and (adc, neighbor_id) ranking as the
-    PQ oracle (chain shared with the r19 recall metric via
-    `_duck_ivfpq_ctes`)."""
-    return f"""
-    {_duck_ivfpq_ctes()}
+    )
     SELECT query_id, neighbor_id, rank, adc_dist
     FROM ranked WHERE rank <= {TOP_K}
     """
 
 
-@query("similarity_ann_ivfpq", oracle=r18_similarity_ann_ivfpq_oracle())
+@query("similarity_ann_ivfpq", oracle=similarity_ann_ivfpq_oracle())
 def similarity_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered round 18 under the pre-staged plan_audit name
-    (COVERAGE.md round-17 queue; the registering commit executes the
-    160-crossing band revision). Core, composed oracle, planted parity
-    pytest (test_r18_ann_ivfpq), and the pre-staged allowlist row
-    (broadcast frozen-centroid routing x broadcast codebook LUT, both
-    parents' deliberate crosses) landed in r17. Completes the
-    quantization lattice: SQ8 / IVF-SQ8 / PQ / IVF-PQ."""
+    """IVF-routed PQ/ADC top-k ANN. Completes the quantization
+    lattice: SQ8 / IVF-SQ8 / PQ / IVF-PQ."""
     return ann_topk_ivfpq(load_table(spark, sf_dir, "embeddings"))
 
 
 @query("similarity_embed_hash_topk",
-       oracle=r18_similarity_embed_hash_topk_oracle())
+       oracle=similarity_embed_hash_topk_oracle())
 def similarity_embed_hash_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered round 18 under the pre-staged name (COVERAGE.md
-    round-17 queue): generation -> retrieval composed end to end over
-    the ENGINE-GENERATED feature-hashing embeddings. Core, sparse-
-    join-completed oracle, planted parity pytest
-    (test_r18_embed_hash_topk), and the per-vector-norm plan fix
-    (3.7x) landed in r17."""
+    """Generation -> retrieval composed end to end over the
+    ENGINE-GENERATED feature-hashing embeddings."""
     return embed_hash_topk(load_table(spark, sf_dir, "documents"))
-
-
-# --- IVF-PQ recall metric (round-19 pre-build, r18) ----------------------------
-#
-# Completes the recall instrumentation for the quantization lattice:
-# LSH (similarity_ann_recall), IVF (similarity_ivf_recall), SQ8
-# (similarity_quantize_recall), IVF-SQ8 (similarity_ann_quantized) all
-# carry certified quality metrics — the round-18-registered IVF-PQ
-# production operating point now gets the same treatment: recall@k of
-# the routed ADC results against the exact brute-force top-k, per
-# query, as an exact cross-engine expectation (frozen centroids +
-# frozen codebooks = deterministic metric). Registration deferred to
-# round 19 (the r18 certification window is consumed); pinned registry
-# name `similarity_ivfpq_recall`.
-
-
-def ivfpq_recall_core(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(query_id, recall): fraction of each query's exact top-k the
-    IVF-PQ search retrieves. Both arms are certified fragments; the
-    metric adds one (query, neighbor) LEFT join + a |queries|-row
-    aggregate — at 100 TB this runs on a sampled query set while the
-    exact arm is the expensive side (the point of measuring recall
-    offline, not inline)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    exact = similarity_topk_bruteforce(spark, sf_dir) \
-        .select("query_id", "neighbor_id")
-    ann = (ann_topk_ivfpq(emb).select("query_id", "neighbor_id")
-           .withColumn("_hit", F.lit(1)))
-    return (exact.join(ann, ["query_id", "neighbor_id"], "left")
-            .groupBy("query_id")
-            .agg(F.round(F.count("_hit") * 1.0 / TOP_K, 6).alias("recall")))
-
-
-def r19_similarity_ivfpq_recall_oracle() -> str:
-    """DuckDB oracle: the shared IVF-PQ chain (`_duck_ivfpq_ctes`,
-    byte-identical to the registered query's oracle) next to the exact
-    brute-force arm (the similarity_ann_recall exact CTE), LEFT-joined
-    into per-query recall — the 1.0 literal multiplies as in the green
-    recall rows (DuckDB DECIMAL/Spark double agree through round 6)."""
-    return f"""
-    {_duck_ivfpq_ctes()},
-    ann AS (
-      SELECT query_id, neighbor_id FROM ranked WHERE rank <= {TOP_K}
-    ),
-    exact AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id,
-               row_number() OVER (
-                 PARTITION BY q.vec_id
-                 ORDER BY {_duck_cosine('q.embedding', 'n.embedding')} DESC,
-                          n.vec_id) AS rank
-        FROM embeddings q JOIN embeddings n ON q.vec_id <> n.vec_id
-        WHERE q.vec_id < {N_QUERIES}
-      ) WHERE rank <= {TOP_K}
-    )
-    SELECT e.query_id,
-           round(count(a.neighbor_id) * 1.0 / {TOP_K}, 6) AS recall
-    FROM exact e LEFT JOIN ann a USING (query_id, neighbor_id)
-    GROUP BY e.query_id
-    """
-
-
-# --- Lloyd refinement step: the k-means trainer verb (round-19 pre-build, r18)
-#
-# Every IVF/PQ docstring says "at 100 TB centroids are trained offline
-# and broadcast" — this is that trainer's unit of work, certified: one
-# Lloyd iteration from the frozen seed centroids (assign every vector
-# to its nearest centroid, recompute each centroid as the exact member
-# mean). Training = iterating this step, exactly how
-# dedup_components iterates its certified star-contraction step; the
-# output is the refined centroid in EXACT integer micros (the dsum
-# discipline: per-dimension BIGINT sums are order-free, so the driver
-# hash certifies the mean without a float fold anywhere), plus the
-# member count that divides it back to a double centroid for the next
-# round. Registration deferred to round 19; pinned registry name
-# `similarity_kmeans_refine`.
-
-EMB_DIM = PQ_SUBSPACES * PQ_SUBDIM  # the fixture embeddings' dimensionality
-
-
-def kmeans_refine(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    """(cell_id, dim_id, sum_micros, n_members): one exact Lloyd step.
-
-    Scale shape: the assignment is the certified broadcast-centroid
-    cross (corpus never shuffles to assign); the mean recompute is a
-    posexplode (x EMB_DIM) into ONE (cell, dim)-keyed hash-aggregate
-    with map-side partials and a bounded n_cells x EMB_DIM output —
-    the only shuffle carries 1024 partial rows per map task. Overflow:
-    sum_micros is bounded by |members| x max|x| x 1e6 ~ 1e13 per cell
-    at the fixture's value range, 5 orders under BIGINT (and ANSI mode
-    raises rather than wraps)."""
-    assigned, _ = ivf_assign(emb, vec_col)
-    micros = F.expr(
-        "CAST(FLOOR(CAST(x AS DOUBLE) * 1000000 + 0.5) AS BIGINT)")
-    return (assigned
-            .select("cell_id", F.posexplode(vec_col).alias("dim_id", "x"))
-            .groupBy("cell_id", F.col("dim_id").cast("long").alias("dim_id"))
-            .agg(F.sum(micros).alias("sum_micros"),
-                 F.count(F.lit(1)).alias("n_members"))
-            .select("cell_id", "dim_id", "sum_micros", "n_members"))
-
-
-def r19_similarity_kmeans_refine_oracle() -> str:
-    """DuckDB oracle: the certified IVF assignment CTEs, then the
-    identical per-dimension half-up integer-micros sum — exact BIGINT
-    arithmetic end to end, no float accumulation on either engine."""
-    return f"""
-    {_DUCK_IVF_ANN},
-    mem AS (
-      SELECT a.cell_id, e.embedding
-      FROM assigned a JOIN embeddings e USING (vec_id)
-    ),
-    d AS (
-      SELECT cell_id, s.dim_id,
-             CAST(FLOOR(CAST(embedding[s.dim_id + 1] AS DOUBLE)
-                        * 1000000 + 0.5) AS BIGINT) AS m
-      FROM mem, (SELECT unnest(range(0, {EMB_DIM})) AS dim_id) s
-    )
-    SELECT cell_id, dim_id, CAST(SUM(m) AS BIGINT) AS sum_micros,
-           CAST(COUNT(*) AS BIGINT) AS n_members
-    FROM d GROUP BY cell_id, dim_id
-    """
-
-
-def similarity_kmeans_refine_core(spark: SparkSession,
-                                  sf_dir: str) -> DataFrame:
-    """The future `similarity_kmeans_refine` registry callable
-    (deferred to r19)."""
-    return kmeans_refine(load_table(spark, sf_dir, "embeddings"))

@@ -192,11 +192,14 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     ), df AS (
       SELECT term, COUNT(DISTINCT doc_id) AS n_docs FROM toks GROUP BY term
     ), n AS (SELECT COUNT(*) AS total_docs FROM documents),
+    stf AS (
+      SELECT source, term, CAST(SUM(f) AS BIGINT) AS f
+      FROM tf GROUP BY source, term
+    ),
     scored AS (
-      SELECT tf.source, tf.term,
-             SUM(tf.f * ln(n.total_docs * 1.0 / df.n_docs)) AS tfidf
-      FROM tf JOIN df USING (term) CROSS JOIN n
-      GROUP BY tf.source, tf.term
+      SELECT stf.source, stf.term,
+             stf.f * ln(n.total_docs * 1.0 / df.n_docs) AS tfidf
+      FROM stf JOIN df USING (term) CROSS JOIN n
     )
     SELECT source, term, round(tfidf, 6) AS tfidf, rank FROM (
       SELECT *, row_number() OVER (PARTITION BY source ORDER BY tfidf DESC, term) AS rank
@@ -206,14 +209,17 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TF-IDF per (source, term), top-3 terms per source. Classic
-    shape: two linear aggregations + a broadcast of the (tiny) df
-    table + per-group top-k window — no quadratic stage anywhere.
+    shape: linear aggregations + a broadcast of the (tiny) df table +
+    per-group top-k window — no quadratic stage anywhere.
 
-    ln() is IEEE-identical across engines for identical double inputs;
-    the sum is over integer tf * a shared idf constant per term, summed
-    in deterministic per-(source,term) groups (integer counts -> same
-    per-group accumulation order irrelevance: f * idf summed via
-    decimal-safe small cardinalities)."""
+    idf depends only on the term, so the score is the exact integer
+    SUM(f) per (source, term) times idf, multiplied ONCE: ln() is
+    IEEE-identical across engines for identical double inputs and one
+    multiplication rounds identically, so the score is bit-identical
+    on both engines. Summing f * idf per document would let two
+    mathematically equal scores differ in the last bits with each
+    engine's summation order, so `term` would no longer break their
+    tie the same way on both."""
     from pyspark.sql import Window as W
 
     from coursera_etl_pipeline_spark.llm_ops.dedup import _materialize
@@ -242,10 +248,10 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     idf = F.log(F.col("_total_docs").cast("double") / F.col("n_docs"))
     scored = (
-        tf.join(F.broadcast(dfreq), "term")
+        tf.groupBy("source", "term").agg(F.sum("f").alias("f"))
+        .join(F.broadcast(dfreq), "term")
         .crossJoin(F.broadcast(totals))
-        .groupBy("source", "term")
-        .agg(F.sum(F.col("f") * idf).alias("tfidf"))
+        .select("source", "term", (F.col("f") * idf).alias("tfidf"))
     )
     w = W.partitionBy("source").orderBy(F.desc("tfidf"), F.asc("term"))
     return (
@@ -1271,8 +1277,7 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ngram_novelty(load_table(spark, sf_dir, "documents"))
 
 
-# --- C4 heuristic rule pack (registration queued behind the r16 openers;
-# see COVERAGE.md round-15 band note) ------------------------------------------
+# --- C4 heuristic rule pack --------------------------------------------------
 #
 # The C4 cleaning battery (Raffel et al. 2020, public) complements the
 # Gopher pack above: boilerplate/code/placeholder detection rather
@@ -1318,10 +1323,10 @@ def c4_rules(docs: DataFrame, text_col: str = "text") -> DataFrame:
         (r_words & r_lorem & r_brace & r_policy & r_punct).alias("keep"))
 
 
-def r17_text_c4_rules_oracle() -> str:
-    """DuckDB oracle for the deferred registration: same flags over
-    the same NULL-as-empty text; position()=0 mirrors instr()=0, and
-    the terminal-punct check reads the same trimmed last char."""
+def text_c4_rules_oracle() -> str:
+    """DuckDB oracle: same flags over the same NULL-as-empty text;
+    position()=0 mirrors instr()=0, and the terminal-punct check reads
+    the same trimmed last char."""
     # '' -escape the phrases (ADVICE r15): a future phrase containing a
     # single quote must not silently produce invalid oracle SQL.
     esc = [p.replace("'", "''") for p in C4_POLICY_PHRASES]
@@ -1352,16 +1357,13 @@ def r17_text_c4_rules_oracle() -> str:
     """
 
 
-@query("text_c4_rules", oracle=r17_text_c4_rules_oracle())
+@query("text_c4_rules", oracle=text_c4_rules_oracle())
 def text_c4_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered round 16 under the pre-staged plan_audit name
-    (COVERAGE.md round-15 queue): the C4 cleaning battery over the
-    fixture corpus. Core, oracle, and parity pytest
-    (test_r17_c4_rules) landed in the r15 extended session."""
+    """The C4 cleaning battery over the fixture corpus."""
     return c4_rules(load_table(spark, sf_dir, "documents"))
 
 
-# --- CCNet perplexity bucketing (same r16-registered queue) ---
+# --- CCNet perplexity bucketing ----------------------------------------------
 #
 # CCNet (Wenzek et al. 2020, public): partition the corpus into
 # head/middle/tail tertiles of LM perplexity — the standard coarse
@@ -1407,11 +1409,10 @@ def ccnet_buckets(docs: DataFrame, text_col: str = "text") -> DataFrame:
                     .otherwise(F.lit("head")).alias("ppl_bucket")))
 
 
-def r17_text_ccnet_bucket_oracle() -> str:
-    """DuckDB oracle for the deferred registration: the certified
-    text_perplexity_proxy oracle nests as one CTE (zero duplication),
-    then the same quantile_cont cutpoints (half-mode-proof rounding)
-    and the same CASE."""
+def text_ccnet_bucket_oracle() -> str:
+    """DuckDB oracle: the certified text_perplexity_proxy oracle nests
+    as one CTE (zero duplication), then the same quantile_cont
+    cutpoints (half-mode-proof rounding) and the same CASE."""
     from coursera_etl_pipeline_spark.registry import ORACLE
 
     p0, p1 = CCNET_PROBS
@@ -1434,22 +1435,18 @@ def r17_text_ccnet_bucket_oracle() -> str:
     """
 
 
-@query("text_ccnet_bucket", oracle=r17_text_ccnet_bucket_oracle())
+@query("text_ccnet_bucket", oracle=text_ccnet_bucket_oracle())
 def text_ccnet_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered round 16 under the pre-staged plan_audit name
-    (COVERAGE.md round-15 queue): CCNet head/middle/tail perplexity
-    tertiles over the fixture corpus. Core, oracle, and parity pytest
-    (test_r17_ccnet_buckets) landed in the r15 extended session."""
+    """CCNet head/middle/tail perplexity tertiles over the fixture
+    corpus."""
     return ccnet_buckets(load_table(spark, sf_dir, "documents"))
 
 
-# --- per-source corpus profile report (round-17 pre-build, r16) --------------
+# --- per-source corpus profile report ----------------------------------------
 #
 # The one-pass health report a corpus owner runs before any curation
 # decision: per ingestion source, volume (docs/tokens), hygiene (NULL
-# texts), language spread, and exact-duplicate pressure. Registration
-# deferred to round 17 (COVERAGE.md round-16 queue note); the pinned
-# registry name is `text_corpus_profile`.
+# texts), language spread, and exact-duplicate pressure.
 
 
 def corpus_profile(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -1498,11 +1495,11 @@ def corpus_profile(docs: DataFrame, text_col: str = "text") -> DataFrame:
         .cast("bigint").alias("dup_ratio_micro"))
 
 
-def r17_text_corpus_profile_oracle() -> str:
-    """DuckDB oracle for the deferred registration: identical keyed
-    projection and one GROUP BY source; every COUNT/SUM CASTs to
-    BIGINT (the HUGEINT lesson); the ratio division is spelled
-    (dup * 1000000.0 / n_docs) on both engines."""
+def text_corpus_profile_oracle() -> str:
+    """DuckDB oracle: identical keyed projection and one GROUP BY
+    source; every COUNT/SUM CASTs to BIGINT (the HUGEINT lesson); the
+    ratio division is spelled (dup * 1000000.0 / n_docs) on both
+    engines."""
     from coursera_etl_pipeline_spark.llm_ops.dedup import DUCK_CONTENT_FP
 
     return f"""
@@ -1532,16 +1529,13 @@ def r17_text_corpus_profile_oracle() -> str:
     """
 
 
-@query("text_corpus_profile", oracle=r17_text_corpus_profile_oracle())
+@query("text_corpus_profile", oracle=text_corpus_profile_oracle())
 def text_corpus_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered round 17 under the pre-staged name (COVERAGE.md
-    round-16 queue): the per-source one-pass corpus health report.
-    Core, oracle, and planted parity pytest (test_r17_corpus_profile)
-    landed in r16."""
+    """The per-source one-pass corpus health report."""
     return corpus_profile(load_table(spark, sf_dir, "documents"))
 
 
-# --- hashed-projection embedding generation (round-18 pre-build, r17) ---------
+# --- hashed-projection embedding generation ----------------------------------
 #
 # The engine's own embedding GENERATOR — the gap the r16 VERDICT named
 # ("embeddings are fixture inputs; a training-data pipeline user will
@@ -1555,8 +1549,6 @@ def text_corpus_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # bucket sums. Exact integers end to end, so the generated vectors are
 # oracle-checkable, and the output feeds the similarity family
 # directly (pivot the long form to array<float> for cosine/ANN).
-# Registration deferred to round 18 behind stream_bloom_bits_parity
-# (160 band edge); pinned registry name `text_embed_hash`.
 
 EMBED_HASH_DIM = 64   # matches the fixture embeddings' dimensionality
 
@@ -1615,11 +1607,11 @@ def _duck_embed_feats_ctes() -> str:
     )"""
 
 
-def r18_text_embed_hash_oracle() -> str:
-    """DuckDB oracle for the deferred registration: identical md5
-    windows, mod-dim bucket, parity sign, and exact BIGINT bucket sums
-    (SUM CASTs through BIGINT — the HUGEINT lesson); the LEFT join
-    surfaces featureless docs exactly like the engine."""
+def text_embed_hash_oracle() -> str:
+    """DuckDB oracle: identical md5 windows, mod-dim bucket, parity
+    sign, and exact BIGINT bucket sums (SUM CASTs through BIGINT — the
+    HUGEINT lesson); the LEFT join surfaces featureless docs exactly
+    like the engine."""
     return f"""
     WITH {_duck_embed_feats_ctes()}
     SELECT d.doc_id, f.dim_id, f.weight
@@ -1627,322 +1619,8 @@ def r18_text_embed_hash_oracle() -> str:
     """
 
 
-@query("text_embed_hash", oracle=r18_text_embed_hash_oracle())
+@query("text_embed_hash", oracle=text_embed_hash_oracle())
 def text_embed_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered round 18 under the pre-staged name (COVERAGE.md
-    round-17 queue; the registering commit executes the 160-crossing
-    band revision). Core, oracle, and planted parity pytest
-    (test_r18_text_embed_hash) landed in r17."""
+    """Signed feature-hashing embeddings generated from the fixture
+    documents."""
     return embed_hash(load_table(spark, sf_dir, "documents"))
-
-
-# --- BPE tokenizer training: the merge-step pair statistics (r19 pre-build) ----
-#
-# Round-19 pre-build (r18): the count-adjacent-symbol-pairs step at
-# the heart of BPE tokenizer training (Sennrich et al. 2016, the
-# public byte-pair-encoding algorithm every LLM tokenizer pipeline
-# runs over its corpus). Training = iterating (count pairs -> merge
-# argmax) — the dedup_components precedent for iterative algorithms:
-# the certified query is ONE exact iteration's statistics.
-# Registration deferred to round 19 (the r18 certification window is
-# consumed by the 8-deep queue; COVERAGE.md round-18 note); pinned
-# registry name `text_bpe_pair_counts`.
-
-
-def bpe_pair_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """(left_sym, right_sym, pair_count): corpus-weighted adjacent
-    character-pair frequencies — the statistics BPE's first merge
-    ranks. Tokenization is the engine's standard split-on-space (the
-    vocab_topk tokenizer); words shorter than 2 symbols carry no pair.
-
-    Scale shape — the whole point at 100 TB: the CORPUS contact is one
-    hash-aggregate (word -> count, map-side partials absorb the Zipf
-    head exactly as vocab_topk's do); the pair explode then runs over
-    the DISTINCT VOCABULARY ONLY, weighted by the word counts, so its
-    input is |vocab| rows regardless of corpus size, and the final
-    aggregate is bounded by |symbol alphabet|^2. A naive
-    per-document character explode would shuffle ~n_chars rows —
-    this plan never materializes corpus-proportional pairs.
-
-    The length >= 2 filter is load-bearing twice: single-symbol words
-    have no pair, AND Spark's sequence(1, L-1) generates a DESCENDING
-    [1, 0] when L = 1 (sequence is bidirectional) — the filter keeps
-    the bounds ordered on both engines."""
-    toks = docs.select(F.explode(F.split(text_col, " ")).alias("word"))
-    wc = (toks.filter(F.length("word") >= 2)
-          .groupBy("word").agg(F.count(F.lit(1)).alias("n")))
-    pairs = wc.select(
-        "n",
-        F.expr("explode(sequence(1, length(word) - 1))").alias("i"),
-        "word")
-    return (pairs.select(
-                F.expr("substring(word, i, 1)").alias("left_sym"),
-                F.expr("substring(word, i + 1, 1)").alias("right_sym"),
-                "n")
-            .groupBy("left_sym", "right_sym")
-            .agg(F.sum("n").alias("pair_count")))
-
-
-def text_bpe_pair_counts_core(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The future `text_bpe_pair_counts` registry callable (deferred
-    to r19): BPE merge-step pair statistics over documents."""
-    return bpe_pair_counts(load_table(spark, sf_dir, "documents"))
-
-
-def r19_text_bpe_pair_counts_oracle() -> str:
-    """DuckDB oracle: identical split-on-space vocabulary counts, a
-    per-word unnest(range(1, length)) offset explode (generate_series
-    as a table function rejects lateral column bounds; range-in-SELECT
-    is the engine's supported correlated form — the video-metadata
-    oracle's idiom), the same 1-based substrings, and exact BIGINT
-    pair sums."""
-    return """
-    WITH toks AS (
-      SELECT unnest(string_split(text, ' ')) AS word FROM documents
-    ),
-    wc AS (
-      SELECT word, CAST(COUNT(*) AS BIGINT) AS n
-      FROM toks WHERE length(word) >= 2 GROUP BY word
-    ),
-    offs AS (
-      SELECT word, n, unnest(range(1, length(word))) AS i FROM wc
-    ),
-    pairs AS (
-      SELECT substring(word, CAST(i AS INTEGER), 1) AS left_sym,
-             substring(word, CAST(i AS INTEGER) + 1, 1) AS right_sym,
-             n
-      FROM offs
-    )
-    SELECT left_sym, right_sym, CAST(SUM(n) AS BIGINT) AS pair_count
-    FROM pairs GROUP BY left_sym, right_sym
-    """
-
-
-# --- BPE tokenizer training: one full merge iteration (r20 pre-build) ---------
-#
-# Round-20 pre-build (r18 extended session): the merge HALF of the
-# BPE loop — pick the argmax pair from the statistics the (r19)
-# text_bpe_pair_counts query certifies, then apply it across the
-# vocabulary with BPE's greedy leftmost-non-overlapping scan. One
-# certified iteration = the full training loop by induction (the
-# dedup_components / kmeans_refine precedent). Registration deferred
-# to round 20 (the r19 window is consumed by the 7-deep queue; any
-# r20 registration executes the 175-edge band revision); pinned
-# registry name `text_bpe_merge_step`.
-
-
-def bpe_merge_step(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """(word, n_occ, merged, n_syms, left_sym, right_sym, pair_count):
-    the winning merge applied to every vocabulary word. The argmax is
-    deterministic — MAX over the fixed-width sortable key
-    lpad(pair_count)||left||right (count first, then the
-    lexicographically largest pair breaks ties, spelled identically in
-    both engines). Each word's symbol string starts fully split
-    ('abc' -> 'a|b|c', a capture-group regexp both engines run with
-    global replace) and the merge is replace(repr, 'l|r', 'lr') —
-    both engines' replace() scans leftmost-non-overlapping, which IS
-    BPE's greedy merge order ('a|a|a' -> 'aa|a', never 'a|aa').
-
-    Scale shape: corpus contact is the ONE word-count hash-aggregate
-    shared with the pair-counts query; pair statistics live on the
-    distinct vocabulary; the argmax is a 1-row aggregate BROADCAST
-    back over the |vocab|-row frame (the scalar-threshold idiom —
-    sample_corpus_mix's allowlisted shape); the merge itself is a
-    map-only projection. Nothing corpus-proportional ever shuffles."""
-    toks = docs.select(F.explode(F.split(text_col, " ")).alias("word"))
-    wc = (toks.filter(F.length("word") >= 1)
-          .groupBy("word").agg(F.count(F.lit(1)).alias("n_occ")))
-    eligible = wc.filter(F.length("word") >= 2)
-    pairs = (eligible.select(
-                 "n_occ",
-                 F.expr("explode(sequence(1, length(word) - 1))").alias("i"),
-                 "word")
-             .select(F.expr("substring(word, i, 1)").alias("l"),
-                     F.expr("substring(word, i + 1, 1)").alias("r"),
-                     "n_occ")
-             .groupBy("l", "r").agg(F.sum("n_occ").alias("pc")))
-    best = (pairs.agg(F.max(F.concat(
-                F.lpad(F.col("pc").cast("string"), 12, "0"),
-                F.col("l"), F.col("r"))).alias("bk"))
-            .select(F.expr("substring(bk, 13, 1)").alias("left_sym"),
-                    F.expr("substring(bk, 14, 1)").alias("right_sym"),
-                    F.expr("CAST(substring(bk, 1, 12) AS BIGINT)")
-                     .alias("pair_count")))
-    out = wc.crossJoin(F.broadcast(best))
-    # fully-split repr 'a|b|c' = 2*len-1 chars (the regexp appends '|'
-    # to EVERY char; the substring drops the trailing one)
-    merged = F.expr(
-        "replace(substring(regexp_replace(word, '(.)', '$1|'), 1, "
-        "2 * length(word) - 1), "
-        "concat(left_sym, '|', right_sym), concat(left_sym, right_sym))")
-    staged = out.select("word", "n_occ", merged.alias("merged"),
-                        "left_sym", "right_sym", "pair_count")
-    n_syms = (F.lit(1) + F.length("merged")
-              - F.length(F.expr("replace(merged, '|', '')")))
-    return staged.select("word", "n_occ", "merged",
-                         n_syms.cast("bigint").alias("n_syms"),
-                         "left_sym", "right_sym", "pair_count")
-
-
-def text_bpe_merge_step_core(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The future `text_bpe_merge_step` registry callable (deferred to
-    r20): one BPE merge iteration over the documents vocabulary."""
-    return bpe_merge_step(load_table(spark, sf_dir, "documents"))
-
-
-def r20_text_bpe_merge_step_oracle() -> str:
-    """DuckDB oracle: identical vocabulary counts, pair statistics
-    (the unnest(range) correlated explode), MAX over the identical
-    fixed-width argmax key, RE2 global capture-group split (both
-    engines' '.' skips newlines identically), and the same
-    leftmost-non-overlapping replace()."""
-    return """
-    WITH toks AS (
-      SELECT unnest(string_split(text, ' ')) AS word FROM documents
-    ),
-    wc AS (
-      SELECT word, CAST(COUNT(*) AS BIGINT) AS n_occ
-      FROM toks WHERE length(word) >= 1 GROUP BY word
-    ),
-    offs AS (
-      SELECT word, n_occ, unnest(range(1, length(word))) AS i
-      FROM wc WHERE length(word) >= 2
-    ),
-    pairs AS (
-      SELECT substring(word, CAST(i AS INTEGER), 1) AS l,
-             substring(word, CAST(i AS INTEGER) + 1, 1) AS r,
-             CAST(SUM(n_occ) AS BIGINT) AS pc
-      FROM offs GROUP BY 1, 2
-    ),
-    best AS (
-      SELECT substring(bk, 13, 1) AS left_sym,
-             substring(bk, 14, 1) AS right_sym,
-             CAST(substring(bk, 1, 12) AS BIGINT) AS pair_count
-      FROM (SELECT MAX(lpad(CAST(pc AS VARCHAR), 12, '0') || l || r)
-              AS bk FROM pairs)
-    ),
-    staged AS (
-      SELECT w.word, w.n_occ,
-             replace(substring(regexp_replace(w.word, '(.)', '\\1|', 'g'),
-                               1, 2 * length(w.word) - 1),
-                     b.left_sym || '|' || b.right_sym,
-                     b.left_sym || b.right_sym) AS merged,
-             b.left_sym, b.right_sym, b.pair_count
-      FROM wc w CROSS JOIN best b
-    )
-    SELECT word, n_occ, merged,
-           CAST(1 + length(merged) - length(replace(merged, '|', ''))
-                AS BIGINT) AS n_syms,
-           left_sym, right_sym, pair_count
-    FROM staged
-    """
-
-
-# --- count-min sketch frequency estimation (r20 pre-build) --------------------
-#
-# Round-20 pre-build (r18 extended session): the bounded-state
-# frequency sketch (Cormode & Muthukrishnan 2005) that completes the
-# engine's sketch family — Bloom bits answer membership, HLL
-# (agg_approx) answers distinct-count, the count-min sketch answers
-# "how often?" in d x w integers REGARDLESS of vocabulary size. Fully
-# deterministic by construction (fixed md5-derived hash rows, sums
-# are order-free), unlike Misra-Gries whose merge result depends on
-# partitioning — which is what makes it driver-hash certifiable.
-# Registration deferred to round 20; pinned registry name
-# `text_cms_topk`.
-
-CMS_DEPTH = 4
-CMS_WIDTH = 1024
-CMS_TOPK = 20
-
-
-def cms_topk(docs: DataFrame, text_col: str = "text",
-             depth: int = CMS_DEPTH, width: int = CMS_WIDTH,
-             k: int = CMS_TOPK) -> DataFrame:
-    """(token, est, n_occ): the corpus's top-`k` tokens by count-min
-    ESTIMATE (tie-break est DESC, token ASC), with the exact count
-    alongside so the sketch's one-sided error (est >= n_occ, never
-    under) is visible per row.
-
-    Sketch build — the 100 TB point: ONE hash-aggregate whose output
-    is HARD-BOUNDED at depth x width rows (4096 here) no matter how
-    large the vocabulary grows; per-partition partial maps are bounded
-    the same way, and two sketches merge by cell-wise addition — the
-    property that lets a 1000-executor cluster (or a stream) maintain
-    global frequencies in constant state, which exact vocab_topk
-    cannot. Row i's bucket is md5(token || '#' || i)[0:8] % width —
-    the engine's shared '0x'||substr hash-bucket idiom, identical
-    BIGINT arithmetic on both engines.
-
-    The estimate phase then queries the sketch for the DISTINCT
-    vocabulary (min over the d cells); enumerating the vocab is only
-    the demo's candidate generator — production callers probe the
-    sketch for their own candidate set without any vocab scan."""
-    toks = docs.select(F.explode(F.split(text_col, " ")).alias("token"))
-    toks = toks.filter(F.length("token") >= 1)
-
-    def bucket(col, i):
-        return (F.conv(F.substring(F.md5(F.concat(col, F.lit(f"#{i}"))),
-                                   1, 8), 16, 10)
-                .cast("bigint") % width)
-
-    rows = toks.select("token", F.explode(F.array(*[
-        F.struct(F.lit(i).alias("d"), bucket(F.col("token"), i).alias("b"))
-        for i in range(depth)])).alias("c"))
-    cms = (rows.groupBy(F.col("c.d").alias("d"), F.col("c.b").alias("b"))
-           .agg(F.count(F.lit(1)).alias("cnt")))
-    exact = toks.groupBy("token").agg(F.count(F.lit(1)).alias("n_occ"))
-    probes = exact.select("token", "n_occ", F.explode(F.array(*[
-        F.struct(F.lit(i).alias("d"), bucket(F.col("token"), i).alias("b"))
-        for i in range(depth)])).alias("c"))
-    est = (probes.join(cms, (F.col("c.d") == F.col("d"))
-                       & (F.col("c.b") == F.col("b")))
-           .groupBy("token", "n_occ").agg(F.min("cnt").alias("est")))
-    return (est.select("token", "est", "n_occ")
-            .orderBy(F.desc("est"), F.asc("token")).limit(k))
-
-
-def text_cms_topk_core(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The future `text_cms_topk` registry callable (deferred to
-    r20): count-min top-k over the documents vocabulary."""
-    return cms_topk(load_table(spark, sf_dir, "documents"))
-
-
-def r20_text_cms_topk_oracle() -> str:
-    """DuckDB oracle: identical token explode, the same md5-derived
-    buckets per depth (unnest(range) correlated explode), the bounded
-    cell aggregate, min-over-depths estimate, and the deterministic
-    (est DESC, token ASC) top-k truncation."""
-    return f"""
-    WITH toks AS (
-      SELECT unnest(string_split(text, ' ')) AS token FROM documents
-    ),
-    t AS (SELECT token FROM toks WHERE length(token) >= 1),
-    probes AS (
-      SELECT token, unnest(range({CMS_DEPTH})) AS d FROM t
-    ),
-    hb AS (
-      SELECT token, d,
-             ('0x' || substr(md5(token || '#' || CAST(d AS VARCHAR)),
-                             1, 8))::BIGINT % {CMS_WIDTH} AS b
-      FROM probes
-    ),
-    cms AS (
-      SELECT d, b, CAST(COUNT(*) AS BIGINT) AS cnt FROM hb GROUP BY d, b
-    ),
-    exact AS (
-      SELECT token, CAST(COUNT(*) AS BIGINT) AS n_occ FROM t GROUP BY token
-    ),
-    vocab_probes AS (
-      SELECT e.token, e.n_occ, h.d, h.b
-      FROM exact e JOIN (SELECT DISTINCT token, d, b FROM hb) h
-        USING (token)
-    ),
-    est AS (
-      SELECT v.token, v.n_occ, MIN(c.cnt) AS est
-      FROM vocab_probes v JOIN cms c ON c.d = v.d AND c.b = v.b
-      GROUP BY v.token, v.n_occ
-    )
-    SELECT token, CAST(est AS BIGINT) AS est, n_occ
-    FROM est ORDER BY est DESC, token ASC LIMIT {CMS_TOPK}
-    """

@@ -240,15 +240,13 @@ def events_resample_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- behavioral analytics: funnel + cohort retention (round-18 pre-build, r17)
+# --- behavioral analytics: funnel + cohort retention -------------------------
 #
 # The two product-analytics queries every event-warehouse user runs
 # (the reference's Coursera-course domain is exactly this shape once
 # events exist). Both are pure aggregate/equi-join plans — no windows
 # over the raw stream, no per-user state beyond |users|-row frames —
-# so they scale as far as the events table does. Registration deferred
-# to round 18 (160 band edge; COVERAGE.md round-17 queue note); pinned
-# registry names `events_funnel` and `events_retention`.
+# so they scale as far as the events table does.
 
 FUNNEL_STEPS = ("view", "click", "purchase")
 
@@ -306,7 +304,7 @@ def funnel_depth(events: DataFrame,
           for k in range(1, len(steps) + 1)])
 
 
-def r18_events_funnel_oracle() -> str:
+def events_funnel_oracle() -> str:
     """DuckDB oracle: the identical step chain — per-step min over
     epoch-micros strictly after the previous step, LEFT-joined onto
     the distinct user set, deepest non-NULL step wins."""
@@ -364,7 +362,7 @@ def retention_cohorts(events: DataFrame) -> DataFrame:
                     "n_active"))
 
 
-def r18_events_retention_oracle() -> str:
+def events_retention_oracle() -> str:
     """DuckDB oracle: same min-date cohort, distinct activity days,
     date difference, and count — dates formatted to the shared string
     form, counts CAST through BIGINT (the HUGEINT lesson)."""
@@ -384,198 +382,15 @@ def r18_events_retention_oracle() -> str:
     """
 
 
-@query("events_funnel", oracle=r18_events_funnel_oracle())
+@query("events_funnel", oracle=events_funnel_oracle())
 def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered round 18 under the pre-staged name (COVERAGE.md
-    round-17 queue): greedy-earliest strict-order funnel over events.
-    Core, oracle, and planted parity pytest (test_r18_events_funnel)
-    landed in r17."""
+    """Greedy-earliest strict-order funnel over events."""
     return funnel_depth(load_table(spark, sf_dir, "events",
                                     cluster_by=("user_id",)))
 
 
-@query("events_retention", oracle=r18_events_retention_oracle())
+@query("events_retention", oracle=events_retention_oracle())
 def events_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered round 18 under the pre-staged name (COVERAGE.md
-    round-17 queue): the cohort retention triangle over events. Core,
-    oracle, and planted parity pytest (test_r18_events_retention)
-    landed in r17."""
+    """The cohort retention triangle over events."""
     return retention_cohorts(load_table(spark, sf_dir, "events",
                                     cluster_by=("user_id",)))
-
-
-# --- behavioral analytics II: attribution + robust anomaly flags -------------
-#
-# Round-19 pre-build (r18): the next two product-analytics queries an
-# event warehouse runs after funnel/retention. Registration deferred
-# to round 19 (the r18 certification window is consumed by the 8-deep
-# queue; COVERAGE.md round-18 note); pinned registry names
-# `events_attribution` and `events_anomaly_mad`.
-
-ATTRIBUTION_CONVERSION = "purchase"
-ATTRIBUTION_TOUCHES = ("view", "click")
-ATTRIBUTION_LOOKBACK_US = 7 * 24 * 3600 * 1_000_000  # 7-day window
-
-
-def attribution_last_touch(events: DataFrame) -> DataFrame:
-    """(conv_id, user_id, conv_us, value, touch_type, touch_us,
-    gap_us): last-touch attribution — each conversion (purchase) is
-    credited to the LATEST view/click by the same user strictly before
-    it and within the 7-day lookback; conversions with no such touch
-    are 'direct'.
-
-    Scale shape: one equi-join on user_id between the conversion and
-    touch slices (the range predicate rides the join as a filter, so
-    per-user fan-out is bounded by the lookback window), then ONE
-    hash-aggregate per conversion — the per-conversion argmax is
-    MAX over a fixed-width sortable string key
-    lpad(touch_us)||lpad(touch_id)||touch_type (zero-padded
-    non-negative integers make lexicographic == numeric order, and the
-    globally unique touch_id tie-breaks equal-microsecond touches), so
-    there is NO window over raw events and no second join back to
-    resolve ties. The final LEFT join re-attaches the |conversions|-row
-    argmax to the conversion slice on conv_id. Timestamps stay exact
-    BIGINT epoch-micros; `value` is a raw column passthrough
-    (bit-exact on both engines)."""
-    us = F.unix_micros(F.col("ts"))
-    conv = (events.filter(F.col("event_type") == ATTRIBUTION_CONVERSION)
-            .select(F.col("event_id").alias("conv_id"), "user_id",
-                    us.alias("conv_us"), "value"))
-    touch = (events.filter(F.col("event_type").isin(*ATTRIBUTION_TOUCHES))
-             .select("user_id", us.alias("touch_us"),
-                     F.col("event_type").alias("touch_type"),
-                     F.col("event_id").alias("touch_id")))
-    cand = (conv.join(touch, "user_id")
-            .filter((F.col("touch_us") < F.col("conv_us"))
-                    & (F.col("touch_us")
-                       >= F.col("conv_us") - F.lit(ATTRIBUTION_LOOKBACK_US))))
-    key = F.concat(F.lpad(F.col("touch_us").cast("string"), 20, "0"),
-                   F.lpad(F.col("touch_id").cast("string"), 12, "0"),
-                   F.col("touch_type"))
-    att = cand.groupBy("conv_id").agg(F.max(key).alias("mx"))
-    out = conv.join(att, "conv_id", "left")
-    t_us = F.when(F.col("mx").isNotNull(),
-                  F.expr("substring(mx, 1, 20)").cast("long"))
-    return out.select(
-        "conv_id", "user_id", "conv_us", "value",
-        F.coalesce(F.expr("substring(mx, 33)"),
-                   F.lit("direct")).alias("touch_type"),
-        t_us.alias("touch_us"),
-        (F.col("conv_us") - t_us).alias("gap_us"))
-
-
-def events_attribution_core(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The future `events_attribution` registry callable (deferred to
-    r19): last-touch attribution over the events table."""
-    return attribution_last_touch(load_table(spark, sf_dir, "events"))
-
-
-def r19_events_attribution_oracle() -> str:
-    """DuckDB oracle: the identical slices, lookback-bounded user_id
-    join, MAX over the identical fixed-width string key, and LEFT
-    join-back — substring/lpad are 1-based and byte-identical on both
-    engines for ASCII inputs."""
-    t_in = ", ".join(f"'{t}'" for t in ATTRIBUTION_TOUCHES)
-    return f"""
-    WITH conv AS (
-      SELECT event_id AS conv_id, user_id,
-             CAST(epoch_us(ts) AS BIGINT) AS conv_us, value
-      FROM events WHERE event_type = '{ATTRIBUTION_CONVERSION}'
-    ),
-    touch AS (
-      SELECT user_id, CAST(epoch_us(ts) AS BIGINT) AS touch_us,
-             event_type AS touch_type, event_id AS touch_id
-      FROM events WHERE event_type IN ({t_in})
-    ),
-    att AS (
-      SELECT c.conv_id,
-             MAX(lpad(CAST(t.touch_us AS VARCHAR), 20, '0')
-                 || lpad(CAST(t.touch_id AS VARCHAR), 12, '0')
-                 || t.touch_type) AS mx
-      FROM conv c JOIN touch t USING (user_id)
-      WHERE t.touch_us < c.conv_us
-        AND t.touch_us >= c.conv_us - {ATTRIBUTION_LOOKBACK_US}
-      GROUP BY c.conv_id
-    )
-    SELECT c.conv_id, c.user_id, c.conv_us, c.value,
-           COALESCE(substring(a.mx, 33), 'direct') AS touch_type,
-           CAST(substring(a.mx, 1, 20) AS BIGINT) AS touch_us,
-           c.conv_us - CAST(substring(a.mx, 1, 20) AS BIGINT) AS gap_us
-    FROM conv c LEFT JOIN att a USING (conv_id)
-    """
-
-
-def daily_anomaly_mad(events: DataFrame) -> DataFrame:
-    """(event_type, day, n, med, mad, is_anomaly): robust daily-volume
-    anomaly flags — each event type's daily event count is compared
-    against that type's median daily count, with the deviation scale
-    estimated by the MAD (median absolute deviation); a day is
-    anomalous when |n - med| > 3 * MAD. Median/MAD, unlike mean/stddev,
-    don't let the anomaly inflate its own threshold.
-
-    Scale shape: the corpus collapses to one (event_type, day)
-    hash-aggregate (bounded |types| x |days| rows — map-side partials
-    absorb the volume); the median and MAD are two tiny per-type
-    aggregates hash-JOINED back on event_type (never a window over the
-    daily frame, never a broadcast-nested-loop). Exactness: daily
-    counts are integers, so the interpolated median is a multiple of
-    0.5 and every deviation a multiple of 0.25 — exactly representable
-    doubles with identical IEEE results on both engines (Spark
-    `percentile` == DuckDB `quantile_cont`); cutpoints still round
-    through micros (floor(x*1e6+0.5)/1e6) per the house percentile
-    discipline so the parity never rests on interpolation ulps."""
-    day = F.to_date("ts")
-    daily = (events.groupBy(F.col("event_type"), day.alias("day"))
-             .agg(F.count(F.lit(1)).alias("n")))
-    r6 = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
-    med = (daily.groupBy("event_type")
-           .agg(r6(F.percentile(F.col("n").cast("double"), F.lit(0.5)))
-                .alias("med")))
-    j1 = daily.join(med, "event_type")
-    mad = (j1.groupBy("event_type")
-           .agg(r6(F.percentile(F.abs(F.col("n") - F.col("med")),
-                                F.lit(0.5))).alias("mad")))
-    return (j1.join(mad, "event_type")
-            .select("event_type",
-                    F.date_format("day", "yyyy-MM-dd").alias("day"),
-                    "n", "med", "mad",
-                    (F.abs(F.col("n") - F.col("med"))
-                     > F.lit(3.0) * F.col("mad")).alias("is_anomaly")))
-
-
-def events_anomaly_mad_core(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The future `events_anomaly_mad` registry callable (deferred to
-    r19): median/MAD daily-volume anomaly flags over events."""
-    return daily_anomaly_mad(load_table(spark, sf_dir, "events"))
-
-
-def r19_events_anomaly_mad_oracle() -> str:
-    """DuckDB oracle: identical daily aggregate, quantile_cont medians
-    rounded through the same micros discipline, hash joins back, and
-    the identical 3-MAD comparison in double arithmetic."""
-    return """
-    WITH daily AS (
-      SELECT event_type, CAST(ts AS DATE) AS day,
-             CAST(COUNT(*) AS BIGINT) AS n
-      FROM events GROUP BY event_type, CAST(ts AS DATE)
-    ),
-    med AS (
-      SELECT event_type,
-             floor(quantile_cont(CAST(n AS DOUBLE), 0.5) * 1e6 + 0.5)
-               / 1e6 AS med
-      FROM daily GROUP BY event_type
-    ),
-    mad AS (
-      SELECT d.event_type,
-             floor(quantile_cont(abs(d.n - m.med), 0.5) * 1e6 + 0.5)
-               / 1e6 AS mad
-      FROM daily d JOIN med m USING (event_type)
-      GROUP BY d.event_type
-    )
-    SELECT d.event_type, strftime(d.day, '%Y-%m-%d') AS day, d.n,
-           m.med, a.mad,
-           (abs(d.n - m.med) > 3.0 * a.mad) AS is_anomaly
-    FROM daily d
-      JOIN med m USING (event_type)
-      JOIN mad a USING (event_type)
-    """

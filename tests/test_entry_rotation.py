@@ -23,6 +23,8 @@ emitted oracle string or a DataFrame plan must be forced.
 
 from __future__ import annotations
 
+import pytest
+
 import __spark_entry__ as entry
 from coursera_etl_pipeline_spark.registry import (
     ORACLE,
@@ -76,26 +78,35 @@ def test_consumer_scan_reaches_module_level_sql():
     # regression (marker string drift) would collapse this count
 
 
-def test_edited_this_round_names_are_registered():
-    unknown = set(entry._EDITED_THIS_ROUND) - set(QUERIES)
-    assert not unknown, f"_EDITED_THIS_ROUND names not registered: {unknown}"
+@pytest.mark.parametrize("source", ["_EDITED_THIS_ROUND", "plan_audit"])
+def test_edited_this_round_names_are_registered(source):
+    """Every name that forces a re-certification, or that holds a
+    plan_audit ALLOWED / EXECUTES_ON_BUILD row, is a registered query:
+    the registry is the only place an operator lives, so neither list
+    can carry a name ahead of its registration."""
+    if source == "_EDITED_THIS_ROUND":
+        names = set(entry._EDITED_THIS_ROUND)
+    else:
+        from tools import plan_audit
+
+        names = ({n for n, _ in plan_audit.ALLOWED}
+                 | set(plan_audit.EXECUTES_ON_BUILD))
+    unknown = sorted(names - set(QUERIES))
+    assert not unknown, f"{source} names not registered: {unknown}"
 
 
 def test_rotation_currency_bound_is_documented():
     """COVERAGE.md documents a ceil(N/50)=4-round certification-currency
-    bound for the current registry size band (revised from 3 in round 16
-    when the seven pre-built registrations crossed 150; the band was
-    revised again in round 18 when the eight pre-built r18-queue
-    registrations crossed 160 — each revision lands in the SAME commit
-    as its crossing registration, per the round-15 pinned procedure.
-    The band is now 120-175: the bound stays ceil(N/50)=4 all the way
-    to 200, but the deliberately narrow band forces a fresh look at
-    the rotation arithmetic at 175 rather than letting the registry
-    drift on autopilot — and 175 keeps at least one full never-
-    certified window (<=50 new rows) of headroom below the 200 edge
-    where the bound itself would move to 5). Both halves are checked
-    (ADVICE r11): the registry size sits inside the band, AND the
-    COVERAGE.md paragraph that publishes the bound actually exists."""
+    bound for the registry size band 120-175. The bound stays
+    ceil(N/50)=4 all the way to 200, but the deliberately narrow band
+    forces a fresh look at the rotation arithmetic at 175 rather than
+    letting the registry drift on autopilot — and 175 keeps at least
+    one full never-certified window (<=50 new rows) of headroom below
+    the 200 edge where the bound itself would move to 5. A band
+    revision lands in the same commit as the registration that
+    crosses it. Both halves are checked: the registry size sits inside
+    the band, AND the COVERAGE.md paragraph that publishes the bound
+    actually exists."""
     n = len(QUERIES)
     assert 120 < n <= 175, (
         f"registry size {n} left the documented ceil(N/50)<=4 currency "

@@ -405,6 +405,14 @@ def test_multimodal_decode_mp4_container():
                    tracks=((1920, 1080), (0, 0))), "video/mp4")
     assert m2["duration_sec"] == pytest.approx(7200.5)
     assert (m2["n_tracks"], m2["width"], m2["height"]) == (2.0, 1920.0, 1080.0)
+    # a non-integral v1 duration is units / timescale exactly: 2437
+    # units at 1200/s round to 2030833 micros
+    m3 = multimodal.decode_media(
+        _mp4_bytes(timescale=1200, duration=2437, v=1,
+                   tracks=((336, 256), (0, 0))), "video/mp4")
+    assert m3["duration_sec"] == 2437 / 1200
+    assert int(m3["duration_sec"] * 1_000_000 + 0.5) == 2_030_833
+    assert (m3["n_tracks"], m3["width"], m3["height"]) == (2.0, 336.0, 256.0)
 
     # size==0 (to-end) on the last box and size==1 (largesize) both walk
     raw = _mp4_bytes()
@@ -2318,9 +2326,8 @@ def test_materialized_scoring_plans_cache_the_explode(spark, sf_dir):
             "materialize fix regressed (multi-consumer recompute class)")
 
 
-# --- round-16 openers, pre-built in r15 (registration deferred by the
-# verify-window math — COVERAGE.md round-15 note). Each test certifies
-# engine-vs-DuckDB value parity locally until the driver takes over.
+# --- registered LLM-data operators: planted semantics + full fixture
+# value parity against the composed DuckDB oracle, in-suite.
 
 
 def _duck_parity(spark_df, oracle_sql, sf_dir):
@@ -2357,7 +2364,7 @@ def test_r16_minhash_keep_representative(spark, sf_dir):
     oracle on the fixture."""
     from coursera_etl_pipeline_spark.llm_ops.clusters import (
         minhash_keep_representative,
-        r16_minhash_keep_representative_oracle,
+        dedup_minhash_keep_representative_oracle,
     )
 
     body = ("the quick brown fox jumps over the lazy dog and keeps "
@@ -2375,7 +2382,7 @@ def test_r16_minhash_keep_representative(spark, sf_dir):
     from coursera_etl_pipeline_spark.catalog import load_table
     _duck_parity(
         minhash_keep_representative(load_table(spark, sf_dir, "documents")),
-        r16_minhash_keep_representative_oracle(), sf_dir)
+        dedup_minhash_keep_representative_oracle(), sf_dir)
 
 
 def test_r16_quality_mix(spark, sf_dir):
@@ -2385,7 +2392,7 @@ def test_r16_quality_mix(spark, sf_dir):
     from coursera_etl_pipeline_spark.llm_ops.sampling import (
         QUALITY_MIX_RATES,
         quality_mix,
-        r16_quality_mix_oracle,
+        sample_quality_mix_oracle,
     )
     from coursera_etl_pipeline_spark.llm_ops.text import quality_bins
 
@@ -2404,14 +2411,7 @@ def test_r16_quality_mix(spark, sf_dir):
 
     binned = text_quality_binning(spark, sf_dir).select(
         "doc_id", "quality_bin")
-    _duck_parity(quality_mix(binned), r16_quality_mix_oracle(), sf_dir)
-
-
-# --- deferred-registration pre-builds, round-15 extended session
-# (queued behind the two r16 openers — the 100-150 registry band has
-# exactly 2 free slots; COVERAGE.md round-15 band note). Same local
-# certification discipline: planted semantics + full fixture value
-# parity against the composed DuckDB oracle.
+    _duck_parity(quality_mix(binned), sample_quality_mix_oracle(), sf_dir)
 
 
 def test_r17_dsir_importance(spark, sf_dir):
@@ -2420,7 +2420,7 @@ def test_r17_dsir_importance(spark, sf_dir):
     plus full value parity on the fixture."""
     from coursera_etl_pipeline_spark.llm_ops.sampling import (
         dsir_importance,
-        r17_dsir_importance_oracle,
+        sample_dsir_importance_oracle,
     )
 
     en = "the model trains on the clean corpus and the loss falls"
@@ -2446,7 +2446,7 @@ def test_r17_dsir_importance(spark, sf_dir):
     from coursera_etl_pipeline_spark.catalog import load_table
     _duck_parity(
         dsir_importance(load_table(spark, sf_dir, "documents")),
-        r17_dsir_importance_oracle(), sf_dir)
+        sample_dsir_importance_oracle(), sf_dir)
 
 
 def test_r17_sample_epoch_plan(spark, sf_dir):
@@ -2454,7 +2454,7 @@ def test_r17_sample_epoch_plan(spark, sf_dir):
     abundant one realizes its target exactly; plus fixture parity."""
     from coursera_etl_pipeline_spark.llm_ops.sampling import (
         epoch_plan,
-        r17_sample_epoch_plan_oracle,
+        sample_epoch_plan_oracle,
     )
 
     def words(n):
@@ -2479,7 +2479,7 @@ def test_r17_sample_epoch_plan(spark, sf_dir):
     from coursera_etl_pipeline_spark.catalog import load_table
     _duck_parity(
         epoch_plan(load_table(spark, sf_dir, "documents")),
-        r17_sample_epoch_plan_oracle(), sf_dir)
+        sample_epoch_plan_oracle(), sf_dir)
 
 
 def test_r17_soft_dedup_weights(spark, sf_dir):
@@ -2487,7 +2487,7 @@ def test_r17_soft_dedup_weights(spark, sf_dir):
     docs 1000000, NULL and empty text share one fingerprint group;
     plus fixture parity."""
     from coursera_etl_pipeline_spark.llm_ops.dedup import (
-        r17_dedup_soft_weight_oracle,
+        dedup_soft_weight_oracle,
         soft_dedup_weights,
     )
 
@@ -2506,7 +2506,7 @@ def test_r17_soft_dedup_weights(spark, sf_dir):
     from coursera_etl_pipeline_spark.catalog import load_table
     _duck_parity(
         soft_dedup_weights(load_table(spark, sf_dir, "documents")),
-        r17_dedup_soft_weight_oracle(), sf_dir)
+        dedup_soft_weight_oracle(), sf_dir)
 
 
 def test_r17_c4_rules(spark, sf_dir):
@@ -2515,7 +2515,7 @@ def test_r17_c4_rules(spark, sf_dir):
     fixture parity."""
     from coursera_etl_pipeline_spark.llm_ops.text import (
         c4_rules,
-        r17_text_c4_rules_oracle,
+        text_c4_rules_oracle,
     )
 
     good = "this page has plenty of words and it ends properly."
@@ -2543,7 +2543,7 @@ def test_r17_c4_rules(spark, sf_dir):
     from coursera_etl_pipeline_spark.catalog import load_table
     _duck_parity(
         c4_rules(load_table(spark, sf_dir, "documents")),
-        r17_text_c4_rules_oracle(), sf_dir)
+        text_c4_rules_oracle(), sf_dir)
 
 
 def test_c4_policy_phrase_escaping(spark, monkeypatch):
@@ -2561,7 +2561,7 @@ def test_c4_policy_phrase_escaping(spark, monkeypatch):
     quoted = "don't sell my information"
     monkeypatch.setattr(textmod, "C4_POLICY_PHRASES",
                         textmod.C4_POLICY_PHRASES + (quoted,))
-    sql = textmod.r17_text_c4_rules_oracle()
+    sql = textmod.text_c4_rules_oracle()
     con = duckdb.connect()
     con.execute("CREATE VIEW documents AS SELECT * FROM (VALUES "
                 "(0, 'this page has plenty of words and it ends "
@@ -2588,7 +2588,7 @@ def test_r17_ccnet_buckets(spark, sf_dir):
     as 'unscored'; plus full value parity on the fixture."""
     from coursera_etl_pipeline_spark.llm_ops.text import (
         ccnet_buckets,
-        r17_text_ccnet_bucket_oracle,
+        text_ccnet_bucket_oracle,
     )
 
     common = "the the the the the the"      # highest avg logp
@@ -2609,7 +2609,7 @@ def test_r17_ccnet_buckets(spark, sf_dir):
     from coursera_etl_pipeline_spark.catalog import load_table
     _duck_parity(
         ccnet_buckets(load_table(spark, sf_dir, "documents")),
-        r17_text_ccnet_bucket_oracle(), sf_dir)
+        text_ccnet_bucket_oracle(), sf_dir)
 
 
 def test_soft_dedup_weight_mass_property(spark):
@@ -2660,18 +2660,13 @@ def test_dsir_importance_stable_under_repartitioning(spark):
     assert a == b
 
 
-# --- round-17 queue, pre-built in r16 (registration deferred by the
-# verify-window math — COVERAGE.md round-16 note). Same discipline:
-# planted semantics + full fixture value parity per operator.
-
-
 def test_r17_corpus_profile(spark, sf_dir):
     """Hand-computed per-source profile on a planted corpus (dup
     pressure, NULL hygiene, language spread, token volume); plus full
     fixture value parity."""
     from coursera_etl_pipeline_spark.llm_ops.text import (
         corpus_profile,
-        r17_text_corpus_profile_oracle,
+        text_corpus_profile_oracle,
     )
 
     rows = [
@@ -2700,7 +2695,7 @@ def test_r17_corpus_profile(spark, sf_dir):
     from coursera_etl_pipeline_spark.catalog import load_table
     _duck_parity(
         corpus_profile(load_table(spark, sf_dir, "documents")),
-        r17_text_corpus_profile_oracle(), sf_dir)
+        text_corpus_profile_oracle(), sf_dir)
 
 
 def test_r17_temporal_holdout(spark, sf_dir):
@@ -2711,7 +2706,7 @@ def test_r17_temporal_holdout(spark, sf_dir):
     import datetime as dt
 
     from coursera_etl_pipeline_spark.llm_ops.sampling import (
-        r17_sample_temporal_holdout_oracle,
+        sample_temporal_holdout_oracle,
         temporal_holdout,
     )
 
@@ -2733,7 +2728,7 @@ def test_r17_temporal_holdout(spark, sf_dir):
     from coursera_etl_pipeline_spark.catalog import load_table
     _duck_parity(
         temporal_holdout(load_table(spark, sf_dir, "events")),
-        r17_sample_temporal_holdout_oracle(), sf_dir)
+        sample_temporal_holdout_oracle(), sf_dir)
 
 
 def test_r17_bloom_probe(spark, sf_dir):
@@ -2744,7 +2739,7 @@ def test_r17_bloom_probe(spark, sf_dir):
     parity."""
     from coursera_etl_pipeline_spark.llm_ops.dedup import (
         bloom_probe_audit,
-        r17_dedup_bloom_probe_oracle,
+        dedup_bloom_probe_oracle,
     )
 
     rows = [(i, f"corpus text number {i}") for i in range(1, 9)]  # corpus
@@ -2767,7 +2762,7 @@ def test_r17_bloom_probe(spark, sf_dir):
     audit = bloom_probe_audit(docs)
     # the structural guarantee on the whole fixture: every exact dup hits
     assert audit.filter("exact_dup AND NOT bloom_hit").count() == 0
-    _duck_parity(audit, r17_dedup_bloom_probe_oracle(), sf_dir)
+    _duck_parity(audit, dedup_bloom_probe_oracle(), sf_dir)
 
 
 def test_r17_minhash_calibration(spark, sf_dir):
@@ -2775,7 +2770,7 @@ def test_r17_minhash_calibration(spark, sf_dir):
     every estimate is a legal 16th in [0, 1e6]; plus fixture parity."""
     from coursera_etl_pipeline_spark.llm_ops.dedup import (
         minhash_calibration,
-        r17_dedup_minhash_calibration_oracle,
+        dedup_minhash_calibration_oracle,
     )
 
     body = ("the quick brown fox jumps over the lazy dog and keeps "
@@ -2798,7 +2793,7 @@ def test_r17_minhash_calibration(spark, sf_dir):
     from coursera_etl_pipeline_spark.catalog import load_table
     _duck_parity(
         minhash_calibration(load_table(spark, sf_dir, "documents")),
-        r17_dedup_minhash_calibration_oracle(), sf_dir)
+        dedup_minhash_calibration_oracle(), sf_dir)
 
 
 def test_r17_ann_pq(spark, sf_dir):
@@ -2813,7 +2808,7 @@ def test_r17_ann_pq(spark, sf_dir):
         ann_topk_pq,
         pq_codebook,
         pq_codes,
-        r17_similarity_ann_pq_oracle,
+        similarity_ann_pq_oracle,
     )
 
     # 16 training vectors: one-hot-ish blocks so assignments are
@@ -2843,21 +2838,21 @@ def test_r17_ann_pq(spark, sf_dir):
     from coursera_etl_pipeline_spark.catalog import load_table
     _duck_parity(
         ann_topk_pq(load_table(spark, sf_dir, "embeddings")),
-        r17_similarity_ann_pq_oracle(), sf_dir)
+        similarity_ann_pq_oracle(), sf_dir)
 
 
 def test_r18_ann_ivfpq(spark, sf_dir):
-    """IVF-PQ composition (round-18 pre-build): every returned
-    neighbor must sit in one of its query's probed cells (the routing
-    actually prunes), an exact duplicate of a trainer ranks first at
-    ADC 0 when it shares the query's cells, results are stable under
-    repartitioning (frozen-parameter determinism), and the fixture
-    hash-matches the composed oracle."""
+    """IVF-PQ composition: every returned neighbor must sit in one of
+    its query's probed cells (the routing actually prunes), an exact
+    duplicate of a trainer ranks first at ADC 0 when it shares the
+    query's cells, results are stable under repartitioning
+    (frozen-parameter determinism), and the fixture hash-matches the
+    composed oracle."""
     from coursera_etl_pipeline_spark.llm_ops.similarity import (
         N_PROBE,
         ann_topk_ivfpq,
         ivf_assign,
-        r18_similarity_ann_ivfpq_oracle,
+        similarity_ann_ivfpq_oracle,
     )
 
     def vec(seed):
@@ -2911,22 +2906,21 @@ def test_r18_ann_ivfpq(spark, sf_dir):
     from coursera_etl_pipeline_spark.catalog import load_table
     _duck_parity(
         ann_topk_ivfpq(load_table(spark, sf_dir, "embeddings")),
-        r18_similarity_ann_ivfpq_oracle(), sf_dir)
+        similarity_ann_ivfpq_oracle(), sf_dir)
 
 
 def test_r18_text_embed_hash(spark, sf_dir):
-    """Feature-hashing embedding generation (round-18 pre-build):
-    planted weights equal an independent hashlib recomputation (bucket
-    = md5[0:8] % dim, sign = parity of the 9th hex digit), NULL-text
-    docs surface as (doc_id, NULL, NULL) instead of vanishing, the
-    total |weight| mass is bounded by the token count, and the fixture
-    hash-matches the oracle."""
+    """Feature-hashing embedding generation: planted weights equal an
+    independent hashlib recomputation (bucket = md5[0:8] % dim, sign =
+    parity of the 9th hex digit), NULL-text docs surface as (doc_id,
+    NULL, NULL) instead of vanishing, the total |weight| mass is bounded
+    by the token count, and the fixture hash-matches the oracle."""
     import hashlib
 
     from coursera_etl_pipeline_spark.llm_ops.text import (
         EMBED_HASH_DIM,
         embed_hash,
-        r18_text_embed_hash_oracle,
+        text_embed_hash_oracle,
     )
 
     docs = spark.createDataFrame(
@@ -2956,22 +2950,22 @@ def test_r18_text_embed_hash(spark, sf_dir):
     from coursera_etl_pipeline_spark.catalog import load_table
     _duck_parity(
         embed_hash(load_table(spark, sf_dir, "documents")),
-        r18_text_embed_hash_oracle(), sf_dir)
+        text_embed_hash_oracle(), sf_dir)
 
 
 def test_r18_multimodal_audio_metadata(spark, sf_dir):
-    """Certified audio metadata over the golden mixed-codec fixture
-    (round-18 pre-build): the REAL WAV/FLAC/MP3 header decoders run
-    end-to-end through binaryFile + mapInPandas and hash-match the
-    closed-form oracle; two hand-computed rows cross-check the
-    arithmetic independently of both implementations."""
+    """Certified audio metadata over the golden mixed-codec fixture:
+    the REAL WAV/FLAC/MP3 header decoders run end-to-end through
+    binaryFile + mapInPandas and hash-match the closed-form oracle;
+    two hand-computed rows cross-check the arithmetic independently
+    of both implementations."""
     from coursera_etl_pipeline_spark.llm_ops.multimodal import (
         N_FIXTURE_AUDIO,
-        multimodal_audio_metadata_core,
-        r18_multimodal_audio_metadata_oracle,
+        multimodal_audio_metadata,
+        multimodal_audio_metadata_oracle,
     )
 
-    got = multimodal_audio_metadata_core(spark, sf_dir)
+    got = multimodal_audio_metadata(spark, sf_dir)
     rows = {r.name: r for r in got.collect()}
     assert len(rows) == N_FIXTURE_AUDIO
 
@@ -2987,110 +2981,20 @@ def test_r18_multimodal_audio_metadata(spark, sf_dir):
             f1.n_frames, f1.n_bytes) == ("audio", 2, 48000, 16, 2000, 42)
     assert f1.duration_micro == int(2000 / 48000 * 1_000_000 + 0.5)
 
-    _duck_parity(got, r18_multimodal_audio_metadata_oracle(), sf_dir)
-
-
-def test_r19_similarity_ivfpq_recall(spark, sf_dir):
-    """IVF-PQ recall metric (round-19 pre-build): one row per query,
-    recall in [0, 1], an all-cells/all-codewords operating point
-    reaches recall 1.0 on a planted set where routing prunes nothing,
-    and the fixture hash-matches the composed oracle."""
-    from coursera_etl_pipeline_spark.llm_ops.similarity import (
-        N_QUERIES,
-        ivfpq_recall_core,
-        r19_similarity_ivfpq_recall_oracle,
-    )
-
-    got = ivfpq_recall_core(spark, sf_dir)
-    rows = got.collect()
-    assert len(rows) == N_QUERIES
-    assert all(0.0 <= r.recall <= 1.0 for r in rows)
-    _duck_parity(got, r19_similarity_ivfpq_recall_oracle(), sf_dir)
-
-
-def test_r19_similarity_kmeans_refine(spark, sf_dir):
-    """Exact Lloyd step (round-19 pre-build): each seed assigns to its
-    own cell (self-cosine 1.0), a scaled copy of a seed joins that
-    seed's cell (cosine is scale-invariant and exactly 1.0 for a 2x
-    copy in IEEE), the refined sums equal the hand-computed member
-    micros, output is repartition-stable, and the fixture hash-matches
-    the oracle."""
-    from coursera_etl_pipeline_spark.llm_ops.similarity import (
-        EMB_DIM,
-        kmeans_refine,
-        r19_similarity_kmeans_refine_oracle,
-        similarity_kmeans_refine_core,
-    )
-
-    def vec(seed):
-        # period-101 residues: all 16 seed directions are distinct
-        # (a %13 generator here made vec(13)==vec(0) — seeds 13-15
-        # tie-broke into cells 0-2 and left their own cells empty)
-        return [float((seed * 31 + j * 7) % 101) for j in range(EMB_DIM)]
-
-    rows = [(i, vec(i)) for i in range(16)] \
-        + [(20, [2.0 * x for x in vec(3)])]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    out = {(r.cell_id, r.dim_id): r for r in kmeans_refine(emb).collect()}
-    assert len(out) == 16 * EMB_DIM
-    # every cell's member count: cell 3 gains the scaled copy
-    counts = {c for (c, d), r in out.items() if r.n_members != 1}
-    assert counts == {3} and out[(3, 0)].n_members == 2
-    # exact micros: cell 3 dim j = micros(x_j) + micros(2 x_j);
-    # singleton cells carry their own seed's micros
-    def mic(x):
-        import math
-        return int(math.floor(x * 1_000_000 + 0.5))
-    v3 = vec(3)
-    assert out[(3, 5)].sum_micros == mic(v3[5]) + mic(2.0 * v3[5])
-    v7 = vec(7)
-    assert out[(7, 9)].sum_micros == mic(v7[9])
-    a = sorted(map(tuple, kmeans_refine(emb.repartition(1)).collect()))
-    b = sorted(map(tuple, kmeans_refine(emb.repartition(8)).collect()))
-    assert a == b
-
-    _duck_parity(similarity_kmeans_refine_core(spark, sf_dir),
-                 r19_similarity_kmeans_refine_oracle(), sf_dir)
-
-
-def test_r19_multimodal_video_metadata(spark, sf_dir):
-    """Video container metadata (round-19 pre-build): the golden MP4
-    corpus decodes through the real ISO-BMFF box walk — planted
-    expectations for both mvhd versions and the two-trak shape, and
-    fixture parity against the closed-form oracle."""
-    from coursera_etl_pipeline_spark.llm_ops.multimodal import (
-        multimodal_video_metadata_core,
-        r19_multimodal_video_metadata_oracle,
-    )
-
-    got = multimodal_video_metadata_core(spark, sf_dir)
-    rows = {r.name: r for r in got.collect()}
-    assert len(rows) == 18
-    # file 0: v0 mvhd, ts 600, dur 600 -> exactly 1 s, single trak
-    r0 = rows["vid_00.mp4"]
-    assert (r0.kind, r0.n_tracks, r0.width, r0.height) == ("video", 1, 320, 240)
-    assert r0.duration_micro == 1_000_000
-    assert r0.n_bytes == 24 + 28 + 100
-    # file 1: v1 mvhd (64-bit duration path), audio trak doesn't
-    # shrink the max dims; dur = 1200*2 + 37 -> 2.030833... s
-    r1 = rows["vid_01.mp4"]
-    assert (r1.n_tracks, r1.width, r1.height) == (2, 336, 256)
-    assert r1.duration_micro == int((1200 * 2 + 37) / 1200 * 1e6 + 0.5)
-    assert r1.n_bytes == 24 + 40 + 200
-    _duck_parity(got, r19_multimodal_video_metadata_oracle(), sf_dir)
+    _duck_parity(got, multimodal_audio_metadata_oracle(), sf_dir)
 
 
 def test_r18_embed_hash_topk(spark, sf_dir):
-    """Generation -> retrieval end to end (round-18 pre-build): an
-    exact text duplicate has identical generated vectors and ranks
-    first at cosine 1.0; a NULL-text doc is a zero vector scoring 0.0
-    everywhere (never NaN); rankings are complete; fixture parity
-    against the sparse-join-completed oracle."""
+    """Generation -> retrieval end to end: an exact text duplicate has
+    identical generated vectors and ranks first at cosine 1.0; a
+    NULL-text doc is a zero vector scoring 0.0 everywhere (never NaN);
+    rankings are complete; fixture parity against the
+    sparse-join-completed oracle."""
     from coursera_etl_pipeline_spark.llm_ops.similarity import (
         embed_hash_topk,
     )
     from coursera_etl_pipeline_spark.llm_ops.similarity import (
-        r18_similarity_embed_hash_topk_oracle,
+        similarity_embed_hash_topk_oracle,
     )
 
     docs = spark.createDataFrame(
@@ -3110,20 +3014,19 @@ def test_r18_embed_hash_topk(spark, sf_dir):
     from coursera_etl_pipeline_spark.catalog import load_table
     _duck_parity(
         embed_hash_topk(load_table(spark, sf_dir, "documents")),
-        r18_similarity_embed_hash_topk_oracle(), sf_dir)
+        similarity_embed_hash_topk_oracle(), sf_dir)
 
 
 def test_r18_events_funnel(spark, sf_dir):
-    """Greedy-earliest funnel (round-18 pre-build): planted users pin
-    the strict-order semantics — full completion, out-of-order steps
-    stop the walk, step-1-only, no-step users at depth 0, and a
-    NULL-timestamp step contributing nothing; fixture parity against
-    the composed oracle."""
+    """Greedy-earliest funnel: planted users pin the strict-order
+    semantics — full completion, out-of-order steps stop the walk,
+    step-1-only, no-step users at depth 0, and a NULL-timestamp step
+    contributing nothing; fixture parity against the composed oracle."""
     import datetime as dt
 
     from coursera_etl_pipeline_spark.streaming.queries import (
         funnel_depth,
-        r18_events_funnel_oracle,
+        events_funnel_oracle,
     )
 
     t0 = dt.datetime(2024, 1, 1)
@@ -3158,19 +3061,18 @@ def test_r18_events_funnel(spark, sf_dir):
 
     from coursera_etl_pipeline_spark.catalog import load_table
     _duck_parity(funnel_depth(load_table(spark, sf_dir, "events")),
-                 r18_events_funnel_oracle(), sf_dir)
+                 events_funnel_oracle(), sf_dir)
 
 
 def test_r18_events_retention(spark, sf_dir):
-    """Cohort retention triangle (round-18 pre-build): planted users
-    pin the first-seen cohort day, distinct-day counting (two events
-    one day count once), and the offset arithmetic; every cohort's
-    offset-0 row counts its full cohort; fixture parity against the
-    oracle."""
+    """Cohort retention triangle: planted users pin the first-seen
+    cohort day, distinct-day counting (two events one day count once),
+    and the offset arithmetic; every cohort's offset-0 row counts its
+    full cohort; fixture parity against the oracle."""
     import datetime as dt
 
     from coursera_etl_pipeline_spark.streaming.queries import (
-        r18_events_retention_oracle,
+        events_retention_oracle,
         retention_cohorts,
     )
 
@@ -3196,7 +3098,7 @@ def test_r18_events_retention(spark, sf_dir):
 
     from coursera_etl_pipeline_spark.catalog import load_table
     _duck_parity(retention_cohorts(load_table(spark, sf_dir, "events")),
-                 r18_events_retention_oracle(), sf_dir)
+                 events_retention_oracle(), sf_dir)
 
 
 def test_bloom_no_false_negatives_property(spark):
@@ -3403,176 +3305,13 @@ def test_bloom_increment_dedups_across_micro_batches(spark, tmp_path):
     assert got == expect
 
 
-def test_r19_events_attribution(spark, sf_dir):
-    """Last-touch attribution (round-19 pre-build): planted users pin
-    the semantics — latest-touch wins, strict before (a same-microsecond
-    touch does not count), the 7-day lookback boundary is inclusive,
-    equal-timestamp touches tie-break by touch_id, and untouched
-    conversions are 'direct'; fixture parity against the oracle."""
-    import datetime as dt
-
-    from coursera_etl_pipeline_spark.streaming.queries import (
-        ATTRIBUTION_LOOKBACK_US,
-        attribution_last_touch,
-        r19_events_attribution_oracle,
-    )
-
-    t0 = dt.datetime(2024, 1, 1)
-
-    def us(minutes):
-        return int((t0 + dt.timedelta(minutes=minutes))
-                   .replace(tzinfo=dt.timezone.utc).timestamp() * 1_000_000)
-
-    def ev(i, user, minutes, typ, value=1.0):
-        return (i, t0 + dt.timedelta(minutes=minutes), user, typ, value)
-
-    week_min = 7 * 24 * 60
-    rows = [
-        # user 1: view(0), click(60), purchase(120) -> click credited
-        ev(1, 1, 0, "view"), ev(2, 1, 60, "click"),
-        ev(3, 1, 120, "purchase", 50.0),
-        # user 2: view(0), purchase 9 days later -> outside lookback
-        ev(4, 2, 0, "view"), ev(5, 2, 9 * 24 * 60, "purchase"),
-        # user 3: view(-1), click at the SAME microsecond as the
-        # purchase (strict < excludes it) -> the view is credited
-        ev(6, 3, -1, "view"), ev(7, 3, 0, "click"),
-        ev(8, 3, 0, "purchase"),
-        # user 4: view and click at the SAME timestamp -> the higher
-        # touch_id (the click, id 10) wins the tie-break
-        ev(9, 4, 0, "view"), ev(10, 4, 0, "click"),
-        ev(11, 4, 30, "purchase"),
-        # user 5: naked purchase -> direct
-        ev(12, 5, 0, "purchase"),
-        # user 6: touch EXACTLY lookback before the purchase (>=
-        # boundary is inclusive) -> credited
-        ev(13, 6, 0, "view"), ev(14, 6, week_min, "purchase"),
-    ]
-    e = spark.createDataFrame(
-        rows, "event_id long, ts timestamp, user_id long, "
-              "event_type string, value double")
-    got = {r.conv_id: r for r in attribution_last_touch(e).collect()}
-    assert len(got) == 6
-    assert (got[3].touch_type, got[3].touch_us) == ("click", us(60))
-    assert got[3].gap_us == us(120) - us(60) and got[3].value == 50.0
-    assert (got[5].touch_type, got[5].touch_us) == ("direct", None)
-    assert (got[8].touch_type, got[8].touch_us) == ("view", us(-1))
-    assert got[11].touch_type == "click"          # tie -> higher id
-    assert (got[12].touch_type, got[12].gap_us) == ("direct", None)
-    assert got[14].touch_type == "view"
-    assert got[14].gap_us == ATTRIBUTION_LOOKBACK_US
-
-    from coursera_etl_pipeline_spark.catalog import load_table
-    _duck_parity(attribution_last_touch(load_table(spark, sf_dir, "events")),
-                 r19_events_attribution_oracle(), sf_dir)
-
-
-def test_r19_events_anomaly_mad(spark, sf_dir):
-    """Median/MAD anomaly flags (round-19 pre-build): planted daily
-    series pin the robust semantics — an outlier day cannot inflate
-    its own threshold (mad=0 series flags ANY deviation), an odd-count
-    series with mad>0 flags nothing under 3 MADs, and an even-count
-    series exercises the interpolated (x.5 / x.25) medians exactly;
-    fixture parity against the oracle."""
-    import datetime as dt
-
-    from coursera_etl_pipeline_spark.streaming.queries import (
-        daily_anomaly_mad,
-        r19_events_anomaly_mad_oracle,
-    )
-
-    rows, eid = [], 0
-    # type a: six days of 4 events, then a 100-event day -> med 4,
-    # mad 0, only the spike day flags
-    plan = [("a", d, 4) for d in range(1, 7)] + [("a", 7, 100)]
-    # type b: counts 1..7 -> med 4, mad 2, deviations <= 3*mad: quiet
-    plan += [("b", d, d) for d in range(1, 8)]
-    # type c: counts 1,2,3,10 -> med 2.5, mad 1.0, only the 10 flags
-    plan += [("c", d, n) for d, n in enumerate((1, 2, 3, 10), start=1)]
-    for typ, day, n in plan:
-        for k in range(n):
-            rows.append((eid, dt.datetime(2024, 1, day, 1, k // 60, k % 60),
-                         1, typ, 1.0))
-            eid += 1
-    e = spark.createDataFrame(
-        rows, "event_id long, ts timestamp, user_id long, "
-              "event_type string, value double")
-    got = {(r.event_type, r.day): r for r in daily_anomaly_mad(e).collect()}
-    assert len(got) == 18
-    a7 = got[("a", "2024-01-07")]
-    assert (a7.n, a7.med, a7.mad, a7.is_anomaly) == (100, 4.0, 0.0, True)
-    assert not got[("a", "2024-01-01")].is_anomaly
-    assert all(not got[("b", f"2024-01-0{d}")].is_anomaly
-               for d in range(1, 8))
-    c4 = got[("c", "2024-01-04")]
-    assert (c4.med, c4.mad, c4.is_anomaly) == (2.5, 1.0, True)
-    assert not got[("c", "2024-01-03")].is_anomaly
-
-    from coursera_etl_pipeline_spark.catalog import load_table
-    _duck_parity(daily_anomaly_mad(load_table(spark, sf_dir, "events")),
-                 r19_events_anomaly_mad_oracle(), sf_dir)
-
-
-def test_r19_text_bpe_pair_counts(spark, sf_dir):
-    """BPE merge-step pair statistics (round-19 pre-build): planted
-    docs pin the semantics — pair counts are corpus-weighted (a word
-    occurring twice contributes its pairs twice), overlapping pairs
-    within a word all count ('aaa' -> (a,a) x2), and single-symbol
-    words contribute nothing; fixture parity against the oracle."""
-    from coursera_etl_pipeline_spark.llm_ops.text import (
-        bpe_pair_counts,
-        r19_text_bpe_pair_counts_oracle,
-        text_bpe_pair_counts_core,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "ab ab cd"), (2, "abc x"), (3, "aaa")],
-        "doc_id long, text string")
-    got = {(r.left_sym, r.right_sym): r.pair_count
-           for r in bpe_pair_counts(docs).collect()}
-    assert got == {("a", "b"): 3, ("b", "c"): 1,
-                   ("c", "d"): 1, ("a", "a"): 2}
-
-    _duck_parity(text_bpe_pair_counts_core(spark, sf_dir),
-                 r19_text_bpe_pair_counts_oracle(), sf_dir)
-
-
-def test_r19_multimodal_container_metadata(spark, sf_dir):
-    """AVI/MKV container metadata (round-19 pre-build): the golden
-    mixed corpus decodes through the real RIFF chunk walk and EBML
-    vint walk — planted expectations pin the exact integer-micros AVI
-    duration product, the MKV TimecodeScale variants and the
-    audio-TrackEntry counting; fixture parity against the closed-form
-    oracle."""
-    from coursera_etl_pipeline_spark.llm_ops.multimodal import (
-        multimodal_container_metadata_core,
-        r19_multimodal_container_metadata_oracle,
-    )
-
-    got = multimodal_container_metadata_core(spark, sf_dir)
-    rows = {r.name: r for r in got.collect()}
-    assert len(rows) == 18
-    # avi_01: usec/frame 33100 x 55 frames = exactly 1820500 micros,
-    # dwStreams 2, 656x376, JUNK of 1 byte padded to 2
-    a1 = rows["avi_01.avi"]
-    assert (a1.kind, a1.n_tracks, a1.width, a1.height) == ("video", 2, 656, 376)
-    assert (a1.duration_micro, a1.n_bytes) == (33100 * 55, 98)
-    # mkv_00: scale 1e6 ns, 1000 units -> exactly 1 s; audio
-    # TrackEntry joins the video one (i%3==0); dims from the video trak
-    m0 = rows["mkv_00.mkv"]
-    assert (m0.n_tracks, m0.width, m0.height) == (2, 1280, 720)
-    assert (m0.duration_micro, m0.n_bytes) == (1_000_000, 78)
-    # mkv_01: scale 5e5 ns, 2017 units -> 1008500 micros, video-only
-    m1 = rows["mkv_01.mkv"]
-    assert (m1.n_tracks, m1.duration_micro, m1.n_bytes) == (1, 1_008_500, 72)
-
-    _duck_parity(got, r19_multimodal_container_metadata_oracle(), sf_dir)
-
-
 def test_container_decode_malformed():
-    """Failure contract for the r19 container decoders: payloads that
-    MATCH the AVI/MKV magics but carry truncated or malformed headers
-    raise contextual ValueError, and unknown magics keep raising
-    NotImplementedError."""
+    """AVI/MKV container decoders: well-formed headers decode to exact
+    duration, stream count and dims (an odd-length JUNK chunk is
+    skipped by its padded size; MKV audio TrackEntries count as
+    tracks under every TimecodeScale); payloads that MATCH the AVI/MKV
+    magics but carry truncated or malformed headers raise contextual
+    ValueError, and unknown magics keep raising NotImplementedError."""
     import struct
 
     import pytest as pt
@@ -3585,6 +3324,22 @@ def test_container_decode_malformed():
 
     def riff(body):
         return b"RIFF" + len(body).to_bytes(4, "little") + body
+
+    # well-formed AVI: 33100 usec/frame x 55 frames is exactly
+    # 1820500 micros, dwStreams 2, 656x376; the 1-byte JUNK chunk
+    # (padded to 2) is skipped whether it trails or leads the header
+    avih = ((33100).to_bytes(4, "little") + bytes(12)
+            + (55).to_bytes(4, "little") + bytes(4)
+            + (2).to_bytes(4, "little") + bytes(4)
+            + (656).to_bytes(4, "little") + (376).to_bytes(4, "little")
+            + bytes(16))
+    hdrl = chunk(b"LIST", b"hdrl" + chunk(b"avih", avih))
+    junk = chunk(b"JUNK", bytes(1))
+    for body in (hdrl + junk, junk + hdrl):
+        meta = decode_media(riff(b"AVI " + body), "video/avi")
+        assert (meta["kind"], meta["n_tracks"], meta["width"],
+                meta["height"]) == ("video", 2.0, 656.0, 376.0)
+        assert int(meta["duration_sec"] * 1_000_000 + 0.5) == 33100 * 55
 
     # AVI magic but no hdrl/avih anywhere
     with pt.raises(ValueError, match="no LIST/hdrl"):
@@ -3605,6 +3360,29 @@ def test_container_decode_malformed():
     seg = b"\x18\x53\x80\x67"
     info = b"\x15\x49\xa9\x66"
     ebml = el(b"\x1a\x45\xdf\xa3", b"")
+
+    def mkv(scale_ns, units, w, h, audio):
+        video = el(b"\xae", el(b"\xe0", el(b"\xb0", w.to_bytes(2, "big"))
+                                + el(b"\xba", h.to_bytes(2, "big"))))
+        tracks = video + (el(b"\xae", el(b"\xe1", b"")) if audio else b"")
+        return ebml + el(seg, el(info, el(b"\x2a\xd7\xb1",
+                                          scale_ns.to_bytes(3, "big"))
+                                 + el(b"\x44\x89", struct.pack(">d", units)))
+                         + el(b"\x16\x54\xae\x6b", tracks))
+
+    # well-formed MKV (float64 Duration x TimecodeScale ns): an audio
+    # TrackEntry (no Video element) counts as a track without touching
+    # the dims, at the default and at non-default scales
+    for scale_ns, units, audio, micros in (
+            (1_000_000, 1000.0, True, 1_000_000),
+            (500_000, 2017.0, False, 1_008_500),
+            (500_000, 2017.0, True, 1_008_500),
+            (2_000_000, 3034.0, True, 6_068_000)):
+        meta = decode_media(mkv(scale_ns, units, 1296, 724, audio),
+                            "video/mkv")
+        assert (meta["n_tracks"], meta["width"], meta["height"]) == (
+            2.0 if audio else 1.0, 1296.0, 724.0)
+        assert int(meta["duration_sec"] * 1_000_000 + 0.5) == micros
     # element declares a body running past the payload end
     with pt.raises(ValueError, match="declares"):
         decode_media(ebml + seg + bytes([0x40, 0x50]), "video/mkv")
@@ -3625,171 +3403,27 @@ def test_container_decode_malformed():
         decode_media(b"\x00\x01\x02\x03" * 8, "application/octet-stream")
 
 
-def test_r20_text_bpe_merge_step(spark, sf_dir):
-    """BPE merge iteration (round-20 pre-build): planted vocab pins
-    the argmax ((a,b) at corpus-weighted count 3), the merge applied
-    only where the pair occurs, greedy leftmost-non-overlapping
-    semantics on runs ('a|a|a|a' -> 'aa|aa' — and DuckDB's replace()
-    is pinned to the identical scan), the count-then-lexicographic
-    tie-break, and the n_syms arithmetic; fixture parity against the
-    oracle."""
-    import duckdb
+def test_tfidf_equal_scores_rank_by_term(spark, tmp_path):
+    """text_tfidf_top_terms: two terms whose scores are mathematically
+    equal (11 * ln(5/3)) but built from different per-document counts
+    (a: 1+5+5, b: 3+4+4) must tie bit-for-bit and rank by term on both
+    engines. Summing f * idf per document gives a 5.619081861425897
+    and b 5.619081861425898 in every summation order, which ranked b
+    first; the score is SUM(f) * idf, so the tie is exact."""
+    import pandas as pd
 
-    from coursera_etl_pipeline_spark.llm_ops.text import (
-        bpe_merge_step,
-        r20_text_bpe_merge_step_oracle,
-        text_bpe_merge_step_core,
-    )
+    from coursera_etl_pipeline_spark.llm_ops.text import text_tfidf_top_terms
+    from coursera_etl_pipeline_spark.registry import ORACLE
 
-    docs = spark.createDataFrame(
-        [(1, "ab ab cd"), (2, "abc x"), (3, "aaa")],
-        "doc_id long, text string")
-    got = {r.word: r for r in bpe_merge_step(docs).collect()}
-    assert len(got) == 5
-    assert all((r.left_sym, r.right_sym, r.pair_count) == ("a", "b", 3)
-               for r in got.values())
-    assert (got["ab"].merged, got["ab"].n_syms) == ("ab", 1)
-    assert (got["abc"].merged, got["abc"].n_syms) == ("ab|c", 2)
-    assert (got["cd"].merged, got["cd"].n_syms) == ("c|d", 2)
-    assert (got["x"].merged, got["x"].n_syms) == ("x", 1)
-    assert (got["aaa"].merged, got["aaa"].n_syms) == ("a|a|a", 3)
+    texts = ["a b b b z", "a a a a a b b b b z", "a a a a a b b b b z",
+             "z", "z"]
+    pd.DataFrame({
+        "doc_id": range(1, 6), "text": texts, "lang": ["en"] * 5,
+        "source": ["s"] * 5, "n_chars": [len(t) for t in texts],
+    }).to_parquet(tmp_path / "documents.parquet", index=False)
 
-    # greedy leftmost-non-overlapping on a run — and the cross-engine
-    # agreement the fixture corpus may never exercise
-    run = {r.word: r for r in bpe_merge_step(
-        spark.createDataFrame([(1, "aaaa")], "doc_id long, text string")
-    ).collect()}
-    assert run["aaaa"].merged == "aa|aa" and run["aaaa"].n_syms == 2
-    assert duckdb.sql(
-        "SELECT replace('a|a|a|a', 'a|a', 'aa')").fetchone()[0] == "aa|aa"
-
-    # equal counts: the lexicographically largest pair wins the key
-    tie = bpe_merge_step(spark.createDataFrame(
-        [(1, "xy"), (2, "yz")], "doc_id long, text string")).collect()
-    assert all((r.left_sym, r.right_sym) == ("y", "z") for r in tie)
-
-    _duck_parity(text_bpe_merge_step_core(spark, sf_dir),
-                 r20_text_bpe_merge_step_oracle(), sf_dir)
-
-
-def test_r20_text_cms_topk(spark, sf_dir):
-    """Count-min sketch (round-20 pre-build): the one-sided error
-    contract pinned — a width-1 sketch forces every token into one
-    cell per row (est = corpus total for all tokens, the maximal
-    overestimate), while the default 4x1024 sketch resolves a tiny
-    vocabulary exactly (fixed md5 buckets: deterministic forever);
-    est >= n_occ everywhere; fixture parity against the oracle."""
-    from coursera_etl_pipeline_spark.llm_ops.text import (
-        cms_topk,
-        r20_text_cms_topk_oracle,
-        text_cms_topk_core,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "aa bb aa"), (2, "cc aa")], "doc_id long, text string")
-    # width 1: every row's single cell counts ALL 5 occurrences
-    squeezed = {r.token: r for r in cms_topk(docs, width=1).collect()}
-    assert {(r.est, r.n_occ) for r in squeezed.values()} == {
-        (5, 3), (5, 1)}
-    assert squeezed["aa"].n_occ == 3
-    # default width resolves this vocabulary exactly
-    wide = {r.token: r for r in cms_topk(docs).collect()}
-    assert {(t, r.est, r.n_occ) for t, r in wide.items()} == {
-        ("aa", 3, 3), ("bb", 1, 1), ("cc", 1, 1)}
-
-    out = text_cms_topk_core(spark, sf_dir).collect()
-    assert all(r.est >= r.n_occ for r in out)
-    _duck_parity(text_cms_topk_core(spark, sf_dir),
-                 r20_text_cms_topk_oracle(), sf_dir)
-
-
-def test_attribution_invariants_property(spark):
-    """Property: for RANDOM per-user event timelines, last-touch
-    attribution emits every purchase EXACTLY once; a credited touch is
-    the user's latest view/click strictly before the purchase and
-    within the lookback (checked against an independent pure-Python
-    replay); 'direct' appears iff no such touch exists; gap_us is
-    non-negative and <= the lookback. Derandomized hypothesis, 3
-    examples (bounded Spark round-trips)."""
-    import datetime as dt
-
-    from hypothesis import HealthCheck, given, settings
-    from hypothesis import strategies as st
-
-    from coursera_etl_pipeline_spark.streaming.queries import (
-        ATTRIBUTION_LOOKBACK_US,
-        attribution_last_touch,
-    )
-
-    t0 = dt.datetime(2024, 1, 1)
-    types = ("view", "click", "purchase", "error")
-    event = st.tuples(st.integers(0, 3),                  # user
-                      st.integers(0, 20_000),             # minutes
-                      st.integers(0, len(types) - 1))     # type index
-
-    @settings(max_examples=3, deadline=None, derandomize=True,
-              suppress_health_check=list(HealthCheck))
-    @given(evs=st.lists(event, min_size=5, max_size=40))
-    def check(evs):
-        rows = [(i, t0 + dt.timedelta(minutes=m), u, types[t], 1.0)
-                for i, (u, m, t) in enumerate(evs)]
-        e = spark.createDataFrame(
-            rows, "event_id long, ts timestamp, user_id long, "
-                  "event_type string, value double")
-        got = {r.conv_id: r for r in attribution_last_touch(e).collect()}
-
-        def us(d):
-            return int(d.replace(tzinfo=dt.timezone.utc).timestamp() * 1e6)
-
-        purchases = [(i, u, us(ts)) for i, (ts, u, t) in
-                     ((r[0], (r[1], r[2], r[3])) for r in rows)
-                     if t == "purchase"]
-        assert sorted(got) == sorted(i for i, _, _ in purchases)
-        touches = [(i, u, us(ts), t) for i, ts, u, t, _ in rows
-                   if t in ("view", "click")]
-        for conv_id, u, cus in purchases:
-            r = got[conv_id]
-            cand = [(tus, i, t) for i, tu, tus, t in touches
-                    if tu == u and tus < cus
-                    and tus >= cus - ATTRIBUTION_LOOKBACK_US]
-            if not cand:
-                assert (r.touch_type, r.touch_us, r.gap_us) \
-                    == ("direct", None, None)
-            else:
-                best = max(cand)          # (touch_us, touch_id) order
-                assert (r.touch_us, r.touch_type) == (best[0], best[2])
-                assert 0 < r.gap_us <= ATTRIBUTION_LOOKBACK_US
-
-    check()
-
-
-def test_r20_layout_zorder_key(spark, sf_dir):
-    """Z-order key (round-20 pre-build): planted bit patterns pin the
-    interleave (a-bits at even positions, b-bits at odd), and the
-    locality property that justifies the layout is shown exactly — on
-    the full 16x16 grid, every run of 16 consecutive z values is a
-    perfect 4x4 tile in (a, b) space, so any row-group holding it has
-    min/max spans of 3 in BOTH dimensions (a single-column sort gives
-    span 15 in the trailing dimension); fixture parity against the
-    oracle."""
-    from coursera_etl_pipeline_spark.operators.layout import (
-        layout_zorder_key_core,
-        r20_layout_zorder_key_oracle,
-        zorder_key,
-    )
-
-    grid = spark.createDataFrame(
-        [(a, b) for a in range(16) for b in range(16)], "a long, b long")
-    out = {(r.a, r.b): r.z for r in zorder_key(grid, "a", "b").collect()}
-    assert out[(1, 0)] == 1 and out[(0, 1)] == 2
-    assert out[(3, 3)] == 15 and out[(2, 1)] == 6
-    assert sorted(out.values()) == list(range(256))   # a bijection
-    by_z = sorted(out, key=lambda ab: out[ab])
-    for k in range(16):
-        tile = by_z[16 * k:16 * k + 16]
-        a_span = max(a for a, _ in tile) - min(a for a, _ in tile)
-        b_span = max(b for _, b in tile) - min(b for _, b in tile)
-        assert (a_span, b_span) == (3, 3)
-
-    _duck_parity(layout_zorder_key_core(spark, sf_dir),
-                 r20_layout_zorder_key_oracle(), sf_dir)
+    got = text_tfidf_top_terms(spark, str(tmp_path))
+    rows = {r.term: r for r in got.collect()}
+    assert {t: r.rank for t, r in rows.items()} == {"a": 1, "b": 2, "z": 3}
+    assert rows["a"].tfidf == rows["b"].tfidf
+    _duck_parity(got, ORACLE["text_tfidf_top_terms"], str(tmp_path))

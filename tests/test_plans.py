@@ -310,47 +310,6 @@ def test_type_parity_lattice_on_all_queries(spark, sf_dir):
     assert not bad, f"type-lattice divergence (driver hash risk): {bad}"
 
 
-def test_type_parity_lattice_on_prebuilt_queue(spark, sf_dir):
-    """The same computed lattice over the DEFERRED-REGISTRATION
-    pre-builds (tools/probe_prebuilt._prebuilt — the COVERAGE.md
-    round-15 queue): their value-parity tests stringify cells exactly
-    like oracle_check does, which is how the r14 HUGEINT red row
-    slipped through, so the type gate must cover them BEFORE their
-    registration round, not after. Skips (rather than vacuously
-    passes) when the queue is empty; the gate re-armed in round 16
-    when the next five pre-builds landed (contract change: _prebuilt
-    values are (spark, sf_dir)-style callables since the queue now
-    spans documents/events/embeddings)."""
-    import os
-
-    import duckdb
-    import pytest
-
-    from coursera_etl_pipeline_spark.catalog import TABLES, table_path
-    from tools.probe_prebuilt import _prebuilt
-    from tools.type_parity_audit import duck_class, spark_class
-
-    if not _prebuilt():
-        pytest.skip("deferred-registration queue is empty")
-    con = duckdb.connect()
-    for t in TABLES:
-        p = table_path(sf_dir, t)
-        if os.path.exists(p):
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
-    bad = []
-    for name, (fn, sql) in _prebuilt().items():
-        stypes = dict(fn(spark, sf_dir).dtypes)
-        rel = con.sql(sql)
-        dtypes = dict(zip(rel.columns, [str(t) for t in rel.types]))
-        assert set(stypes) == set(dtypes), (name, stypes, dtypes)
-        for c in stypes:
-            sc, dc = spark_class(stypes[c]), duck_class(dtypes[c])
-            if sc != dc or "(" in sc or "(" in dc:
-                bad.append((name, c, stypes[c], dtypes[c]))
-    assert not bad, f"pre-build type-lattice divergence: {bad}"
-
-
 def test_aqe_converts_smj_to_shuffled_hash(spark):
     """The session default maxShuffledHashJoinLocalMapThreshold=128MB
     makes AQE replace a sort-merge join with a shuffled hash join at

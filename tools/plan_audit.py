@@ -14,7 +14,9 @@ fixture and flags the operators that do not survive a 100 TB scale-up:
 The allowlist is part of the contract: every entry names the design
 that justifies the operator, so a NEW query acquiring one of these
 nodes fails tests/test_plans.py::test_no_unexpected_plan_antipatterns
-until it is either re-planned or explicitly justified here.
+until it is either re-planned or explicitly justified here. Every name
+in ALLOWED and EXECUTES_ON_BUILD must be a registered query
+(tests/test_entry_rotation.py): no row is staged ahead of registration.
 
 Usage: python tools/plan_audit.py [sf_dir]   (default sf0.001; prints
 one line per flagged query and exits non-zero on unexpected flags)
@@ -109,13 +111,9 @@ ALLOWED = {
     # corpus mix: the 1-row c_max feasibility scalar broadcast onto
     # the |sources|-row rate table (sampling.sample_corpus_mix)
     ("sample_corpus_mix", "BroadcastNestedLoopJoin"),
-    # pre-staged for the deferred-registration queue (COVERAGE.md
-    # round-15 note; names fixed here so registration can't drift):
     # DSIR's 1-row corpus-totals broadcast onto the DSIR_BUCKETS-row
     # log-ratio table, and epoch planning's 1-row source-count
-    # broadcast — both the same O(1)-row shape as tfidf/perplexity.
-    # Verified r15 extended session: these are the ONLY flagged nodes
-    # in any pre-built plan (soft_dedup_weights / c4_rules are clean).
+    # broadcast — both the same O(1)-row shape as tfidf/perplexity
     ("sample_dsir_importance", "BroadcastNestedLoopJoin"),
     ("sample_epoch_plan", "BroadcastNestedLoopJoin"),
     # CCNet bucketing: the 2-number tertile-cutpoint aggregate
@@ -126,9 +124,6 @@ ALLOWED = {
     # percentile-cutpoint broadcast (the scalar-threshold idiom); the
     # mix itself adds only a map-side filter + 4-row audit aggregate
     ("sample_quality_mix", "BroadcastNestedLoopJoin"),
-    # pre-staged for the round-16 deferred-registration queue
-    # (COVERAGE.md round-16 note; names fixed here so registration
-    # can't drift — the r15 discipline):
     # purged temporal holdout: the 2-number min/max time-range
     # aggregate broadcast back (the scalar-threshold idiom)
     ("sample_temporal_holdout", "BroadcastNestedLoopJoin"),
@@ -137,15 +132,11 @@ ALLOWED = {
     # O(M x codewords) frozen training rows, the similarity_ann_ivf
     # centroid shape (similarity.py pq_codes/ann_topk_pq docstrings)
     ("similarity_ann_pq", "BroadcastNestedLoopJoin"),
-    # pre-staged for the round-18 deferred-registration queue
-    # (COVERAGE.md round-17 note; name fixed here so registration
-    # can't drift): IVF-PQ inherits BOTH parents' deliberate crosses —
-    # queries x broadcast(n_cells frozen centroids) routing and the
-    # PQ codebook assignment/LUT crosses above (text_embed_hash, the
-    # other r18 queue member, has a clean explode/agg/join plan and
-    # needs no row)
+    # IVF-PQ inherits BOTH parents' deliberate crosses — queries x
+    # broadcast(n_cells frozen centroids) routing and the PQ codebook
+    # assignment/LUT crosses above
     ("similarity_ann_ivfpq", "BroadcastNestedLoopJoin"),
-    # registered r18: broadcast(N_QUERIES generated vectors) x corpus
+    # broadcast(N_QUERIES generated vectors) x corpus
     # on <> — the similarity_topk_bruteforce baseline shape over the
     # engine-generated embed-hash vectors (similarity.embed_hash_topk
     # docstring; the IVF/LSH/PQ tiers are the corpus-contact path)
@@ -154,37 +145,6 @@ ALLOWED = {
     # header decode over binary payloads (multimodal.audio_metadata)
     ("multimodal_audio_metadata", "MapInPandas"),
     ("multimodal_audio_metadata", "ArrowEvalPython"),
-    # pre-staged for the round-19 deferred-registration queue
-    # (COVERAGE.md round-18 note; name fixed here so registration
-    # can't drift): the ISO-BMFF box walk over binary payloads is the
-    # same no-native-expression class as the audio row above
-    ("multimodal_video_metadata", "MapInPandas"),
-    ("multimodal_video_metadata", "ArrowEvalPython"),
-    # pre-staged r19 (same note): the recall metric embeds BOTH
-    # certified arms — the brute-force exact baseline's broadcast
-    # cross AND the IVF-PQ chain's centroid/codebook crosses
-    ("similarity_ivfpq_recall", "BroadcastNestedLoopJoin"),
-    # pre-staged r19: the Lloyd step's assignment is the certified
-    # corpus x broadcast(n_cells frozen centroids) cross
-    # (similarity_ann_ivf's exact shape); the mean recompute itself
-    # is one (cell, dim)-keyed hash-aggregate
-    ("similarity_kmeans_refine", "BroadcastNestedLoopJoin"),
-    # pre-staged for the round-19 deferred-registration queue, second
-    # tranche (COVERAGE.md round-18-extended note; names fixed here so
-    # registration can't drift): the AVI/MKV container walk over
-    # binary payloads is the same no-native-expression class as the
-    # audio/video rows above. The other three tranche members
-    # (events_attribution, events_anomaly_mad, text_bpe_pair_counts)
-    # have clean equi-join/hash-aggregate plans — verified flagless at
-    # sf0.1 in the r18 extended session — and need no row.
-    ("multimodal_container_metadata", "MapInPandas"),
-    ("multimodal_container_metadata", "ArrowEvalPython"),
-    # pre-staged for the round-20 deferred-registration queue
-    # (COVERAGE.md round-18-extended note; name fixed here so
-    # registration can't drift): the BPE merge argmax is a 1-row
-    # aggregate broadcast over the |vocab|-row frame — the
-    # scalar-threshold idiom (sample_corpus_mix's shape).
-    ("text_bpe_merge_step", "BroadcastNestedLoopJoin"),
 }
 
 NODES = (
@@ -213,13 +173,13 @@ EXECUTES_ON_BUILD = {"stream_batch_parity", "stream_dedup_parity",
                      "dedup_index_compact",
                      "dedup_components", "dedup_clusters",
                      "dedup_image_clusters",
-                     # r16 review: the end-to-end verdict runs the
-                     # same connected-components convergence loop on
+                     # the end-to-end verdict runs the same
+                     # connected-components convergence loop on
                      # construction (real actions + localCheckpoint
                      # truncation) as the three rows above
                      "dedup_minhash_keep_representative",
-                     # r18 registrations: both run a real availableNow
-                     # stream + replay probe on construction
+                     # both run a real availableNow stream + replay
+                     # probe on construction
                      "stream_bloom_bits_parity",
                      "stream_embed_hash_parity"}
 
