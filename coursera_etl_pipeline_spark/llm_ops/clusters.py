@@ -45,7 +45,7 @@ def _large_star(edges: DataFrame) -> DataFrame:
     # trailing distinct — which the alternating-star algorithm needs
     # anyway — so set semantics per full round are unchanged while
     # each round drops one exchange (interleaved A/B in
-    # tools/ab_cc_r18.py main_d: 1.955 s / 19 jobs -> 1.718 s / 17,
+    # tools/ab_cc_r18.py @ 3f77309 main_d: 1.955 s / 19 jobs -> 1.718 s / 17,
     # final star edges asserted identical).
     return (sym.withColumn("m", m)
             .filter(F.col("v") > F.col("u"))
@@ -85,8 +85,8 @@ def _ckpt_sig(df: DataFrame) -> tuple[DataFrame, tuple]:
     via observe(): one action per round instead of checkpoint-then-
     aggregate (optimization r19, guide §2.4 — the separate ``_sig``
     aggregate was a full extra pass over the frontier per round; the
-    interleaved A/B in tools/ab_cc_r19.py reads 33 -> 18 jobs over the
-    whole keep-representative query). decimal accumulator: a long sum
+    interleaved A/B in tools/ab_cc_r19.py @ 3f77309 reads 33 -> 18 jobs
+    over the whole keep-representative query). decimal accumulator: a long sum
     of 64-bit hashes overflows under ANSI arithmetic.
 
     localCheckpoint, deliberately NOT persist: each round's plan embeds
@@ -293,7 +293,7 @@ def minhash_keep_representative(docs: DataFrame) -> DataFrame:
     hit), roots and singletons (miss) exactly as the label table
     would — the nodes union + distinct + label join inside
     ``connected_components`` never runs. Interleaved A/B over the full
-    query (tools/ab_cc_r19.py, with the observe-piggybacked rounds):
+    query (tools/ab_cc_r19.py @ 3f77309, with the observe-piggybacked rounds):
     2.909 s / 33 jobs -> 1.563 s / 18 jobs, output checksum-identical
     per cycle."""
     from coursera_etl_pipeline_spark.llm_ops.dedup import minhash_lsh_pairs

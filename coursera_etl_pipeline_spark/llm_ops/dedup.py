@@ -256,7 +256,7 @@ def jaccard_pairs_prefix(sh_idx: DataFrame,
     # exchange that carries the posting rows, where the join-back form
     # either re-shuffles the postings a second time (sort-merge at
     # corpus scale) or builds a distinct-shingle broadcast (local AQE).
-    # Interleaved A/B (tools/ab_lsh_band_r18.py, r18 optimization,
+    # Interleaved A/B (tools/ab_lsh_band_r18.py @ 3f77309, r18 optimization,
     # guide §2.3/§2.4): 5.479 s / 10 jobs -> 2.393 s / 8 jobs.
     # Skew trade, stated honestly: a hot shingle's whole posting list
     # lands in ONE window task (a streaming count — no per-row state),
@@ -288,7 +288,7 @@ def jaccard_pairs_prefix(sh_idx: DataFrame,
     # recomputes the df-window + rank-window chain over the postings
     # (the before-plan shows the 2-Exchange/3-Window subtree twice) —
     # the same both-sides-of-a-self-join treatment the shingle index
-    # itself already gets. Interleaved A/B (tools/ab_ngram_r19.py):
+    # itself already gets. Interleaved A/B (tools/ab_ngram_r19.py @ 3f77309):
     # 1.133 s -> 1.021 s median with visibly tighter variance; at
     # corpus scale this is one window pass over the postings instead
     # of two per query.
@@ -514,7 +514,7 @@ def minhash_lsh_pairs(df: DataFrame, threshold: float = JACCARD_THRESHOLD,
     # the postings (the before-plan shows that subtree twice — one per
     # join side; at corpus scale that is two signature passes per query
     # where one suffices, and in production this frame IS the persisted
-    # band index). Interleaved A/B (tools/ab_lsh_r19.py): 0.943 s ->
+    # band index). Interleaved A/B (tools/ab_lsh_r19.py @ 3f77309): 0.943 s ->
     # 0.871 s median, same job count. The incremental variant's batch
     # slice measured flat under the same treatment (1.029 -> 0.998 —
     # its corpus side is already materialized) and was left alone.
@@ -746,7 +746,7 @@ def _increment_drop_candidates(b_band: DataFrame,
     row-local expressions and ONE distinct replaces two. The probe
     side is shuffled once instead of twice, the index sides move the
     same bytes they did across the two joins. Interleaved A/B running
-    update + incremental end to end (tools/ab_cand_r18.py, 9 cycles,
+    update + incremental end to end (tools/ab_cand_r18.py @ 3f77309, 9 cycles,
     checksum equality): 1.576 s / 17 jobs -> 1.369 s / 14 jobs."""
     idx = (corpus_index.withColumn("_corpus", F.lit(True))
            .unionByName(b_band.withColumn("_corpus", F.lit(False))))
@@ -830,7 +830,7 @@ def minhash_index_update(batch_docs: DataFrame, corpus_postings: DataFrame,
     # artifacts' doc_ids are a subset of the batch ids, so
     # b_x ⋉ (batch ∖ dropped) == b_x ⋉̸ dropped row for row — one join
     # instead of an anti + semi chain per artifact. Interleaved A/B on
-    # the full registered query (tools/ab_idx_r19.py): 1.158 s /
+    # the full registered query (tools/ab_idx_r19.py @ 3f77309): 1.158 s /
     # 9 jobs -> 1.070 s / 6 jobs, checksum-identical output.
     new_postings = corpus_postings.unionByName(
         b_post.join(dropped, "doc_id", "left_anti"))
@@ -1001,7 +1001,7 @@ def minhash_index_delete(removed_ids: DataFrame,
     # survivors per doc in a single partial-agg'd aggregate. The former
     # two-anti-join/two-distinct spelling shuffled the ledger's doc_id
     # set three times for the same answer (r18 optimization, guide
-    # §2.4; interleaved A/B in tools/ab_delete_r18.py).
+    # §2.4; interleaved A/B in tools/ab_delete_r18.py @ 3f77309).
     alive = F.when(F.col("_rm").isNull(), 1).otherwise(0)
     resurrected = (drop_ledger
                    .join(rem_partner, "partner", "left")
@@ -1084,7 +1084,7 @@ def dedup_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         minhash_drop_ledger(b_band, c_band, sh_idx))
     # anti/semi build side only — duplicates are fine, the distinct
     # would just pay an exchange (r19, same reasoning as
-    # minhash_index_update's drop set; A/B in tools/ab_idx_r19.py:
+    # minhash_index_update's drop set; A/B in tools/ab_idx_r19.py @ 3f77309:
     # the full query reads 1.232 s / 13 jobs -> 0.992 s / 8 jobs)
     dropped = ledger.select("doc_id")
     # the stored index after the increment, survivor rows only —

@@ -289,7 +289,7 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle) is unchanged on both arms; the K=1000 arm A/B saw no
     broadcast advantage through heavy weather (gated medians at or
     below the old arm's — BASELINE §4 round-13). Interleaved A/B
-    (tools/ab_q5_dimfirst_r11.py, identity bit-equal at sf0.01):
+    (tools/ab_q5_dimfirst_r11.py @ 3f77309, identity bit-equal at sf0.01):
     sf10 3/4 cycle wins (medians 3.06 -> 2.62), sf100 3/3 wins
     (27.8 -> 20.1, and the new arm holds steady while the old decays
     20.6 -> 37.5 under session pressure — the SMJ-sort memory-pressure

@@ -135,7 +135,7 @@ def davg(col_sql: str) -> str:
 # plain dsum SQL unchanged.
 #
 # Round-10 RESOLUTION of the scheduled candidates (q3/q5/q6/q10;
-# tools/ab_split_dsum_r10.py, two K=100 interleaved sessions, values
+# tools/ab_split_dsum_r10.py @ 3f77309, two K=100 interleaved sessions, values
 # asserted bit-identical at sf0.01 first): q5 converted — consistent
 # win (new arm faster 6/8 paired cycles, calm-point 2.14 vs 2.53 s;
 # mechanism: the micros projection drops below the join, so the fact

@@ -20,6 +20,14 @@ DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 MIN_TMPFS_HEADROOM_GIB = 16
 
 
+def driver_memory(ram_bytes: int) -> str:
+    """spark.driver.memory default: half of physical RAM in whole GiB,
+    at least 1g and at most 48g. A heap larger than the host never
+    fills to the point where persisted memo blocks are evicted (LRU);
+    the kernel kills the JVM first. SPARK_GRAFT_DRIVER_MEM overrides."""
+    return f"{max(1, min(48, ram_bytes // 2 // 2**30))}g"
+
+
 def _default_local_dir() -> str:
     """spark.local.dir default: tmpfs scratch when it has headroom,
     else the system tempdir (disk). The env override in get_spark
@@ -87,7 +95,7 @@ def get_spark(app_name: str = "coursera_etl_pipeline_spark",
         # generalization of q3's manual SHUFFLE_HASH rewrite (sorting
         # the large probe side per partition is the decay trigger the
         # sf100 dissection found). Interleaved A/B at sf10 (r11,
-        # tools/ab_aqe_shj_r11.py): q7 2.14x, q9 3.69x, q3/q5/q10
+        # tools/ab_aqe_shj_r11.py @ 3f77309): q7 2.14x, q9 3.69x, q3/q5/q10
         # parity, q18 0.93x (noise band). At sf100 on local[32] the
         # bound correctly refuses conversion (build partitions outgrow
         # 128MB at 32 partitions) and plans are unchanged — on a real
@@ -111,7 +119,9 @@ def get_spark(app_name: str = "coursera_etl_pipeline_spark",
         .config("spark.sql.legacy.sizeOfNull", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.aggregatePushdown", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get(
+            "SPARK_GRAFT_DRIVER_MEM", driver_memory(
+                os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES"))))
         # Extra driver-JVM flags for scale probes (JVM opts are fixed
         # at launch, so this only matters for the process that starts
         # the JVM — e.g. SPARK_GRAFT_DRIVER_JAVA_OPTS=

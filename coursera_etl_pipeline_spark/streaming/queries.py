@@ -275,7 +275,7 @@ def funnel_depth(events: DataFrame,
     assembly join), doubling the logical subtree per step: 8 event
     scans in the 3-step initial plan vs 7 here, 12 jobs vs 10
     (optimization r18, guide §2.4/§3.3 plan-duplication; interleaved
-    A/B in tools/ab_funnel_r18.py: 1.008 s -> 0.883 s median)."""
+    A/B in tools/ab_funnel_r18.py @ 3f77309: 1.008 s -> 0.883 s median)."""
     us = F.unix_micros(F.col("ts"))
     frames = []
     prev = None

@@ -2331,14 +2331,14 @@ def test_materialized_scoring_plans_cache_the_explode(spark, sf_dir):
 
 
 def _duck_parity(spark_df, oracle_sql, sf_dir):
-    """oracle_check's comparison, in-suite: same row count, same
-    column set, same order-insensitive normalized values."""
+    """oracle_check's comparison, in-suite: same column set, same
+    multiset of normalized rows (its diff report on a mismatch)."""
     import os
 
     import duckdb
 
     from coursera_etl_pipeline_spark.catalog import TABLES, table_path
-    from tools.oracle_check import norm_rows
+    from tools.oracle_check import diff_rows, norm_rows
 
     con = duckdb.connect()
     for t in TABLES:
@@ -2352,9 +2352,9 @@ def _duck_parity(spark_df, oracle_sql, sf_dir):
     d_cols, d_rows = rel.columns, rel.fetchall()
     assert sorted(s_cols) == sorted(d_cols), (s_cols, d_cols)
     sc, sr = norm_rows(s_cols, s_rows)
-    dc, dr = norm_rows(d_cols, d_rows)
-    assert len(sr) == len(dr), (len(sr), len(dr))
-    assert sr == dr
+    _, dr = norm_rows(d_cols, d_rows)
+    report = diff_rows(sc, sr, dr)
+    assert report is None, report
 
 
 def test_r16_minhash_keep_representative(spark, sf_dir):

@@ -1,0 +1,88 @@
+"""The A/B harness (tools/ab.py), the oracle diff report, the single
+reader of Spark's status stores, and the host-sized driver heap."""
+
+from __future__ import annotations
+
+import re
+from pathlib import Path
+
+import pytest
+
+ROOT = Path(__file__).resolve().parent.parent
+
+ARMS = '''
+from coursera_etl_pipeline_spark.registry import QUERIES
+
+
+def same(spark, sf_dir):
+    return QUERIES["q1_pricing_summary"](spark, sf_dir)
+
+
+def drop_one(spark, sf_dir):
+    df = same(spark, sf_dir)
+    return df.exceptAll(df.limit(1))
+'''
+
+
+@pytest.fixture
+def ab(monkeypatch, tmp_path):
+    from tools import ab
+
+    monkeypatch.setattr(ab, "CYCLES", 2)
+    (tmp_path / "arms.py").write_text(ARMS)
+    return ab
+
+
+def test_ab_equal_arms_report_every_cycle(ab, spark, sf_dir, tmp_path):
+    out = ab.run(spark, ["q1_pricing_summary", f"{tmp_path}/arms.py:same"],
+                 sf_dir)
+    assert len(out) == 2
+    for metrics in out.values():
+        assert len(metrics["wall_s"]["samples"]) == 2
+        assert metrics["jobs"]["median"] > 0
+
+
+def test_ab_dropped_row_fails_the_checksum(ab, spark, sf_dir, tmp_path):
+    arm = f"{tmp_path}/arms.py:drop_one"
+    match = re.escape(f"cycle 0: arm {arm} ")
+    with pytest.raises(AssertionError, match=match):
+        ab.run(spark, ["q1_pricing_summary", arm], sf_dir)
+
+
+def test_status_stores_are_read_only_through_perfbench():
+    """Spark's status tracker and stores have one reader,
+    perfbench/spans.py::SparkCounters; tools/ab.py goes through it, so
+    no script or package module may grow its own copy back."""
+    reader = re.compile(r"statusTracker|statusStore|getJobIdsForGroup")
+    files = [*ROOT.glob("coursera_etl_pipeline_spark/**/*.py"),
+             *ROOT.glob("tools/**/*.py"), ROOT / "bench.py",
+             ROOT / "__spark_entry__.py"]
+    found = [str(p.relative_to(ROOT)) for p in files
+             if reader.search(p.read_text())]
+    assert found == []
+
+
+def test_oracle_diff_names_the_one_divergent_row_and_column():
+    """One changed value is one row on each side, with its column named,
+    even where it moves the row to another sorted position."""
+    from tools.oracle_check import diff_rows
+
+    cols = ["id", "name", "score"]
+    duck = [(str(i), f"n{i}", f"{i}.5") for i in range(5)]
+    spark = [("7", "n0", "0.5")] + duck[1:]
+    report = diff_rows(cols, spark, duck)
+    assert report.startswith("1 spark-only / 1 duckdb-only rows")
+    assert "columns differing: ['id'];" in report
+    assert "spark-only: [('7', 'n0', '0.5')]" in report
+    assert "duckdb-only: [('0', 'n0', '0.5')]" in report
+    assert diff_rows(cols, duck[::-1], duck) is None
+
+
+def test_driver_heap_is_half_the_host_within_bounds():
+    from coursera_etl_pipeline_spark.session import driver_memory
+
+    gib = 2**30
+    assert driver_memory(int(15.6 * gib)) == "7g"
+    assert driver_memory(64 * gib) == "32g"
+    assert driver_memory(gib) == "1g"
+    assert driver_memory(512 * gib) == "48g"

@@ -1,8 +1,9 @@
 """Local replica of the driver's DuckDB-oracle correctness gate.
 
 Runs every queries()[name] on Spark and the matching oracle_sql()[name]
-on DuckDB over the same parquet tables, compares row count, column
-names, and order-insensitive values. Usage:
+on DuckDB over the same parquet tables, compares column names and the
+multiset of normalized rows, and on a mismatch reports the rows only
+one side has and the columns they differ in. Usage:
 
     python tools/oracle_check.py [name ...]      # default: all
     SPARK_GRAFT_SF_DIR=/root/testdata/sf0.01 python tools/oracle_check.py
@@ -14,6 +15,7 @@ import math
 import os
 import sys
 import time
+from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -41,8 +43,24 @@ def norm_cell(v):
 def norm_rows(cols, rows):
     order = sorted(range(len(cols)), key=lambda i: cols[i])
     out = [tuple(norm_cell(r[i]) for i in order) for r in rows]
-    out.sort()
     return [cols[i] for i in order], out
+
+
+def diff_rows(cols, spark_rows, duck_rows):
+    """None when both sides hold the same multiset of normalized rows;
+    else a report of the rows only one side has: their counts, the
+    columns whose values differ across them and up to three rows
+    per side. One divergent row stays one row, not a shifted tail."""
+    s, d = Counter(spark_rows), Counter(duck_rows)
+    only_s, only_d = sorted((s - d).elements()), sorted((d - s).elements())
+    if not only_s and not only_d:
+        return None
+    differ = [c for i, c in enumerate(cols)
+              if {r[i] for r in only_s} != {r[i] for r in only_d}]
+    return (f"{len(only_s)} spark-only / {len(only_d)} duckdb-only rows "
+            f"(of {len(spark_rows)} / {len(duck_rows)}); columns differing: "
+            f"{differ}; spark-only: {only_s[:3]}; "
+            f"duckdb-only: {only_d[:3]}")
 
 
 def main() -> int:
@@ -91,16 +109,11 @@ def main() -> int:
             failures.append(name)
             print(f"FAIL  {name}: columns differ spark={sc} duckdb={dc}")
             continue
-        if len(sr) != len(dr):
+        report = diff_rows(sc, sr, dr)
+        if report:
             n_fail += 1
             failures.append(name)
-            print(f"FAIL  {name}: rowcount spark={len(sr)} duckdb={len(dr)}")
-            continue
-        bad = [(a, b) for a, b in zip(sr, dr) if a != b]
-        if bad:
-            n_fail += 1
-            failures.append(name)
-            print(f"FAIL  {name}: {len(bad)}/{len(sr)} rows differ; first: spark={bad[0][0]} duckdb={bad[0][1]}")
+            print(f"FAIL  {name}: {report}")
             continue
         n_pass += 1
         print(f"PASS  {name}: {len(sr)} rows [{time.time()-t0:.1f}s]")
