@@ -53,7 +53,7 @@ HEADLINE = [
     "similarity_ann_lsh",        # bucketed ANN
     "similarity_ann_ivf",        # centroid-probe ANN
     "join_asof",                 # as-of join via union-tag window
-    "join_salted_skew",          # skew-salted join
+    "join_salted_skew",          # fact-fact join, AQE skew split
     "text_tfidf_top_terms",      # TF-IDF + per-group top-k
     "pipeline_courses_parity",   # reference-pipeline replay
     "q6_forecast_revenue",       # pure pushdown scan-agg
@@ -348,11 +348,12 @@ _exclude(
 )
 
 
-def _parse_pins() -> tuple[dict[str, float], list[str]]:
+def _parse_pins(column: int = 1) -> tuple[dict[str, float], list[str]]:
     """Per-query pins parsed from BASELINE.md §2's table — the single
     source of truth (a duplicated dict here would drift from the
-    re-pin notes). Rows: `| name | engine sec | ...` with a bare
-    query-name first cell, between the '## 2.' and '## 3.' headings.
+    re-pin notes). Rows: `| name | engine sec | duckdb sec | ...` with
+    a bare query-name first cell, between the '## 2.' and '## 3.'
+    headings; `column` 1 is the engine pin, 2 the DuckDB median.
 
     Returns (pins, parse_failures): a query-name row whose engine-sec
     cell does not parse as a bare float is COLLECTED, not silently
@@ -376,10 +377,10 @@ def _parse_pins() -> tuple[dict[str, float], list[str]]:
         return pins, failures
     for line in m.group(0).splitlines():
         cells = [c.strip() for c in line.strip().strip("|").split("|")]
-        if (len(cells) >= 2 and re.fullmatch(r"[a-z0-9_]+", cells[0])
+        if (len(cells) > column and re.fullmatch(r"[a-z0-9_]+", cells[0])
                 and cells[0] != "query"):  # the table's header row
             try:
-                pins[cells[0]] = float(cells[1])
+                pins[cells[0]] = float(cells[column])
             except ValueError:
                 failures.append(cells[0])
     return pins, failures

@@ -10,7 +10,6 @@ Layout:
     catalog     parquet table loading + temp-view registration
     registry    the query/oracle registry consumed by __spark_entry__
     operators/  relational core: filters, joins, aggs, windows, setops
-    functions/  scalar function pack + vector/text helper expressions
     plans/      reference-parity pipeline (nested JSON -> 15-col table)
     sources/    file discovery, latest-partition selection, HTTP source
     streaming/  file-source ingest, watermarks, windowed aggs, dedup
@@ -20,43 +19,46 @@ Layout:
 
 __version__ = "0.1.0"
 
-__all__ = [
-    "get_spark",
-    "load_table",
-    "run_transform",
-    "write_csv",
-    "append_to_table",
-    "attribution_join",
-    "drop_exact_duplicates",
-    "minhash_lsh_pairs",
-    "jaccard_pairs_prefix",
-    "minhash_index_artifacts",
-    "minhash_index_update",
-    "minhash_index_delete",
-    "minhash_drop_ledger",
-    "apply_index_increment",
-    "apply_index_delete",
-    "compact_index",
-    "ivf_index_append",
-    "ivf_index_delete",
-    "lsh_index_append",
-    "lsh_index_delete",
-    "image_dhash",
-    "dedup_survivors",
-    "connected_components",
-    "ann_topk_lsh",
-    "ann_topk_ivf",
-    "sample_stratified_hash",
-    "text_pack_sequences",
-    "resize_images",
-    "dedup_paragraphs_keep_first",
-    "canonical_url",
-    "dedup_by_canonical_url",
-    "url_host_filter",
-    "split_assign",
-    "cap_source_tokens",
-    "quality_bins",
-]
+# public name -> submodule that defines it (resolved lazily below)
+_HOMES = {
+    "get_spark": "session",
+    "load_table": "catalog",
+    "run_transform": "plans.pipeline",
+    "write_csv": "plans.pipeline",
+    "append_to_table": "plans.pipeline",
+    "attribution_join": "streaming.joins",
+    "drop_exact_duplicates": "llm_ops.dedup",
+    "minhash_lsh_pairs": "llm_ops.dedup",
+    "jaccard_pairs_prefix": "llm_ops.dedup",
+    "minhash_index_artifacts": "llm_ops.dedup",
+    "minhash_index_update": "llm_ops.dedup",
+    "minhash_index_delete": "llm_ops.dedup",
+    "minhash_drop_ledger": "llm_ops.dedup",
+    "apply_index_increment": "streaming.parity",
+    "apply_index_delete": "streaming.parity",
+    "compact_index": "streaming.parity",
+    "ivf_index_append": "llm_ops.similarity",
+    "ivf_index_delete": "llm_ops.similarity",
+    "lsh_index_append": "llm_ops.similarity",
+    "lsh_index_delete": "llm_ops.similarity",
+    "image_dhash": "llm_ops.multimodal",
+    "dedup_survivors": "llm_ops.clusters",
+    "connected_components": "llm_ops.clusters",
+    "ann_topk_lsh": "llm_ops.similarity",
+    "ann_topk_ivf": "llm_ops.similarity",
+    "sample_stratified_hash": "llm_ops.sampling",
+    "text_pack_sequences": "llm_ops.sampling",
+    "resize_images": "llm_ops.multimodal",
+    "dedup_paragraphs_keep_first": "llm_ops.dedup",
+    "canonical_url": "llm_ops.dedup",
+    "dedup_by_canonical_url": "llm_ops.dedup",
+    "url_host_filter": "llm_ops.text",
+    "split_assign": "llm_ops.sampling",
+    "cap_source_tokens": "llm_ops.sampling",
+    "quality_bins": "llm_ops.text",
+}
+
+__all__ = list(_HOMES)
 
 
 def __getattr__(name):
@@ -64,44 +66,7 @@ def __getattr__(name):
     classes touched); the first attribute access resolves the symbol."""
     import importlib
 
-    homes = {
-        "get_spark": "session",
-        "load_table": "catalog",
-        "run_transform": "plans.pipeline",
-        "write_csv": "plans.pipeline",
-        "append_to_table": "plans.pipeline",
-        "attribution_join": "streaming.joins",
-        "drop_exact_duplicates": "llm_ops.dedup",
-        "minhash_lsh_pairs": "llm_ops.dedup",
-        "jaccard_pairs_prefix": "llm_ops.dedup",
-        "minhash_index_artifacts": "llm_ops.dedup",
-        "minhash_index_update": "llm_ops.dedup",
-        "minhash_index_delete": "llm_ops.dedup",
-        "minhash_drop_ledger": "llm_ops.dedup",
-        "apply_index_increment": "streaming.parity",
-        "apply_index_delete": "streaming.parity",
-        "compact_index": "streaming.parity",
-        "ivf_index_append": "llm_ops.similarity",
-        "ivf_index_delete": "llm_ops.similarity",
-        "lsh_index_append": "llm_ops.similarity",
-        "lsh_index_delete": "llm_ops.similarity",
-        "image_dhash": "llm_ops.multimodal",
-        "dedup_survivors": "llm_ops.clusters",
-        "connected_components": "llm_ops.clusters",
-        "ann_topk_lsh": "llm_ops.similarity",
-        "ann_topk_ivf": "llm_ops.similarity",
-        "sample_stratified_hash": "llm_ops.sampling",
-        "text_pack_sequences": "llm_ops.sampling",
-        "resize_images": "llm_ops.multimodal",
-        "dedup_paragraphs_keep_first": "llm_ops.dedup",
-        "canonical_url": "llm_ops.dedup",
-        "dedup_by_canonical_url": "llm_ops.dedup",
-        "url_host_filter": "llm_ops.text",
-        "split_assign": "llm_ops.sampling",
-        "cap_source_tokens": "llm_ops.sampling",
-        "quality_bins": "llm_ops.text",
-    }
-    if name in homes:
-        mod = importlib.import_module(f"{__name__}.{homes[name]}")
+    if name in _HOMES:
+        mod = importlib.import_module(f"{__name__}.{_HOMES[name]}")
         return getattr(mod, name)
     raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

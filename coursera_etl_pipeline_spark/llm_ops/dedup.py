@@ -40,10 +40,6 @@ M31 = 2_147_483_647  # 2^31 - 1, Mersenne prime for minhash arithmetic
 
 # --- shared building blocks -------------------------------------------------
 
-def tokenize(df: DataFrame, text_col: str = "text") -> DataFrame:
-    return df.withColumn("_tokens", F.split(text_col, " "))
-
-
 def shingles(df: DataFrame, n: int = 3, text_col: str = "text") -> DataFrame:
     """Distinct word n-gram shingles per document, built JVM-side:
     transform over an index sequence + slice + array_join.

@@ -24,19 +24,11 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from coursera_etl_pipeline_spark.catalog import load_table, scratch_dir
 from coursera_etl_pipeline_spark.registry import query
 
 N_FEATURES = 8
-
-BLOB_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.LongType()),
-    T.StructField("payload", T.BinaryType()),
-    T.StructField("media_type", T.StringType()),
-    T.StructField("n_bytes", T.LongType()),
-])
 
 
 def as_blobs(df: DataFrame, content_col: str = "text",

@@ -1,9 +1,12 @@
 """Relational operator pack (SURVEY §2.2).
 
 Importing this package registers every relational query in the
-registry. Modules: relational (filters/joins/aggs/sorts/setops),
-windows (ranking/analytic/frames), scalars (string/date/math/json),
-quality (table-level data-quality expectations).
+registry. Modules: relational (filters/joins/aggs/sorts/setops and
+TPC-H shapes; skewed join partitions are left to AQE's skew-join
+split, session.py), windows (ranking/analytic/frames), scalars
+(string/date/math/json), quality (table-level data-quality
+expectations), asof (as-of join), merge (upsert/SCD2), subqueries,
+tpch_extra (the remaining TPC-H shapes).
 """
 
 from coursera_etl_pipeline_spark.operators import (  # noqa: F401
@@ -11,7 +14,6 @@ from coursera_etl_pipeline_spark.operators import (  # noqa: F401
     merge,
     quality,
     relational,
-    skew,
     scalars,
     subqueries,
     tpch_extra,

@@ -1267,3 +1267,29 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.round(F.expr(dsum("l_extendedprice")) / 7.0, 6).alias("avg_yearly"),
              F.count(F.lit(1)).alias("n_lines"))
     )
+
+
+@query(
+    "join_salted_skew",
+    oracle=f"""
+    SELECT o_orderstatus, COUNT(*) AS n, {dsum('l_extendedprice')} AS total
+    FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+    GROUP BY o_orderstatus
+    """,
+)
+def join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Fact-fact join under key skew: the plain lineitem x orders
+    join. Orders is broadcast while it fits the threshold; past it the
+    shuffle join's hot partitions are split at runtime by AQE's
+    skew-join handling (session.py, pinned in tests/test_plans.py).
+    That replaced the hand-written hot-key salting the query is named
+    after, which `tools/ab.py` measured slower than this plan on
+    uniform keys, on one orderkey holding 90% of lineitem and on the
+    K=10 replica (CHANGES.md). The name stays because certification
+    history, the BASELINE §2 pin and bench.py's HEADLINE key on it."""
+    li = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus")
+    return (li.join(o, li.l_orderkey == o.o_orderkey)
+            .groupBy("o_orderstatus")
+            .agg(F.count(F.lit(1)).alias("n"),
+                 F.expr(dsum("l_extendedprice")).alias("total")))

@@ -59,17 +59,6 @@ def tumbling_counts(events: DataFrame, size: str = "1 day",
     )
 
 
-def sliding_counts(events: DataFrame, size: str = "1 day", slide: str = "12 hours",
-                   ts_col: str = "ts", watermark: str = "1 day") -> DataFrame:
-    """Sliding windows: each event lands in size/slide windows."""
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, size, slide), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("window.start").alias("window_start"), "event_type", "n")
-    )
-
-
 def sessionized(events: DataFrame, gap: str = "4 hours",
                 ts_col: str = "ts", watermark: str = "1 day") -> DataFrame:
     """Session windows per user: a session closes after `gap` of

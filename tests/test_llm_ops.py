@@ -753,21 +753,6 @@ def test_ann_ivf_recall_vs_bruteforce(spark, sf_dir):
     assert recall >= 0.25, f"IVF recall collapsed: {recall}"
 
 
-def test_salted_join_equals_plain_join(spark, sf_dir):
-    from coursera_etl_pipeline_spark.operators.skew import salted_join
-    # deterministic subset — a bare limit() over a multi-partition scan
-    # picks whichever partitions finish first, so the two evaluations
-    # below (plain vs salted) would see different rows
-    li = load_table(spark, sf_dir, "lineitem").filter("l_orderkey < 800")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus")
-    plain = li.join(o, li.l_orderkey == o.o_orderkey)
-    salted = salted_join(li, o, "l_orderkey", "o_orderkey")
-    assert salted.count() == plain.count()
-    a = {tuple(r) for r in salted.select("l_orderkey", "l_linenumber", "o_orderstatus").collect()}
-    b = {tuple(r) for r in plain.select("l_orderkey", "l_linenumber", "o_orderstatus").collect()}
-    assert a == b
-
-
 def test_stratified_sample_rates_and_determinism(spark, sf_dir):
     from coursera_etl_pipeline_spark.llm_ops import sampling
 
@@ -810,102 +795,6 @@ def test_sequence_packing_contiguous_and_bounded(spark, sf_dir):
             cum += r.n_tok
         packs = [r.pack_id for r in docs]
         assert packs == sorted(packs)  # non-decreasing in doc order
-
-
-def test_salted_join_correct_under_planted_skew(spark):
-    """One key holding 90% of the large side (the shape that stalls a
-    plain shuffle join on one reducer): salting must return exactly the
-    plain join's result, with the hot key spread across all salts."""
-    from coursera_etl_pipeline_spark.operators.skew import SALT_BUCKETS, salted_join
-
-    rows = [(7, i) for i in range(9000)] + [(k, k * 10) for k in range(1000)]
-    large = spark.createDataFrame(rows, "k long, payload long")
-    small = spark.createDataFrame(
-        [(k, f"dim{k}") for k in range(1000)], "sk long, name string")
-
-    salted = salted_join(large, small, "k", "sk", salt_cols=["k", "payload"])
-    plain = large.join(small, large.k == small.sk)
-    assert salted.count() == plain.count() == 10000
-    got = {(r.k, r.payload, r.name) for r in salted.collect()}
-    want = {(r.k, r.payload, r.name) for r in plain.collect()}
-    assert got == want
-
-    # the hot key's rows actually spread over the salt space
-    from pyspark.sql import functions as F2
-    hot = (large.filter(F2.col("k") == 7)
-           .withColumn("_salt", F2.pmod(F2.xxhash64("k", "payload"),
-                                        F2.lit(SALT_BUCKETS)).cast("int")))
-    n_salts = hot.select("_salt").distinct().count()
-    assert n_salts == SALT_BUCKETS
-
-
-def test_salted_join_hotkey_under_planted_skew(spark):
-    """Hot-key-only salting: the planted hot key (90% of rows) is
-    detected by the frequency pass and salted; result is exactly the
-    plain join. This is the registered scale-safe plan."""
-    from coursera_etl_pipeline_spark.operators.skew import (
-        hot_keys,
-        salted_join_hotkey,
-    )
-
-    rows = [(7, i) for i in range(9000)] + [(k, k * 10) for k in range(1000)]
-    large = spark.createDataFrame(rows, "k long, payload long")
-    small = spark.createDataFrame(
-        [(k, f"dim{k}") for k in range(1000)], "sk long, name string")
-
-    # default is exact counting (ADVICE r8: an explicit threshold must
-    # mean what it says); sampling is opt-in and must agree on real skew
-    detected = {r.k for r in hot_keys(large, "k").collect()}
-    assert detected == {7}  # 9000 rows vs mean ~10 -> only the planted key
-    sampled = {r.k for r in hot_keys(large, "k", sample_fraction=0.05).collect()}
-    assert sampled == {7}  # 9000*0.05=450 expected draws: cannot miss
-
-    salted = salted_join_hotkey(large, small, "k", "sk",
-                                salt_cols=["k", "payload"])
-    plain = large.join(small, large.k == small.sk)
-    assert salted.count() == plain.count() == 10000
-    got = {(r.k, r.payload, r.name) for r in salted.collect()}
-    want = {(r.k, r.payload, r.name) for r in plain.collect()}
-    assert got == want
-
-
-def test_salted_join_hotkey_uniform_degenerates_to_plain(spark, sf_dir):
-    """At uniform keys the hot set is empty, no row is salted or
-    replicated, and the result is the plain join byte-for-byte."""
-    from coursera_etl_pipeline_spark.operators.skew import (
-        hot_keys,
-        salted_join_hotkey,
-    )
-
-    li = load_table(spark, sf_dir, "lineitem").filter("l_orderkey < 800")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus")
-    assert hot_keys(li, "l_orderkey").count() == 0
-    salted = salted_join_hotkey(li, o, "l_orderkey", "o_orderkey")
-    plain = li.join(o, li.l_orderkey == o.o_orderkey)
-    a = {tuple(r) for r in salted.select("l_orderkey", "l_linenumber", "o_orderstatus").collect()}
-    b = {tuple(r) for r in plain.select("l_orderkey", "l_linenumber", "o_orderstatus").collect()}
-    assert a == b
-
-
-def test_salted_join_hotkey_left_preserves_unmatched(spark):
-    """LEFT form: unmatched probe rows (hot and cold) survive exactly
-    once across the cold/hot union."""
-    from coursera_etl_pipeline_spark.operators.skew import salted_join_hotkey
-
-    rows = ([(7, i) for i in range(500)]          # hot, matched
-            + [(999, i) for i in range(400)]      # hot, UNmatched
-            + [(k, k) for k in range(50)])        # cold, half matched
-    large = spark.createDataFrame(rows, "k long, payload long")
-    small = spark.createDataFrame(
-        [(k, f"dim{k}") for k in range(0, 50, 2)] + [(7, "dim7")],
-        "sk long, name string")
-    out = salted_join_hotkey(large, small, "k", "sk", how="left",
-                             hot_threshold=100)
-    plain = large.join(small, large.k == small.sk, "left")
-    assert out.count() == plain.count()
-    got = {(r.k, r.payload, r.name) for r in out.collect()}
-    want = {(r.k, r.payload, r.name) for r in plain.collect()}
-    assert got == want
 
 
 def test_connected_components_transitive(spark):

@@ -9,15 +9,15 @@ that file as an arm. The SF dir is `SPARK_GRAFT_SF_DIR` (default sf0.1).
 
 Each of CYCLES cycles runs every arm once, rotating which arm goes
 first. The plan build (the call) is timed apart from execution (a noop
-write); execution counters come from perfbench's `SparkCounters` and
-the Catalyst phases from `catalyst_phases` (the noop write plans in a
-query execution of its own, so the arm's frame is planned once more,
-untimed, to read them). Outside the timing, every arm's canonical Arrow
-digest must equal the first arm's, or an AssertionError names the
-cycle and the arm. Prints one JSON line per arm: the median and the
-samples of each metric. `build_jobs` are the jobs the call itself ran
-(eager probes, iterative loops); `jobs` and the other counters are the
-noop write's.
+write); execution counters come from perfbench's `SparkCounters`, read
+once the listener bus is drained, and the Catalyst phases from
+`catalyst_phases` (the noop write plans in a query execution of its
+own, so the arm's frame is planned once more, untimed, to read them).
+Outside the timing, every arm's canonical Arrow digest must equal the
+first arm's, or an AssertionError names the cycle and the arm. Prints
+one JSON line per arm: the median and the samples of each metric.
+`build_jobs` are the jobs the call itself ran (eager probes, iterative
+loops); `jobs` and the other counters are the noop write's.
 """
 
 from __future__ import annotations
@@ -63,14 +63,22 @@ def resolve(arm: str):
 def run_arm(spark, fn, sf_dir: str,
             counters: SparkCounters) -> tuple[dict, str]:
     """One timed call of one arm -> (its metrics, its output digest)."""
-    counters.since_last(sql=False)
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def read() -> dict:
+        # the listener bus fills the status store asynchronously: drain
+        # it so a last stage's completion event is counted
+        bus.waitUntilEmpty()
+        return counters.since_last(sql=False)
+
+    read()
     t0 = time.perf_counter()
     df = fn(spark, sf_dir)
     t1 = time.perf_counter()
-    build_jobs = counters.since_last(sql=False)["jobs"]
+    build_jobs = read()["jobs"]
     df.write.format("noop").mode("overwrite").save()
     t2 = time.perf_counter()
-    ran = counters.since_last(sql=False)
+    ran = read()
     df._jdf.queryExecution().executedPlan()
     m = {"wall_s": t2 - t0, "build_s": t1 - t0,
          "catalyst_s": sum(catalyst_phases(df).values()),

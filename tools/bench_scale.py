@@ -16,10 +16,7 @@ benchmarks the replicated data, not the plan (same exclusion rule as
 tools/scale_probe.py) — and minus pipeline_courses_parity (reads
 fixture JSON, not sf-dir tables; scale-invariant).
 
-Usage: python tools/bench_scale.py [K] [--skip name ...]
-(default K=10 -> ~sf1; --skip drops queries from the subset, e.g. the
-join_salted_skew demo whose deliberate 8x build-side replication tax
-is already characterized at sf1)
+Usage: python tools/bench_scale.py [K]   (default K=10 -> ~sf1)
 Prints one JSON line:
 {"k": K, "sf_equiv": K/10, "engine": {...}, "duckdb": {...},
  "engine_total": s, "duckdb_total": s}
@@ -87,14 +84,7 @@ def _median3(fn) -> float:
 
 
 def main() -> None:
-    args = sys.argv[1:]
-    skip = set()
-    if "--skip" in args:
-        i = args.index("--skip")
-        skip = set(args[i + 1:])
-        args = args[:i]
-    bench_queries = [q for q in BENCH_QUERIES if q not in skip]
-    k = int(args[0]) if args else 10
+    k = int(sys.argv[1]) if len(sys.argv) > 1 else 10
     spark = get_spark("bench_scale")
     spark.sparkContext.setLogLevel("ERROR")
     dest = build_scaled(spark, k, dest=f"/tmp/spark_graft_bench_{k}x",
@@ -102,7 +92,7 @@ def main() -> None:
 
     queries = entrymod.queries()
     engine: dict[str, float] = {}
-    for name in bench_queries:
+    for name in BENCH_QUERIES:
         fn = queries[name]
         engine[name] = _median3(
             lambda: fn(spark, dest).write.format("noop").mode("overwrite").save())
@@ -131,7 +121,7 @@ def main() -> None:
     """.format(ts_expr, dest))
     oracles = entrymod.oracle_sql()
     duck: dict[str, float] = {}
-    for name in bench_queries:
+    for name in BENCH_QUERIES:
         sql = oracles.get(name)
         if sql is None:
             continue

@@ -70,11 +70,6 @@ ALLOWED = {
     # predicate is the query's entire point, and the fact side never
     # shuffles (relational.py join_nonequi_range docstring)
     ("join_nonequi_range", "BroadcastNestedLoopJoin"),
-    # skew plan's phase-1: broadcast 1-row frequency-stats join (the
-    # data-derived hot threshold) + broadcast hot-key membership
-    # ANNOTATION joins (skew.py hot_keys/salted_join_hotkey) — both
-    # broadcast sides are O(1)/O(hot keys); the fact tables hash-join
-    ("join_salted_skew", "BroadcastNestedLoopJoin"),
     # centroid assignment: corpus x broadcast(n_cells centroids) — at
     # 100 TB centroids are trained offline and stay broadcast-sized
     # (similarity.py IVF docstring)

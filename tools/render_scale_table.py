@@ -1,53 +1,35 @@
 """Render a bench_scale.py JSON result as the BASELINE.md §4 markdown
-table, joined against the §2 sf0.1 cross-run medians for the collapse
-comparison. Usage: python tools/render_scale_table.py bench_sf1.json"""
+table, joined against the §2 sf0.1 pins (engine and DuckDB columns,
+read through bench.py's parser) for the collapse comparison.
+Usage: python tools/render_scale_table.py bench_sf1.json"""
 
 from __future__ import annotations
 
 import json
+import os
 import sys
 
-# §2 pinned cross-run medians at sf0.1 (engine, duckdb) for the
-# comparable subset — keep in sync with the BASELINE.md §2 table.
-SF01 = {
-    "q1_pricing_summary": (1.93, 0.11),
-    "q3_shipping_priority": (0.89, 0.07),
-    "q5_local_supplier_volume": (0.97, 0.05),
-    "join_left_outer": (0.50, 0.03),
-    "agg_cube": (1.14, 0.09),
-    "window_ranking": (0.46, 0.22),
-    "window_latest_per_key": (0.66, 0.03),
-    "sort_multi_key": (0.32, 0.04),
-    "events_session_window": (0.94, 0.08),
-    "events_sliding_window": (0.64, 0.08),
-    "scalar_json_pack": (0.41, 0.02),
-    "text_quality_score": (0.44, 0.04),
-    "join_asof": (1.15, 0.08),
-    "join_salted_skew": (1.89, 0.11),
-    "text_tfidf_top_terms": (1.12, 0.30),
-    "q6_forecast_revenue": (0.42, 0.05),
-    "q10_returned_items": (0.73, 0.06),
-    "events_interval_join": (0.46, 0.02),
-    "sample_stratified_hash": (0.22, 0.003),
-    "text_pack_sequences": (0.46, 0.02),
-}
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from bench import _parse_pins  # noqa: E402
 
 
 def main() -> None:
     d = json.load(open(sys.argv[1]))
     eng, duck = d["engine"], d["duckdb"]
+    pin_eng, pin_duck = _parse_pins(1)[0], _parse_pins(2)[0]
     print("| query | engine sf0.1 | duckdb sf0.1 | ratio sf0.1 | "
           f"engine sf{d['sf_equiv']:g} | duckdb sf{d['sf_equiv']:g} | "
           f"ratio sf{d['sf_equiv']:g} |")
     print("|---|---|---|---|---|---|---|")
     for q in eng:
-        e1, d1 = SF01.get(q, (None, None))
+        e1, d1 = pin_eng.get(q), pin_duck.get(q)
         ek, dk = eng[q], duck.get(q)
         r1 = f"{e1 / d1:.1f}x" if e1 and d1 else "—"
         rk = f"{ek / dk:.1f}x" if dk else "—"
         print(f"| {q} | {e1} | {d1} | {r1} | {ek} | {dk} | {rk} |")
-    print(f"| **total** | **{sum(v[0] for v in SF01.values()):.1f}** | "
-          f"**{sum(v[1] for v in SF01.values()):.2f}** | — | "
+    print(f"| **total** | **{sum(pin_eng.get(q, 0) for q in eng):.1f}** | "
+          f"**{sum(pin_duck.get(q, 0) for q in eng):.2f}** | — | "
           f"**{d['engine_total']}** | **{d['duckdb_total']}** | "
           f"**{d['engine_total'] / d['duckdb_total']:.1f}x** |")
 
