@@ -10,12 +10,6 @@ import __spark_entry__ as entry
 WINDOW = 50  # the driver's per-round verification cap
 
 
-def test_forced_list_references_real_queries():
-    names = set(entry.QUERIES)
-    assert set(entry._EDITED_THIS_ROUND) <= names, \
-        set(entry._EDITED_THIS_ROUND) - names
-
-
 def test_queries_and_oracles_consistent():
     qs = entry.queries()
     oracles = entry.oracle_sql()
@@ -24,14 +18,6 @@ def test_queries_and_oracles_consistent():
     # every oracle is non-empty SQL; every query is callable
     assert all(isinstance(sql, str) and sql.strip() for sql in oracles.values())
     assert all(callable(fn) for fn in qs.values())
-
-
-def test_edited_this_round_names_are_registered():
-    """A typo'd name in _EDITED_THIS_ROUND silently forces nothing —
-    the query it meant to re-certify would sit behind the window on a
-    stale row while the list claims otherwise."""
-    unknown = [n for n in entry._EDITED_THIS_ROUND if n not in entry.QUERIES]
-    assert unknown == [], unknown
 
 
 def test_rotation_puts_stalest_queries_in_window():

@@ -2222,19 +2222,12 @@ def test_materialized_scoring_plans_cache_the_explode(spark, sf_dir):
 def _duck_parity(spark_df, oracle_sql, sf_dir):
     """oracle_check's comparison, in-suite: same column set, same
     multiset of normalized rows (its diff report on a mismatch)."""
-    import os
-
     import duckdb
 
-    from coursera_etl_pipeline_spark.catalog import TABLES, table_path
-    from tools.oracle_check import diff_rows, norm_rows
+    from tools.oracle_check import diff_rows, duck_views, norm_rows
 
     con = duckdb.connect()
-    for t in TABLES:
-        p = table_path(sf_dir, t)
-        if os.path.exists(p):
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    duck_views(con, sf_dir)
     s_cols = spark_df.columns
     s_rows = [tuple(r) for r in spark_df.collect()]
     rel = con.sql(oracle_sql)

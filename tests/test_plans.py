@@ -283,31 +283,13 @@ def test_type_parity_lattice_on_all_queries(spark, sf_dir):
     import duckdb
 
     import __spark_entry__ as entrymod
-    from coursera_etl_pipeline_spark.catalog import TABLES, table_path
-    from tools.type_parity_audit import duck_class, spark_class
+    from tools.oracle_check import duck_views
+    from tools.type_parity_audit import audit
 
+    assert len(entrymod.queries()) >= 141  # the registry only grows
     con = duckdb.connect()
-    import os
-    for t in TABLES:
-        p = table_path(sf_dir, t)
-        if os.path.exists(p):
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
-    queries, oracles = entrymod.queries(), entrymod.oracle_sql()
-    assert len(queries) >= 141  # the registry only grows
-    bad = []
-    for name, fn in queries.items():
-        if name not in oracles:  # rows-only entries have no hash gate
-            continue
-        stypes = dict(fn(spark, sf_dir).dtypes)
-        rel = con.sql(oracles[name])
-        dtypes = dict(zip(rel.columns, [str(t) for t in rel.types]))
-        assert set(stypes) == set(dtypes), (name, stypes, dtypes)
-        for c in stypes:
-            sc, dc = spark_class(stypes[c]), duck_class(dtypes[c])
-            if sc != dc or "(" in sc or "(" in dc:
-                bad.append((name, c, stypes[c], dtypes[c]))
-    assert not bad, f"type-lattice divergence (driver hash risk): {bad}"
+    duck_views(con, sf_dir)
+    assert audit(spark, con, sf_dir) == []
 
 
 def test_aqe_converts_smj_to_shuffled_hash(spark):

@@ -467,18 +467,17 @@ def test_stream_late_data_parity_matches_oracle_and_drops(spark, sf_dir):
     plain stream==batch check."""
     import duckdb
 
-    from coursera_etl_pipeline_spark.catalog import table_path
     from coursera_etl_pipeline_spark.streaming.parity import (
         _duck_late_data_oracle,
         stream_late_data_parity,
     )
+    from tools.oracle_check import duck_views
 
     got = sorted(
         tuple(str(c) for c in r)
         for r in stream_late_data_parity(spark, sf_dir, force=True).collect())
     con = duckdb.connect()
-    con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet("
-                f"'{table_path(sf_dir, 'events')}')")
+    duck_views(con, sf_dir)
     want = sorted(tuple(str(c) for c in r)
                   for r in con.execute(_duck_late_data_oracle()).fetchall())
     assert got == want
@@ -707,11 +706,10 @@ def test_sliding_late_zone_has_partial_drops(sf_dir):
     silently degrades to the tumbling one."""
     import duckdb
 
-    from coursera_etl_pipeline_spark.catalog import table_path
+    from tools.oracle_check import duck_views
 
     con = duckdb.connect()
-    con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet("
-                f"'{table_path(sf_dir, 'events')}')")
+    duck_views(con, sf_dir)
     n = con.execute("""
     WITH tagged AS (
       SELECT event_id, us,
@@ -754,11 +752,10 @@ def test_dedup_expiry_zone_exercises_both_outcomes(sf_dir):
     certification degrades to a plain dedup check."""
     import duckdb
 
-    from coursera_etl_pipeline_spark.catalog import table_path
+    from tools.oracle_check import duck_views
 
     con = duckdb.connect()
-    con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet("
-                f"'{table_path(sf_dir, 'events')}')")
+    duck_views(con, sf_dir)
     n_dups, n_re = con.execute("""
     WITH orig AS (
       SELECT event_id, epoch_us(ts) AS us,

@@ -1,8 +1,10 @@
-"""The A/B harness (tools/ab.py), the oracle diff report, the single
-reader of Spark's status stores, and the host-sized driver heap."""
+"""The A/B harness (tools/ab.py), the scale replicas (tools/scale.py),
+the oracle diff report, the single reader of Spark's status stores, the
+single DuckDB view helper, and the host-sized driver heap."""
 
 from __future__ import annotations
 
+import json
 import re
 from pathlib import Path
 
@@ -21,6 +23,12 @@ def same(spark, sf_dir):
 def drop_one(spark, sf_dir):
     df = same(spark, sf_dir)
     return df.exceptAll(df.limit(1))
+
+
+def counted(spark, sf_dir):
+    with open(__file__ + ".calls", "a") as f:
+        f.write("x")
+    return spark.range(3)
 '''
 
 
@@ -47,6 +55,75 @@ def test_ab_dropped_row_fails_the_checksum(ab, spark, sf_dir, tmp_path):
     match = re.escape(f"cycle 0: arm {arm} ")
     with pytest.raises(AssertionError, match=match):
         ab.run(spark, ["q1_pricing_summary", arm], sf_dir)
+
+
+def test_ab_warm_up_cycle_is_called_but_not_sampled(ab, spark, sf_dir,
+                                                    tmp_path):
+    out = ab.run(spark, [f"{tmp_path}/arms.py:counted"], sf_dir)
+    calls = (tmp_path / "arms.py.calls").read_text()
+    assert len(calls) == ab.CYCLES + 1
+    assert len(out[f"{tmp_path}/arms.py:counted"]["wall_s"]["samples"]) \
+        == ab.CYCLES
+
+
+def test_replicas_shift_keys_or_suffix_tokens_and_rebuild_when_stale(
+        spark, sf_dir, tmp_path):
+    from pyspark.sql import functions as F
+
+    from tools import scale
+
+    src = tmp_path / "sf"
+    src.mkdir()
+    for t in ("nation", "orders", "documents"):
+        (src / f"{t}.parquet").symlink_to(Path(sf_dir) / f"{t}.parquet")
+
+    def read(d, t):
+        return spark.read.parquet(f"{d}/{t}.parquet")
+
+    def build(kind):
+        return scale.build(spark, kind, 2, str(src), str(tmp_path))
+
+    shifted = build("shifted")
+    assert read(shifted, "nation").count() == read(src, "nation").count()
+    for t, keys in (("orders", ["o_orderkey", "o_custkey"]),
+                    ("documents", ["doc_id"])):
+        # twice the rows and twice the distinct keys: the copies are disjoint
+        base, rep = (read(d, t).agg(F.count("*"), *map(F.countDistinct, keys))
+                     .first() for d in (src, shifted))
+        assert list(rep) == [2 * n for n in base]
+
+    distinct = build("distinct")
+    docs = read(distinct, "documents")
+    assert docs.count() == 2 * read(src, "documents").count()
+    assert docs.filter(F.col("n_chars")
+                       != F.coalesce(F.length("text"), F.lit(0))).count() == 0
+    copy = F.col("doc_id") >= scale.STRIDES["distinct"][0]
+    tokens = docs.select(copy.alias("copy"),
+                         F.explode(F.split("text", " ")).alias("token"))
+    assert tokens.groupBy("token").agg(F.countDistinct("copy").alias("n")) \
+        .filter("n > 1").count() == 0
+
+    marker, stale = Path(distinct) / scale.MARKER, Path(distinct) / "stale"
+    stale.touch()
+    assert build("distinct") == distinct and stale.exists()  # reused
+    marker.write_text(json.dumps({"src": "/elsewhere", "k": 2}))
+    build("distinct")
+    assert not stale.exists()
+    stale.touch()
+    marker.unlink()
+    build("distinct")
+    assert not stale.exists() and marker.exists()
+
+
+def test_duckdb_views_are_made_only_by_oracle_check():
+    """tools/oracle_check.py::duck_views is the one place a DuckDB view
+    over the fixture or replica parquet is made."""
+    view = re.compile(r"CREATE (OR REPLACE )?VIEW [\w{}]+ AS SELECT \* FROM"
+                      r"[\s\"f]*read_parquet")
+    files = [*ROOT.glob("tools/**/*.py"), *ROOT.glob("tests/**/*.py")]
+    found = [str(p.relative_to(ROOT)) for p in files
+             if view.search(p.read_text())]
+    assert [f for f in found if f != "tools/oracle_check.py"] == []
 
 
 def test_status_stores_are_read_only_through_perfbench():

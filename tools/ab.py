@@ -7,7 +7,9 @@ have the registry signature `(spark, sf_dir) -> DataFrame`. To compare
 against an older implementation, copy its function into a file and pass
 that file as an arm. The SF dir is `SPARK_GRAFT_SF_DIR` (default sf0.1).
 
-Each of CYCLES cycles runs every arm once, rotating which arm goes
+One untimed cycle runs every arm once, so the session's first-query
+cost (class loading, codegen, first scans) lands in no sample. Then
+each of CYCLES cycles runs every arm once, rotating which arm goes
 first. The plan build (the call) is timed apart from execution (a noop
 write); execution counters come from perfbench's `SparkCounters`, read
 once the listener bus is drained, and the Catalyst phases from
@@ -93,12 +95,13 @@ def run(spark, arms: list[str],
     fns = {arm: resolve(arm) for arm in arms}
     counters = SparkCounters(spark)
     samples: dict[str, list[dict]] = {arm: [] for arm in arms}
-    for cycle in range(CYCLES):
+    for cycle in range(CYCLES + 1):  # cycle 0 is the untimed warm-up
         k = cycle % len(arms)
         sums = {}
         for arm in arms[k:] + arms[:k]:
             m, sums[arm] = run_arm(spark, fns[arm], sf_dir, counters)
-            samples[arm].append(m)
+            if cycle:
+                samples[arm].append(m)
         for arm in arms[1:]:
             if sums[arm] != sums[arms[0]]:
                 raise AssertionError(

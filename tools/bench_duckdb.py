@@ -16,15 +16,12 @@ import duckdb
 
 import __spark_entry__ as entrymod
 from bench import HEADLINE, SF_DIR
-from coursera_etl_pipeline_spark.catalog import TABLES, table_path
+from tools.oracle_check import duck_views
 
 
 def main() -> None:
     con = duckdb.connect()
-    for t in TABLES:
-        p = table_path(SF_DIR, t)
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    duck_views(con, SF_DIR)
     oracles = entrymod.oracle_sql()
     per_query: dict[str, float] = {}
     for name in HEADLINE:

@@ -63,14 +63,30 @@ def diff_rows(cols, spark_rows, duck_rows):
             f"duckdb-only: {only_d[:3]}")
 
 
+def duck_views(con, sf_dir: str) -> None:
+    """One DuckDB view per table present in `sf_dir`, over a fixture
+    file or a written dataset directory. An events.ts that DuckDB reads
+    as BIGINT (nanos, as replicas built under nanosAsLong store it) is
+    floored to micros the way catalog.normalize_ts does; a TIMESTAMP
+    passes through."""
+    for t in TABLES:
+        p = table_path(sf_dir, t)
+        if not os.path.exists(p):
+            continue
+        glob = os.path.join(p, "*.parquet") if os.path.isdir(p) else p
+        scan = f"read_parquet('{glob}')"
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM {scan}")
+        if t == "events" and str(
+                con.sql("SELECT ts FROM events").types[0]) == "BIGINT":
+            con.execute("CREATE OR REPLACE VIEW events AS SELECT * REPLACE "
+                        f"(make_timestamp(ts // 1000) AS ts) FROM {scan}")
+
+
 def main() -> int:
     only = set(sys.argv[1:])
     spark = get_spark("oracle_check")
     con = duckdb.connect()
-    for t in TABLES:
-        p = table_path(SF_DIR, t)
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    duck_views(con, SF_DIR)
 
     queries = entrymod.queries()
     oracles = entrymod.oracle_sql()

@@ -1,4 +1,4 @@
-"""Render a bench_scale.py JSON result as the BASELINE.md §4 markdown
+"""Render a tools/scale.py JSON result as the BASELINE.md §4 markdown
 table, joined against the §2 sf0.1 pins (engine and DuckDB columns,
 read through bench.py's parser) for the collapse comparison.
 Usage: python tools/render_scale_table.py bench_sf1.json"""

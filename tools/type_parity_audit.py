@@ -44,8 +44,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 
 import __spark_entry__ as entrymod
-from coursera_etl_pipeline_spark.catalog import TABLES, table_path
 from coursera_etl_pipeline_spark.session import get_spark
+from tools.oracle_check import duck_views
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
@@ -87,46 +87,44 @@ def spark_class(t: str) -> str:
     return f"UNMAPPED({t})"
 
 
-def main() -> int:
-    only = set(sys.argv[1:])
-    spark = get_spark("type_parity_audit")
-    spark.sparkContext.setLogLevel("ERROR")
-    con = duckdb.connect()
-    for t in TABLES:
-        p = table_path(SF_DIR, t)
-        if os.path.exists(p):
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
-
-    queries = entrymod.queries()
-    oracles = entrymod.oracle_sql()
-    flags = 0
-    checked = 0
-    for name, fn in queries.items():
-        if only and name not in only:
+def audit(spark, con, sf_dir: str, names=None) -> list[str]:
+    """One line per flag over `names` (default: every query with an
+    oracle; rows-only entries have no hash gate)."""
+    queries, oracles = entrymod.queries(), entrymod.oracle_sql()
+    flags: list[str] = []
+    for name in (names or queries):
+        if name not in oracles:
             continue
-        checked += 1
         try:
-            stypes = dict(fn(spark, SF_DIR).dtypes)
+            stypes = dict(queries[name](spark, sf_dir).dtypes)
             rel = con.sql(oracles[name])
             dtypes = dict(zip(rel.columns, [str(t) for t in rel.types]))
         except Exception as ex:  # noqa: BLE001 — audit reports, never hides
-            print(f"ERR   {name}: {type(ex).__name__}: {ex}")
-            flags += 1
+            flags.append(f"ERR   {name}: {type(ex).__name__}: {ex}")
             continue
         if set(stypes) != set(dtypes):
-            print(f"COLS  {name}: spark-only={sorted(set(stypes) - set(dtypes))}"
-                  f" duck-only={sorted(set(dtypes) - set(stypes))}")
-            flags += 1
+            flags.append(
+                f"COLS  {name}: spark-only={sorted(set(stypes) - set(dtypes))}"
+                f" duck-only={sorted(set(dtypes) - set(stypes))}")
             continue
         for c in stypes:
             sc, dc = spark_class(stypes[c]), duck_class(dtypes[c])
             if sc != dc or "(" in sc or "(" in dc:
-                print(f"TYPE  {name}.{c}: spark {stypes[c]} -> {sc}"
-                      f" vs duck {dtypes[c]} -> {dc}")
-                flags += 1
+                flags.append(f"TYPE  {name}.{c}: spark {stypes[c]} -> {sc}"
+                             f" vs duck {dtypes[c]} -> {dc}")
+    return flags
 
-    print(f"{flags} flag(s) over {checked} queries")
+
+def main() -> int:
+    names = sys.argv[1:] or list(entrymod.queries())
+    spark = get_spark("type_parity_audit")
+    spark.sparkContext.setLogLevel("ERROR")
+    con = duckdb.connect()
+    duck_views(con, SF_DIR)
+    flags = audit(spark, con, SF_DIR, names)
+    for flag in flags:
+        print(flag)
+    print(f"{len(flags)} flag(s) over {len(names)} queries")
     return 1 if flags else 0
 
 
