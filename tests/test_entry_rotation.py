@@ -81,7 +81,7 @@ def test_consumer_scan_reaches_module_level_sql():
 @pytest.mark.parametrize("source", ["_EDITED_THIS_ROUND", "plan_audit"])
 def test_edited_this_round_names_are_registered(source):
     """Every name that forces a re-certification, or that holds a
-    plan_audit ALLOWED / EXECUTES_ON_BUILD row, is a registered query:
+    plan_audit ALLOWED row, is a registered query:
     the registry is the only place an operator lives, so neither list
     can carry a name ahead of its registration."""
     if source == "_EDITED_THIS_ROUND":
@@ -89,8 +89,7 @@ def test_edited_this_round_names_are_registered(source):
     else:
         from tools import plan_audit
 
-        names = ({n for n, _ in plan_audit.ALLOWED}
-                 | set(plan_audit.EXECUTES_ON_BUILD))
+        names = {n for n, _ in plan_audit.ALLOWED}
     unknown = sorted(names - set(QUERIES))
     assert not unknown, f"{source} names not registered: {unknown}"
 

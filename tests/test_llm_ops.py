@@ -2215,38 +2215,17 @@ def test_materialized_scoring_plans_cache_the_explode(spark, sf_dir):
             "materialize fix regressed (multi-consumer recompute class)")
 
 
-# --- registered LLM-data operators: planted semantics + full fixture
-# value parity against the composed DuckDB oracle, in-suite.
+# --- registered LLM-data operators: planted semantics. Fixture value
+# parity against each composed DuckDB oracle is the registry sweep's
+# (tests/test_plans.py::test_registry_sweep_values_types_and_plans).
 
 
-def _duck_parity(spark_df, oracle_sql, sf_dir):
-    """oracle_check's comparison, in-suite: same column set, same
-    multiset of normalized rows (its diff report on a mismatch)."""
-    import duckdb
-
-    from tools.oracle_check import diff_rows, duck_views, norm_rows
-
-    con = duckdb.connect()
-    duck_views(con, sf_dir)
-    s_cols = spark_df.columns
-    s_rows = [tuple(r) for r in spark_df.collect()]
-    rel = con.sql(oracle_sql)
-    d_cols, d_rows = rel.columns, rel.fetchall()
-    assert sorted(s_cols) == sorted(d_cols), (s_cols, d_cols)
-    sc, sr = norm_rows(s_cols, s_rows)
-    _, dr = norm_rows(d_cols, d_rows)
-    report = diff_rows(sc, sr, dr)
-    assert report is None, report
-
-
-def test_r16_minhash_keep_representative(spark, sf_dir):
+def test_minhash_keep_representative_planted_dups(spark, sf_dir):
     """End-to-end near-dup verdict: exact dups share a component and
     only the min id is kept, singletons keep themselves, every doc
-    surfaces; plus full value parity against the composed DuckDB
-    oracle on the fixture."""
+    surfaces."""
     from coursera_etl_pipeline_spark.llm_ops.clusters import (
         minhash_keep_representative,
-        dedup_minhash_keep_representative_oracle,
     )
 
     body = ("the quick brown fox jumps over the lazy dog and keeps "
@@ -2261,20 +2240,13 @@ def test_r16_minhash_keep_representative(spark, sf_dir):
     assert out[100].is_kept and not out[101].is_kept and not out[102].is_kept
     assert all(out[i].is_kept and out[i].component == i for i in range(6))
 
-    from coursera_etl_pipeline_spark.catalog import load_table
-    _duck_parity(
-        minhash_keep_representative(load_table(spark, sf_dir, "documents")),
-        dedup_minhash_keep_representative_oracle(), sf_dir)
 
-
-def test_r16_quality_mix(spark, sf_dir):
+def test_quality_mix_planted_bins(spark, sf_dir):
     """Curriculum rates attach to the right bins, kept counts respect
-    the md5-bucket filter, totals cover every doc; plus full value
-    parity against the composed DuckDB oracle on the fixture."""
+    the md5-bucket filter, totals cover every doc."""
     from coursera_etl_pipeline_spark.llm_ops.sampling import (
         QUALITY_MIX_RATES,
         quality_mix,
-        sample_quality_mix_oracle,
     )
     from coursera_etl_pipeline_spark.llm_ops.text import quality_bins
 
@@ -2289,20 +2261,12 @@ def test_r16_quality_mix(spark, sf_dir):
     assert all(r.kept_docs <= r.total_docs for r in audit.values())
     assert audit[3].kept_docs == audit[3].total_docs  # top tier kept whole
 
-    from coursera_etl_pipeline_spark.llm_ops.text import text_quality_binning
 
-    binned = text_quality_binning(spark, sf_dir).select(
-        "doc_id", "quality_bin")
-    _duck_parity(quality_mix(binned), sample_quality_mix_oracle(), sf_dir)
-
-
-def test_r17_dsir_importance(spark, sf_dir):
+def test_dsir_importance_planted_ratios(spark, sf_dir):
     """Target-like docs score higher than off-target docs; short/NULL
-    docs surface with zero features and NULL weight (never vanish);
-    plus full value parity on the fixture."""
+    docs surface with zero features and NULL weight (never vanish)."""
     from coursera_etl_pipeline_spark.llm_ops.sampling import (
         dsir_importance,
-        sample_dsir_importance_oracle,
     )
 
     en = "the model trains on the clean corpus and the loss falls"
@@ -2325,18 +2289,12 @@ def test_r17_dsir_importance(spark, sf_dir):
         assert out[short].weight_micro is None
         assert out[short].avg_logratio is None
 
-    from coursera_etl_pipeline_spark.catalog import load_table
-    _duck_parity(
-        dsir_importance(load_table(spark, sf_dir, "documents")),
-        sample_dsir_importance_oracle(), sf_dir)
 
-
-def test_r17_sample_epoch_plan(spark, sf_dir):
+def test_epoch_plan_planted_cap(spark, sf_dir):
     """Hand-computed plan: a scarce source hits the 4-epoch cap, an
-    abundant one realizes its target exactly; plus fixture parity."""
+    abundant one realizes its target exactly."""
     from coursera_etl_pipeline_spark.llm_ops.sampling import (
         epoch_plan,
-        sample_epoch_plan_oracle,
     )
 
     def words(n):
@@ -2358,18 +2316,11 @@ def test_r17_sample_epoch_plan(spark, sf_dir):
     assert not out["rich"].capped
     assert out["rich"].realized_toks == 500
 
-    from coursera_etl_pipeline_spark.catalog import load_table
-    _duck_parity(
-        epoch_plan(load_table(spark, sf_dir, "documents")),
-        sample_epoch_plan_oracle(), sf_dir)
 
-
-def test_r17_soft_dedup_weights(spark, sf_dir):
+def test_soft_dedup_weights_planted_copies(spark, sf_dir):
     """1/n_copies micro-weights: triplicate docs weigh 333333, unique
-    docs 1000000, NULL and empty text share one fingerprint group;
-    plus fixture parity."""
+    docs 1000000, NULL and empty text share one fingerprint group."""
     from coursera_etl_pipeline_spark.llm_ops.dedup import (
-        dedup_soft_weight_oracle,
         soft_dedup_weights,
     )
 
@@ -2385,19 +2336,12 @@ def test_r17_soft_dedup_weights(spark, sf_dir):
     # NULL normalizes to '' — one group of two, no silent row loss
     assert out[4].n_copies == 2 and out[5].n_copies == 2
 
-    from coursera_etl_pipeline_spark.catalog import load_table
-    _duck_parity(
-        soft_dedup_weights(load_table(spark, sf_dir, "documents")),
-        dedup_soft_weight_oracle(), sf_dir)
 
-
-def test_r17_c4_rules(spark, sf_dir):
+def test_c4_rules_planted_violations(spark, sf_dir):
     """One violation per rule flips exactly that flag (the gopher-pack
-    planted pattern); NULL text gets an explicit keep=False; plus
-    fixture parity."""
+    planted pattern); NULL text gets an explicit keep=False."""
     from coursera_etl_pipeline_spark.llm_ops.text import (
         c4_rules,
-        text_c4_rules_oracle,
     )
 
     good = "this page has plenty of words and it ends properly."
@@ -2421,11 +2365,6 @@ def test_r17_c4_rules(spark, sf_dir):
     # every planted violation flips ONLY its own flag
     assert out[2].rule_min_words and out[2].rule_no_brace \
         and out[2].rule_no_policy and out[2].rule_terminal_punct
-
-    from coursera_etl_pipeline_spark.catalog import load_table
-    _duck_parity(
-        c4_rules(load_table(spark, sf_dir, "documents")),
-        text_c4_rules_oracle(), sf_dir)
 
 
 def test_c4_policy_phrase_escaping(spark, monkeypatch):
@@ -2464,13 +2403,12 @@ def test_c4_policy_phrase_escaping(spark, monkeypatch):
     assert out[0].keep and not out[1].rule_no_policy and not out[1].keep
 
 
-def test_r17_ccnet_buckets(spark, sf_dir):
+def test_ccnet_buckets_planted_tertiles(spark, sf_dir):
     """Tertile membership follows the perplexity proxy (common-word
     docs are head, rare-word docs are tail), unscorable docs surface
-    as 'unscored'; plus full value parity on the fixture."""
+    as 'unscored'."""
     from coursera_etl_pipeline_spark.llm_ops.text import (
         ccnet_buckets,
-        text_ccnet_bucket_oracle,
     )
 
     common = "the the the the the the"      # highest avg logp
@@ -2487,11 +2425,6 @@ def test_r17_ccnet_buckets(spark, sf_dir):
     assert all(out[10 + i].ppl_bucket == "middle" for i in range(3))
     assert all(out[20 + i].ppl_bucket == "tail" for i in range(3))
     assert out[30].ppl_bucket == "unscored" and out[30].avg_logp is None
-
-    from coursera_etl_pipeline_spark.catalog import load_table
-    _duck_parity(
-        ccnet_buckets(load_table(spark, sf_dir, "documents")),
-        text_ccnet_bucket_oracle(), sf_dir)
 
 
 def test_soft_dedup_weight_mass_property(spark):
@@ -2542,13 +2475,11 @@ def test_dsir_importance_stable_under_repartitioning(spark):
     assert a == b
 
 
-def test_r17_corpus_profile(spark, sf_dir):
+def test_corpus_profile_planted_sources(spark, sf_dir):
     """Hand-computed per-source profile on a planted corpus (dup
-    pressure, NULL hygiene, language spread, token volume); plus full
-    fixture value parity."""
+    pressure, NULL hygiene, language spread, token volume)."""
     from coursera_etl_pipeline_spark.llm_ops.text import (
         corpus_profile,
-        text_corpus_profile_oracle,
     )
 
     rows = [
@@ -2574,21 +2505,14 @@ def test_r17_corpus_profile(spark, sf_dir):
     assert books.n_docs == 1 and books.dup_excess == 0
     assert books.dup_ratio_micro == 0
 
-    from coursera_etl_pipeline_spark.catalog import load_table
-    _duck_parity(
-        corpus_profile(load_table(spark, sf_dir, "documents")),
-        text_corpus_profile_oracle(), sf_dir)
 
-
-def test_r17_temporal_holdout(spark, sf_dir):
+def test_temporal_holdout_planted_timeline(spark, sf_dir):
     """A hand-built hour-spaced timeline: the last 20% of the range is
     test, the hour before it is purged to embargo, everything earlier
-    trains, NULL timestamps surface as 'unsplit'; plus fixture
-    parity."""
+    trains, NULL timestamps surface as 'unsplit'."""
     import datetime as dt
 
     from coursera_etl_pipeline_spark.llm_ops.sampling import (
-        sample_temporal_holdout_oracle,
         temporal_holdout,
     )
 
@@ -2607,21 +2531,15 @@ def test_r17_temporal_holdout(spark, sf_dir):
         assert out[i] == "test"
     assert out[99] == "unsplit"
 
-    from coursera_etl_pipeline_spark.catalog import load_table
-    _duck_parity(
-        temporal_holdout(load_table(spark, sf_dir, "events")),
-        sample_temporal_holdout_oracle(), sf_dir)
 
-
-def test_r17_bloom_probe(spark, sf_dir):
+def test_bloom_probe_planted_split(spark, sf_dir):
     """Planted corpus/batch split: a batch doc duplicating a corpus
     text MUST hit (no false negatives, the Bloom guarantee — asserted
     over every exact dup), a batch doc with novel text is exactly
-    right unless a (detectable) collision fires; plus fixture
-    parity."""
+    right unless a (detectable) collision fires; and over the whole
+    fixture every exact dup hits."""
     from coursera_etl_pipeline_spark.llm_ops.dedup import (
         bloom_probe_audit,
-        dedup_bloom_probe_oracle,
     )
 
     rows = [(i, f"corpus text number {i}") for i in range(1, 9)]  # corpus
@@ -2644,15 +2562,13 @@ def test_r17_bloom_probe(spark, sf_dir):
     audit = bloom_probe_audit(docs)
     # the structural guarantee on the whole fixture: every exact dup hits
     assert audit.filter("exact_dup AND NOT bloom_hit").count() == 0
-    _duck_parity(audit, dedup_bloom_probe_oracle(), sf_dir)
 
 
-def test_r17_minhash_calibration(spark, sf_dir):
+def test_minhash_calibration_planted_pair(spark, sf_dir):
     """Identical docs estimate at exactly 1e6 micro with zero error;
-    every estimate is a legal 16th in [0, 1e6]; plus fixture parity."""
+    every estimate is a legal 16th in [0, 1e6]."""
     from coursera_etl_pipeline_spark.llm_ops.dedup import (
         minhash_calibration,
-        dedup_minhash_calibration_oracle,
     )
 
     body = ("the quick brown fox jumps over the lazy dog and keeps "
@@ -2672,25 +2588,18 @@ def test_r17_minhash_calibration(spark, sf_dir):
         assert any(r.est_micro == int(a * 1_000_000.0 / 16 + 0.5)
                    for a in range(17)), r.est_micro
 
-    from coursera_etl_pipeline_spark.catalog import load_table
-    _duck_parity(
-        minhash_calibration(load_table(spark, sf_dir, "documents")),
-        dedup_minhash_calibration_oracle(), sf_dir)
 
-
-def test_r17_ann_pq(spark, sf_dir):
+def test_ann_pq_planted_codes(spark, sf_dir):
     """PQ/ADC on a planted separable corpus: codes are the nearest
     codeword per subspace, an exact duplicate of a training vector
     ranks it first with ADC distance 0, rankings are complete per
-    query; plus fixture parity (codes, LUT, distances, and ranking
-    all exact expectations under the frozen codebook)."""
+    query."""
     from coursera_etl_pipeline_spark.llm_ops.similarity import (
         PQ_CODEWORDS,
         TOP_K,
         ann_topk_pq,
         pq_codebook,
         pq_codes,
-        similarity_ann_pq_oracle,
     )
 
     # 16 training vectors: one-hot-ish blocks so assignments are
@@ -2717,24 +2626,17 @@ def test_r17_ann_pq(spark, sf_dir):
         ranks = sorted(r for (qq, r) in got if qq == q)
         assert ranks == list(range(1, TOP_K + 1))
 
-    from coursera_etl_pipeline_spark.catalog import load_table
-    _duck_parity(
-        ann_topk_pq(load_table(spark, sf_dir, "embeddings")),
-        similarity_ann_pq_oracle(), sf_dir)
 
-
-def test_r18_ann_ivfpq(spark, sf_dir):
+def test_ann_ivfpq_routing_prunes(spark, sf_dir):
     """IVF-PQ composition: every returned neighbor must sit in one of
     its query's probed cells (the routing actually prunes), an exact
     duplicate of a trainer ranks first at ADC 0 when it shares the
     query's cells, results are stable under repartitioning
-    (frozen-parameter determinism), and the fixture hash-matches the
-    composed oracle."""
+    (frozen-parameter determinism)."""
     from coursera_etl_pipeline_spark.llm_ops.similarity import (
         N_PROBE,
         ann_topk_ivfpq,
         ivf_assign,
-        similarity_ann_ivfpq_oracle,
     )
 
     def vec(seed):
@@ -2785,24 +2687,18 @@ def test_r18_ann_ivfpq(spark, sf_dir):
                                          n_queries=4).collect()))
     assert a == b
 
-    from coursera_etl_pipeline_spark.catalog import load_table
-    _duck_parity(
-        ann_topk_ivfpq(load_table(spark, sf_dir, "embeddings")),
-        similarity_ann_ivfpq_oracle(), sf_dir)
 
-
-def test_r18_text_embed_hash(spark, sf_dir):
+def test_embed_hash_planted_weights(spark, sf_dir):
     """Feature-hashing embedding generation: planted weights equal an
     independent hashlib recomputation (bucket = md5[0:8] % dim, sign =
     parity of the 9th hex digit), NULL-text docs surface as (doc_id,
-    NULL, NULL) instead of vanishing, the total |weight| mass is bounded
-    by the token count, and the fixture hash-matches the oracle."""
+    NULL, NULL) instead of vanishing, and the total |weight| mass is
+    bounded by the token count."""
     import hashlib
 
     from coursera_etl_pipeline_spark.llm_ops.text import (
         EMBED_HASH_DIM,
         embed_hash,
-        text_embed_hash_oracle,
     )
 
     docs = spark.createDataFrame(
@@ -2829,22 +2725,16 @@ def test_r18_text_embed_hash(spark, sf_dir):
     n_toks = 4
     assert sum(abs(w) for w in got[1].values()) <= n_toks
 
-    from coursera_etl_pipeline_spark.catalog import load_table
-    _duck_parity(
-        embed_hash(load_table(spark, sf_dir, "documents")),
-        text_embed_hash_oracle(), sf_dir)
 
-
-def test_r18_multimodal_audio_metadata(spark, sf_dir):
+def test_audio_metadata_hand_computed_rows(spark, sf_dir):
     """Certified audio metadata over the golden mixed-codec fixture:
     the REAL WAV/FLAC/MP3 header decoders run end-to-end through
-    binaryFile + mapInPandas and hash-match the closed-form oracle;
-    two hand-computed rows cross-check the arithmetic independently
-    of both implementations."""
+    binaryFile + mapInPandas, one row per file, and two hand-computed
+    rows cross-check the arithmetic independently of both the decoders
+    and the closed-form oracle."""
     from coursera_etl_pipeline_spark.llm_ops.multimodal import (
         N_FIXTURE_AUDIO,
         multimodal_audio_metadata,
-        multimodal_audio_metadata_oracle,
     )
 
     got = multimodal_audio_metadata(spark, sf_dir)
@@ -2863,20 +2753,14 @@ def test_r18_multimodal_audio_metadata(spark, sf_dir):
             f1.n_frames, f1.n_bytes) == ("audio", 2, 48000, 16, 2000, 42)
     assert f1.duration_micro == int(2000 / 48000 * 1_000_000 + 0.5)
 
-    _duck_parity(got, multimodal_audio_metadata_oracle(), sf_dir)
 
-
-def test_r18_embed_hash_topk(spark, sf_dir):
+def test_embed_hash_topk_planted_dup(spark, sf_dir):
     """Generation -> retrieval end to end: an exact text duplicate has
     identical generated vectors and ranks first at cosine 1.0; a
     NULL-text doc is a zero vector scoring 0.0 everywhere (never NaN);
-    rankings are complete; fixture parity against the
-    sparse-join-completed oracle."""
+    rankings are complete."""
     from coursera_etl_pipeline_spark.llm_ops.similarity import (
         embed_hash_topk,
-    )
-    from coursera_etl_pipeline_spark.llm_ops.similarity import (
-        similarity_embed_hash_topk_oracle,
     )
 
     docs = spark.createDataFrame(
@@ -2893,22 +2777,16 @@ def test_r18_embed_hash_topk(spark, sf_dir):
     for qid in (0, 1, 2):
         assert sorted(r for (q, r) in got if q == qid) == [1, 2, 3, 4]
 
-    from coursera_etl_pipeline_spark.catalog import load_table
-    _duck_parity(
-        embed_hash_topk(load_table(spark, sf_dir, "documents")),
-        similarity_embed_hash_topk_oracle(), sf_dir)
 
-
-def test_r18_events_funnel(spark, sf_dir):
+def test_funnel_depth_planted_paths(spark, sf_dir):
     """Greedy-earliest funnel: planted users pin the strict-order
     semantics — full completion, out-of-order steps stop the walk,
     step-1-only, no-step users at depth 0, and a NULL-timestamp step
-    contributing nothing; fixture parity against the composed oracle."""
+    contributing nothing."""
     import datetime as dt
 
     from coursera_etl_pipeline_spark.streaming.queries import (
         funnel_depth,
-        events_funnel_oracle,
     )
 
     t0 = dt.datetime(2024, 1, 1)
@@ -2941,20 +2819,15 @@ def test_r18_events_funnel(spark, sf_dir):
                                .replace(tzinfo=dt.timezone.utc).timestamp()
                                * 1_000_000)
 
-    from coursera_etl_pipeline_spark.catalog import load_table
-    _duck_parity(funnel_depth(load_table(spark, sf_dir, "events")),
-                 events_funnel_oracle(), sf_dir)
 
-
-def test_r18_events_retention(spark, sf_dir):
+def test_retention_cohorts_planted_users(spark, sf_dir):
     """Cohort retention triangle: planted users pin the first-seen
     cohort day, distinct-day counting (two events one day count once),
     and the offset arithmetic; every cohort's offset-0 row counts its
-    full cohort; fixture parity against the oracle."""
+    full cohort."""
     import datetime as dt
 
     from coursera_etl_pipeline_spark.streaming.queries import (
-        events_retention_oracle,
         retention_cohorts,
     )
 
@@ -2977,10 +2850,6 @@ def test_r18_events_retention(spark, sf_dir):
         ("2024-01-02", 0): 1,   # user 3
         ("2024-01-02", 1): 1,   # user 3
     }
-
-    from coursera_etl_pipeline_spark.catalog import load_table
-    _duck_parity(retention_cohorts(load_table(spark, sf_dir, "events")),
-                 events_retention_oracle(), sf_dir)
 
 
 def test_bloom_no_false_negatives_property(spark):
@@ -3073,32 +2942,6 @@ def test_pq_codes_stable_under_repartitioning(spark):
     assert a == b
 
 
-def test_r18_stream_bloom_bits_parity(spark, sf_dir):
-    """The streamed Bloom-bits store (real micro-batch engine +
-    replay-idempotent commit + deliberate epoch-0 replay inside the
-    runner) hash-equals the from-scratch rebuild — full value parity
-    against the oracle, plus the membership guarantee: every corpus
-    AND batch fingerprint's bits are set in the stored table."""
-    from coursera_etl_pipeline_spark.llm_ops.dedup import (
-        bloom_probe_audit,
-    )
-    from coursera_etl_pipeline_spark.streaming.parity import (
-        bloom_bits_rebuild_oracle,
-        stream_bloom_bits_parity,
-    )
-
-    stored = stream_bloom_bits_parity(spark, sf_dir, force=True)
-    _duck_parity(stored, bloom_bits_rebuild_oracle(), sf_dir)
-
-    # membership guarantee downstream: with the stored bits standing
-    # in for the filter, every exact dup in the batch still hits —
-    # cross-checked against the batch operator's own verdicts
-    from coursera_etl_pipeline_spark.catalog import load_table
-
-    audit = bloom_probe_audit(load_table(spark, sf_dir, "documents"))
-    assert audit.filter("exact_dup AND NOT bloom_hit").count() == 0
-
-
 def test_bloom_increment_accepts_unseeded_store(spark, sf_dir):
     """ADVICE r17: the cross-micro-batch anti-join made the write path
     read bits_dir unconditionally, so the FIRST increment against a
@@ -3123,22 +2966,18 @@ def test_bloom_increment_accepts_unseeded_store(spark, sf_dir):
     assert stored.count() == stored.select("pos").distinct().count() == n1
 
 
-def test_r18_stream_embed_hash_parity(spark, sf_dir):
+def test_stream_embed_hash_store_equals_batch_rows(spark, sf_dir):
     """The streamed embed-hash store (real micro-batch engine +
     replay-idempotent commit + deliberate epoch-0 replay inside the
-    runner) hash-equals the from-scratch rebuild over corpus ∪ batch
-    — extending the index-lifecycle family to the generated-embedding
-    artifact; plus consistency with the batch query: the store's rows
-    are exactly the batch operator's non-NULL feature rows."""
+    runner) is consistent with the batch query: the store's rows are
+    exactly the batch operator's non-NULL feature rows."""
     from coursera_etl_pipeline_spark.catalog import load_table
     from coursera_etl_pipeline_spark.llm_ops.text import embed_hash
     from coursera_etl_pipeline_spark.streaming.parity import (
-        embed_hash_rebuild_oracle,
         stream_embed_hash_parity,
     )
 
     stored = stream_embed_hash_parity(spark, sf_dir, force=True)
-    _duck_parity(stored, embed_hash_rebuild_oracle(), sf_dir)
 
     batch = (embed_hash(load_table(spark, sf_dir, "documents"))
              .filter("dim_id IS NOT NULL"))
@@ -3294,8 +3133,11 @@ def test_tfidf_equal_scores_rank_by_term(spark, tmp_path):
     first; the score is SUM(f) * idf, so the tie is exact."""
     import pandas as pd
 
+    import duckdb
+
     from coursera_etl_pipeline_spark.llm_ops.text import text_tfidf_top_terms
     from coursera_etl_pipeline_spark.registry import ORACLE
+    from tools.oracle_check import compare, duck_views
 
     texts = ["a b b b z", "a a a a a b b b b z", "a a a a a b b b b z",
              "z", "z"]
@@ -3308,4 +3150,7 @@ def test_tfidf_equal_scores_rank_by_term(spark, tmp_path):
     rows = {r.term: r for r in got.collect()}
     assert {t: r.rank for t, r in rows.items()} == {"a": 1, "b": 2, "z": 3}
     assert rows["a"].tfidf == rows["b"].tfidf
-    _duck_parity(got, ORACLE["text_tfidf_top_terms"], str(tmp_path))
+    con = duckdb.connect()
+    duck_views(con, str(tmp_path))
+    res = compare(got, con.sql(ORACLE["text_tfidf_top_terms"]))
+    assert res["flags"] == [] and res["diff"] is None, res

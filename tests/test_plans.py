@@ -9,6 +9,7 @@ sort-merge-with-shuffle) fails CI, not just the benchmark.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from coursera_etl_pipeline_spark.catalog import load_table
@@ -121,22 +122,6 @@ def test_topk_plans_take_ordered(spark, sf_dir):
     c = load_table(spark, sf_dir, "customer")
     df = c.orderBy(F.desc("c_acctbal")).limit(5)
     assert "TakeOrderedAndProject" in plan_of(df)
-
-
-def test_no_unexpected_plan_antipatterns(spark, sf_dir):
-    """Every registered query's physical plan is free of scale
-    anti-patterns (cartesian products, nested-loop joins, Python eval
-    nodes) except the documented allowlist in tools/plan_audit.py —
-    a new query acquiring one fails here until re-planned or
-    explicitly justified. Stream/iterative queries whose construction
-    executes jobs are covered by their own tests; this gate audits the
-    plan-only majority."""
-    from tools.plan_audit import EXECUTES_ON_BUILD, audit
-
-    import __spark_entry__ as entrymod
-
-    names = [n for n in entrymod.queries() if n not in EXECUTES_ON_BUILD]
-    assert audit(spark, sf_dir, names) == []
 
 
 def test_dsum_cross_engine_bit_parity_on_adversarial_doubles(spark):
@@ -267,29 +252,56 @@ def test_dq_audit_documents_catches_each_violation(spark):
     }
 
 
-def test_type_parity_lattice_on_all_queries(spark, sf_dir):
-    """Guard the r9 HUGEINT lesson in-suite, over EVERY registered
-    query (VERDICT r14 item 2): DuckDB silently widens integer SUMs —
-    including windowed ones — to HUGEINT and decimal math to DECIMAL
-    while Spark stays BIGINT/DOUBLE; values match but the driver's
-    hash diverges. The list is COMPUTED from the registry, never
-    hand-maintained — round 14's red row (`sample_source_token_cap`)
-    happened precisely because the new query was missing from the
-    old hardcoded 8-name RISKY subset. The DuckDB side is plan-only;
-    the Spark side is `.dtypes` (plan-only for batch queries; the 17
-    stream_* parities do execute their micro streaming job at
-    sf0.001, the price of making this class structurally
-    impossible)."""
+@pytest.fixture(scope="module")
+def registry_sweep(spark, sf_dir):
+    """Every registered query, against its DuckDB oracle at the smoke
+    fixture, through the one registry sweep (tools/oracle_check.py),
+    run once for the three tests below. The list is the registry
+    itself, never hand-kept: stream and iterative queries whose build
+    executes jobs are swept like the rest."""
     import duckdb
 
-    import __spark_entry__ as entrymod
-    from tools.oracle_check import duck_views
-    from tools.type_parity_audit import audit
+    from tools.oracle_check import duck_views, sweep
 
-    assert len(entrymod.queries()) >= 141  # the registry only grows
     con = duckdb.connect()
     duck_views(con, sf_dir)
-    assert audit(spark, con, sf_dir) == []
+    yield sweep(spark, con, sf_dir)
+    con.close()
+
+
+def _flags(results, kinds):
+    return {n: [f for f in r["flags"] if f.split()[0] in kinds]
+            for n, r in results.items()
+            if any(f.split()[0] in kinds for f in r["flags"])}
+
+
+def test_registry_sweep_values_types_and_plans(registry_sweep):
+    """Every registered query builds and runs on both engines, with the
+    same column set and the same multiset of normalized rows (no ERR or
+    COLS flag, no value diff), in registry order."""
+    import __spark_entry__ as entrymod
+
+    assert list(registry_sweep) == list(entrymod.queries())
+    assert _flags(registry_sweep, {"ERR", "COLS"}) == {}
+    assert {n: r["diff"] for n, r in registry_sweep.items()
+            if r["diff"]} == {}
+
+
+def test_type_parity_lattice_on_all_queries(registry_sweep):
+    """Every output column of every registered query is in the same
+    class of the type lattice on both engines: DuckDB silently widens
+    integer SUMs, windowed ones included, to HUGEINT and decimal math
+    to DECIMAL while Spark stays BIGINT/DOUBLE; the values match but
+    the driver's hash diverges."""
+    assert _flags(registry_sweep, {"TYPE"}) == {}
+
+
+def test_no_unexpected_plan_antipatterns(registry_sweep):
+    """No registered query's physical plan holds a scale anti-pattern
+    (cartesian products, nested-loop joins, Python eval nodes) without
+    a documented row in tools/plan_audit.py::ALLOWED: a new query that
+    acquires one fails here until re-planned or justified."""
+    assert _flags(registry_sweep, {"PLAN"}) == {}
 
 
 def test_aqe_converts_smj_to_shuffled_hash(spark):

@@ -1,6 +1,7 @@
 """The A/B harness (tools/ab.py), the scale replicas (tools/scale.py),
-the oracle diff report, the single reader of Spark's status stores, the
-single DuckDB view helper, and the host-sized driver heap."""
+the registry sweep and its oracle diff report, the single reader of
+Spark's status stores, the single DuckDB view helper, and the
+host-sized driver heap."""
 
 from __future__ import annotations
 
@@ -153,6 +154,69 @@ def test_oracle_diff_names_the_one_divergent_row_and_column():
     assert "spark-only: [('7', 'n0', '0.5')]" in report
     assert "duckdb-only: [('0', 'n0', '0.5')]" in report
     assert diff_rows(cols, duck[::-1], duck) is None
+
+
+def test_sweep_reports_each_kind_of_flag_and_a_clean_query_clean(
+        spark, sf_dir, monkeypatch, capsys):
+    """A planted registry: one value diverges, one oracle column is
+    HUGEINT (DuckDB's SUM over BIGINT), one plan crosses two tables with
+    no ALLOWED row; each is reported as that kind only, the clean query
+    reports nothing, and the CLI exits non-zero on any of them."""
+    import sys
+
+    import duckdb
+    from pyspark.sql import functions as F
+
+    from coursera_etl_pipeline_spark.catalog import load_table
+    from tools import oracle_check
+
+    def nation(spark, sf):
+        return load_table(spark, sf, "nation")
+
+    registry = {
+        "planted_value": (
+            lambda spark, sf: nation(spark, sf).select("n_nationkey", "n_name"),
+            "SELECT n_nationkey, CASE WHEN n_nationkey = 3 THEN 'NATION_X' "
+            "ELSE n_name END AS n_name FROM nation"),
+        "planted_hugeint": (
+            lambda spark, sf: nation(spark, sf).agg(
+                F.sum(F.col("n_nationkey").cast("bigint")).alias("s")),
+            "SELECT SUM(CAST(n_nationkey AS BIGINT)) AS s FROM nation"),
+        "planted_cross": (
+            lambda spark, sf: load_table(spark, sf, "region")
+            .crossJoin(nation(spark, sf)).select("r_regionkey", "n_nationkey"),
+            "SELECT r_regionkey, n_nationkey FROM region CROSS JOIN nation"),
+        "clean": (lambda spark, sf: nation(spark, sf).select("n_regionkey"),
+                  "SELECT n_regionkey FROM nation"),
+    }
+    monkeypatch.setattr(oracle_check.entrymod, "queries",
+                        lambda: {n: q for n, (q, _) in registry.items()})
+    monkeypatch.setattr(oracle_check.entrymod, "oracle_sql",
+                        lambda: {n: o for n, (_, o) in registry.items()})
+    con = duckdb.connect()
+    oracle_check.duck_views(con, sf_dir)
+    out = oracle_check.sweep(spark, con, sf_dir)
+
+    assert list(out) == list(registry)
+    assert out["planted_value"]["flags"] == []
+    assert "columns differing: ['n_name'];" in out["planted_value"]["diff"]
+    [flag] = out["planted_hugeint"]["flags"]
+    assert flag.startswith("TYPE  s: spark bigint -> int vs duck HUGEINT")
+    assert out["planted_hugeint"]["diff"] is None
+    assert out["planted_cross"]["diff"] is None
+    assert out["planted_cross"]["flags"] in (["PLAN  CartesianProduct"],
+                                             ["PLAN  BroadcastNestedLoopJoin"])
+    assert out["planted_cross"]["rows"] == 5 * 25
+    assert out["clean"]["flags"] == [] and out["clean"]["diff"] is None
+    assert out["clean"]["rows"] == 25
+
+    monkeypatch.setattr(oracle_check, "get_spark", lambda *a, **k: spark)
+    monkeypatch.setattr(oracle_check, "SF_DIR", sf_dir)
+    monkeypatch.setattr(sys, "argv", ["oracle_check.py"])
+    assert oracle_check.main() == 1
+    assert "1 pass, 3 fail" in capsys.readouterr().out
+    monkeypatch.setattr(sys, "argv", ["oracle_check.py", "clean"])
+    assert oracle_check.main() == 0
 
 
 def test_driver_heap_is_half_the_host_within_bounds():

@@ -1,7 +1,7 @@
-"""Physical-plan anti-pattern audit over every registered query.
-
-Renders each queries() entry's formatted physical plan at a small
-fixture and flags the operators that do not survive a 100 TB scale-up:
+"""Physical-plan anti-pattern data for the registry sweep
+(tools/oracle_check.py::sweep), which flags every NODES operator in a
+query's formatted physical plan that has no ALLOWED row. These are the
+operators that do not survive a 100 TB scale-up:
 
 - CartesianProduct          unpartitioned all-pairs; never acceptable
 - BroadcastNestedLoopJoin   acceptable ONLY when the broadcast side is
@@ -15,19 +15,11 @@ The allowlist is part of the contract: every entry names the design
 that justifies the operator, so a NEW query acquiring one of these
 nodes fails tests/test_plans.py::test_no_unexpected_plan_antipatterns
 until it is either re-planned or explicitly justified here. Every name
-in ALLOWED and EXECUTES_ON_BUILD must be a registered query
-(tests/test_entry_rotation.py): no row is staged ahead of registration.
-
-Usage: python tools/plan_audit.py [sf_dir]   (default sf0.001; prints
-one line per flagged query and exits non-zero on unexpected flags)
+in ALLOWED must be a registered query (tests/test_entry_rotation.py):
+no row is staged ahead of registration.
 """
 
 from __future__ import annotations
-
-import os
-import sys
-
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # (query, node) pairs that are deliberate, documented designs.
 ALLOWED = {
@@ -150,67 +142,3 @@ NODES = (
     "FlatMapGroupsInPandas",
     "MapInPandas",
 )
-
-# Queries whose CONSTRUCTION executes jobs (real streams, iterative
-# convergence loops): planning them is not side-effect-free, so the
-# audit runs them at the smoke fixture where that execution is cheap.
-EXECUTES_ON_BUILD = {"stream_batch_parity", "stream_dedup_parity",
-                     "stream_incremental_dedup",
-                     "stream_stateful_profile_parity",
-                     "stream_index_update_parity",
-                     "stream_ann_index_parity",
-                     "stream_index_delete_parity",
-                     "stream_ann_index_delete_parity",
-                     "stream_late_data_parity",
-                     "stream_late_sliding_parity",
-                     "stream_dedup_expiry_parity",
-                     "stream_index_multi_tick_parity",
-                     "dedup_index_compact",
-                     "dedup_components", "dedup_clusters",
-                     "dedup_image_clusters",
-                     # the end-to-end verdict runs the same
-                     # connected-components convergence loop on
-                     # construction (real actions + localCheckpoint
-                     # truncation) as the three rows above
-                     "dedup_minhash_keep_representative",
-                     # both run a real availableNow stream + replay
-                     # probe on construction
-                     "stream_bloom_bits_parity",
-                     "stream_embed_hash_parity"}
-
-
-def formatted_plan(df) -> str:
-    jvm = df.sparkSession._jvm
-    mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    return df._jdf.queryExecution().explainString(mode)
-
-
-def audit(spark, sf_dir: str, names=None) -> list[tuple[str, str]]:
-    """Returns [(query, node)] for every unexpected anti-pattern."""
-    import __spark_entry__ as entrymod
-
-    qs = entrymod.queries()
-    flags: list[tuple[str, str]] = []
-    for name in (names or qs):
-        plan = formatted_plan(qs[name](spark, sf_dir))
-        for node in NODES:
-            if node in plan and (name, node) not in ALLOWED:
-                flags.append((name, node))
-    return flags
-
-
-def main() -> int:
-    from coursera_etl_pipeline_spark.session import get_spark
-
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    spark = get_spark("plan_audit")
-    spark.sparkContext.setLogLevel("ERROR")
-    flags = audit(spark, sf_dir)
-    for name, node in flags:
-        print(f"FLAG  {name}: {node}")
-    print(f"{len(flags)} unexpected anti-pattern(s)")
-    return 1 if flags else 0
-
-
-if __name__ == "__main__":
-    sys.exit(main())
