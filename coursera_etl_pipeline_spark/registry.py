@@ -24,8 +24,10 @@ ORACLE: dict[str, str] = {}
 
 
 def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
-    """Register a named query; ``oracle`` is the DuckDB SQL equivalent
-    (omit for non-SQL-expressible ops -> driver does a rows-only check)."""
+    """Register a named query; ``oracle`` is the DuckDB SQL that
+    recomputes its answer. Every registered query needs one: the sweep
+    (tools/oracle_check.py) checks values, types and plans against it,
+    and tests/test_entry.py fails on a query without one."""
 
     def deco(fn: QueryFn) -> QueryFn:
         QUERIES[name] = fn

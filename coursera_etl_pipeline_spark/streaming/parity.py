@@ -61,19 +61,26 @@ Overwrite commit (`_overwrite_commit`: deletes and compaction, whose
 outputs are read-modify-writes of the dirs they replace):
 
 1. marker present -> no-op;
-2. ``build()`` returns (name, frame, dest) triples; it may refuse
-   before any stage exists (the delete verbs' indexed-ids check);
-3. write every frame to `{stage}/{name}`;
-4. snapshot each destination's markers, plus this epoch's in-flight
-   marker, under `{stage}/_markers/<dest basename>/` — the stage is now
-   the complete post-epoch store;
-5. overwrite every destination from the stage;
-6. re-seal the snapshotted markers, then `_seal_epoch`.
+2. ``build()`` returns one frame per destination; it may refuse before
+   anything is written (the delete verbs' indexed-ids check);
+3. write each frame ONCE, into its destination's dot-prefixed sibling
+   `.<base>.next` (the overwrite verbs accept ``staging_root`` and
+   ignore it), carrying the destination's `_applied_*` markers;
+4. publish the swap record (the next/dest pairs and the in-flight
+   marker) beside every destination as `.<base>.swap`, by tmp +
+   `os.replace`; the last destination's copy is the commit point;
+5. `_finish_swap`: rename `dest -> .old` and `next -> dest`, drop
+   `.old`, `catalog.refreshByPath` each dir (as Spark's own overwrite
+   write does), `_seal_epoch`, drop the record copies.
 
-On failure the stage is kept and its path logged ("staged state
-preserved at <stage>"); `recover_index_stage` rolls it forward,
-markers included, after which the replay no-ops. Plain parquet cannot
-make either commit atomic — a table format (Iceberg/Delta) would.
+Both commits, and `pipeline_stream.start_append`'s appends, first
+`_settle` their dirs: a committed swap recorded beside one is rolled
+forward, and the `.next` dirs and record copies of an attempt that died
+before its commit point are dropped. So a crash at any step of either
+commit converges on replay alone. A rename is cheap
+on a POSIX or HDFS store and a full copy on an object store, and plain
+parquet gives readers no atomic switch across several dirs — a table
+format (Iceberg/Delta) would.
 
 Each commit logs one structured event per epoch on this module's
 logger (`record.epoch`): verb, epoch id, run token, whether the replay
@@ -83,13 +90,16 @@ the filesystem, so the event costs no Spark action.
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
+import json
 import logging
 import os
 import re
 import shutil
 import tempfile
 import time
+import uuid
 from collections.abc import Callable
 
 from pyspark.errors import AnalysisException
@@ -183,18 +193,6 @@ def _epoch_prefix(verb: str, epoch_id, run_token: str | None) -> str:
     return f"{verb}_{tok}{epoch_id}_"
 
 
-def _marker_names(dir_: str) -> list[str]:
-    return ([f for f in os.listdir(dir_) if f.startswith("_applied_")]
-            if os.path.isdir(dir_) else [])
-
-
-def _touch(dir_: str, names: list[str]) -> None:
-    if names:
-        os.makedirs(dir_, exist_ok=True)
-    for n in names:
-        open(os.path.join(dir_, n), "w").close()
-
-
 def _parquet_files(dir_: str) -> list[str]:
     """The data files of a parquet dir (Spark skips `_`/`.` names)."""
     return sorted(n for n in os.listdir(dir_)
@@ -207,17 +205,17 @@ def _dir_bytes(dir_: str) -> tuple[int, int]:
                            for n in names)
 
 
+def _unlink(path: str) -> None:
+    with contextlib.suppress(OSError):
+        os.remove(path)
+
+
 def _purge_epoch_files(dest_dir: str, prefix: str) -> None:
     """Drop files a crashed earlier attempt of THIS epoch committed
     (final `{prefix}*` names and in-flight `._tmp_{prefix}*` copies)."""
-    if not os.path.isdir(dest_dir):
-        return
-    for nm in os.listdir(dest_dir):
+    for nm in os.listdir(dest_dir) if os.path.isdir(dest_dir) else []:
         if nm.startswith(prefix) or nm.startswith(f"._tmp_{prefix}"):
-            try:
-                os.remove(os.path.join(dest_dir, nm))
-            except OSError:
-                pass
+            _unlink(os.path.join(dest_dir, nm))
 
 
 def _move_commit(stage_subdir: str, dest_dir: str, prefix: str) -> None:
@@ -260,10 +258,7 @@ def _move_commit(stage_subdir: str, dest_dir: str, prefix: str) -> None:
             leftover = []
         for nm in leftover:
             if nm.startswith(f"._tmp_{prefix}"):
-                try:
-                    os.remove(os.path.join(dest_dir, nm))
-                except OSError:
-                    pass
+                _unlink(os.path.join(dest_dir, nm))
 
 
 # --- the two commit protocols -------------------------------------------------
@@ -281,11 +276,12 @@ def _append_commit(verb: str, tag: str, anchor_dir: str, dests,
                    build: Callable[[str], list[tuple[str, str]]],
                    epoch_id=None, run_token: str | None = None,
                    staging_root: str | None = None) -> None:
-    """THE append commit (module docstring): marker check -> purge this
-    epoch's prefix from every dir in ``dests`` -> ``build(stage)``,
-    which writes `{stage}/{name}` and returns (name, dest) pairs in
-    commit order -> `_move_commit` each -> `_seal_epoch`."""
+    """THE append commit (module docstring): settle ``dests`` -> marker
+    check -> purge this epoch's prefix from every dir in ``dests`` ->
+    ``build(stage)``, which writes `{stage}/{name}` and returns (name,
+    dest) pairs in commit order -> `_move_commit` each -> `_seal_epoch`."""
     t0 = time.perf_counter()
+    _settle(dests)
     marker = _epoch_marker(anchor_dir, tag, epoch_id, run_token)
     if _epoch_already_applied(marker):
         return _log_epoch(verb, epoch_id, run_token, t0, skipped=True)
@@ -309,79 +305,88 @@ def _append_commit(verb: str, tag: str, anchor_dir: str, dests,
     _log_epoch(verb, epoch_id, run_token, t0, files=files, nbytes=nbytes)
 
 
-def _overwrite_commit(verb: str, tag: str | None, anchor_dir: str,
-                      build: Callable[[], list[tuple[str, DataFrame, str]]],
-                      epoch_id=None, run_token: str | None = None,
-                      staging_root: str | None = None) -> None:
-    """THE overwrite commit (module docstring): marker check ->
-    ``build()`` -> stage every target -> snapshot markers plus the
-    in-flight marker -> overwrite -> restore -> `_seal_epoch`. The
-    stage is kept, and named in the log, when any step fails."""
+def _overwrite_commit(verb: str, tag: str | None, anchor_dir: str, dests,
+                      build: Callable[[], list[DataFrame]],
+                      epoch_id=None, run_token: str | None = None) -> None:
+    """THE overwrite commit (module docstring): settle ``dests`` ->
+    marker check -> ``build()``, one frame per dir of ``dests`` -> write
+    each beside its dir -> publish the swap record -> `_finish_swap`."""
     t0 = time.perf_counter()
+    _settle(dests)
     marker = _epoch_marker(anchor_dir, tag, epoch_id, run_token)
     if _epoch_already_applied(marker):
         return _log_epoch(verb, epoch_id, run_token, t0, skipped=True)
-    targets = build()
-    stage = tempfile.mkdtemp(prefix=f"{verb}_",
-                             dir=staging_root or scratch_root())
+    pairs = []
+    for frame, dest in zip(build(), dests, strict=True):
+        nxt = _beside(dest, "next")
+        frame.write.parquet(nxt)
+        for n in os.listdir(dest):
+            if n.startswith("_applied_"):
+                open(os.path.join(nxt, n), "w").close()
+        pairs.append((nxt, dest))
+    rec = {"id": uuid.uuid4().hex, "pairs": pairs, "marker": marker}
+    for nxt, dest in pairs:  # the last dir's copy is the commit point
+        with open(os.path.join(nxt, "_swap"), "w") as f:
+            json.dump(rec, f)
+        os.replace(f.name, _beside(dest, "swap"))
+    _finish_swap(rec)
+    files, nbytes = map(sum, zip(*map(_dir_bytes, dests)))
+    _log_epoch(verb, epoch_id, run_token, t0, files=files, nbytes=nbytes)
+
+
+def _beside(dest: str, suffix: str) -> str:
+    """`<parent>/.<base>.<suffix>`, which Spark and pyarrow skip."""
+    parent, base = os.path.split(dest.rstrip("/"))
+    return os.path.join(parent, f".{base}.{suffix}")
+
+
+def _read_swap(dest: str) -> dict | None:
     try:
-        for name, frame, _dest in targets:
-            frame.write.parquet(f"{stage}/{name}")
-        kept = [(dest, _marker_names(dest)) for _n, _f, dest in targets]
-        for dest, names in kept:
-            inflight = ([os.path.basename(marker)]
-                        if marker is not None and dest == anchor_dir else [])
-            _touch(os.path.join(stage, "_markers",
-                                os.path.basename(dest.rstrip("/"))),
-                   names + inflight)
-        read = targets[0][1].sparkSession.read
-        for name, _frame, dest in targets:
-            read.parquet(f"{stage}/{name}").write.mode("overwrite").parquet(dest)
-        for dest, names in kept:
-            _touch(dest, names)
-        _seal_epoch(marker)
-    except BaseException:
-        _log.error("%s: commit failed; staged state preserved at %s for "
-                   "recovery", verb, stage)
-        raise
-    shutil.rmtree(stage, ignore_errors=True)
-    written = [_dir_bytes(dest) for _n, _f, dest in targets]
-    _log_epoch(verb, epoch_id, run_token, t0,
-               files=sum(n for n, _ in written),
-               nbytes=sum(b for _, b in written))
+        with open(_beside(dest, "swap")) as f:
+            return json.load(f)
+    except FileNotFoundError:
+        return None
 
 
-def recover_index_stage(spark: SparkSession, stage: str,
-                        dests: dict[str, str]) -> None:
-    """Roll a crashed OVERWRITE-commit forward from its preserved stage
-    (the "staged state preserved at <stage>" log line). Re-commits every
-    staged state `{stage}/{name}` to `dests[name]`, then re-seals every
-    marker recorded under `{stage}/_markers/<dest-basename>/` —
-    including the crashed epoch's in-flight marker, so a foreachBatch
-    re-delivery of that epoch no-ops instead of double-applying or
-    failing the delete verbs' indexed-ids check. Idempotent: the stage
-    is the complete post-epoch store, so rerunning recovery, even after
-    a crash inside it, converges. Markers are re-sealed strictly after
-    every data commit: a sealed epoch must imply its data is present.
+def _swap_pair(nxt: str, dest: str) -> None:
+    """Replace ``dest`` by ``nxt``: `dest -> .old`, `next -> dest`, drop
+    `.old`. Rerunnable from any point: a missing `next` means the
+    renames are done."""
+    old = _beside(dest, "old")
+    if os.path.isdir(nxt):
+        if os.path.isdir(dest):
+            os.rename(dest, old)
+        os.rename(nxt, dest)
+    shutil.rmtree(old, ignore_errors=True)
 
-    The `_markers` snapshot is keyed by destination basename, so two
-    destinations sharing one would lose a re-seal; that layout is
-    refused before any data commit."""
-    bases = [os.path.basename(d.rstrip("/")) for d in dests.values()]
-    if len(set(bases)) != len(bases):
-        raise ValueError(
-            f"recover_index_stage: destination basenames must be "
-            f"unique (the _markers snapshot is basename-keyed): {bases}")
-    for name, dest in dests.items():
-        (spark.read.parquet(os.path.join(stage, name))
-         .write.mode("overwrite").parquet(dest))
-    mroot = os.path.join(stage, "_markers")
-    if not os.path.isdir(mroot):
-        return
-    by_base = {os.path.basename(d.rstrip("/")): d for d in dests.values()}
-    for sub in os.listdir(mroot):
-        if sub in by_base:
-            _touch(by_base[sub], os.listdir(os.path.join(mroot, sub)))
+
+def _finish_swap(rec: dict) -> None:
+    """Roll a published swap record forward: swap each pair and refresh
+    Spark's cached plans over it (as a Spark overwrite does through
+    CacheManager.recacheByPath), seal the marker, then drop the
+    record's copies — the commit-point copy last."""
+    catalog = SparkSession.active().catalog
+    for nxt, dest in rec["pairs"]:
+        _swap_pair(nxt, dest)
+        catalog.refreshByPath(dest)
+    _seal_epoch(rec["marker"])
+    for _nxt, dest in rec["pairs"]:
+        _unlink(_beside(dest, "swap"))
+
+
+def _settle(dirs) -> None:
+    """Leave ``dirs`` with no swap in flight. A record copy beside a dir
+    is committed iff the copy beside the record's last dir is the same
+    record: roll it forward. What is left beside ``dirs`` after that —
+    record copies and `.next` dirs — belongs to an attempt that crashed
+    before its commit point, so drop it."""
+    for d in dirs:
+        rec = _read_swap(d)
+        if rec is not None and rec == _read_swap(rec["pairs"][-1][1]):
+            _finish_swap(rec)
+    for d in dirs:
+        _unlink(_beside(d, "swap"))
+        shutil.rmtree(_beside(d, "next"), ignore_errors=True)
 
 
 # --- the stream runner and the registered-query memo --------------------------
@@ -753,13 +758,13 @@ def apply_index_delete(spark: SparkSession, removed_ids: DataFrame,
     admitted survivors): a dropped or unknown id would leave stale
     ledger rows keyed by it, and a later takedown of its partners would
     "resurrect" a doc the caller meant to erase — so any such id raises
-    ValueError before anything is staged.
+    ValueError before anything is written.
 
     Plain parquet makes delete a full rewrite of the five dirs; a 100 TB
     deployment keeps these artifacts in a table format with delete-file
     support (Iceberg/Delta), where the same anti/semi-join plan emits
     O(|removed| + |touched ledger rows|) delete records instead."""
-    def build() -> list[tuple[str, DataFrame, str]]:
+    def build() -> list[DataFrame]:
         removed = removed_ids.select("doc_id")
         n_unindexed = (removed
                        .join(spark.read.parquet(band_dir).select("doc_id"),
@@ -785,14 +790,11 @@ def apply_index_delete(spark: SparkSession, removed_ids: DataFrame,
             spark.read.parquet(d).join(resurrected, "doc_id", "left_anti")
             .join(removed, "doc_id", "left_anti")
             for d in (tomb_post_dir, tomb_band_dir))
-        return [("post", new_post, post_dir),
-                ("band", new_index, band_dir),
-                ("ledger", new_ledger, ledger_dir),
-                ("tpost", new_tpost, tomb_post_dir),
-                ("tband", new_tband, tomb_band_dir)]
+        return [new_post, new_index, new_ledger, new_tpost, new_tband]
 
-    _overwrite_commit("apply_index_delete", "del", band_dir, build,
-                      epoch_id, run_token, staging_root)
+    _overwrite_commit("apply_index_delete", "del", band_dir,
+                      (post_dir, band_dir, ledger_dir, tomb_post_dir,
+                       tomb_band_dir), build, epoch_id, run_token)
 
 
 def compact_index(spark: SparkSession, dirs: list[str],
@@ -812,10 +814,9 @@ def compact_index(spark: SparkSession, dirs: list[str],
     (Iceberg rewrite_data_files / Delta OPTIMIZE); target_files maps to
     max-file-size there."""
     _overwrite_commit(
-        "compact_index", None, dirs[0],
-        lambda: [(str(i), spark.read.parquet(d).repartition(target_files), d)
-                 for i, d in enumerate(dirs)],
-        staging_root=staging_root)
+        "compact_index", None, dirs[0], dirs,
+        lambda: [spark.read.parquet(d).repartition(target_files)
+                 for d in dirs])
 
 
 def _blind_append(verb: str, dest: str, delta: Callable[[], DataFrame],
@@ -854,7 +855,7 @@ def apply_ann_index_delete(spark: SparkSession, removed_ids: DataFrame,
     are independent, nothing resurrects). It keys on vec_id and never
     interprets the payload columns, so the LSH band index shares it.
     Removed ids must be indexed (ValueError otherwise)."""
-    def build() -> list[tuple[str, DataFrame, str]]:
+    def build() -> list[DataFrame]:
         removed = removed_ids.select("vec_id")
         n_unindexed = (removed
                        .join(spark.read.parquet(index_dir).select("vec_id"),
@@ -864,12 +865,10 @@ def apply_ann_index_delete(spark: SparkSession, removed_ids: DataFrame,
                 f"apply_ann_index_delete: {n_unindexed} removed vec_id(s) "
                 "are not in the stored index — only indexed vectors can "
                 "be taken down")
-        return [("index",
-                 ivf_index_delete(removed, spark.read.parquet(index_dir)),
-                 index_dir)]
+        return [ivf_index_delete(removed, spark.read.parquet(index_dir))]
 
-    _overwrite_commit("apply_ann_index_delete", "del", index_dir, build,
-                      epoch_id, run_token, staging_root)
+    _overwrite_commit("apply_ann_index_delete", "del", index_dir,
+                      [index_dir], build, epoch_id, run_token)
 
 
 def apply_lsh_index_increment(bdf: DataFrame, index_dir: str,

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from coursera_etl_pipeline_spark.plans import pipeline
+from coursera_etl_pipeline_spark.streaming.parity import _settle
 
 
 def stream_courses(spark: SparkSession, landing_glob: str) -> DataFrame:
@@ -38,6 +39,10 @@ def start_append(courses: DataFrame, out_path: str, checkpoint: str,
     checkpoint."""
 
     def write_batch(batch: DataFrame, epoch_id: int) -> None:
+        # a compaction of out_path that crashed past its commit point
+        # rolls forward first: rolled forward later, it would drop this
+        # batch's rows
+        _settle([out_path])
         spark = batch.sparkSession
         out = batch
         if dedup_keys:

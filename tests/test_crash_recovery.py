@@ -1,22 +1,21 @@
 """Crash matrix for the index-lifecycle storage verbs.
 
 Every verb is killed at each step of its commit — before the first
-move or overwrite, between the first and second (multi-destination
-verbs), and after the last commit but before `_seal_epoch` — and the
-epoch is then re-delivered the way foreachBatch's at-least-once
-contract does. The store must converge to the from-scratch rebuild,
-exactly once, with no wedge:
+commit step, between the first and second (multi-destination verbs),
+and after the last one but before `_seal_epoch` — and the epoch is then
+re-delivered the way foreachBatch's at-least-once contract does. A
+commit step is a move of a staged delta into a destination (the append
+verbs: increments, blind appends, the DQ gate) or the swap of one
+destination for its written-beside `.next` dir (the overwrite verbs:
+deletes, compaction). Each case first checks that the crashed attempt
+left debris — epoch-prefixed files, or a swap record — and then the
+re-delivery alone must converge to the from-scratch rebuild, exactly
+once: the append commit purges the epoch's files, and both commits
+roll a recorded swap forward before anything else.
 
-  - APPEND verbs (the increments, the blind appends, the DQ gate):
-    replay alone converges — the purge + epoch-prefix move commit
-    drops whatever the crashed attempt committed.
-  - OVERWRITE verbs (the deletes, compaction): `recover_index_stage`
-    rolls the preserved stage forward, markers included, after which
-    the replay does nothing.
-
-The protocol-level guarantees (move-commit debris sweep, basename
-contract, per-epoch log event, single commit and run points) are
-pinned by the tests after the matrix.
+The protocol-level guarantees (write-once overwrite, cache refresh,
+move-commit debris sweep, per-epoch log event, single commit and run
+points) are pinned by the tests after the matrix.
 """
 
 from __future__ import annotations
@@ -24,7 +23,6 @@ from __future__ import annotations
 import ast
 import logging
 import os
-import re
 import shutil
 from dataclasses import dataclass
 from typing import Callable
@@ -41,7 +39,8 @@ from coursera_etl_pipeline_spark.llm_ops.similarity import (
     signatures,
 )
 from coursera_etl_pipeline_spark.llm_ops.text import embed_hash
-from coursera_etl_pipeline_spark.streaming import parity
+from coursera_etl_pipeline_spark.plans import fixtures
+from coursera_etl_pipeline_spark.streaming import parity, pipeline_stream
 
 
 class Crash(RuntimeError):
@@ -50,6 +49,10 @@ class Crash(RuntimeError):
 
 def _doc(i: int) -> str:
     return " ".join(f"d{i}t{j}" for j in range(30))
+
+
+def _markers(dir_):
+    return {n for n in os.listdir(dir_) if n.startswith("_applied_")}
 
 
 def _rows(df):
@@ -76,13 +79,13 @@ def _is_batch(col: str):
 
 @pytest.fixture()
 def crash(monkeypatch):
-    """``crash(point, root)`` arms one crash for the next verb call.
-    'before' / 'between' fail the first / second commit step — a move
-    into, or an overwrite of, a destination under ``root`` — before it
-    runs; 'seal' fails `_seal_epoch` after every commit landed."""
-    state = {"point": None, "root": None, "steps": 0}
-    real_move, real_seal = parity._move_commit, parity._seal_epoch
-    real_parquet = DataFrameWriter.parquet
+    """``crash(point)`` arms one crash for the next verb call. 'before' /
+    'between' fail the first / second commit step — a `_move_commit`
+    into, or a `_swap_pair` of, a destination — before it runs; 'seal'
+    fails `_seal_epoch` after every commit step landed."""
+    state = {"point": None, "steps": 0}
+    real_move, real_swap = parity._move_commit, parity._swap_pair
+    real_seal = parity._seal_epoch
 
     def step():
         if state["point"] in ("before", "between"):
@@ -95,10 +98,9 @@ def crash(monkeypatch):
         step()
         return real_move(src, dest, prefix)
 
-    def parquet(self, path, *a, **kw):
-        if state["root"] and str(path).startswith(state["root"]):
-            step()
-        return real_parquet(self, path, *a, **kw)
+    def swap(nxt, dest):
+        step()
+        return real_swap(nxt, dest)
 
     def seal(marker):
         if state["point"] == "seal":
@@ -107,11 +109,11 @@ def crash(monkeypatch):
         real_seal(marker)
 
     monkeypatch.setattr(parity, "_move_commit", move)
+    monkeypatch.setattr(parity, "_swap_pair", swap)
     monkeypatch.setattr(parity, "_seal_epoch", seal)
-    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
 
-    def arm(point: str, root: str) -> None:
-        state.update(point=point, root=root, steps=0)
+    def arm(point: str) -> None:
+        state.update(point=point, steps=0)
 
     return arm
 
@@ -122,19 +124,16 @@ class Case:
     frames and dirs), ``run`` delivers epoch 0 under token "tok", and
     ``want`` maps store keys to their from-scratch rebuild (None: no
     data files). ``anchor`` is the key of the dir holding the markers;
-    ``tag`` is None for the epoch-less compaction. Overwrite verbs name
-    their ``stage`` (stage name -> store key) for recovery and the
-    ``wedge`` error a naive re-delivery after a seal-point crash hits.
-    ``replay`` re-delivers after convergence and must do nothing
-    (default: ``run`` again)."""
+    ``tag`` is None for the epoch-less compaction; ``overwrite`` marks
+    the verbs that commit by directory swap. ``replay`` re-delivers the
+    crashed epoch (default: ``run`` again)."""
     points: tuple[str, ...]
     setup: Callable
     run: Callable
     want: Callable
     anchor: str
     tag: str | None = "inc"
-    stage: dict[str, str] | None = None
-    wedge: str | None = None
+    overwrite: bool = False
     replay: Callable | None = None
 
 
@@ -314,24 +313,23 @@ CASES = {
             c["post"], c["band"], c["ledger"], c["tpost"], c["tband"],
             epoch_id=0, run_token="tok"),
         want=_index_rebuild([21, 31, 40, 10]), anchor="band", tag="del",
-        stage={n: n for n in ("post", "band", "ledger", "tpost", "tband")},
-        wedge="not in the stored band index"),
+        overwrite=True),
     "apply_ann_index_delete": Case(
         ("before", "seal"), lambda spark, tmp: _ivf_store(spark, tmp, tok="inc"),
         run=lambda spark, c: parity.apply_ann_index_delete(
             spark, c["emb"].filter(F.col("vec_id") % 10 == 1).select("vec_id"),
             c["index"], epoch_id=0, run_token="tok"),
-        want=_ivf_rebuild(removed=1), anchor="index",
-        tag="del", stage={"index": "index"}, wedge="not in the stored index"),
+        want=_ivf_rebuild(removed=1), anchor="index", tag="del",
+        overwrite=True),
     "compact_index": Case(
         ("before", "between", "seal"),
         lambda spark, tmp: _index_store(spark, tmp, tok="inc"),
         run=lambda spark, c: parity.compact_index(
             spark, [c["post"], c["band"]], target_files=2),
         want=_index_rebuild(_AFTER_INC), anchor="band", tag=None,
-        stage={"0": "post", "1": "band"},
-        # no epoch of its own: the replay that must do nothing is the
-        # increment whose marker the compaction carried
+        overwrite=True,
+        # no epoch of its own: the re-delivery is the increment whose
+        # marker the compaction carried
         replay=lambda spark, c: _inc(c, "inc")),
 }
 
@@ -339,62 +337,98 @@ MATRIX = [(verb, point) for verb, case in CASES.items() for point in case.points
 
 
 @pytest.mark.parametrize("verb,point", MATRIX)
-def test_crash_matrix(spark, tmp_path, crash, caplog, seeded, verb, point):
+def test_crash_matrix(spark, tmp_path, crash, seeded, verb, point):
     case = CASES[verb]
     c = _seeded_store(seeded, verb, case, spark, tmp_path)
     anchor = c[case.anchor]
     marker = case.tag and parity._epoch_marker(anchor, case.tag, 0, "tok")
-    sealed = set(parity._marker_names(anchor))
-    crash(point, str(tmp_path))
-    with caplog.at_level(logging.ERROR, logger=parity.__name__), \
-            pytest.raises(Crash):
+    sealed = _markers(anchor)
+    crash(point)
+    with pytest.raises(Crash):
         case.run(spark, c)
     # the crashed epoch is unsealed: nothing may trust the store's contents
     assert not marker or not os.path.exists(marker)
+    # the crashed attempt left debris for the re-delivery to resolve: a
+    # swap record, or the epoch's files
+    if case.overwrite:
+        assert any(n.endswith(".swap") for n in os.listdir(tmp_path))
+    elif point != "before":
+        prefix = parity._epoch_prefix(case.tag, 0, "tok")
+        assert any(n.startswith(prefix) for d in os.listdir(tmp_path)
+                   for n in os.listdir(tmp_path / d))
 
-    if case.stage is None:
-        if point != "before":
-            # the crashed attempt's files are really there to be purged
-            prefix = parity._epoch_prefix(case.tag, 0, "tok")
-            assert any(n.startswith(prefix) for d in os.listdir(tmp_path)
-                       for n in os.listdir(tmp_path / d))
-        case.run(spark, c)  # the re-delivery converges unaided
-        assert os.path.exists(marker)
-    else:
-        stage = re.search(r"staged state preserved at (\S+) for recovery",
-                          caplog.text).group(1)
-        assert os.path.isdir(stage), "a failed overwrite keeps its stage"
-        if point == "seal" and case.wedge:
-            # the wedge recovery exists for: naive re-delivery fails
-            with pytest.raises(ValueError, match=case.wedge):
-                case.run(spark, c)
-        dests = {name: c[key] for name, key in case.stage.items()}
-        parity.recover_index_stage(spark, stage, dests)
-        parity.recover_index_stage(spark, stage, dests)  # idempotent
-        # every earlier epoch's marker is carried, and the crashed epoch
-        # is sealed by the recovery
-        assert sealed and set(parity._marker_names(anchor)) == sealed | (
-            {os.path.basename(marker)} if marker else set())
-        shutil.rmtree(stage)
+    replay = case.replay or case.run
+    replay(spark, c)  # the re-delivery converges unaided
+    # every earlier epoch's marker is carried, and the crashed one sealed
+    assert _markers(anchor) == sealed | (
+        {os.path.basename(marker)} if marker else set())
+    assert not [n for n in os.listdir(tmp_path) if n.startswith(".")]
     _assert_rebuilt(seeded, verb, case, spark, c)
 
-    (case.replay or case.run)(spark, c)  # a further delivery does nothing
+    replay(spark, c)  # a further delivery does nothing
     _assert_rebuilt(seeded, verb, case, spark, c)
 
 
-def test_recover_rejects_colliding_destination_basenames(spark, tmp_path):
-    """The _markers snapshot is keyed by destination BASENAME, so two
-    dests sharing one (store/band vs tomb/band) would silently merge
-    their marker re-seals and let a replayed epoch double-apply after
-    recovery. Recovery refuses the layout instead of corrupting it."""
-    stage = tmp_path / "stage"
-    for sub in ("a", "b"):
-        spark.createDataFrame([(1,)], "x long").write.parquet(
-            str(stage / sub))
-    dests = {"a": str(tmp_path / "store" / "band"),
-             "b": str(tmp_path / "tomb" / "band")}
-    with pytest.raises(ValueError, match="basenames must be unique"):
-        parity.recover_index_stage(spark, str(stage), dests)
+def test_overwrite_writes_each_target_once(spark, tmp_path, monkeypatch):
+    """An overwrite verb writes each target frame exactly once, beside
+    its destination, and leaves nothing beside it afterwards."""
+    c = _index_store(spark, tmp_path)
+    before = {k: _rows(spark.read.parquet(c[k])) for k in ("post", "band")}
+    targets = []
+    real_parquet = DataFrameWriter.parquet
+
+    def parquet(self, path, *a, **kw):
+        targets.append(str(path))
+        return real_parquet(self, path, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    parity.compact_index(spark, [c["post"], c["band"]], target_files=2)
+    monkeypatch.undo()
+    assert len(targets) == 2
+    assert targets == [parity._beside(c[k], "next") for k in ("post", "band")]
+    assert sorted(os.listdir(tmp_path)) == ["band", "post"]
+    assert {k: _rows(spark.read.parquet(c[k])) for k in before} == before
+
+
+def test_overwrite_refreshes_cached_reads(spark, tmp_path):
+    """A persisted read of a dir shows the rows an overwrite verb
+    committed, not stale cached ones: the swap refreshes Spark's cache
+    by path, as Spark's own overwrite write does."""
+    c = _ivf_store(spark, tmp_path)
+    cached = spark.read.parquet(c["index"]).persist()
+    try:
+        n = cached.count()
+        removed = c["emb"].filter(F.col("vec_id") % 10 == 1).select("vec_id")
+        parity.apply_ann_index_delete(spark, removed, c["index"])
+        assert cached.count() == n - removed.count() < n
+    finally:
+        cached.unpersist()
+
+
+def test_start_append_settles_a_crashed_compaction(spark, tmp_path, crash):
+    """The streamed courses dir is appended outside the two commits and
+    compacted by one. A compaction that crashed past its commit point
+    is rolled forward before the next streamed append, so the rows that
+    append lands survive the next compaction."""
+    landing, out = str(tmp_path / "landing"), str(tmp_path / "courses")
+    os.makedirs(landing)
+
+    def deliver(n_collections: int, stamp: str) -> None:
+        fixtures.write_response_file(
+            fixtures.make_response(n_collections, 3), landing, stamp)
+        pipeline_stream.start_append(
+            pipeline_stream.stream_courses(
+                spark, f"{landing}/coursera_response_*.json"),
+            out, str(tmp_path / "chk"),
+            dedup_keys=["course_id", "collection_id"]).awaitTermination()
+
+    deliver(2, "20240101_000000")
+    crash("before")
+    with pytest.raises(Crash):
+        parity.compact_index(spark, [out], target_files=1)
+    deliver(4, "20240102_000000")  # 6 rows already stored, 6 new
+    parity.compact_index(spark, [out], target_files=1)
+    assert spark.read.parquet(out).count() == 12
 
 
 def test_move_commit_sweeps_tmp_debris_on_crash(tmp_path, monkeypatch):
@@ -472,14 +506,18 @@ def test_commit_logs_one_event_per_epoch(spark, tmp_path, caplog):
 
 
 def test_commit_points_live_only_in_the_protocol():
-    """The staging, move, seal, stream-start and memo calls of
-    streaming/parity.py each have exactly one home — the two commit
-    protocols, the stream runner and the registered-query memo — so
-    a verb or parity cannot grow its own copy back."""
+    """The staging, move, swap, settle, seal, stream-start and memo
+    calls of streaming/parity.py each have their fixed homes — the two
+    commit protocols, the swap roll-forward, the stream runner and the
+    registered-query memo — so a verb or parity cannot grow its own
+    copy back."""
     homes = {
-        "mkdtemp": {"_append_commit", "_overwrite_commit"},
+        "mkdtemp": {"_append_commit"},
         "_move_commit": {"_append_commit"},
-        "_seal_epoch": {"_append_commit", "_overwrite_commit"},
+        "_swap_pair": {"_finish_swap"},
+        "_finish_swap": {"_overwrite_commit", "_settle"},
+        "_settle": {"_append_commit", "_overwrite_commit"},
+        "_seal_epoch": {"_append_commit", "_finish_swap"},
         "foreachBatch": {"_run_stream"},
         "_needs_run": {"_memo"},
     }
