@@ -50,7 +50,7 @@ _EDITED_THIS_ROUND = [
     # SUM(f * idf): exact ties now break on term on both engines.
     "text_tfidf_top_terms",
     # The ten STORE stream parities build through the shared seeds,
-    # `_run_stream` and the append/overwrite commits (streaming/parity.py).
+    # `_run_stream` and the one store commit (streaming/parity.py).
     # The seven memory-sink parities stream an unchanged plan and are not
     # forced.
     "stream_index_update_parity",

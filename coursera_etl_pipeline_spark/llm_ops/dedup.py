@@ -835,24 +835,31 @@ def minhash_index_update(batch_docs: DataFrame, corpus_postings: DataFrame,
     return survivors, new_postings, new_index
 
 
-def _duck_index_update_oracle() -> str:
-    """DuckDB replica of one index increment over the deterministic
-    90/10 documents split: band rows of corpus ∪ surviving batch docs
-    — i.e. the full rebuild the incremental plan must equal."""
-    base = _duck_minhash_oracle(
-        f"WHERE l.doc_id % {INCREMENTAL_BATCH_MOD} = 0"
-        f" OR r.doc_id % {INCREMENTAL_BATCH_MOD} = 0")
-    # reuse the shared CTE chain (sh/xs/sig/banded/cand/cnt/common) and
-    # swap the final SELECT for the survivor-filtered index projection
-    head = base[:base.rindex("SELECT doc_a, doc_b")]
+def _duck_increment_pairs() -> str:
+    """The shared head of the increment oracles: the minhash CTE chain
+    (sh/xs/sig/banded/cand/cnt/common) over every pair touching the
+    90/10 batch slice, its final SELECT swapped for the exact-jaccard
+    verified ``pairs`` CTE. Callers append their drop rule and final
+    SELECT."""
     mod = INCREMENTAL_BATCH_MOD
+    base = _duck_minhash_oracle(
+        f"WHERE l.doc_id % {mod} = 0 OR r.doc_id % {mod} = 0")
+    head = base[:base.rindex("SELECT doc_a, doc_b")]
     return head + f""", pairs AS (
       SELECT doc_a, doc_b
       FROM common
         JOIN cnt ca ON ca.doc_id = doc_a
         JOIN cnt cb ON cb.doc_id = doc_b
       WHERE cc * 1.0 / (ca.n + cb.n - cc) >= {JACCARD_THRESHOLD}
-    ), dropped AS (
+    )"""
+
+
+def _duck_index_update_oracle() -> str:
+    """DuckDB replica of one index increment over the deterministic
+    90/10 documents split: band rows of corpus ∪ surviving batch docs
+    — i.e. the full rebuild the incremental plan must equal."""
+    mod = INCREMENTAL_BATCH_MOD
+    return _duck_increment_pairs() + f""", dropped AS (
       SELECT doc_a AS doc_id FROM pairs
       WHERE doc_a % {mod} = 0 AND doc_b % {mod} != 0
       UNION
@@ -1022,18 +1029,8 @@ def _duck_index_delete_oracle() -> str:
     recomputing the index from scratch without the removed docs —
     including re-admitting batch docs whose only near-dups were taken
     down."""
-    base = _duck_minhash_oracle(
-        f"WHERE l.doc_id % {INCREMENTAL_BATCH_MOD} = 0"
-        f" OR r.doc_id % {INCREMENTAL_BATCH_MOD} = 0")
-    head = base[:base.rindex("SELECT doc_a, doc_b")]
     mod, rm = INCREMENTAL_BATCH_MOD, TAKEDOWN_RESIDUE
-    return head + f""", pairs AS (
-      SELECT doc_a, doc_b
-      FROM common
-        JOIN cnt ca ON ca.doc_id = doc_a
-        JOIN cnt cb ON cb.doc_id = doc_b
-      WHERE cc * 1.0 / (ca.n + cb.n - cc) >= {JACCARD_THRESHOLD}
-    ), dropped AS (
+    return _duck_increment_pairs() + f""", dropped AS (
       SELECT doc_a AS doc_id FROM pairs
       WHERE doc_a % {mod} = 0 AND doc_b % {mod} NOT IN (0, {rm})
       UNION

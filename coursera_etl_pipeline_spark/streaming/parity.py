@@ -36,51 +36,42 @@ checkpoint path): the same checkpoint's replays no-op, a fresh
 checkpoint never collides. Batch-side callers pass neither epoch nor
 token and get no marker.
 
-Append commit (`_append_commit`: increments, blind appends, DQ gate):
+One commit (`_commit`) serves every storage verb: the appends
+(increments, blind appends, the DQ gate, `pipeline_stream.start_append`)
+and the overwrites (deletes and compaction, whose outputs are
+read-modify-writes of the dirs they replace). Nothing is staged
+elsewhere: the verbs that keep ``staging_root`` in their signature
+(`apply_index_increment`, `compact_index`) ignore it.
 
-1. marker present -> no-op;
-2. purge this epoch's `{tag}_{token}_{epoch}_` files from every
-   destination — the debris of a crashed earlier attempt;
-3. ``build(stage)`` stages the delta. It runs after the purge because
-   `spark.read.parquet(dir)` lists files when the frame is created: a
-   store read built earlier would see the debris (an increment would
-   then pair every batch doc with itself and drop the batch);
-4. `_move_commit` each staged dir into its destination under the
-   epoch prefix, in the verb's stated order: postings before band
-   (orphan postings are inert, orphan band rows undercount jaccard),
-   primary artifacts before ledger and tombstones;
-5. `_seal_epoch`.
-
-A crash before the moves, between them, or after the last one and
-before the seal converges on replay with no operator action: the purge
-drops whatever landed and the commit reruns. Epoch-less callers get a
-per-call prefix (the stage dir's name) and no purge, so the commit
-order is what bounds their crash damage.
-
-Overwrite commit (`_overwrite_commit`: deletes and compaction, whose
-outputs are read-modify-writes of the dirs they replace):
-
-1. marker present -> no-op;
-2. ``build()`` returns one frame per destination; it may refuse before
+1. `_settle` the dirs: a committed swap recorded beside one is rolled
+   forward, and the `.next` dirs and record copies of an attempt that
+   died before its commit point are dropped;
+2. marker present -> no-op;
+3. ``build()`` yields one frame per destination (None: leave that dir
+   as it is); it runs after the settle, because `spark.read.parquet(dir)`
+   lists files when the frame is created, and it may refuse before
    anything is written (the delete verbs' indexed-ids check);
-3. write each frame ONCE, into its destination's dot-prefixed sibling
-   `.<base>.next` (the overwrite verbs accept ``staging_root`` and
-   ignore it), carrying the destination's `_applied_*` markers;
-4. publish the swap record (the next/dest pairs and the in-flight
+4. seed each written destination's dot-prefixed sibling `.<base>.next`
+   and write its frame there ONCE with `mode("append")`. An appending
+   verb seeds it with a hard link to every live file of the
+   destination (the sibling is on the same filesystem), so its delta
+   lands beside the live rows; an overwriting verb seeds only the
+   destination's `_applied_*` markers;
+5. `_publish` the swap record (the next/dest pairs and the in-flight
    marker) beside every destination as `.<base>.swap`, by tmp +
-   `os.replace`; the last destination's copy is the commit point;
-5. `_finish_swap`: rename `dest -> .old` and `next -> dest`, drop
-   `.old`, `catalog.refreshByPath` each dir (as Spark's own overwrite
-   write does), `_seal_epoch`, drop the record copies.
+   `os.replace`; the last destination's copy is the commit point, so
+   all of a verb's dirs change together;
+6. `_finish_swap`: rename `dest -> .old` and `next -> dest`, drop
+   `.old`, `catalog.refreshByPath` each dir (as Spark's own writes do),
+   `_seal_epoch`, drop the record copies.
 
-Both commits, and `pipeline_stream.start_append`'s appends, first
-`_settle` their dirs: a committed swap recorded beside one is rolled
-forward, and the `.next` dirs and record copies of an attempt that died
-before its commit point are dropped. So a crash at any step of either
-commit converges on replay alone. A rename is cheap
-on a POSIX or HDFS store and a full copy on an object store, and plain
-parquet gives readers no atomic switch across several dirs — a table
-format (Iceberg/Delta) would.
+A crash at any step converges on replay alone: before the commit
+point the live dirs are untouched and the settle drops the debris;
+after it the settle rolls the swap forward and the marker makes the
+replay a no-op. A rename or a hard link is cheap on a POSIX or HDFS
+store and a full copy on an object store, and plain parquet gives
+readers no atomic switch across several dirs — a table format
+(Iceberg/Delta) would.
 
 Each commit logs one structured event per epoch on this module's
 logger (`record.epoch`): verb, epoch id, run token, whether the replay
@@ -97,10 +88,9 @@ import logging
 import os
 import re
 import shutil
-import tempfile
 import time
 import uuid
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
@@ -120,13 +110,12 @@ from coursera_etl_pipeline_spark.llm_ops.dedup import (
     BLOOM_HASHES,
     DUCK_CONTENT_FP,
     INCREMENTAL_BATCH_MOD,
-    JACCARD_THRESHOLD,
     TAKEDOWN_RESIDUE,
     _banded,
     _bloom_positions,
+    _duck_increment_pairs,
     _duck_index_delete_oracle,
     _duck_index_update_oracle,
-    _duck_minhash_oracle,
     _materialize,
     _signatures_from_shingles,
     content_fp,
@@ -188,21 +177,10 @@ def _seal_epoch(marker: str | None) -> None:
         open(marker, "w").close()
 
 
-def _epoch_prefix(verb: str, epoch_id, run_token: str | None) -> str:
-    tok = f"{run_token}_" if run_token else ""
-    return f"{verb}_{tok}{epoch_id}_"
-
-
 def _parquet_files(dir_: str) -> list[str]:
     """The data files of a parquet dir (Spark skips `_`/`.` names)."""
     return sorted(n for n in os.listdir(dir_)
                   if n.endswith(".parquet") and not n.startswith(("_", ".")))
-
-
-def _dir_bytes(dir_: str) -> tuple[int, int]:
-    names = _parquet_files(dir_)
-    return len(names), sum(os.path.getsize(os.path.join(dir_, n))
-                           for n in names)
 
 
 def _unlink(path: str) -> None:
@@ -210,58 +188,7 @@ def _unlink(path: str) -> None:
         os.remove(path)
 
 
-def _purge_epoch_files(dest_dir: str, prefix: str) -> None:
-    """Drop files a crashed earlier attempt of THIS epoch committed
-    (final `{prefix}*` names and in-flight `._tmp_{prefix}*` copies)."""
-    for nm in os.listdir(dest_dir) if os.path.isdir(dest_dir) else []:
-        if nm.startswith(prefix) or nm.startswith(f"._tmp_{prefix}"):
-            _unlink(os.path.join(dest_dir, nm))
-
-
-def _move_commit(stage_subdir: str, dest_dir: str, prefix: str) -> None:
-    """Publish a staged parquet delta into dest_dir by per-file atomic
-    rename under `{prefix}{part-file-name}`. Same-filesystem moves are
-    single os.replace calls; cross-device falls back to a copy into a
-    dot-hidden temp name inside dest_dir (invisible to Spark's file
-    index) followed by the atomic rename, so a reader never observes a
-    torn file.
-
-    The fallback can crash between copy and rename. Epoch callers purge
-    that debris on replay, but an epoch-less caller's per-call prefix is
-    never revisited, so the finally-sweep drops this call's `._tmp_`
-    files. The stores are single-writer, so no concurrent attempt can
-    share the prefix."""
-    os.makedirs(dest_dir, exist_ok=True)
-    moved_ok = False
-    try:
-        for nm in _parquet_files(stage_subdir):
-            src = os.path.join(stage_subdir, nm)
-            dst = os.path.join(dest_dir, prefix + nm)
-            try:
-                os.replace(src, dst)
-            except OSError:
-                tmp = os.path.join(dest_dir, f"._tmp_{prefix}{nm}")
-                shutil.copy2(src, tmp)
-                os.replace(tmp, dst)
-        moved_ok = True
-    finally:
-        # While the move loop is raising, a listdir failure must not
-        # mask the crash cause; after a clean loop, an unlistable
-        # destination means the committed data may be gone — raise.
-        # A local flag, not sys.exc_info(), tells the two apart: the
-        # latter is also set while a CALLER handles another exception.
-        try:
-            leftover = os.listdir(dest_dir)
-        except OSError:
-            if moved_ok:
-                raise
-            leftover = []
-        for nm in leftover:
-            if nm.startswith(f"._tmp_{prefix}"):
-                _unlink(os.path.join(dest_dir, nm))
-
-
-# --- the two commit protocols -------------------------------------------------
+# --- the commit -----------------------------------------------------------------
 
 
 def _log_epoch(verb: str, epoch_id, run_token: str | None, t0: float,
@@ -272,65 +199,47 @@ def _log_epoch(verb: str, epoch_id, run_token: str | None, t0: float,
     _log.info("epoch %s", event, extra={"epoch": event})
 
 
-def _append_commit(verb: str, tag: str, anchor_dir: str, dests,
-                   build: Callable[[str], list[tuple[str, str]]],
-                   epoch_id=None, run_token: str | None = None,
-                   staging_root: str | None = None) -> None:
-    """THE append commit (module docstring): settle ``dests`` -> marker
-    check -> purge this epoch's prefix from every dir in ``dests`` ->
-    ``build(stage)``, which writes `{stage}/{name}` and returns (name,
-    dest) pairs in commit order -> `_move_commit` each -> `_seal_epoch`."""
+def _commit(verb: str, tag: str | None, anchor_dir: str, dests,
+            build: Callable[[], Iterator[DataFrame | None]],
+            epoch_id=None, run_token: str | None = None,
+            append: bool = False) -> None:
+    """THE commit (module docstring): settle ``dests`` -> marker check
+    -> ``build()``, a generator of one frame (or None) per dir of
+    ``dests`` -> seed each written dir's `.next` (hard links to its
+    live files if ``append``, else its markers) and write the frame
+    there -> publish the swap record -> `_finish_swap`. Closing the
+    generator releases what it holds, also on a crash. The event counts
+    the written files, not the linked ones."""
     t0 = time.perf_counter()
     _settle(dests)
     marker = _epoch_marker(anchor_dir, tag, epoch_id, run_token)
     if _epoch_already_applied(marker):
         return _log_epoch(verb, epoch_id, run_token, t0, skipped=True)
-    prefix = None
-    if epoch_id is not None:
-        prefix = _epoch_prefix(tag, epoch_id, run_token)
-        for dest in dests:
-            _purge_epoch_files(dest, prefix)
-    stage = tempfile.mkdtemp(prefix=f"{verb}_",
-                             dir=staging_root or scratch_root())
-    files = nbytes = 0
-    try:
-        for name, dest in build(stage):
-            n, b = _dir_bytes(f"{stage}/{name}")
-            files, nbytes = files + n, nbytes + b
-            _move_commit(f"{stage}/{name}", dest,
-                         prefix or os.path.basename(stage) + "_")
-        _seal_epoch(marker)
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-    _log_epoch(verb, epoch_id, run_token, t0, files=files, nbytes=nbytes)
-
-
-def _overwrite_commit(verb: str, tag: str | None, anchor_dir: str, dests,
-                      build: Callable[[], list[DataFrame]],
-                      epoch_id=None, run_token: str | None = None) -> None:
-    """THE overwrite commit (module docstring): settle ``dests`` ->
-    marker check -> ``build()``, one frame per dir of ``dests`` -> write
-    each beside its dir -> publish the swap record -> `_finish_swap`."""
-    t0 = time.perf_counter()
-    _settle(dests)
-    marker = _epoch_marker(anchor_dir, tag, epoch_id, run_token)
-    if _epoch_already_applied(marker):
-        return _log_epoch(verb, epoch_id, run_token, t0, skipped=True)
-    pairs = []
-    for frame, dest in zip(build(), dests, strict=True):
-        nxt = _beside(dest, "next")
-        frame.write.parquet(nxt)
-        for n in os.listdir(dest):
-            if n.startswith("_applied_"):
-                open(os.path.join(nxt, n), "w").close()
-        pairs.append((nxt, dest))
+    pairs, files, nbytes = [], 0, 0
+    with contextlib.closing(build()) as frames:
+        for frame, dest in zip(frames, dests, strict=True):
+            if frame is None:
+                continue
+            nxt = _beside(dest, "next")
+            os.makedirs(nxt)
+            for n in os.listdir(dest) if os.path.isdir(dest) else ():
+                if append:
+                    # Spark names every part file uniquely, so the append
+                    # writes through a link only to rewrite the empty
+                    # `_SUCCESS` and its checksum, with the same bytes
+                    os.link(os.path.join(dest, n), os.path.join(nxt, n))
+                elif n.startswith("_applied_"):
+                    open(os.path.join(nxt, n), "w").close()
+            seeded = set(os.listdir(nxt))
+            frame.write.mode("append").parquet(nxt)
+            new = [os.path.join(nxt, n) for n in _parquet_files(nxt)
+                   if n not in seeded]
+            files += len(new)
+            nbytes += sum(map(os.path.getsize, new))
+            pairs.append((nxt, dest))
     rec = {"id": uuid.uuid4().hex, "pairs": pairs, "marker": marker}
-    for nxt, dest in pairs:  # the last dir's copy is the commit point
-        with open(os.path.join(nxt, "_swap"), "w") as f:
-            json.dump(rec, f)
-        os.replace(f.name, _beside(dest, "swap"))
+    _publish(rec)
     _finish_swap(rec)
-    files, nbytes = map(sum, zip(*map(_dir_bytes, dests)))
     _log_epoch(verb, epoch_id, run_token, t0, files=files, nbytes=nbytes)
 
 
@@ -338,6 +247,16 @@ def _beside(dest: str, suffix: str) -> str:
     """`<parent>/.<base>.<suffix>`, which Spark and pyarrow skip."""
     parent, base = os.path.split(dest.rstrip("/"))
     return os.path.join(parent, f".{base}.{suffix}")
+
+
+def _publish(rec: dict) -> None:
+    """Write the swap record beside every dir it swaps (tmp in the
+    `.next` dir + `os.replace`); the last dir's copy is the commit
+    point."""
+    for nxt, dest in rec["pairs"]:
+        with open(os.path.join(nxt, "_swap"), "w") as f:
+            json.dump(rec, f)
+        os.replace(f.name, _beside(dest, "swap"))
 
 
 def _read_swap(dest: str) -> dict | None:
@@ -362,7 +281,7 @@ def _swap_pair(nxt: str, dest: str) -> None:
 
 def _finish_swap(rec: dict) -> None:
     """Roll a published swap record forward: swap each pair and refresh
-    Spark's cached plans over it (as a Spark overwrite does through
+    Spark's cached plans over it (as a Spark write does through
     CacheManager.recacheByPath), seal the marker, then drop the
     record's copies — the commit-point copy last."""
     catalog = SparkSession.active().catalog
@@ -678,11 +597,6 @@ def apply_index_increment(bdf: DataFrame, post_dir: str,
     and posting rows. The foreachBatch unit of the streamed lifecycle
     — also callable batch-side (one cron tick).
 
-    ``staging_root`` hosts the per-batch delta staging dir; default is
-    the scratch root (right for local mode). On a cluster pass a
-    shared-filesystem path next to the index so the staged deltas are
-    visible to every executor and the commits stay rename-cheap.
-
     ``aux_dirs`` = (ledger_dir, tomb_post_dir, tomb_band_dir) opts the
     store into the DELETE-capable layout: the increment also appends
     the drop LEDGER (every justification pair) and the dropped docs'
@@ -690,17 +604,17 @@ def apply_index_increment(bdf: DataFrame, post_dir: str,
     to resurrect without re-shingling. Default None keeps the
     two-artifact store.
 
-    Stage-then-commit is mandatory here, not just prudent: the
+    Write-beside-then-swap is mandatory here, not just prudent: the
     survivors' lineage READS the index dirs, and Spark invalidates every
     cached plan over a path the moment something writes to it
     (CacheManager.recacheByPath), so a direct first append would make
     the second delta recompute survivors against the appended band rows
     (caught by test_stream_index_update_multi_batch_append_equals_rebuild).
-    The shared frames stay persisted while the deltas are staged: the
-    survivors' verify DAG is the expensive part."""
-    dests = (post_dir, band_dir, *(aux_dirs or ()))
-
-    def build(stage: str) -> list[tuple[str, str]]:
+    The deltas land in the `.next` siblings, and the live dirs change
+    only at the swap, all five together. The shared frames stay
+    persisted while the deltas are written: the survivors' verify DAG
+    is the expensive part."""
+    def build() -> Iterator[DataFrame]:
         s = bdf.sparkSession
         b_post, b_band = minhash_index_artifacts(bdf)
         b_post, b_band = b_post.persist(), b_band.persist()
@@ -723,30 +637,26 @@ def apply_index_increment(bdf: DataFrame, post_dir: str,
                     ledger.select("doc_id"), "doc_id", "left_anti")
             survivors = survivors.persist()
             held.append(survivors)
-            staged = [("band", b_band.join(survivors, "doc_id", "left_semi")),
-                      ("post", b_post.join(survivors, "doc_id", "left_semi"))]
+            yield b_post.join(survivors, "doc_id", "left_semi")
+            yield b_band.join(survivors, "doc_id", "left_semi")
             if aux_dirs is not None:
                 dropped = ledger.select("doc_id")
-                staged += [("ledger", ledger),
-                           ("tpost", b_post.join(dropped, "doc_id", "left_semi")),
-                           ("tband", b_band.join(dropped, "doc_id", "left_semi"))]
-            for name, frame in staged:
-                frame.write.parquet(f"{stage}/{name}")
+                yield ledger
+                yield b_post.join(dropped, "doc_id", "left_semi")
+                yield b_band.join(dropped, "doc_id", "left_semi")
         finally:
             for frame in held:
                 frame.unpersist()
-        # postings before band, primary artifacts before ledger/tombstones
-        return list(zip(("post", "band", "ledger", "tpost", "tband"), dests))
 
-    _append_commit("apply_index_increment", "inc", band_dir, dests, build,
-                   epoch_id, run_token, staging_root)
+    _commit("apply_index_increment", "inc", band_dir,
+            (post_dir, band_dir, *(aux_dirs or ())), build, epoch_id,
+            run_token, append=True)
 
 
 def apply_index_delete(spark: SparkSession, removed_ids: DataFrame,
                        post_dir: str, band_dir: str,
                        ledger_dir: str, tomb_post_dir: str,
                        tomb_band_dir: str,
-                       staging_root: str | None = None,
                        epoch_id: int | None = None,
                        run_token: str | None = None) -> None:
     """The DELETE verb against parquet-backed index storage: remove the
@@ -764,7 +674,7 @@ def apply_index_delete(spark: SparkSession, removed_ids: DataFrame,
     deployment keeps these artifacts in a table format with delete-file
     support (Iceberg/Delta), where the same anti/semi-join plan emits
     O(|removed| + |touched ledger rows|) delete records instead."""
-    def build() -> list[DataFrame]:
+    def build() -> Iterator[DataFrame]:
         removed = removed_ids.select("doc_id")
         n_unindexed = (removed
                        .join(spark.read.parquet(band_dir).select("doc_id"),
@@ -790,11 +700,11 @@ def apply_index_delete(spark: SparkSession, removed_ids: DataFrame,
             spark.read.parquet(d).join(resurrected, "doc_id", "left_anti")
             .join(removed, "doc_id", "left_anti")
             for d in (tomb_post_dir, tomb_band_dir))
-        return [new_post, new_index, new_ledger, new_tpost, new_tband]
+        yield from (new_post, new_index, new_ledger, new_tpost, new_tband)
 
-    _overwrite_commit("apply_index_delete", "del", band_dir,
-                      (post_dir, band_dir, ledger_dir, tomb_post_dir,
-                       tomb_band_dir), build, epoch_id, run_token)
+    _commit("apply_index_delete", "del", band_dir,
+            (post_dir, band_dir, ledger_dir, tomb_post_dir, tomb_band_dir),
+            build, epoch_id, run_token)
 
 
 def compact_index(spark: SparkSession, dirs: list[str],
@@ -807,26 +717,26 @@ def compact_index(spark: SparkSession, dirs: list[str],
     `target_files` files — a pure storage-layout verb, no row added,
     removed, or changed (pinned by
     test_storage_compact_preserves_content_and_reduces_files). It reads
-    the very dirs it overwrites, hence the overwrite commit; the
-    markers it carries across keep a later replayed increment a no-op.
+    the very dirs it overwrites, and the commit seeds each `.next` with
+    the dir's markers only; the markers it carries across keep a later
+    replayed increment a no-op.
 
     At 100 TB this is the maintenance job a table format schedules
     (Iceberg rewrite_data_files / Delta OPTIMIZE); target_files maps to
     max-file-size there."""
-    _overwrite_commit(
-        "compact_index", None, dirs[0], dirs,
-        lambda: [spark.read.parquet(d).repartition(target_files)
-                 for d in dirs])
+    _commit("compact_index", None, dirs[0], dirs,
+            lambda: (spark.read.parquet(d).repartition(target_files)
+                     for d in dirs))
 
 
 def _blind_append(verb: str, dest: str, delta: Callable[[], DataFrame],
                   epoch_id, run_token) -> None:
-    """Append commit of one frame that never reads ``dest``."""
-    def build(stage: str) -> list[tuple[str, str]]:
-        delta().write.parquet(f"{stage}/delta")
-        return [("delta", dest)]
+    """Appending commit of one frame that never reads ``dest``."""
+    def build() -> Iterator[DataFrame]:
+        yield delta()
 
-    _append_commit(verb, "inc", dest, [dest], build, epoch_id, run_token)
+    _commit(verb, "inc", dest, [dest], build, epoch_id, run_token,
+            append=True)
 
 
 def apply_ann_index_increment(bdf: DataFrame, centroid_dir: str,
@@ -847,7 +757,6 @@ def apply_ann_index_increment(bdf: DataFrame, centroid_dir: str,
 
 def apply_ann_index_delete(spark: SparkSession, removed_ids: DataFrame,
                            index_dir: str,
-                           staging_root: str | None = None,
                            epoch_id: int | None = None,
                            run_token: str | None = None) -> None:
     """The ANN index's DELETE verb against parquet-backed storage: one
@@ -855,7 +764,7 @@ def apply_ann_index_delete(spark: SparkSession, removed_ids: DataFrame,
     are independent, nothing resurrects). It keys on vec_id and never
     interprets the payload columns, so the LSH band index shares it.
     Removed ids must be indexed (ValueError otherwise)."""
-    def build() -> list[DataFrame]:
+    def build() -> Iterator[DataFrame]:
         removed = removed_ids.select("vec_id")
         n_unindexed = (removed
                        .join(spark.read.parquet(index_dir).select("vec_id"),
@@ -865,10 +774,10 @@ def apply_ann_index_delete(spark: SparkSession, removed_ids: DataFrame,
                 f"apply_ann_index_delete: {n_unindexed} removed vec_id(s) "
                 "are not in the stored index — only indexed vectors can "
                 "be taken down")
-        return [ivf_index_delete(removed, spark.read.parquet(index_dir))]
+        yield ivf_index_delete(removed, spark.read.parquet(index_dir))
 
-    _overwrite_commit("apply_ann_index_delete", "del", index_dir,
-                      [index_dir], build, epoch_id, run_token)
+    _commit("apply_ann_index_delete", "del", index_dir, [index_dir], build,
+            epoch_id, run_token)
 
 
 def apply_lsh_index_increment(bdf: DataFrame, index_dir: str,
@@ -904,27 +813,28 @@ def apply_dq_gate(bdf: DataFrame, accept_dir: str, reject_dir: str,
     crash-on-bad-payload (extract-service/main.py:144-161) generalized
     to keep the stream alive (the bad drop is preserved for repair
     instead of wedging the query). The marker is anchored in
-    accept_dir, and the purge covers BOTH destinations: the verdict is
-    recomputed deterministically, but even a flipped one could then
-    not leave the batch delivered twice."""
+    accept_dir, and the commit settles BOTH destinations: the verdict
+    is recomputed deterministically, but even a flipped one could not
+    leave the batch delivered twice, because a crashed attempt's batch
+    reaches neither dir before its swap record is published."""
     from coursera_etl_pipeline_spark.operators.quality import (
         dq_audit_documents,
     )
 
-    def build(stage: str) -> list[tuple[str, str]]:
+    def build() -> Iterator[DataFrame | None]:
         batch = bdf.persist()
         try:
             n_failed = (dq_audit_documents(batch)
                         .filter(~F.col("passed")
                                 & ~F.col("check_name").isin(*DQ_GATE_EXCLUDED))
                         .count())
-            batch.write.parquet(f"{stage}/batch")
+            yield None if n_failed else batch
+            yield batch if n_failed else None
         finally:
             batch.unpersist()
-        return [("batch", reject_dir if n_failed else accept_dir)]
 
-    _append_commit("apply_dq_gate", "dq", accept_dir,
-                   (accept_dir, reject_dir), build, epoch_id, run_token)
+    _commit("apply_dq_gate", "dq", accept_dir, (accept_dir, reject_dir),
+            build, epoch_id, run_token, append=True)
 
 
 def _bloom_bits_slice(df: DataFrame, tag: str) -> DataFrame:
@@ -950,13 +860,12 @@ def apply_bloom_increment(bdf: DataFrame, bits_dir: str,
 
     The rebuild oracle computes DISTINCT positions over the whole batch
     slice, so if availableNow splits the slice, a position shared by two
-    epochs must not be stored twice: the staged positions anti-join the
+    epochs must not be stored twice: the new positions anti-join the
     stored src='batch' rows (a bounded read — at most BLOOM_BITS rows
-    per src). That read is built in ``build``, after this epoch's purge,
-    so a partially committed earlier attempt of the SAME epoch cannot
-    mask its own re-append. An unseeded store (absent, or an empty dir
-    with no schema) has nothing to exclude."""
-    def build(stage: str) -> list[tuple[str, str]]:
+    per src). That read is built in ``build``, after the settle, so it
+    lists the dir the commit then seeds from. An unseeded store
+    (absent, or an empty dir with no schema) has nothing to exclude."""
+    def build() -> Iterator[DataFrame]:
         fresh = _bloom_bits_slice(bdf, "batch")
         try:
             stored = (bdf.sparkSession.read.parquet(bits_dir)
@@ -965,11 +874,10 @@ def apply_bloom_increment(bdf: DataFrame, bits_dir: str,
             stored = None
         if stored is not None:
             fresh = fresh.join(stored, "pos", "left_anti")
-        fresh.write.parquet(f"{stage}/bits")
-        return [("bits", bits_dir)]
+        yield fresh
 
-    _append_commit("apply_bloom_increment", "inc", bits_dir, [bits_dir],
-                   build, epoch_id, run_token)
+    _commit("apply_bloom_increment", "inc", bits_dir, [bits_dir], build,
+            epoch_id, run_token, append=True)
 
 
 def apply_embed_hash_increment(bdf: DataFrame, emb_dir: str,
@@ -1530,16 +1438,7 @@ def _duck_two_tick_oracle() -> str:
     drop rule tick by tick: admitted(1) feeds the indexed side of
     tick 2."""
     mod = INCREMENTAL_BATCH_MOD
-    base = _duck_minhash_oracle(
-        f"WHERE l.doc_id % {mod} = 0 OR r.doc_id % {mod} = 0")
-    head = base[:base.rindex("SELECT doc_a, doc_b")]
-    return head + f""", pairs AS (
-      SELECT doc_a, doc_b
-      FROM common
-        JOIN cnt ca ON ca.doc_id = doc_a
-        JOIN cnt cb ON cb.doc_id = doc_b
-      WHERE cc * 1.0 / (ca.n + cb.n - cc) >= {JACCARD_THRESHOLD}
-    ), drop1 AS (
+    return _duck_increment_pairs() + f""", drop1 AS (
       -- tick-1 doc loses to any corpus doc, or a smaller tick-1 id
       SELECT doc_a AS doc_id FROM pairs
       WHERE doc_a % 20 = 0 AND doc_b % {mod} != 0
@@ -1791,8 +1690,8 @@ def _run_stream_lsh_index_delete(spark: SparkSession,
                                  sf_dir: str) -> DataFrame:
     """Seed the corpus band rows, stream the append tick, stream the
     takedown tick through the shared `apply_ann_index_delete`, replay
-    the append tick — its marker, carried across the delete's
-    overwrite commit, must no-op it — then COMPACT. Returns the stored
+    the append tick — its marker, carried across the delete's swap,
+    must no-op it — then COMPACT. Returns the stored
     band index."""
     root = scratch_dir("stream_lsh_idxdel_")
     index_dir = f"{root}/index"

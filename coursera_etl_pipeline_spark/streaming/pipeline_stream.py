@@ -7,18 +7,20 @@ This removes both reference hazards at once:
   - manual ordering (transform-before-extract crash,
     transform-service/main.py:87-88) — the stream just waits;
   - rerun duplicate appends (WRITE_APPEND with no key,
-    transform-service/main.py:65) — checkpoint + per-batch anti-join
-    give idempotent appends.
+    transform-service/main.py:65) — a per-batch anti-join on the keys
+    plus the store commit's replay marker give idempotent appends.
 """
 
 from __future__ import annotations
+
+from collections.abc import Iterator
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from coursera_etl_pipeline_spark.plans import pipeline
-from coursera_etl_pipeline_spark.streaming.parity import _settle
+from coursera_etl_pipeline_spark.streaming.parity import _ckpt_token, _commit
 
 
 def stream_courses(spark: SparkSession, landing_glob: str) -> DataFrame:
@@ -31,27 +33,24 @@ def stream_courses(spark: SparkSession, landing_glob: str) -> DataFrame:
 
 
 def start_append(courses: DataFrame, out_path: str, checkpoint: str,
-                 dedup_keys: list[str] | None = None) -> StreamingQuery:
-    """Checkpointed append to a parquet dataset. With dedup_keys, each
-    micro-batch anti-joins the existing dataset first (idempotent even
-    if the SAME rows arrive in a later file — the reference's rerun
-    case); without, file-level exactly-once still holds via the
-    checkpoint."""
+                 dedup_keys: list[str]) -> StreamingQuery:
+    """Checkpointed append to a parquet dataset through the store commit
+    (streaming/parity.py), its marker in ``out_path``. foreachBatch is
+    at-least-once, so both guards are needed: each micro-batch
+    anti-joins the stored ``dedup_keys`` (idempotent even if the SAME
+    rows arrive in a later file — the reference's rerun case), and a
+    re-delivered epoch finds its marker and does nothing."""
+    token = _ckpt_token(checkpoint)
 
     def write_batch(batch: DataFrame, epoch_id: int) -> None:
-        # a compaction of out_path that crashed past its commit point
-        # rolls forward first: rolled forward later, it would drop this
-        # batch's rows
-        _settle([out_path])
-        spark = batch.sparkSession
-        out = batch
-        if dedup_keys:
+        def build() -> Iterator[DataFrame]:
+            out = batch.dropDuplicates(dedup_keys)
             try:
-                existing = spark.read.parquet(out_path).select(*dedup_keys)
+                existing = (batch.sparkSession.read.parquet(out_path)
+                            .select(*dedup_keys))
                 # list-key joins move the keys to the front; restore the
                 # batch's column order so every appended file agrees
-                out = (batch.dropDuplicates(dedup_keys)
-                       .join(existing, dedup_keys, "left_anti")
+                out = (out.join(existing, dedup_keys, "left_anti")
                        .select(*batch.columns))
             except AnalysisException as e:
                 # only the first-batch missing-path case skips the
@@ -60,8 +59,10 @@ def start_append(courses: DataFrame, out_path: str, checkpoint: str,
                 # silently append duplicates
                 if "PATH_NOT_FOUND" not in str(e):
                     raise
-                out = batch.dropDuplicates(dedup_keys)
-        out.write.mode("append").parquet(out_path)
+            yield out
+
+        _commit("start_append", "inc", out_path, [out_path], build,
+                epoch_id, token, append=True)
 
     return (courses.writeStream
             .foreachBatch(write_batch)

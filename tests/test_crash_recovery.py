@@ -1,21 +1,23 @@
-"""Crash matrix for the index-lifecycle storage verbs.
+"""Crash matrix for the storage verbs.
 
-Every verb is killed at each step of its commit — before the first
-commit step, between the first and second (multi-destination verbs),
-and after the last one but before `_seal_epoch` — and the epoch is then
-re-delivered the way foreachBatch's at-least-once contract does. A
-commit step is a move of a staged delta into a destination (the append
-verbs: increments, blind appends, the DQ gate) or the swap of one
-destination for its written-beside `.next` dir (the overwrite verbs:
-deletes, compaction). Each case first checks that the crashed attempt
-left debris — epoch-prefixed files, or a swap record — and then the
-re-delivery alone must converge to the from-scratch rebuild, exactly
-once: the append commit purges the epoch's files, and both commits
-roll a recorded swap forward before anything else.
+Every verb commits through the one commit of streaming/parity.py: it
+writes each destination's new content into a `.next` sibling,
+publishes a swap record, then swaps each destination for its `.next`
+dir and seals the epoch's marker. Each verb is killed at each step of
+that commit — after the `.next` dirs are written but before the record
+is published ('written'), before the first swap ('before'), between
+the first and second swap (multi-destination verbs) and after the last
+swap but before `_seal_epoch` ('seal') — and the epoch is then
+re-delivered the way foreachBatch's at-least-once contract does. Each
+case first checks the crashed attempt's debris — `.next` dirs beside
+untouched live dirs, or a swap record — and then the re-delivery alone
+must converge to the from-scratch rebuild, exactly once: the commit
+drops an unpublished attempt and rolls a published swap forward before
+anything else.
 
 The protocol-level guarantees (write-once overwrite, cache refresh,
-move-commit debris sweep, per-epoch log event, single commit and run
-points) are pinned by the tests after the matrix.
+per-epoch log event, single commit and run points) are pinned by the
+tests after the matrix.
 """
 
 from __future__ import annotations
@@ -28,6 +30,7 @@ from dataclasses import dataclass
 from typing import Callable
 
 import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 from pyspark.sql.readwriter import DataFrameWriter
 
@@ -39,7 +42,7 @@ from coursera_etl_pipeline_spark.llm_ops.similarity import (
     signatures,
 )
 from coursera_etl_pipeline_spark.llm_ops.text import embed_hash
-from coursera_etl_pipeline_spark.plans import fixtures
+from coursera_etl_pipeline_spark.plans import fixtures, pipeline
 from coursera_etl_pipeline_spark.streaming import parity, pipeline_stream
 
 
@@ -53,6 +56,14 @@ def _doc(i: int) -> str:
 
 def _markers(dir_):
     return {n for n in os.listdir(dir_) if n.startswith("_applied_")}
+
+
+def _live(c):
+    """Name -> size of every file in the store's dirs (the stream
+    checkpoint aside)."""
+    return {os.path.join(d, n): os.path.getsize(os.path.join(d, n))
+            for k, d in c.items() if isinstance(d, str) and k != "chk"
+            and os.path.isdir(d) for n in os.listdir(d)}
 
 
 def _rows(df):
@@ -79,36 +90,34 @@ def _is_batch(col: str):
 
 @pytest.fixture()
 def crash(monkeypatch):
-    """``crash(point)`` arms one crash for the next verb call. 'before' /
-    'between' fail the first / second commit step — a `_move_commit`
-    into, or a `_swap_pair` of, a destination — before it runs; 'seal'
-    fails `_seal_epoch` after every commit step landed."""
+    """``crash(point)`` arms one crash for the next verb call. 'written'
+    fails `_publish` after every `.next` dir is written; 'before' /
+    'between' fail the first / second `_swap_pair` before it runs;
+    'seal' fails `_seal_epoch` after every swap landed."""
     state = {"point": None, "steps": 0}
-    real_move, real_swap = parity._move_commit, parity._swap_pair
+    real_publish, real_swap = parity._publish, parity._swap_pair
     real_seal = parity._seal_epoch
 
-    def step():
-        if state["point"] in ("before", "between"):
-            state["steps"] += 1
-            if state["steps"] == {"before": 1, "between": 2}[state["point"]]:
-                state["point"] = None
-                raise Crash(f"simulated crash at commit step {state['steps']}")
+    def fire(point: str | None, msg: str) -> None:
+        if point is not None and state["point"] == point:
+            state["point"] = None
+            raise Crash(f"simulated crash {msg}")
 
-    def move(src, dest, prefix):
-        step()
-        return real_move(src, dest, prefix)
+    def publish(rec):
+        fire("written", "before the swap record is published")
+        return real_publish(rec)
 
     def swap(nxt, dest):
-        step()
+        state["steps"] += 1
+        fire({1: "before", 2: "between"}.get(state["steps"]),
+             f"at swap {state['steps']}")
         return real_swap(nxt, dest)
 
     def seal(marker):
-        if state["point"] == "seal":
-            state["point"] = None
-            raise Crash("simulated crash between commit and seal")
+        fire("seal", "between the swaps and the seal")
         real_seal(marker)
 
-    monkeypatch.setattr(parity, "_move_commit", move)
+    monkeypatch.setattr(parity, "_publish", publish)
     monkeypatch.setattr(parity, "_swap_pair", swap)
     monkeypatch.setattr(parity, "_seal_epoch", seal)
 
@@ -124,8 +133,8 @@ class Case:
     frames and dirs), ``run`` delivers epoch 0 under token "tok", and
     ``want`` maps store keys to their from-scratch rebuild (None: no
     data files). ``anchor`` is the key of the dir holding the markers;
-    ``tag`` is None for the epoch-less compaction; ``overwrite`` marks
-    the verbs that commit by directory swap. ``replay`` re-delivers the
+    ``tag`` is None for the epoch-less compaction, and ``token`` gives
+    the run token of the store's markers. ``replay`` re-delivers the
     crashed epoch (default: ``run`` again)."""
     points: tuple[str, ...]
     setup: Callable
@@ -133,7 +142,7 @@ class Case:
     want: Callable
     anchor: str
     tag: str | None = "inc"
-    overwrite: bool = False
+    token: Callable = lambda c: "tok"
     replay: Callable | None = None
 
 
@@ -261,6 +270,39 @@ def _doc_store(key, seed):
     return setup
 
 
+_KEYS = ["course_id", "collection_id"]
+
+
+def _deliver(spark, c, chk):
+    """One `start_append` run over every landed file under checkpoint
+    ``chk``. The commit runs on foreachBatch's callback thread, so a
+    simulated crash there surfaces as the stream's failure."""
+    q = pipeline_stream.start_append(
+        pipeline_stream.stream_courses(spark, f"{c['landing']}/*.json"),
+        c["courses"], chk, dedup_keys=_KEYS)
+    try:
+        q.awaitTermination()
+    except StreamingQueryException as e:
+        if "simulated crash" not in str(e):
+            raise
+        raise Crash(str(e)) from e
+
+
+def _courses_store(spark, tmp):
+    """The courses dir after one delivery of 2x3 entities under its own
+    checkpoint, and a landed second file of 4x3 that re-delivers those
+    6 and adds 6; the crashed run reads both under a fresh checkpoint."""
+    c = {"landing": str(tmp / "landing"), "courses": str(tmp / "courses"),
+         "chk": str(tmp / "chk")}
+    os.makedirs(c["landing"])
+    fixtures.write_response_file(fixtures.make_response(2, 3), c["landing"],
+                                 "20240101_000000")
+    _deliver(spark, c, str(tmp / "chk_seed"))
+    fixtures.write_response_file(fixtures.make_response(4, 3), c["landing"],
+                                 "20240102_000000")
+    return c
+
+
 def _features(docs):
     return embed_hash(docs).filter(F.col("dim_id").isNotNull())
 
@@ -271,8 +313,9 @@ def _batch(c, key="docs", col="doc_id"):
 
 CASES = {
     "apply_index_increment": Case(
-        ("before", "between", "seal"), _index_store,
-        run=lambda spark, c: _inc(c, "tok"),
+        ("written", "before", "between", "seal"),
+        lambda spark, tmp: _index_store(spark, tmp, aux=True),
+        run=lambda spark, c: _inc(c, "tok", aux=True),
         want=_index_rebuild(_AFTER_INC), anchor="band"),
     "apply_ann_index_increment": Case(
         ("before", "seal"), _ivf_store,
@@ -312,25 +355,29 @@ CASES = {
             spark, spark.createDataFrame([(11,)], "doc_id long"),
             c["post"], c["band"], c["ledger"], c["tpost"], c["tband"],
             epoch_id=0, run_token="tok"),
-        want=_index_rebuild([21, 31, 40, 10]), anchor="band", tag="del",
-        overwrite=True),
+        want=_index_rebuild([21, 31, 40, 10]), anchor="band", tag="del"),
     "apply_ann_index_delete": Case(
         ("before", "seal"), lambda spark, tmp: _ivf_store(spark, tmp, tok="inc"),
         run=lambda spark, c: parity.apply_ann_index_delete(
             spark, c["emb"].filter(F.col("vec_id") % 10 == 1).select("vec_id"),
             c["index"], epoch_id=0, run_token="tok"),
-        want=_ivf_rebuild(removed=1), anchor="index", tag="del",
-        overwrite=True),
+        want=_ivf_rebuild(removed=1), anchor="index", tag="del"),
     "compact_index": Case(
         ("before", "between", "seal"),
         lambda spark, tmp: _index_store(spark, tmp, tok="inc"),
         run=lambda spark, c: parity.compact_index(
             spark, [c["post"], c["band"]], target_files=2),
         want=_index_rebuild(_AFTER_INC), anchor="band", tag=None,
-        overwrite=True,
         # no epoch of its own: the re-delivery is the increment whose
         # marker the compaction carried
         replay=lambda spark, c: _inc(c, "inc")),
+    "start_append": Case(
+        ("written", "before", "seal"), _courses_store,
+        run=lambda spark, c: _deliver(spark, c, c["chk"]),
+        want=lambda spark, c: {"courses": pipeline.transform_courses(
+            pipeline.read_responses(spark, f"{c['landing']}/*.json"))
+            .select(*_KEYS).distinct()},
+        anchor="courses", token=lambda c: parity._ckpt_token(c["chk"])),
 }
 
 MATRIX = [(verb, point) for verb, case in CASES.items() for point in case.points]
@@ -341,21 +388,23 @@ def test_crash_matrix(spark, tmp_path, crash, seeded, verb, point):
     case = CASES[verb]
     c = _seeded_store(seeded, verb, case, spark, tmp_path)
     anchor = c[case.anchor]
-    marker = case.tag and parity._epoch_marker(anchor, case.tag, 0, "tok")
-    sealed = _markers(anchor)
+    marker = case.tag and parity._epoch_marker(anchor, case.tag, 0,
+                                               case.token(c))
+    sealed, live = _markers(anchor), _live(c)
     crash(point)
     with pytest.raises(Crash):
         case.run(spark, c)
     # the crashed epoch is unsealed: nothing may trust the store's contents
     assert not marker or not os.path.exists(marker)
-    # the crashed attempt left debris for the re-delivery to resolve: a
-    # swap record, or the epoch's files
-    if case.overwrite:
-        assert any(n.endswith(".swap") for n in os.listdir(tmp_path))
-    elif point != "before":
-        prefix = parity._epoch_prefix(case.tag, 0, "tok")
-        assert any(n.startswith(prefix) for d in os.listdir(tmp_path)
-                   for n in os.listdir(tmp_path / d))
+    # the crashed attempt left debris for the re-delivery to resolve:
+    # unpublished `.next` dirs beside live dirs it never touched, or a
+    # published swap record
+    beside = [n for n in os.listdir(tmp_path) if n.startswith(".")]
+    if point == "written":
+        assert beside and all(n.endswith(".next") for n in beside)
+        assert _live(c) == live
+    else:
+        assert any(n.endswith(".swap") for n in beside)
 
     replay = case.replay or case.run
     replay(spark, c)  # the re-delivery converges unaided
@@ -363,17 +412,15 @@ def test_crash_matrix(spark, tmp_path, crash, seeded, verb, point):
     assert _markers(anchor) == sealed | (
         {os.path.basename(marker)} if marker else set())
     assert not [n for n in os.listdir(tmp_path) if n.startswith(".")]
+    assert all(os.stat(p).st_nlink == 1 for p in _live(c))
     _assert_rebuilt(seeded, verb, case, spark, c)
 
     replay(spark, c)  # a further delivery does nothing
     _assert_rebuilt(seeded, verb, case, spark, c)
 
 
-def test_overwrite_writes_each_target_once(spark, tmp_path, monkeypatch):
-    """An overwrite verb writes each target frame exactly once, beside
-    its destination, and leaves nothing beside it afterwards."""
-    c = _index_store(spark, tmp_path)
-    before = {k: _rows(spark.read.parquet(c[k])) for k in ("post", "band")}
+def _writes(monkeypatch, run) -> list[str]:
+    """The paths ``run()`` hands to `DataFrameWriter.parquet`."""
     targets = []
     real_parquet = DataFrameWriter.parquet
 
@@ -382,12 +429,31 @@ def test_overwrite_writes_each_target_once(spark, tmp_path, monkeypatch):
         return real_parquet(self, path, *a, **kw)
 
     monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
-    parity.compact_index(spark, [c["post"], c["band"]], target_files=2)
-    monkeypatch.undo()
-    assert len(targets) == 2
+    try:
+        run()
+    finally:
+        monkeypatch.undo()
+    return targets
+
+
+def test_overwrite_writes_each_target_once(spark, tmp_path, monkeypatch):
+    """Every verb writes each target frame exactly once, beside its
+    destination, and leaves nothing beside it afterwards: a compaction
+    of two dirs, and the five-dir increment, whose dirs then hold no
+    file still linked from a `.next` dir."""
+    c = _index_store(spark, tmp_path, aux=True)
+    five = ("post", "band", "ledger", "tpost", "tband")
+    before = {k: _rows(spark.read.parquet(c[k])) for k in ("post", "band")}
+    targets = _writes(monkeypatch, lambda: parity.compact_index(
+        spark, [c["post"], c["band"]], target_files=2))
     assert targets == [parity._beside(c[k], "next") for k in ("post", "band")]
-    assert sorted(os.listdir(tmp_path)) == ["band", "post"]
+    assert sorted(os.listdir(tmp_path)) == sorted(five)
     assert {k: _rows(spark.read.parquet(c[k])) for k in before} == before
+
+    targets = _writes(monkeypatch, lambda: _inc(c, "tok", aux=True))
+    assert targets == [parity._beside(c[k], "next") for k in five]
+    assert sorted(os.listdir(tmp_path)) == sorted(five)
+    assert all(os.stat(p).st_nlink == 1 for p in _live(c))
 
 
 def test_overwrite_refreshes_cached_reads(spark, tmp_path):
@@ -406,9 +472,9 @@ def test_overwrite_refreshes_cached_reads(spark, tmp_path):
 
 
 def test_start_append_settles_a_crashed_compaction(spark, tmp_path, crash):
-    """The streamed courses dir is appended outside the two commits and
-    compacted by one. A compaction that crashed past its commit point
-    is rolled forward before the next streamed append, so the rows that
+    """The streamed courses dir is appended and compacted through the
+    one commit. A compaction that crashed past its commit point is
+    rolled forward before the next streamed append, so the rows that
     append lands survive the next compaction."""
     landing, out = str(tmp_path / "landing"), str(tmp_path / "courses")
     os.makedirs(landing)
@@ -431,60 +497,20 @@ def test_start_append_settles_a_crashed_compaction(spark, tmp_path, crash):
     assert spark.read.parquet(out).count() == 12
 
 
-def test_move_commit_sweeps_tmp_debris_on_crash(tmp_path, monkeypatch):
-    """The cross-device fallback could die between copy2 and the final
-    rename; epoch callers purge that debris on replay, but epoch-less
-    batch callers never revisit their unique prefix — the finally-sweep
-    must leave zero ._tmp_ files behind."""
-    stage = tmp_path / "stage"
-    dest = tmp_path / "dest"
-    stage.mkdir()
-    dest.mkdir()
-    (stage / "part-0.parquet").write_bytes(b"a" * 10)
-    (stage / "part-1.parquet").write_bytes(b"b" * 10)
-
-    real_replace = os.replace
-    real_copy2 = shutil.copy2
-    calls = {"n": 0}
-
-    def failing_replace(src, dst):
-        # force every direct move onto the cross-device fallback; the
-        # fallback's own rename (tmp -> final) is allowed through
-        if "._tmp_" in os.path.basename(src):
-            return real_replace(src, dst)
-        raise OSError(18, "Invalid cross-device link")
-
-    def crashing_copy2(src, dst):
-        calls["n"] += 1
-        real_copy2(src, dst)
-        if calls["n"] == 2:  # second file: die with its tmp in place
-            raise RuntimeError("simulated crash mid-copy")
-
-    monkeypatch.setattr(os, "replace", failing_replace)
-    monkeypatch.setattr(shutil, "copy2", crashing_copy2)
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        parity._move_commit(str(stage), str(dest), "callXYZ_")
-    monkeypatch.undo()
-
-    names = sorted(os.listdir(dest))
-    assert not any(n.startswith("._tmp_") for n in names), names
-    # the first file's commit survived; the torn second never appeared
-    assert names == ["callXYZ_part-0.parquet"]
-
-
 def test_commit_logs_one_event_per_epoch(spark, tmp_path, caplog):
     """Each commit emits one structured event per epoch, read from the
-    filesystem: the files and bytes an append committed are exactly
-    what landed, a replay is reported as skipped, and an epoch-less
-    overwrite reports what it rewrote."""
+    filesystem: an append reports exactly the delta files it wrote, not
+    the live files it linked, a replay is reported as skipped, and an
+    epoch-less overwrite reports what it rewrote."""
     c = _lsh_store(spark, tmp_path)
     batch = _batch(c, "emb", "vec_id")
-    prefix = parity._epoch_prefix("inc", 0, "tok")
+    live = set(parity._parquet_files(c["index"]))
     with caplog.at_level(logging.INFO, logger=parity.__name__):
         parity.apply_lsh_index_increment(batch, c["index"], epoch_id=0,
                                          run_token="tok")
         landed = [os.path.getsize(os.path.join(c["index"], n))
-                  for n in os.listdir(c["index"]) if n.startswith(prefix)]
+                  for n in parity._parquet_files(c["index"])
+                  if n not in live]
         parity.apply_lsh_index_increment(batch, c["index"], epoch_id=0,
                                          run_token="tok")
         parity.compact_index(spark, [c["index"]], target_files=2)
@@ -495,7 +521,7 @@ def test_commit_logs_one_event_per_epoch(spark, tmp_path, caplog):
     first, replay, compact = events
     assert (first["epoch_id"], first["run_token"]) == (0, "tok")
     assert not first["replay_skipped"]
-    assert first["files"] == len(landed) >= 1
+    assert live and first["files"] == len(landed) >= 1
     assert first["bytes"] == sum(landed)
     assert replay["replay_skipped"] and replay["files"] == 0
     parts = [os.path.getsize(os.path.join(c["index"], n))
@@ -506,18 +532,18 @@ def test_commit_logs_one_event_per_epoch(spark, tmp_path, caplog):
 
 
 def test_commit_points_live_only_in_the_protocol():
-    """The staging, move, swap, settle, seal, stream-start and memo
-    calls of streaming/parity.py each have their fixed homes — the two
-    commit protocols, the swap roll-forward, the stream runner and the
+    """The link, publish, swap, settle, seal, stream-start and memo
+    calls of streaming/parity.py each have their fixed homes — the one
+    commit, the swap roll-forward, the stream runner and the
     registered-query memo — so a verb or parity cannot grow its own
     copy back."""
     homes = {
-        "mkdtemp": {"_append_commit"},
-        "_move_commit": {"_append_commit"},
+        "link": {"_commit"},
+        "_publish": {"_commit"},
         "_swap_pair": {"_finish_swap"},
-        "_finish_swap": {"_overwrite_commit", "_settle"},
-        "_settle": {"_append_commit", "_overwrite_commit"},
-        "_seal_epoch": {"_append_commit", "_finish_swap"},
+        "_finish_swap": {"_commit", "_settle"},
+        "_settle": {"_commit"},
+        "_seal_epoch": {"_finish_swap"},
         "foreachBatch": {"_run_stream"},
         "_needs_run": {"_memo"},
     }

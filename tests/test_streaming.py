@@ -845,10 +845,8 @@ def test_lsh_store_append_delete_compact_equals_rebuild(spark, sf_dir,
         .write.parquet(idx_dir)
     apply_lsh_index_increment(emb.filter(F.col("vec_id") % 10 == 0), idx_dir)
     removed = emb.filter(F.col("vec_id") % 10 == 1).select("vec_id")
-    apply_ann_index_delete(spark, removed, idx_dir,
-                           staging_root=str(tmp_path))
-    compact_index(spark, [idx_dir], target_files=2,
-                  staging_root=str(tmp_path))
+    apply_ann_index_delete(spark, removed, idx_dir)
+    compact_index(spark, [idx_dir], target_files=2)
     files_after = sum(1 for f in _os.listdir(idx_dir)
                       if f.endswith(".parquet"))
     assert files_after <= 2
