@@ -142,6 +142,17 @@ def get_spark(app_name: str = "coursera_etl_pipeline_spark",
         # skips empties anyway. Excluding the rule never changes results.
         .config("spark.sql.optimizer.excludedRules",
                 "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
+        # Codegen cache, keyed by generated source and class loader (in
+        # local mode the driver thread and the task threads each compile
+        # a source once): a hit skips the Janino compile, the class load
+        # and the JIT warm-up of a fresh class. Spark's default of 100
+        # entries is an LRU smaller than one perfbench lap (sql_repeat
+        # compiles about 200 classes per lap, corpus_fresh about 150,
+        # etl_ingest about 120), so a repeating lap never hits it. One
+        # sf0.001 sweep of all registered queries compiles about 1,910;
+        # 4096 holds that with headroom, since Guava spreads the bound
+        # over its segments. Static conf: the JVM reads it once.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

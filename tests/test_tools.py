@@ -1,7 +1,7 @@
 """The A/B harness (tools/ab.py), the scale replicas (tools/scale.py),
 the registry sweep and its oracle diff report, the single reader of
-Spark's status stores, the single DuckDB view helper, and the
-host-sized driver heap."""
+Spark's status stores, the single DuckDB view helper, the host-sized
+driver heap and the session's codegen cache."""
 
 from __future__ import annotations
 
@@ -49,6 +49,8 @@ def test_ab_equal_arms_report_every_cycle(ab, spark, sf_dir, tmp_path):
     for metrics in out.values():
         assert len(metrics["wall_s"]["samples"]) == 2
         assert metrics["jobs"]["median"] > 0
+        # the warm-up cycle compiled q1's classes; no sample recompiles
+        assert metrics["codegen_compiles"]["samples"] == [0, 0]
 
 
 def test_ab_dropped_row_fails_the_checksum(ab, spark, sf_dir, tmp_path):
@@ -227,3 +229,38 @@ def test_driver_heap_is_half_the_host_within_bounds():
     assert driver_memory(64 * gib) == "32g"
     assert driver_memory(gib) == "1g"
     assert driver_memory(512 * gib) == "48g"
+
+
+def test_dashboard_rerun_compiles_no_class(spark, sf_dir):
+    """A second build-and-collect of perfbench's sql_repeat queries adds
+    no Janino compile: the session's codegen cache holds the whole lap
+    (about 200 entries), where Spark's 100-entry default LRU evicted
+    each class before the lap came round to it again and the second
+    pass recompiled classes of all 14. The stage id leaves the class
+    names for the test: under AQE the id a codegen stage gets depends
+    on the order in which the query's stages finish, so with the id in
+    the name a stage's source can differ between two builds of
+    events_funnel whatever the cache size."""
+    from tools.ab import codegen_compiles  # puts perfbench on sys.path
+    from workloads import SQL_QUERIES
+
+    import __spark_entry__
+
+    queries = __spark_entry__.queries()
+
+    def lap() -> dict[str, int]:
+        compiled = {}
+        for name in SQL_QUERIES:
+            before = codegen_compiles(spark)
+            queries[name](spark, sf_dir).collect()
+            compiled[name] = codegen_compiles(spark) - before
+        return compiled
+
+    use_id = "spark.sql.codegen.useIdInClassName"
+    saved = spark.conf.get(use_id)
+    try:
+        spark.conf.set(use_id, "false")
+        lap()
+        assert {q: n for q, n in lap().items() if n} == {}
+    finally:
+        spark.conf.set(use_id, saved)

@@ -20,6 +20,9 @@ first arm's, or an AssertionError names the cycle and the arm. Prints
 one JSON line per arm: the median and the samples of each metric.
 `build_jobs` are the jobs the call itself ran (eager probes, iterative
 loops); `jobs` and the other counters are the noop write's.
+`codegen_compiles` are the Janino compiles of the call and the noop
+write together: warm samples read 0 unless the arm generates source
+that differs from build to build or outgrows the codegen cache.
 """
 
 from __future__ import annotations
@@ -62,6 +65,13 @@ def resolve(arm: str):
     return getattr(module, name)
 
 
+def codegen_compiles(spark) -> int:
+    """Janino compiles so far in this JVM: each is a codegen cache miss
+    (a source misses once for the driver and once for the executors)."""
+    return spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME().getCount()
+
+
 def run_arm(spark, fn, sf_dir: str,
             counters: SparkCounters) -> tuple[dict, str]:
     """One timed call of one arm -> (its metrics, its output digest)."""
@@ -74,6 +84,7 @@ def run_arm(spark, fn, sf_dir: str,
         return counters.since_last(sql=False)
 
     read()
+    compiled = codegen_compiles(spark)
     t0 = time.perf_counter()
     df = fn(spark, sf_dir)
     t1 = time.perf_counter()
@@ -81,10 +92,12 @@ def run_arm(spark, fn, sf_dir: str,
     df.write.format("noop").mode("overwrite").save()
     t2 = time.perf_counter()
     ran = read()
+    compiled = codegen_compiles(spark) - compiled
     df._jdf.queryExecution().executedPlan()
     m = {"wall_s": t2 - t0, "build_s": t1 - t0,
          "catalyst_s": sum(catalyst_phases(df).values()),
-         "build_jobs": build_jobs, **{k: ran[k] for k in COUNTS},
+         "build_jobs": build_jobs, "codegen_compiles": compiled,
+         **{k: ran[k] for k in COUNTS},
          **{k: ran[key] / 2**20 for k, key in MEGABYTES.items()}}
     return m, digest(canonical(df.toArrow()))
 
