@@ -9,6 +9,7 @@ conversion, so the same logical plans re-plan themselves at 100 TB.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -19,6 +20,17 @@ DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 # benches) can spill tens of GiB, and on tmpfs that is host RAM.
 MIN_TMPFS_HEADROOM_GIB = 16
 
+# The driver JVM's collector. In local mode that one JVM is driver and
+# executor. G1 (the JDK default on a multi-core host) grows its eden to
+# over half the heap although at most about 230 MB is live after a
+# young GC, and every page it fills between collections stays resident.
+# Parallel keeps the young generation at a third of the heap
+# (NewRatio=2), uses plain card-mark write barriers and runs no
+# concurrent threads. It stops the world only to collect, which a
+# local-mode batch engine tolerates.
+COLLECTOR = "-XX:+UseParallelGC"
+_SELECTS_COLLECTOR = re.compile(r"-XX:\+Use\w+GC(?:\s|$)")
+
 
 def driver_memory(ram_bytes: int) -> str:
     """spark.driver.memory default: half of physical RAM in whole GiB,
@@ -26,6 +38,15 @@ def driver_memory(ram_bytes: int) -> str:
     fills to the point where persisted memo blocks are evicted (LRU);
     the kernel kills the JVM first. SPARK_GRAFT_DRIVER_MEM overrides."""
     return f"{max(1, min(48, ram_bytes // 2 // 2**30))}g"
+
+
+def driver_java_options(env_opts: str) -> str:
+    """spark.driver.extraJavaOptions: the engine's collector, then the
+    SPARK_GRAFT_DRIVER_JAVA_OPTS flags. A collector selected there
+    replaces the engine's, as the JVM refuses to start with two."""
+    if _SELECTS_COLLECTOR.search(env_opts):
+        return env_opts
+    return f"{COLLECTOR} {env_opts}".rstrip()
 
 
 def _default_local_dir() -> str:
@@ -122,14 +143,12 @@ def get_spark(app_name: str = "coursera_etl_pipeline_spark",
         .config("spark.driver.memory", os.environ.get(
             "SPARK_GRAFT_DRIVER_MEM", driver_memory(
                 os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES"))))
-        # Extra driver-JVM flags for scale probes (JVM opts are fixed
-        # at launch, so this only matters for the process that starts
-        # the JVM — e.g. SPARK_GRAFT_DRIVER_JAVA_OPTS=
-        # "-XX:GCLockerRetryAllocationCount=64" when chasing the
-        # GCLocker humongous-allocation retry crashes the K=1000
-        # probes hit; empty default is a no-op).
-        .config("spark.driver.extraJavaOptions",
-                os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS", ""))
+        # Extra driver-JVM flags (JVM opts are fixed at launch, so
+        # this only matters for the process that starts the JVM) go
+        # after the engine's collector; a collector given there, e.g.
+        # SPARK_GRAFT_DRIVER_JAVA_OPTS="-XX:+UseG1GC", replaces it.
+        .config("spark.driver.extraJavaOptions", driver_java_options(
+            os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS", "")))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.shuffle.spill.compress", "true")

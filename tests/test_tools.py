@@ -1,7 +1,7 @@
 """The A/B harness (tools/ab.py), the scale replicas (tools/scale.py),
 the registry sweep and its oracle diff report, the single reader of
 Spark's status stores, the single DuckDB view helper, the host-sized
-driver heap and the session's codegen cache."""
+driver heap, the driver's collector and the session's codegen cache."""
 
 from __future__ import annotations
 
@@ -51,6 +51,7 @@ def test_ab_equal_arms_report_every_cycle(ab, spark, sf_dir, tmp_path):
         assert metrics["jobs"]["median"] > 0
         # the warm-up cycle compiled q1's classes; no sample recompiles
         assert metrics["codegen_compiles"]["samples"] == [0, 0]
+        assert all(s >= 0 for s in metrics["gc_s"]["samples"])
 
 
 def test_ab_dropped_row_fails_the_checksum(ab, spark, sf_dir, tmp_path):
@@ -229,6 +230,25 @@ def test_driver_heap_is_half_the_host_within_bounds():
     assert driver_memory(64 * gib) == "32g"
     assert driver_memory(gib) == "1g"
     assert driver_memory(512 * gib) == "48g"
+
+
+def test_driver_jvm_runs_the_parallel_collector(spark):
+    beans = spark._jvm.java.lang.management.ManagementFactory \
+        .getGarbageCollectorMXBeans()
+    assert {bean.getName() for bean in beans} == {"PS Scavenge",
+                                                   "PS MarkSweep"}
+
+
+def test_driver_java_options_add_one_collector():
+    from coursera_etl_pipeline_spark.session import driver_java_options
+
+    pinned = "-Xms2g -Djava.io.tmpdir=/run/tmp -XX:-UsePerfData"
+    assert driver_java_options(pinned) == f"-XX:+UseParallelGC {pinned}"
+    assert driver_java_options("") == "-XX:+UseParallelGC"
+    for given in ("-XX:+UseG1GC", "-Xms1g -XX:+UseSerialGC -Xss4m"):
+        assert driver_java_options(given) == given
+    assert driver_java_options("-XX:+UseGCOverheadLimit") \
+        == "-XX:+UseParallelGC -XX:+UseGCOverheadLimit"
 
 
 def test_dashboard_rerun_compiles_no_class(spark, sf_dir):

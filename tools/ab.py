@@ -23,6 +23,7 @@ loops); `jobs` and the other counters are the noop write's.
 `codegen_compiles` are the Janino compiles of the call and the noop
 write together: warm samples read 0 unless the arm generates source
 that differs from build to build or outgrows the codegen cache.
+`gc_s` is the JVM's collector time over the call and the noop write.
 """
 
 from __future__ import annotations
@@ -72,6 +73,13 @@ def codegen_compiles(spark) -> int:
         .METRIC_COMPILATION_TIME().getCount()
 
 
+def gc_seconds(spark) -> float:
+    """Collector time so far in this JVM, summed over its collectors."""
+    beans = spark._jvm.java.lang.management.ManagementFactory \
+        .getGarbageCollectorMXBeans()
+    return sum(bean.getCollectionTime() for bean in beans) / 1000
+
+
 def run_arm(spark, fn, sf_dir: str,
             counters: SparkCounters) -> tuple[dict, str]:
     """One timed call of one arm -> (its metrics, its output digest)."""
@@ -84,7 +92,7 @@ def run_arm(spark, fn, sf_dir: str,
         return counters.since_last(sql=False)
 
     read()
-    compiled = codegen_compiles(spark)
+    compiled, gc_s = codegen_compiles(spark), gc_seconds(spark)
     t0 = time.perf_counter()
     df = fn(spark, sf_dir)
     t1 = time.perf_counter()
@@ -93,10 +101,12 @@ def run_arm(spark, fn, sf_dir: str,
     t2 = time.perf_counter()
     ran = read()
     compiled = codegen_compiles(spark) - compiled
+    gc_s = gc_seconds(spark) - gc_s
     df._jdf.queryExecution().executedPlan()
     m = {"wall_s": t2 - t0, "build_s": t1 - t0,
          "catalyst_s": sum(catalyst_phases(df).values()),
          "build_jobs": build_jobs, "codegen_compiles": compiled,
+         "gc_s": gc_s,
          **{k: ran[k] for k in COUNTS},
          **{k: ran[key] / 2**20 for k, key in MEGABYTES.items()}}
     return m, digest(canonical(df.toArrow()))
